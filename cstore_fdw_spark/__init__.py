@@ -17,7 +17,7 @@ Modules
 - :mod:`cstore_fdw_spark.catalog`   — managed columnar table lifecycle
   (create / drop / truncate / alter, table_size, row_count, analyze)
 - :mod:`cstore_fdw_spark.io`        — bulk load/export (COPY FROM/TO parity)
-- :mod:`cstore_fdw_spark.datasets`  — test-data loading helpers
+- :mod:`cstore_fdw_spark.datasets`  — the test-data table names
 - :mod:`cstore_fdw_spark.operators` — the full query surface (scans, joins,
   aggregates, windows, set ops) + scale extensions (dedup, similarity
   search, text analysis, multimodal)

@@ -1,30 +1,8 @@
-"""Test-data loading: the driver's TPC-H-ish parquet tables (TESTDATA.md).
-
-Tables: region nation customer supplier part orders lineitem events
-documents embeddings — one parquet file per table under a sf dir.
-"""
+"""The driver's TPC-H-ish test tables (TESTDATA.md): one parquet file
+per table under a sf dir. Read them with ``operators.table``, which also
+fixes the ``events.ts`` nanosecond column."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

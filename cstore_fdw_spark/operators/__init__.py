@@ -25,10 +25,13 @@ Determinism conventions (required for oracle hash-parity):
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cstore_fdw_spark.session import conf_override
 
 
 @dataclass
@@ -49,6 +52,14 @@ class QuerySpec:
     #: the operator. Flag it in the @register call with a comment naming
     #: the bounded side.
     allow_bnlj: bool = False
+    #: Spark settings this query runs under, declared in its @register
+    #: call with the measured reason. The registry applies them before
+    #: the build (a rule for spark.sql.optimizer.excludedRules is added
+    #: to the existing list) and restores every key's prior value when
+    #: the query's tracked caches are released — at the next registered
+    #: build or ``clear_caches`` — so they hold through the caller's
+    #: action and never leak into the next query.
+    confs: dict[str, str] = field(default_factory=dict)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -67,6 +78,10 @@ REGISTRY: dict[str, QuerySpec] = {}
 #: results sequentially).
 _BUILD_CACHES: list[DataFrame] = []
 
+#: the CURRENT builder's QuerySpec.confs overrides; closed (every key
+#: restored) together with the release of _BUILD_CACHES
+_BUILD_CONFS = contextlib.ExitStack()
+
 
 def track_cache(df: DataFrame) -> DataFrame:
     """Register a persisted/checkpointed intermediate for deferred release
@@ -76,13 +91,15 @@ def track_cache(df: DataFrame) -> DataFrame:
 
 
 def release_build_caches() -> None:
-    """Unpersist every intermediate tracked since the last release."""
+    """Unpersist every intermediate tracked since the last release, and
+    restore the Spark settings the last registered builder applied."""
     while _BUILD_CACHES:
         df = _BUILD_CACHES.pop()
         try:
             df.unpersist()
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
+    _BUILD_CONFS.close()
 
 
 def clear_caches(spark: SparkSession) -> None:
@@ -130,12 +147,8 @@ def scratch_catalog(spark, sf_dir: str, tag: str, build):
         # (the 60 M-row v1.7 file-set write starved the 300 s
         # interactive default at g10.0) — same offline-path rationale
         # as similarity._cached_codebook; restored after the build
-        prev = spark.conf.get("spark.sql.broadcastTimeout", "300")
-        try:
-            spark.conf.set("spark.sql.broadcastTimeout", "3600")
+        with conf_override(spark, {"spark.sql.broadcastTimeout": "3600"}):
             build(cat)
-        finally:
-            spark.conf.set("spark.sql.broadcastTimeout", prev)
         with open(marker, "w") as fh:
             fh.write(os.path.abspath(sf_dir))
         return cat
@@ -143,39 +156,23 @@ def scratch_catalog(spark, sf_dir: str, tag: str, build):
 
 
 def register(name: str, oracle: str | None = None, category: str = "general",
-             bench: bool = False, allow_bnlj: bool = False):
+             bench: bool = False, allow_bnlj: bool = False,
+             confs: dict[str, str] | None = None):
+    confs = confs or {}
+
     def deco(fn):
         import functools
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            release_build_caches()  # previous query's caches die here
-            # per-query conf hygiene: a prior builder's fine-coalescing
-            # opt-in (session.set_fine_coalescing) must not leak into
-            # queries that are faster at the default floor
-            from cstore_fdw_spark.session import (
-                ADAPTIVE_CONF, CBO_CONF, CBO_JOINREORDER_CONF,
-                DEFAULT_MIN_PARTITION_SIZE, EXCLUDED_RULES_CONF,
-                MIN_PARTITION_SIZE_CONF)
-            try:
-                spark.conf.set(MIN_PARTITION_SIZE_CONF,
-                               DEFAULT_MIN_PARTITION_SIZE)
-                # likewise un-leak a prior builder's static-planning
-                # opt-out (session.set_static_planning)
-                spark.conf.set(ADAPTIVE_CONF, "true")
-                # ... and a prior builder's CBO opt-out (session.set_no_cbo)
-                spark.conf.set(CBO_CONF, "true")
-                spark.conf.set(CBO_JOINREORDER_CONF, "true")
-                # ... and a prior builder's optimizer-rule opt-out
-                # (session.set_no_generate_filter_inference)
-                spark.conf.unset(EXCLUDED_RULES_CONF)
-            except Exception:  # noqa: BLE001 — read-only conf surface
-                pass
+            # the previous query's caches and settings end here
+            release_build_caches()
+            _BUILD_CONFS.enter_context(conf_override(spark, confs))
             return fn(spark, sf_dir)
 
         REGISTRY[name] = QuerySpec(name, wrapped, oracle, category,
                                    (fn.__doc__ or "").strip(), bench,
-                                   allow_bnlj)
+                                   allow_bnlj, confs)
         return fn
     return deco
 

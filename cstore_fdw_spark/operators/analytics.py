@@ -1676,6 +1676,14 @@ def _hll_oracle() -> str:
     "sketch_hyperloglog_distinct",
     category="analytics",
     bench=True,
+    # CBO off: a bare-path read has no catalog stats, so the CBO stats
+    # visitor is pure driver overhead, and AQE re-costs this query's
+    # plan (the widest expression tree in the bench set: the finisher's
+    # 1024-entry ln-ppm literal) at every stage boundary. Interleaved
+    # min-of-3 at sf0.1: 2.93 s with CBO vs 1.77 s without; every other
+    # bench query was within noise, so this is declared per query.
+    confs={"spark.sql.cbo.enabled": "false",
+           "spark.sql.cbo.joinReorder.enabled": "false"},
     oracle=_hll_oracle())
 def sketch_hyperloglog_distinct(spark, sf_dir):
     """HyperLogLog distinct-count sketch (Flajolet et al. 2007), fully
@@ -1710,15 +1718,6 @@ def sketch_hyperloglog_distinct(spark, sf_dir):
     micro-batches, so ``streaming.analytics.run_hll_available_now``
     maintains the identical sketch on an unbounded stream and runs
     THIS function's finisher (``hll_estimate_from_registers``)."""
-    from cstore_fdw_spark.session import set_no_cbo
-
-    # bare-path read + the widest expression tree in the bench set (the
-    # 1024-entry ln-ppm literal inside the finisher): CBO's stats
-    # visitor re-costs it at every AQE stage boundary for zero benefit
-    # (no catalog stats exist) — measured 2.93 s → 1.77 s at sf0.1
-    # (see session.set_no_cbo; the registry restores the conf default
-    # before the next build)
-    set_no_cbo(spark)
     est = hll_estimate_from_registers(
         hll_register_rollup(table(spark, sf_dir, "lineitem")))
     # the finisher is table-agnostic (returns ``grp``); THIS query owns

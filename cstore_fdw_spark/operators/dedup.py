@@ -24,8 +24,31 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from cstore_fdw_spark.operators import register, spread, table, track_cache
-from cstore_fdw_spark.session import (set_fine_coalescing,
-                                      set_no_generate_filter_inference)
+
+#: Spark settings of the queries whose shuffles are CPU-dense per byte:
+#: hash self-joins and window ranks over 8-byte digests (the PPJoin
+#: digest self-join and verify, SimHash chunk blocking) carry a few MB
+#: but seconds of CPU. The session's 1m AQE floor coalesces them to ~6
+#: reducers on 32 cores; 256k restores full width (token pipeline 6.4 s
+#: vs 11.5 s at sf0.1). Broadcast-heavy queries are faster at 1m (q3
+#: 1.18 s vs 1.46 s), so the floor is declared per query. At 100 TB both
+#: floors are no-ops: reducers are sized by bytes/parallelism.
+_FINE_COALESCING = {
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k"}
+
+#: Spark settings of the MinHash queries: exclude InferFiltersFromGenerate.
+#: The rule re-infers ``size(shingles) > 0`` from the explode inside
+#: :func:`shingle_hashes`, and filter pushdown drives that whole derived
+#: shingle build through the spread() exchange into the scan, where it
+#: runs once per row in the scan's few splits and again after the
+#: exchange (the defect measured at 22 s vs 1.1 s on the route tier's
+#: gram build at g1.0; dedup_minhash_lsh 1.68 → 1.38 s). Removing an
+#: explicit filter does not help, because the rule puts it back. The
+#: inferred filter is semantics-free: explode already emits nothing for
+#: an empty array.
+_NO_GENERATE_FILTER_INFERENCE = {
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"}
 
 #: the duplicated corpus used by exact-dedup demos: documents ∪ documents
 #: with shifted ids, so every text has exactly one duplicate. (The driver's
@@ -196,12 +219,9 @@ def ppjoin_jaccard_pairs(item_sets: DataFrame, tau: float,
 
     Callers pass ``item_sets`` already ``spread()`` (repartition before
     the item projection), so the set build runs at cluster parallelism
-    even when the source scan is one split."""
-    # CPU-dense-per-byte shuffles (digest self-join + verify): opt into
-    # the fine AQE coalescing floor — measured 2x at sf0.1 (token
-    # pipeline 6.4 s vs 11.5 s); the registry resets the conf before the
-    # next query builds (session.set_fine_coalescing)
-    set_fine_coalescing(item_sets.sparkSession)
+    even when the source scan is one split. Registered callers run it
+    under ``_FINE_COALESCING``; a direct caller gets the same speed by
+    wrapping it in ``session.conf_override``."""
     # The per-doc sorted hash set is built as ONE projection — hash each
     # item inside transform(), no explode, no collect_set shuffle (the
     # earlier exploded-rows form materialized every (doc, item) string
@@ -389,6 +409,7 @@ def ppjoin_jaccard_pairs(item_sets: DataFrame, tau: float,
 @register(
     "dedup_token_jaccard",
     category="dedup",
+    confs=_FINE_COALESCING,  # PPJoin digest self-join + verify
     oracle=f"""
     WITH tok AS (
       SELECT DISTINCT doc_id, lang, UNNEST(STRING_SPLIT(text, ' ')) AS token
@@ -441,6 +462,7 @@ NGRAM_JACCARD_TAU = 0.8
     "dedup_ngram_jaccard",
     bench=True,
     category="dedup",
+    confs=_FINE_COALESCING,  # PPJoin digest self-join + verify
     oracle=f"""
     WITH g AS (
       SELECT doc_id, lang,
@@ -703,16 +725,6 @@ def shingle_arrays(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.expr(_SHINGLE_ARR).alias("shingles"))
 
 
-def _doc_shingle_arrays(spark, sf_dir) -> DataFrame:
-    return shingle_arrays(table(spark, sf_dir, "documents"))
-
-
-def _doc_shingles(spark, sf_dir) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles."""
-    return (_doc_shingle_arrays(spark, sf_dir)
-            .select("doc_id", F.explode("shingles").alias("shingle")))
-
-
 #: signature shape: explode distinct shingles → ONE codegen md5 per
 #: shingle → 32-way MIN hash-aggregate per doc. The aggregation is
 #: map-side-combined, so what shuffles is one 33-column row per doc per
@@ -739,20 +751,6 @@ def shingle_hashes(docs_with_shingles: DataFrame) -> DataFrame:
             .select("doc_id", F.explode("shingles").alias("s"))
             .selectExpr("doc_id", "md5(cast(s as binary)) AS m")
             .selectExpr("doc_id", _X_FROM_MD5, _H60_FROM_MD5))
-
-
-def minhash_signatures(docs_with_shingles: DataFrame) -> DataFrame:
-    """(doc_id, n_sh, s0..s{N-1}) — 32 universal-hash MIN aggregates over
-    the exploded shingle hashes (partial aggregation makes the exchange
-    one row per doc)."""
-    # parsed-SQL form, one py4j call per aggregate (the Column-chain
-    # form cost ~6 round-trips x 32 hashes per build; same tree — see
-    # the simhash_signatures rationale)
-    mins = [F.expr(f"min(({a} * x + {b}) % {P31}) AS s{i}")
-            for i, (a, b) in enumerate(_MH_COEFFS)]
-    return (shingle_hashes(docs_with_shingles)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_sh"), *mins))
 
 
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
@@ -787,20 +785,8 @@ def minhash_pairs_from_shingled(shingled: DataFrame,
     candidate signature to each doc's rarity prefix (see
     :func:`routed_jaccard_pairs` for why). ``full=True`` additionally
     returns the exact verified overlap and set sizes
-    (n_common, size_a, size_b) in the PPJoin output convention."""
-    # Opt out of InferFiltersFromGenerate for this query: the rule
-    # re-infers the size(shingles) > 0 filter from the explode inside
-    # shingle_hashes and filter pushdown drives it through the spread()
-    # exchange into the scan, where the WHOLE shingle build (split +
-    # transform + array_distinct) evaluates once per scanned row in the
-    # scan's few splits and then AGAIN post-exchange for the projection
-    # — the measured single-threaded-scan defect (22 s vs 1.1 s on the
-    # same-shaped route gram build at g1.0). Removing the explicit
-    # filter (r17 inherited commit) did NOT fix this: the committed
-    # before/after plans were identical because the inference puts the
-    # filter right back. The inferred filter is semantics-free (explode
-    # already drops empty arrays); see session.py for the full rationale.
-    set_no_generate_filter_inference(shingled.sparkSession)
+    (n_common, size_a, size_b) in the PPJoin output convention.
+    Registered callers run it under ``_NO_GENERATE_FILTER_INFERENCE``."""
     # persist() materializes the per-shingle hashes once (the expensive
     # shingle build + md5); signatures, band keys, sizes, and
     # verification keys all derive from it.
@@ -945,6 +931,7 @@ def _minhash_oracle() -> str:
 
 
 @register("dedup_minhash_lsh", category="dedup", bench=True,
+          confs=_NO_GENERATE_FILTER_INFERENCE,
           oracle=_minhash_oracle())
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup pairs on the documents table (see
@@ -980,15 +967,12 @@ def minhash_band_candidates(shingled: DataFrame) -> DataFrame:
     (doc_id, shingles) table — the same signature coefficients and 8×4
     band keys as :func:`minhash_pairs_from_shingled`, without the fused
     verification (the route tier verifies against the FULL item sets,
-    not the candidate signature)."""
+    not the candidate signature). Registered callers run it under
+    ``_NO_GENERATE_FILTER_INFERENCE``: here the inferred filter would
+    re-evaluate the per-doc rarity-prefix transform(slice(...)), which
+    is smaller than a scan-level gram build but the same pure overhead."""
     from cstore_fdw_spark.operators import track_cache
 
-    # same InferFiltersFromGenerate opt-out as
-    # minhash_pairs_from_shingled (here the generator input is the
-    # rarity-prefix aggregate output, so the inferred filter costs a
-    # per-doc transform(slice(...)) re-evaluation rather than a
-    # scan-level gram build — smaller, but the same pure overhead)
-    set_no_generate_filter_inference(shingled.sparkSession)
     ex = track_cache(shingle_hashes(shingled).persist())
     # parsed-SQL form, one py4j call per aggregate (the Column-chain
     # form cost ~6 round-trips x 32 hashes per build; same tree — see
@@ -1203,6 +1187,7 @@ def _routed_ngram_oracle() -> str:
 
 
 @register("route_ngram_minhash_tier", category="dedup",
+          confs=_NO_GENERATE_FILTER_INFERENCE,
           oracle=_routed_ngram_oracle())
 def route_ngram_minhash_tier(spark, sf_dir):
     """The ``on_saturation='route'`` fallthrough of the char-n-gram
@@ -1318,7 +1303,9 @@ def _simhash_oracle() -> str:
     """
 
 
-@register("dedup_simhash", bench=True, category="dedup", oracle=_simhash_oracle())
+@register("dedup_simhash", bench=True, category="dedup",
+          confs=_FINE_COALESCING,  # 4x16-bit chunk-block self-join
+          oracle=_simhash_oracle())
 def dedup_simhash(spark, sf_dir):
     """SimHash near-dup pairs: 64-bit signatures as four 16-bit chunks,
     chunk blocking (pigeonhole: pairs within Hamming ≤ SIMHASH_CHUNKS-1 = 3
@@ -1352,9 +1339,6 @@ def dedup_simhash(spark, sf_dir):
         "doc_id",
         F.explode(F.expr("array_distinct(filter(split(text, ' '),"
                          " t -> t <> ''))")).alias("token"))
-    # chunk-block self-join over 4x16-bit keys: CPU-dense per byte, same
-    # fine-coalescing rationale as ppjoin_jaccard_pairs
-    set_fine_coalescing(spark)
     sig = simhash_signatures(tokens)
     # inline() explodes the (chunk, ck) struct array straight to columns
     # — one parsed expression instead of a ~60-call explode/restructure
@@ -1544,6 +1528,7 @@ def _simhash_cc_oracle() -> str:
 
 
 @register("simhash_components", category="dedup",
+          confs=_FINE_COALESCING,  # its edge stream is dedup_simhash
           oracle=_simhash_cc_oracle())
 def simhash_components(spark, sf_dir):
     """The node-bounded SimHash consumer dedup_simhash's own docstring
@@ -1633,6 +1618,7 @@ _WORD_GRAM_ARR = (
 @register(
     "text_ngram_containment",
     category="dedup",
+    confs=_FINE_COALESCING,  # prefix self-join + verify, as PPJoin
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, lang, STRING_SPLIT(text, ' ') AS arr
@@ -1699,7 +1685,6 @@ def text_ngram_containment(spark, sf_dir):
                  .select("doc_id", "lang",
                          F.expr(_WORD_GRAM_ARR).alias("items")))
     tau = CONTAINMENT_TAU
-    set_fine_coalescing(item_sets.sparkSession)
     sets = track_cache(
         item_sets.select(
             "doc_id", "lang",

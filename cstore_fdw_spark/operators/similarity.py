@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from cstore_fdw_spark.operators import (register, spread, table,
                                         track_cache)
+from cstore_fdw_spark.session import conf_override
 
 N_QUERIES = 5    # demo query set: vec_id < 5
 TOP_K = 3
@@ -797,12 +798,8 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
         # broadcast future past the 300 s interactive default and
         # killed the g10 build). Index training is the train-once
         # OFFLINE path — give it an offline timeout, restore after.
-        prev = spark.conf.get("spark.sql.broadcastTimeout", "300")
-        try:
-            spark.conf.set("spark.sql.broadcastTimeout", "3600")
+        with conf_override(spark, {"spark.sql.broadcastTimeout": "3600"}):
             df.write.mode("overwrite").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.broadcastTimeout", prev)
         TRAINED_TAGS.append(tag)
     return spark.read.parquet(path)
 
@@ -829,17 +826,18 @@ def ensure_index_artifacts(spark, sf_dir):
     that already has the artifacts). bench.py calls this during bring-up
     and reports the wall cost as its own ``index_build_sec`` metric, so
     the per-query cold/warm numbers measure query SERVING rather than a
-    one-time build only a fresh host pays."""
-    from cstore_fdw_spark.operators import release_build_caches
-    from cstore_fdw_spark.session import ADAPTIVE_CONF
+    one-time build only a fresh host pays. The builders run through the
+    registry, so training runs under their declared settings, and
+    ``release_build_caches`` drops the last builder's persists and
+    restores those settings."""
+    from cstore_fdw_spark.operators import REGISTRY, release_build_caches
 
     n0 = len(TRAINED_TAGS)
-    vector_quantize_pq(spark, sf_dir)   # trains "rawpq" on a miss
-    vector_ivf_pq_topk(spark, sf_dir)   # trains "ivfc" + "ivfpq"
-    release_build_caches()              # drop the builder's resid persist
-    # un-leak the IVF builder's static-planning opt-out (the registry
-    # wrapper normally restores this; we called the raw builders)
-    spark.conf.set(ADAPTIVE_CONF, "true")
+    # trains "rawpq" on a miss
+    REGISTRY["vector_quantize_pq"].builder(spark, sf_dir)
+    # trains "ivfc" + "ivfpq"
+    REGISTRY["vector_ivf_pq_topk"].builder(spark, sf_dir)
+    release_build_caches()
     return TRAINED_TAGS[n0:]
 
 
@@ -1093,6 +1091,17 @@ def vector_pq_adc_topk(spark, sf_dir):
                     "rank", "adc"))
 
 
+#: Spark settings of the IVFADC queries: adaptive execution off. AQE runs
+#: every exchange as its own job to re-plan on real sizes, which is pure
+#: sequential overhead for a pipeline of dozens of bounded mini-stages
+#: (trainer chains on an artifact miss, one-row codebook aggregates,
+#: per-query probe tables): ~9 s static vs ~12-18 s adaptive at sf0.1.
+#: Safe because the only corpus-sized shuffles are hash-partitioned by
+#: vec_id (no skew for AQE to fix) and every join side is an explicit
+#: broadcast() (no plan for AQE to switch).
+_STATIC_PLANNING = {"spark.sql.adaptive.enabled": "false"}
+
+
 def _ivf_pq_oracle() -> str:
     """Pure-ADC ranking over the shared IVFADC CTE chain."""
     return f"""
@@ -1206,6 +1215,7 @@ def _ivf_pq_ctes() -> str:
     category="similarity",
     bench=True,
     allow_bnlj=True,  # bounded centroid broadcast via _ivf_scored_cells
+    confs=_STATIC_PLANNING,
     oracle=_ivf_pq_oracle())
 def vector_ivf_pq_topk(spark, sf_dir):
     """IVFADC with residual encoding (Jégou '11 §V — the composed FAISS
@@ -1254,13 +1264,8 @@ def _ivfadc_adc(spark, sf_dir):
     every candidate in the query's probed cells, scored by residual-PQ
     asymmetric distance (see ``vector_ivf_pq_topk`` for the full
     story; ``vector_ivf_pq_rerank_topk`` consumes the same frame as a
-    shortlist generator)."""
-    from cstore_fdw_spark.session import set_static_planning
-
-    # dozens of bounded mini-stages (trainer chains on a cache miss,
-    # one-row codebook aggregates, probe tables) where AQE's
-    # per-exchange job barriers cost more than the data
-    set_static_planning(spark)
+    shortlist generator). Registered callers run it under
+    ``_STATIC_PLANNING``."""
     e = table(spark, sf_dir, "embeddings")
     # --- coarse stage: home cell per vector, probed cells per query.
     # Unlike the sampled-centroid operators (ann_ivf_coarse,
@@ -1455,6 +1460,7 @@ def _ivf_pq_rerank_oracle() -> str:
     "vector_ivf_pq_rerank_topk",
     category="similarity",
     allow_bnlj=True,  # bounded centroid broadcast via _ivf_scored_cells
+    confs=_STATIC_PLANNING,
     oracle=_ivf_pq_rerank_oracle())
 def vector_ivf_pq_rerank_topk(spark, sf_dir):
     """IVFADC+R (Jégou '11 §VII — the re-ranked variant every

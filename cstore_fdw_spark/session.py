@@ -11,9 +11,11 @@ local-mode specific except the master URL default.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -22,12 +24,14 @@ from pyspark.sql import SparkSession
 DEFAULT_PAGE_ROW_LIMIT = 10_000        # block analog: page-level stats granularity
 DEFAULT_ROW_GROUP_BYTES = 128 * 1024 * 1024  # stripe analog: row-group size
 
-#: AQE reducer-size floor (Spark default). Individual queries opt into a
-#: finer floor via :func:`set_fine_coalescing`.
-MIN_PARTITION_SIZE_CONF = \
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-DEFAULT_MIN_PARTITION_SIZE = "1m"
-FINE_MIN_PARTITION_SIZE = "256k"
+#: executor threads and shuffle partitions: the CPUs this process may
+#: run on, unless SPARK_GRAFT_CPUS says otherwise
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS",
+                       str(len(os.sched_getaffinity(0))))
+
+#: the optimizer-rule exclusion list; :func:`conf_override` appends to
+#: it instead of replacing it
+EXCLUDED_RULES_CONF = "spark.sql.optimizer.excludedRules"
 
 ENGINE_CONFS: dict[str, str] = {
     # --- Adaptive execution: runtime re-planning, skew-join handling,
@@ -49,12 +53,11 @@ ENGINE_CONFS: dict[str, str] = {
     # but taxed every broadcast-heavy query with extra tiny-task
     # scheduling (A/B at sf0.1: q3 1.18 s @ 1m vs 1.46 s @ 256k).
     # Queries that NEED fine coalescing — hash self-joins over 8-byte
-    # token digests carrying a few MB but seconds of CPU — opt in per
-    # query via :func:`set_fine_coalescing` (see the PPJoin pipeline);
-    # the operator registry resets this conf to the default before each
-    # build so the override never leaks across queries.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-        DEFAULT_MIN_PARTITION_SIZE,
+    # token digests carrying a few MB but seconds of CPU — declare a
+    # 256k floor on their registry entry (QuerySpec.confs); the registry
+    # restores this value when the query's caches are released, so the
+    # override never leaks.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
     # --- Columnar scan: pushdown + pruning (zone-map parity, SURVEY §4).
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
@@ -94,7 +97,7 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.cbo.joinReorder.enabled": "true",
     # --- Maintain stripe-like bounded files on write.
     "spark.sql.files.maxRecordsPerFile": "5000000",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": _CPUS,
 }
 
 
@@ -102,14 +105,14 @@ def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,
               extra_confs: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
-    manager is configured; on a real cluster, pass ``None`` with
-    ``--master`` supplied externally and this just applies confs.
+    ``master`` defaults to ``local[N]``, N the CPUs this process may run
+    on (``$SPARK_GRAFT_CPUS`` overrides it), when no cluster manager is
+    configured; on a real cluster, pass ``None`` with ``--master``
+    supplied externally and this just applies confs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        master = f"local[{cpus}]"
+        master = f"local[{_CPUS}]"
     if master:
         builder = builder.master(master)
     # In local[N] ONE JVM holds the driver, every executor thread, and
@@ -174,94 +177,38 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def set_fine_coalescing(spark: SparkSession) -> None:
-    """Opt THIS query into a fine AQE reducer-size floor (256k).
+@contextlib.contextmanager
+def conf_override(spark: SparkSession,
+                  confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of the ``with`` block.
 
-    For CPU-dense-per-byte shuffle stages — hash self-joins and window
-    ranks over 8-byte token digests that carry a few MB at sf0.1 but
-    seconds of CPU — the default 1m floor coalesces to ~6 reducers on 32
-    cores; 256k restores full width (measured 2x on the PPJoin token
-    pipeline). Broadcast-heavy queries are FASTER at the default floor
-    (q3: 1.18 s vs 1.46 s), so this is per-query, not session-wide: the
-    operator registry resets the conf to DEFAULT_MIN_PARTITION_SIZE
-    before every build, and pipelines that want the fine floor call this
-    at build time. At 100 TB both floors are no-ops — reducers are sized
-    by bytes/parallelism, far above either value."""
-    spark.conf.set(MIN_PARTITION_SIZE_CONF, FINE_MIN_PARTITION_SIZE)
-
-
-ADAPTIVE_CONF = "spark.sql.adaptive.enabled"
-
-CBO_CONF = "spark.sql.cbo.enabled"
-CBO_JOINREORDER_CONF = "spark.sql.cbo.joinReorder.enabled"
-
-
-def set_no_cbo(spark: SparkSession) -> None:
-    """Opt THIS query out of cost-based-optimizer stats derivation.
-
-    CBO exists for session-catalog tables with collected ANALYZE stats
-    (catalog.py); bare-path parquet reads have none, so for them the
-    CBO stats visitor is pure driver overhead — and AQE re-runs the
-    optimizer at every stage boundary, so a plan that is cheap to
-    EXECUTE can still pay seconds of driver time being re-costed. Only
-    measurably hot on plans with very wide expression trees over many
-    mini-stages (the HLL finisher's 1024-register grid + literal ln
-    table: interleaved min-of-3 A/B at sf0.1 measured 2.93 s with CBO
-    vs 1.77 s without; every other bench query was within noise, so
-    this stays per-query, not session-wide). The operator registry
-    restores both confs before every build, so the opt-out never
-    leaks — catalog-stats queries keep the CBO default."""
-    spark.conf.set(CBO_CONF, "false")
-    spark.conf.set(CBO_JOINREORDER_CONF, "false")
-
-
-EXCLUDED_RULES_CONF = "spark.sql.optimizer.excludedRules"
-
-_INFER_FROM_GENERATE_RULE = (
-    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-
-
-def set_no_generate_filter_inference(spark: SparkSession) -> None:
-    """Opt THIS query out of ``InferFiltersFromGenerate``.
-
-    The rule adds ``size(e) > 0 AND isnotnull(e)`` below every explode so
-    rows that would generate nothing are dropped before they shuffle —
-    the right trade when ``e`` is a stored column. When ``e`` is an
-    EXPENSIVE DERIVED expression (the MinHash pipelines explode the
-    word-shingle array built by split+transform+array_distinct), filter
-    pushdown then carries that whole expression through the spread()
-    exchange down to the parquet scan: the complete shingle build runs
-    once per scanned row inside the scan's few splits (single-threaded
-    on a small file, and ALWAYS at scan rather than cluster parallelism)
-    and then AGAIN post-exchange for the projection itself — the same
-    single-threaded-scan defect measured at 22 s vs 1.1 s on the route
-    tier's gram build (r16, g1.0), which the r17 inherited commit
-    removed for the route tier by filtering above the persist but could
-    not remove here because the inference re-creates the filter from the
-    explode itself. Excluding the rule is semantics-free (the filter it
-    infers is redundant — explode already emits nothing for empty
-    arrays); what is lost is only shuffling the rare zero-shingle doc's
-    (doc_id, text) row once, and what is gained is evaluating the
-    shingle build exactly once per row at full parallelism. Like the
-    other per-query opt-outs, the operator registry restores the conf
-    before every build, so queries that explode stored columns keep the
-    inference."""
-    spark.conf.set(EXCLUDED_RULES_CONF, _INFER_FROM_GENERATE_RULE)
-
-
-def set_static_planning(spark: SparkSession) -> None:
-    """Opt THIS query out of adaptive execution.
-
-    AQE materializes every exchange as its own job to re-plan on real
-    sizes — exactly right for corpus-sized shuffles, pure sequential
-    overhead for pipelines made of DOZENS of bounded mini-stages
-    (trainer chains, one-row codebook aggregates, per-query probe
-    tables): the IVFADC pipeline spends more wall time on AQE job
-    barriers than on data (A/B at sf0.1: ~9 s static vs ~12-18 s
-    adaptive). Safe here because the pipeline's only corpus-sized
-    shuffles are hash-partitioned by vec_id (near-uniform — no skew
-    for AQE to fix) and every join side is an explicit broadcast()
-    (no plan for AQE to switch). Like the fine-coalescing floor, this
-    is per-query: the operator registry restores adaptive execution
-    before every build, so the opt-out never leaks."""
-    spark.conf.set(ADAPTIVE_CONF, "false")
+    Each key's prior value is recorded first, and on exit every key goes
+    back to it, including when the body raises; a key that was unset is
+    unset again. Each key is restored on its own, so one failed restore
+    does not skip the rest (the first failure is re-raised after all
+    were tried). A rule for :data:`EXCLUDED_RULES_CONF` is appended to
+    the session's existing exclusions, not written over them. The
+    operator registry applies each query's ``QuerySpec.confs`` through
+    this, for the lifetime of the query's tracked caches.
+    """
+    prior: list[tuple[str, str | None]] = []
+    try:
+        for key, value in confs.items():
+            old = spark.conf.get(key, None)
+            prior.append((key, old))
+            if key == EXCLUDED_RULES_CONF and old:
+                value = f"{old},{value}"
+            spark.conf.set(key, value)
+        yield
+    finally:
+        failed: list[Exception] = []
+        for key, old in reversed(prior):
+            try:
+                if old is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, old)
+            except Exception as exc:  # noqa: BLE001 — restore the rest
+                failed.append(exc)
+        if failed:
+            raise failed[0]

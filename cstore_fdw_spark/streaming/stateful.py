@@ -20,6 +20,8 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor, StatefulProcessorHandle)
 from pyspark.sql import types as T
 
+from cstore_fdw_spark.session import conf_override
+
 BIG_SPENDER_THRESHOLD = 10_000.0
 
 OUTPUT_SCHEMA = T.StructType([
@@ -434,8 +436,6 @@ def run_holt_available_now(spark, sf_dir: str,
     # transformWithState requires the RocksDB state store provider;
     # leave the default provider alone on the fallback tier
     use_tws = transform_with_state_available()
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
     stage = tempfile.mkdtemp(prefix="holt-stage-")
     try:
         src = f"{sf_dir}/events.parquet"
@@ -474,12 +474,12 @@ def run_holt_available_now(spark, sf_dir: str,
         hourly = holt_hourly_stream(stream)
         if use_tws:
             # one query: rollup + fold chained (TWS supports chaining)
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming."
-                "state.RocksDBStateStoreProvider")
-            out = holt_fold_stream(hourly, use_tws=True)
-            with tempfile.TemporaryDirectory() as ckpt:
+            rocksdb = {"spark.sql.streaming.stateStore.providerClass":
+                       "org.apache.spark.sql.execution.streaming."
+                       "state.RocksDBStateStoreProvider"}
+            with conf_override(spark, rocksdb), \
+                    tempfile.TemporaryDirectory() as ckpt:
+                out = holt_fold_stream(hourly, use_tws=True)
                 q = (out.writeStream.format("memory")
                      .queryName(query_name)
                      .outputMode("append")
@@ -518,10 +518,6 @@ def run_holt_available_now(spark, sf_dir: str,
                       .trigger(availableNow=True).start())
                 q2.awaitTermination(180)
     finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
         shutil.rmtree(stage, ignore_errors=True)
 
     from pyspark.sql import Window

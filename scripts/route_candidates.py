@@ -33,7 +33,7 @@ from cstore_fdw_spark.operators import (  # noqa: E402
 from cstore_fdw_spark.operators.dedup import (  # noqa: E402
     _CHAR_GRAM_ARR, NGRAM_JACCARD_TAU, ROUTE_PREFIX_K,
     minhash_band_candidates, routed_jaccard_pairs)
-from cstore_fdw_spark.session import get_spark  # noqa: E402
+from cstore_fdw_spark.session import conf_override, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -46,7 +46,7 @@ def main() -> None:
 
     spark = get_spark(app_name="route-candidates")
     spark.sparkContext.setLogLevel("ERROR")
-    load_all()
+    route_confs = load_all()["route_ngram_minhash_tier"].confs
 
     out: dict[str, dict] = {}
     for d in args.dirs.split(","):
@@ -65,12 +65,13 @@ def main() -> None:
                         f"transform(slice(array_sort(collect_list("
                         f"struct(df, it))), 1, {ROUTE_PREFIX_K}),"
                         f" x -> x.it)").alias("shingles")))
-        t0 = time.perf_counter()
-        n_cands = minhash_band_candidates(shingled).count()
-        t_cands = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        n_out = routed_jaccard_pairs(g, NGRAM_JACCARD_TAU).count()
-        t_full = time.perf_counter() - t0
+        with conf_override(spark, route_confs):
+            t0 = time.perf_counter()
+            n_cands = minhash_band_candidates(shingled).count()
+            t_cands = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            n_out = routed_jaccard_pairs(g, NGRAM_JACCARD_TAU).count()
+            t_full = time.perf_counter() - t0
         out[label] = {
             "docs": n_docs,
             "candidate_pairs": n_cands,

@@ -55,7 +55,7 @@ from cstore_fdw_spark.operators import (  # noqa: E402
 from cstore_fdw_spark.operators.dedup import (  # noqa: E402
     _CHAR_GRAM_ARR, ROUTE_PREFIX_K, minhash_band_candidates,
     routed_jaccard_pairs)
-from cstore_fdw_spark.session import get_spark  # noqa: E402
+from cstore_fdw_spark.session import conf_override, get_spark  # noqa: E402
 
 
 def gram_sets(spark, d: str) -> DataFrame:
@@ -115,7 +115,7 @@ def main() -> None:
 
     spark = get_spark(app_name="route-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    load_all()
+    route_confs = load_all()["route_ngram_minhash_tier"].confs
     variants = (["window", "minK"] if args.prefix_variant == "both"
                 else [args.prefix_variant])
 
@@ -147,7 +147,13 @@ def main() -> None:
 
         def cut_cands(v):
             _, ex, dfreq = build()
-            noop(minhash_band_candidates(prefix_shingled(ex, dfreq, v)))
+            with conf_override(spark, route_confs):
+                noop(minhash_band_candidates(
+                    prefix_shingled(ex, dfreq, v)))
+
+        def full():
+            with conf_override(spark, route_confs):
+                noop(routed_jaccard_pairs(gram_sets(spark, d), 0.8))
 
         print("# stage: sets", file=sys.stderr, flush=True)
         out[label]["sets"] = timed(spark, args.runs, cut_sets)
@@ -163,10 +169,7 @@ def main() -> None:
         if not args.skip_full:
             print("# stage: full (registered path, r16 code)",
                   file=sys.stderr, flush=True)
-            out[label]["full"] = timed(
-                spark, args.runs,
-                lambda: noop(routed_jaccard_pairs(
-                    gram_sets(spark, d), 0.8)))
+            out[label]["full"] = timed(spark, args.runs, full)
         print(json.dumps({label: out[label]}), flush=True)
 
     payload = {"_meta": {

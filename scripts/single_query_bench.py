@@ -34,7 +34,9 @@ def main() -> None:
     spark = get_spark(app_name=f"sqb-{args.query}")
     spark.sparkContext.setLogLevel("ERROR")
     spec = load_all()[args.query]
-    spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").limit(1).count()
+    warmup = f"{args.sf_dir}/lineitem.parquet"
+    if os.path.exists(warmup):
+        spark.read.parquet(warmup).limit(1).count()
     runs = []
     for _ in range(args.runs):
         clear_caches(spark)

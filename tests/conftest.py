@@ -89,7 +89,6 @@ def pytest_sessionstart(session):
 def spark():
     import tempfile
     spark = get_spark(app_name="cstore_fdw_spark-tests",
-                      master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
                       extra_confs={"spark.sql.warehouse.dir":
                                    tempfile.mkdtemp(prefix="spark_wh_")})
     yield spark

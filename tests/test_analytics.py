@@ -1712,11 +1712,11 @@ def test_ivf_codes_artifact_serves_without_reassignment(spark, sf_dir):
     assignment that made serving superlinear before r12 runs only at
     index build). The probes branch's 5-query window survives with its
     vec_id pushdown; the corpus branch must not."""
-    from cstore_fdw_spark.operators.similarity import (
-        ensure_index_artifacts, vector_ivf_pq_topk)
+    from cstore_fdw_spark.operators import load_all
+    from cstore_fdw_spark.operators.similarity import ensure_index_artifacts
 
     ensure_index_artifacts(spark, sf_dir)
-    df = vector_ivf_pq_topk(spark, sf_dir)
+    df = load_all()["vector_ivf_pq_topk"].builder(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "cstore_cb_ivfcodes_" in plan, \
         "serving plan does not read the codes artifact"

@@ -8,6 +8,7 @@ the properties run the cheap pure-Python/driver-side parts where possible.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -357,7 +358,6 @@ def test_index_artifacts_train_once_serve_many(spark, sf_dir):
     import tempfile
 
     from cstore_fdw_spark.operators import similarity as sim
-    from cstore_fdw_spark.session import ADAPTIVE_CONF
 
     # scope the wipe to THIS sf_dir's keys: other fixtures' artifacts
     # (the sf0.01 gate's) must survive a test run
@@ -377,7 +377,7 @@ def test_index_artifacts_train_once_serve_many(spark, sf_dir):
     assert "rawpq" in trained1, f"fresh host should train rawpq: {trained1}"
     trained2 = sim.ensure_index_artifacts(spark, sf_dir)
     assert trained2 == [], f"warm host retrained: {trained2}"
-    assert spark.conf.get(ADAPTIVE_CONF) == "true"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
 
 
@@ -402,21 +402,94 @@ def test_connected_components_from_pairs_shared_loop(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
 
 
-def test_generate_inference_optout_never_leaks_across_builders(
-        spark, sf_dir):
-    """set_no_generate_filter_inference (the MinHash pipelines' per-query
-    InferFiltersFromGenerate opt-out) must be restored by the NEXT
-    registered builder — queries that explode STORED columns keep the
-    inference (it prunes empty-array rows before their exchange)."""
+def _declaring_queries() -> list[str]:
     from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.session import EXCLUDED_RULES_CONF
+    return sorted(n for n, spec in load_all().items() if spec.confs)
+
+
+@pytest.mark.parametrize("name", _declaring_queries())
+def test_declared_confs_apply_and_never_leak(spark, sf_dir, name):
+    """A query's declared Spark settings (QuerySpec.confs: the fine
+    coalescing floor, the InferFiltersFromGenerate exclusion, the CBO
+    opt-out, static planning) are active once its builder returns, so
+    the caller's action runs under them; every key is back to its prior
+    value after the NEXT registered build and after clear_caches, so
+    queries that rely on the session defaults never inherit them."""
+    from cstore_fdw_spark.operators import clear_caches, load_all
 
     reg = load_all()
-    reg["dedup_minhash_lsh"].builder(spark, sf_dir)
-    assert "InferFiltersFromGenerate" in (
-        spark.conf.get(EXCLUDED_RULES_CONF) or "")   # opt-out active
+    confs = reg[name].confs
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    reg[name].builder(spark, sf_dir)
+    for key, value in confs.items():
+        assert value in spark.conf.get(key).split(","), key
     reg["dedup_exact"].builder(spark, sf_dir)
-    assert spark.conf.get(EXCLUDED_RULES_CONF, None) in (None, "")
+    assert {k: spark.conf.get(k, None) for k in confs} == prior
+    reg[name].builder(spark, sf_dir)
+    clear_caches(spark)
+    assert {k: spark.conf.get(k, None) for k in confs} == prior
+
+
+def test_excluded_rules_compose_and_restore_byte_for_byte(spark, sf_dir):
+    """A rule exclusion declared by a query is ADDED to the session's
+    existing exclusions, not written over them, and the session's own
+    value comes back unchanged once the query's lifetime ends."""
+    from cstore_fdw_spark.operators import clear_caches, load_all
+    from cstore_fdw_spark.session import EXCLUDED_RULES_CONF
+
+    preset = ("org.apache.spark.sql.catalyst.optimizer."
+              "ConvertToLocalRelation")
+    spark.conf.set(EXCLUDED_RULES_CONF, preset)
+    try:
+        load_all()["dedup_minhash_lsh"].builder(spark, sf_dir)
+        rules = spark.conf.get(EXCLUDED_RULES_CONF).split(",")
+        assert preset in rules
+        assert ("org.apache.spark.sql.catalyst.optimizer."
+                "InferFiltersFromGenerate") in rules
+        clear_caches(spark)
+        assert spark.conf.get(EXCLUDED_RULES_CONF) == preset
+    finally:
+        spark.conf.unset(EXCLUDED_RULES_CONF)
+
+
+def test_conf_override_restores_unset_keys_even_when_body_raises(spark):
+    """conf_override puts every key back as it found it: a key that was
+    unset is unset again (not set to some default), a set key gets its
+    old value back, and both hold when the body raises."""
+    from cstore_fdw_spark.session import EXCLUDED_RULES_CONF, conf_override
+
+    assert spark.conf.get(EXCLUDED_RULES_CONF, None) is None
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    rule = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    with conf_override(spark, {EXCLUDED_RULES_CONF: rule}):
+        assert spark.conf.get(EXCLUDED_RULES_CONF) == rule
+    assert spark.conf.get(EXCLUDED_RULES_CONF, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_override(spark, {EXCLUDED_RULES_CONF: rule,
+                                   "spark.sql.shuffle.partitions": "3"}):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(EXCLUDED_RULES_CONF, None) is None
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+
+
+def test_operators_never_set_confs_directly():
+    """Operator code is pure DataFrame code: a setting a query needs is
+    declared on its registry entry (QuerySpec.confs) or scoped with
+    session.conf_override, never set or unset on the session directly,
+    where nothing would restore it."""
+    import pathlib
+    import re
+
+    import cstore_fdw_spark.operators as ops
+
+    direct = re.compile(r"\.conf\.(set|unset)\(")
+    hits = [f"{path.name}:{no}: {line.strip()}"
+            for path in sorted(pathlib.Path(ops.__file__).parent
+                               .rglob("*.py"))
+            for no, line in enumerate(path.read_text().splitlines(), 1)
+            if direct.search(line)]
+    assert not hits, hits
 
 
 def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
@@ -426,29 +499,16 @@ def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
     whole split+transform+array_distinct expression through the spread()
     exchange to the scan (evaluated per row in the scan's few splits,
     then again post-exchange). Pins the r17 per-query rule opt-out."""
+    import contextlib
+    import io
+
     from cstore_fdw_spark.operators import load_all
 
     df = load_all()["dedup_minhash_lsh"].builder(spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    for line in plan.splitlines():
+    plan = io.StringIO()
+    with contextlib.redirect_stdout(plan):
+        df.explain(mode="formatted")
+    for line in plan.getvalue().splitlines():
         if line.startswith("Condition") and "array_distinct" in line:
             raise AssertionError(
                 "shingle build found in a Filter condition:\n" + line)
-
-
-def test_cbo_optout_never_leaks_across_builders(spark, sf_dir):
-    """set_no_cbo (the HLL finisher's per-query CBO opt-out) must be
-    restored by the NEXT registered builder, exactly like the
-    fine-coalescing and static-planning opt-ins — catalog-stats queries
-    rely on the session CBO default."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.session import CBO_CONF, CBO_JOINREORDER_CONF
-
-    reg = load_all()
-    reg["sketch_hyperloglog_distinct"].builder(spark, sf_dir)
-    assert spark.conf.get(CBO_CONF) == "false"  # opt-out active
-    # any subsequent builder restores the session default before building
-    reg["dedup_exact"].builder(spark, sf_dir)
-    assert spark.conf.get(CBO_CONF) == "true"
-    assert spark.conf.get(CBO_JOINREORDER_CONF) == "true"

@@ -62,6 +62,35 @@ def test_on_saturation_raise_and_ignore(spark):
         ppjoin_jaccard_pairs(sets, 0.8, on_saturation="reroute")
 
 
+def _sets_cache_fill(spark) -> tuple[int, int]:
+    """(cached, total) partitions of the persisted per-doc hash sets:
+    the one in-memory RDD whose plan's top projection derives n_s."""
+    infos = [i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+             if "AS n_s#" in i.name().splitlines()[0]]
+    assert len(infos) == 1, [i.name()[:80] for i in infos]
+    return infos[0].numCachedPartitions(), infos[0].numPartitions()
+
+
+@pytest.mark.parametrize("mode", ["warn", "ignore"])
+def test_sets_cache_filled_before_plan_fans_out(spark, mode):
+    """The persisted `sets` must be fully cached by the time
+    ppjoin_jaccard_pairs returns, with no further action: the prefix
+    build, both self-join sides and the verify join all read it, and
+    racing parallel branches over a half-filled lazy persist recompute
+    the whole set build. On 'warn' the saturation guard's collect is
+    that fill; 'ignore' skips the guard and relies on its own count()."""
+    from cstore_fdw_spark.operators import clear_caches
+
+    clear_caches(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", JaccardSaturationWarning)
+        ppjoin_jaccard_pairs(_corpus(spark, 600, 24), 0.8,
+                             on_saturation=mode)
+    cached, total = _sets_cache_fill(spark)
+    assert cached == total
+    clear_caches(spark)
+
+
 def test_route_falls_through_to_minhash_tier(spark):
     """Saturated corpus + 'route' returns exactly the pair set the
     MinHash-LSH tier computes directly over the same item sets (same
