@@ -189,17 +189,23 @@ def load_all() -> dict[str, QuerySpec]:
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS), which Spark's vectorized
-        # reader rejects; with spark.sql.legacy.parquet.nanosAsLong (set in
-        # session.ENGINE_CONFS) it arrives as a long. Truncate to micros
-        # with integer division (nanos ~1.7e18 exceed double's 2^53, so no
-        # float path) — matching DuckDB's truncating nanos→micros read.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df
+    return events_ts_micros(df) if name == "events" else df
+
+
+def events_ts_micros(events: DataFrame) -> DataFrame:
+    """The events ``ts`` column as a timestamp, batch or stream.
+
+    An events.parquet that stores TIMESTAMP(NANOS), which Spark's
+    vectorized reader rejects, arrives as a long under
+    spark.sql.legacy.parquet.nanosAsLong (set in session.ENGINE_CONFS).
+    Truncate it to micros with integer division (nanos ~1.7e18 exceed
+    double's 2^53, so no float path) — matching DuckDB's truncating
+    nanos→micros read. A micros ``ts`` passes through unchanged."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+    if isinstance(events.schema["ts"].dataType, T.LongType):
+        return events.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return events
 
 
 def spread(df: DataFrame) -> DataFrame:

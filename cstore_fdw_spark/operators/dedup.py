@@ -762,7 +762,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     persisted once) → 32 min-hashes (map-side-combined aggregate) →
     8 arithmetic band keys per doc → bucket join on (band, band_key) →
     candidate pairs → exact Jaccard via 60-bit-hash join restricted to
-    candidates. Output: (doc_a, doc_b, n_common_bands, jaccard)."""
+    candidates. Output: see :func:`minhash_pairs_from_shingled`."""
     # Docs with zero shingles (empty text) are excluded by the explode
     # inside shingle_hashes — a zero-shingle doc emits no rows, so it
     # gets no signature and can never band-collide; the oracle's explode
@@ -775,22 +775,23 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     return minhash_pairs_from_shingled(shingle_arrays(spread(docs)))
 
 
-def minhash_pairs_from_shingled(shingled: DataFrame,
-                                full: bool = False) -> DataFrame:
-    """The MinHash+LSH+verify core over any (doc_id, shingles:
-    array<string>) set table — used by :func:`minhash_lsh_pairs`
-    (word shingles from text); the saturation ``route`` tier of
-    :func:`ppjoin_jaccard_pairs` shares the same signature/banding
-    primitives via :func:`minhash_band_candidates` but restricts the
-    candidate signature to each doc's rarity prefix (see
-    :func:`routed_jaccard_pairs` for why). ``full=True`` additionally
-    returns the exact verified overlap and set sizes
-    (n_common, size_a, size_b) in the PPJoin output convention.
+def minhash_band_kernel(shingled: DataFrame
+                        ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one MinHash + banded-LSH build over any (doc_id, shingles:
+    array<string>) set table, shared by :func:`minhash_pairs_from_shingled`
+    (word shingles, verified on the 60-bit keys) and
+    :func:`routed_jaccard_pairs` (rarity-prefix grams, verified on the
+    full item sets). Returns ``(hashes, sigs, pairs)``:
+
+    - ``hashes``: persisted (doc_id, x, sh), see :func:`shingle_hashes`;
+    - ``sigs``: persisted (doc_id, n_sh, bands), materialized here;
+    - ``pairs``: (doc_a, doc_b, n_common_bands) band collisions.
+
     Registered callers run it under ``_NO_GENERATE_FILTER_INFERENCE``."""
     # persist() materializes the per-shingle hashes once (the expensive
     # shingle build + md5); signatures, band keys, sizes, and
     # verification keys all derive from it.
-    ex = track_cache(shingle_hashes(shingled).persist())
+    hashes = track_cache(shingle_hashes(shingled).persist())
     # persist(), not localCheckpoint(), for the signature table: both are
     # materialized once and reused by every consumer (bands self-join,
     # sizes), but localCheckpoint pays driver-side physical planning +
@@ -812,7 +813,7 @@ def minhash_pairs_from_shingled(shingled: DataFrame,
         F.expr(band_key_sql([f"s{t * ROWS_PER_BAND + r}"
                              for r in range(ROWS_PER_BAND)]))
         for t in range(N_BANDS)])
-    sigs = track_cache(ex.groupBy("doc_id")
+    sigs = track_cache(hashes.groupBy("doc_id")
                        .agg(F.count(F.lit(1)).alias("n_sh"), *mins)
                        .select("doc_id", "n_sh",
                                band_cols.alias("bands"))
@@ -821,19 +822,29 @@ def minhash_pairs_from_shingled(shingled: DataFrame,
     # sizes, both verification sides): parallel subquery threads racing a
     # lazy persist recompute the shingle+md5 build — measured as sporadic
     # 3-4x outlier runs (same rationale as ppjoin_jaccard_pairs). ONE
-    # count suffices: materializing sigs forces ex through the same job
+    # count suffices: materializing sigs forces hashes through the same job
     sigs.count()
     bands = (sigs.select("doc_id", F.posexplode("bands"))
              .select("doc_id", F.col("pos").alias("band"),
                      F.col("col").alias("bh")))
     a = bands.alias("a")
     b = bands.alias("b")
-    candidates = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                         & (F.col("a.bh") == F.col("b.bh"))
-                         & (F.col("a.doc_id") < F.col("b.doc_id")))
-                  .groupBy(F.col("a.doc_id").alias("doc_a"),
-                           F.col("b.doc_id").alias("doc_b"))
-                  .agg(F.count(F.lit(1)).alias("n_common_bands")))
+    pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
+                    & (F.col("a.bh") == F.col("b.bh"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")))
+             .groupBy(F.col("a.doc_id").alias("doc_a"),
+                      F.col("b.doc_id").alias("doc_b"))
+             .agg(F.count(F.lit(1)).alias("n_common_bands")))
+    return hashes, sigs, pairs
+
+
+def minhash_pairs_from_shingled(shingled: DataFrame) -> DataFrame:
+    """Verified MinHash+LSH pairs over any (doc_id, shingles:
+    array<string>) set table: :func:`minhash_band_kernel`'s candidates,
+    each verified with the exact shingle-set Jaccard. Output, in the
+    PPJoin convention plus the band count: (doc_a, doc_b, n_common,
+    size_a, size_b, n_common_bands, jaccard)."""
+    hashes, sigs, candidates = minhash_band_kernel(shingled)
     # exact verification restricted to candidates: expand each candidate
     # pair by doc_a's shingles, then probe doc_b's shingle set — cost is
     # O(candidates × shingles-per-doc), never the all-pairs shingle join.
@@ -841,7 +852,7 @@ def minhash_pairs_from_shingled(shingled: DataFrame,
     # same distinctness (md5 is computed per DISTINCT shingle), a fraction
     # of the shuffle bytes.
     sizes = sigs.select("doc_id", "n_sh")
-    shingles = ex.select("doc_id", "sh")
+    shingles = hashes.select("doc_id", "sh")
     sh_a = shingles.withColumnRenamed("doc_id", "doc_a")
     sh_b = shingles.withColumnRenamed("doc_id", "doc_b")
     common = (candidates.select("doc_a", "doc_b")
@@ -853,28 +864,24 @@ def minhash_pairs_from_shingled(shingled: DataFrame,
     zb = sizes.alias("zb")
     jac = (F.col("n_common").cast("double")
            / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_common")))
-    joined = (candidates
-              .join(common, ["doc_a", "doc_b"], "left")
-              .join(za, F.col("za.doc_id") == F.col("doc_a"))
-              .join(zb, F.col("zb.doc_id") == F.col("doc_b")))
-    if full:
-        return joined.select(
-            "doc_a", "doc_b",
-            F.coalesce(F.col("n_common"), F.lit(0)).cast("long")
-            .alias("n_common"),
-            F.col("za.n_sh").alias("size_a"),
-            F.col("zb.n_sh").alias("size_b"),
-            "n_common_bands",
-            F.coalesce(jac, F.lit(0.0)).alias("jaccard"))
-    return joined.select("doc_a", "doc_b", "n_common_bands",
-                         F.coalesce(jac, F.lit(0.0)).alias("jaccard"))
+    return (candidates
+            .join(common, ["doc_a", "doc_b"], "left")
+            .join(za, F.col("za.doc_id") == F.col("doc_a"))
+            .join(zb, F.col("zb.doc_id") == F.col("doc_b"))
+            .select("doc_a", "doc_b",
+                    F.coalesce(F.col("n_common"), F.lit(0)).cast("long")
+                    .alias("n_common"),
+                    F.col("za.n_sh").alias("size_a"),
+                    F.col("zb.n_sh").alias("size_b"),
+                    "n_common_bands",
+                    F.coalesce(jac, F.lit(0.0)).alias("jaccard")))
 
 
-def _minhash_oracle() -> str:
-    """DuckDB replica of the full MinHash+LSH pipeline (generated SQL:
-    32 universal-hash MIN aggregates, 8 band hashes, candidate join,
-    exact-Jaccard verification on candidates only — the same constants
-    that are baked into the Spark projection)."""
+def _duck_minhash_bands() -> tuple[str, str]:
+    """DuckDB side of :func:`minhash_band_kernel`, shared by both MinHash
+    oracles: the 32 signature ``MIN`` aggregates over ``x`` and the
+    8-band ``UNION ALL`` of (doc_id, t, bh) rows over ``sigs`` — the same
+    coefficients and band keys that are baked into the Spark projection."""
     mins = ",\n        ".join(
         f"MIN(({a} * x + {b}) % {P31}) AS s{i}"
         for i, (a, b) in enumerate(_MH_COEFFS))
@@ -884,6 +891,15 @@ def _minhash_oracle() -> str:
                 [f"s{t * ROWS_PER_BAND + r}"
                  for r in range(ROWS_PER_BAND)]))
         for t in range(N_BANDS))
+    return mins, band_rows
+
+
+def _minhash_oracle() -> str:
+    """DuckDB replica of the full MinHash+LSH pipeline (generated SQL:
+    32 universal-hash MIN aggregates, 8 band hashes, candidate join,
+    exact-Jaccard verification on candidates only — the same constants
+    that are baked into the Spark projection)."""
+    mins, band_rows = _duck_minhash_bands()
     return f"""
     WITH base AS (
       SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -941,7 +957,8 @@ def dedup_minhash_lsh(spark, sf_dir):
     Jaccard — the full LSH pipeline is hash-compared, not rows-only.
     tests/test_properties.py additionally proves exact duplicates are
     always recalled."""
-    return minhash_lsh_pairs(table(spark, sf_dir, "documents"))
+    return (minhash_lsh_pairs(table(spark, sf_dir, "documents"))
+            .select("doc_a", "doc_b", "n_common_bands", "jaccard"))
 
 
 #: Route-tier candidate signature size: each doc is represented by its
@@ -960,43 +977,6 @@ def dedup_minhash_lsh(spark, sf_dir):
 #: small-set corpora (and the saturation-guard fixtures) are
 #: candidate-identical to un-restricted banding.
 ROUTE_PREFIX_K = 24
-
-
-def minhash_band_candidates(shingled: DataFrame) -> DataFrame:
-    """(doc_a, doc_b) DISTINCT banded-LSH collision pairs over a
-    (doc_id, shingles) table — the same signature coefficients and 8×4
-    band keys as :func:`minhash_pairs_from_shingled`, without the fused
-    verification (the route tier verifies against the FULL item sets,
-    not the candidate signature). Registered callers run it under
-    ``_NO_GENERATE_FILTER_INFERENCE``: here the inferred filter would
-    re-evaluate the per-doc rarity-prefix transform(slice(...)), which
-    is smaller than a scan-level gram build but the same pure overhead."""
-    from cstore_fdw_spark.operators import track_cache
-
-    ex = track_cache(shingle_hashes(shingled).persist())
-    # parsed-SQL form, one py4j call per aggregate (the Column-chain
-    # form cost ~6 round-trips x 32 hashes per build; same tree — see
-    # the simhash_signatures rationale)
-    mins = [F.expr(f"min(({a} * x + {b}) % {P31}) AS s{i}")
-            for i, (a, b) in enumerate(_MH_COEFFS)]
-    band_cols = F.array(*[
-        F.expr(band_key_sql([f"s{t * ROWS_PER_BAND + r}"
-                             for r in range(ROWS_PER_BAND)]))
-        for t in range(N_BANDS)])
-    sigs = track_cache(ex.groupBy("doc_id").agg(*mins)
-                       .select("doc_id", band_cols.alias("bands"))
-                       .persist())
-    sigs.count()  # eager: both self-join sides consume it
-    bands = (sigs.select("doc_id", F.posexplode("bands"))
-             .select("doc_id", F.col("pos").alias("band"),
-                     F.col("col").alias("bh")))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
 
 
 def routed_jaccard_pairs(item_sets: DataFrame, tau: float) -> DataFrame:
@@ -1019,8 +999,6 @@ def routed_jaccard_pairs(item_sets: DataFrame, tau: float) -> DataFrame:
     ever wrong. Banding + prefix restriction bound RECALL (near-exact
     duplicates always collide: identical sets have identical
     prefixes), which is why rows carry ``approx = true``."""
-    from cstore_fdw_spark.operators import track_cache
-
     # Persist FIRST, filter on the cached arrays: a filter on the
     # derived `items` column placed below the persist gets pushed
     # through the spread() exchange into the scan as a DataFilter,
@@ -1067,7 +1045,8 @@ def routed_jaccard_pairs(item_sets: DataFrame, tau: float) -> DataFrame:
                     f"transform(slice(array_sort(collect_list("
                     f"struct(df, it))), 1, {ROUTE_PREFIX_K}),"
                     f" x -> x.it)").alias("shingles")))
-    cands = minhash_band_candidates(shingled)
+    _, _, pairs = minhash_band_kernel(shingled)
+    cands = pairs.select("doc_a", "doc_b")
     # Verify sides ship the HASHED set (xxhash64 per gram, computed in
     # codegen off the cached string arrays) instead of the raw string
     # arrays: n_common then comes from the UNION identity
@@ -1125,15 +1104,7 @@ def _routed_ngram_oracle() -> str:
     and the same exact full-set ``list_intersect`` verification — so
     the fallthrough path is hash-compared end-to-end, not just
     behaviorally tested."""
-    mins = ",\n        ".join(
-        f"MIN(({a} * x + {b}) % {P31}) AS s{i}"
-        for i, (a, b) in enumerate(_MH_COEFFS))
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {t} AS t, {bk} AS bh FROM sigs".format(
-            t=t, bk=band_key_sql(
-                [f"s{t * ROWS_PER_BAND + r}"
-                 for r in range(ROWS_PER_BAND)]))
-        for t in range(N_BANDS))
+    mins, band_rows = _duck_minhash_bands()
     return f"""
     WITH g AS (
       SELECT doc_id, lang, list_distinct(list_transform(

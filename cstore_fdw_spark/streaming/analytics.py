@@ -6,26 +6,11 @@ epochs (stats_hdr_quantile_sketch's scale contract, made live)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cstore_fdw_spark.operators.analytics import hdr_bucket_idx
-
-
-def read_lineitem_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the lineitem parquet (micro-batch per
-    file in tests; Kafka/files on a real deployment)."""
-    # stream-rewrite-guard: exempt — READ-ONLY fixture parquet, not a
-    # catalog table (no floor/identity to move, no derived state
-    # maintained); catalog-table streams use the guarded readers. See
-    # tests/test_streaming.py::test_every_readstream_guarded_or_exempt.
-    return (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir))
+from cstore_fdw_spark.streaming.runner import drain, fixture_stream
 
 
 def hdr_sketch_stream(lineitem: DataFrame) -> DataFrame:
@@ -43,29 +28,11 @@ def run_sketch_available_now(spark: SparkSession, sf_dir: str,
                              query_name: str = "hdr_sketch") -> DataFrame:
     """Execute the streamed sketch with Trigger.AvailableNow into a
     memory sink; returns the final histogram as a batch DataFrame."""
-    out = hdr_sketch_stream(read_lineitem_stream(spark, sf_dir))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (out.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    return spark.table(query_name)
+    out = hdr_sketch_stream(fixture_stream(spark, sf_dir, "lineitem"))
+    return drain(out, query_name, "complete")
 
 
 # ------------------------------------------------ CUSUM changepoint twin
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (micro-batch per file
-    in tests; Kafka/files on a real deployment)."""
-    # stream-rewrite-guard: exempt — READ-ONLY fixture parquet, not a
-    # catalog table (same rationale as read_lineitem_stream above).
-    return (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir))
-
 
 def hourly_cents_stream(events: DataFrame) -> DataFrame:
     """Maintain the per-(type, hour) cents rollup over the stream: the
@@ -88,14 +55,8 @@ def run_cusum_available_now(spark: SparkSession, sf_dir: str,
     batch query uses — bit-identical localization by construction."""
     from cstore_fdw_spark.operators.events import cusum_changepoints
 
-    out = hourly_cents_stream(read_events_stream(spark, sf_dir))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (out.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    return cusum_changepoints(spark.table(query_name))
+    out = hourly_cents_stream(fixture_stream(spark, sf_dir, "events"))
+    return cusum_changepoints(drain(out, query_name, "complete"))
 
 
 # ------------------------------------------- seasonal-decompose twin
@@ -113,14 +74,8 @@ def run_seasonal_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.operators.events import (
         seasonal_decompose_from_hourly)
 
-    out = hourly_cents_stream(read_events_stream(spark, sf_dir))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (out.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    t = spark.table(query_name)
+    out = hourly_cents_stream(fixture_stream(spark, sf_dir, "events"))
+    t = drain(out, query_name, "complete")
     # rebind the drained rollup as a local relation: the finisher
     # self-joins its input (seasonal profile back onto the hours), and
     # Spark's self-join disambiguation breaks on memory-sink Views
@@ -148,7 +103,7 @@ def run_hll_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.operators.analytics import (
         HLL_M, HLL_RANK_BITS, _hll_rho_sql, hll_estimate_from_registers)
 
-    li = read_lineitem_stream(spark, sf_dir)
+    li = fixture_stream(spark, sf_dir, "lineitem")
     h = spark_h60("cast(l_orderkey as string)")
     rho = _hll_rho_sql(f"(h div {HLL_M}) % {1 << HLL_RANK_BITS}")
     regs = (li.select(F.col("l_returnflag").alias("grp"),
@@ -156,13 +111,7 @@ def run_hll_available_now(spark: SparkSession, sf_dir: str,
             .select("grp", (F.col("h") % HLL_M).alias("reg"),
                     F.expr(rho).alias("rho"))
             .groupBy("grp", "reg").agg(F.max("rho").alias("m_rho")))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (regs.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    t = spark.table(query_name)
+    t = drain(regs, query_name, "complete")
     # rebind the drained registers as a local relation (the finisher
     # left-joins the register frame against a grid derived from itself,
     # and memory-sink views break on self-join disambiguation — the
@@ -191,17 +140,11 @@ def run_mad_anomaly_available_now(spark: SparkSession, sf_dir: str,
     drained model table)."""
     from cstore_fdw_spark.operators.events import mad_anomalies_from_hourly
 
-    ev = read_events_stream(spark, sf_dir)
+    ev = fixture_stream(spark, sf_dir, "events")
     hourly = (ev.groupBy("event_type",
                          F.date_trunc("hour", "ts").alias("h"))
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (hourly.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    t = spark.table(query_name)
+    t = drain(hourly, query_name, "complete")
     # model-sized rebind (|type| x hours): the finisher joins the rollup
     # against frames derived from itself — same memory-sink self-join
     # rationale as the seasonal and HLL twins
@@ -223,19 +166,13 @@ def run_benford_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.operators.analytics import (
         benford_from_digit_counts)
 
-    li = read_lineitem_stream(spark, sf_dir)
+    li = fixture_stream(spark, sf_dir, "lineitem")
     digits = li.select(
         F.expr("CAST(substr(CAST(CAST(ROUND(l_extendedprice * 100) AS "
                "BIGINT) AS STRING), 1, 1) AS BIGINT)").alias("digit"))
     counts = (digits.groupBy("digit")
               .agg(F.count(F.lit(1)).cast("long").alias("obs")))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (counts.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    t = spark.table(query_name)
+    t = drain(counts, query_name, "complete")
     counts_local = spark.createDataFrame(t.collect(), t.schema)
     return benford_from_digit_counts(counts_local)
 
@@ -255,17 +192,11 @@ def run_quantile_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.operators.analytics import (
         quantile_buckets, quantile_estimate_from_buckets)
 
-    li = read_lineitem_stream(spark, sf_dir)
+    li = fixture_stream(spark, sf_dir, "lineitem")
     counts = quantile_buckets(
         li.select(F.col("l_returnflag").alias("grp"), "l_extendedprice"),
         ["grp"], "l_extendedprice")
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (counts.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    t = spark.table(query_name)
+    t = drain(counts, query_name, "complete")
     # sketch-sized rebind (|groups| x nbuckets): the finisher windows
     # and joins the bucket table against frames derived from itself —
     # same memory-sink self-join rationale as the HLL/CM twins
@@ -293,21 +224,10 @@ def run_countmin_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.operators.analytics import (
         countmin_estimates, countmin_probe_counts, countmin_rollup)
 
-    ev = read_events_stream(spark, sf_dir)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (countmin_rollup(ev).writeStream.format("memory")
-             .queryName(query_name + "_cm").outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (countmin_probe_counts(ev).writeStream.format("memory")
-             .queryName(query_name + "_probes").outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    cm_t = spark.table(query_name + "_cm")
-    pr_t = spark.table(query_name + "_probes")
+    ev = fixture_stream(spark, sf_dir, "events")
+    cm_t = drain(countmin_rollup(ev), query_name + "_cm", "complete")
+    pr_t = drain(countmin_probe_counts(ev), query_name + "_probes",
+                 "complete")
     # sketch-sized rebinds (d x w and |probes| rows): the finisher joins
     # the two drained frames — same memory-sink self-join rationale as
     # the HLL/seasonal twins
@@ -332,23 +252,11 @@ def run_bloom_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.operators.analytics import BLOOM_K, BLOOM_M
     from cstore_fdw_spark.functions.portable_hash import spark_w32
 
-    ordr = (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/orders.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir))
-    # stream-rewrite-guard: exempt — READ-ONLY fixture parquet (same
-    # rationale as read_lineitem_stream)
+    ordr = fixture_stream(spark, sf_dir, "orders")
     key = "cast(o_custkey as string)"
     arr = F.array(*[(F.expr(spark_w32(key, i)) % BLOOM_M)
                     for i in range(BLOOM_K)])
     bits = (ordr.filter(F.col("o_orderstatus") == "P")
             .select(F.explode(arr).alias("bit"))
             .groupBy("bit").agg(F.count(F.lit(1)).alias("n")))
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (bits.writeStream.format("memory").queryName(query_name)
-             .outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    return spark.table(query_name).select("bit").distinct()
+    return drain(bits, query_name, "complete").select("bit").distinct()

@@ -2,10 +2,11 @@
 watermarks, exactly-once dedup, and sessionization — the streaming twins
 of :mod:`cstore_fdw_spark.operators.events`.
 
-Each builder takes a *streaming* DataFrame (``spark.readStream``) and
-returns a streaming DataFrame; ``run_available_now`` executes one against
-the parquet test data with the availableNow trigger (processes everything
-then stops — deterministic for tests).
+Each builder takes a *streaming* DataFrame and returns a streaming
+DataFrame; ``streaming.runner.drain`` executes one over
+``streaming.runner.fixture_stream(spark, sf_dir, "events")`` with the
+availableNow trigger (processes everything then stops — deterministic for
+tests).
 
 Scale notes: watermarks bound state (late events beyond 1 hour are
 dropped); dedup state is keyed by event_id and expires with the watermark;
@@ -15,37 +16,11 @@ deployment.
 
 from __future__ import annotations
 
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WATERMARK = "1 hour"
 SESSION_GAP = "30 minutes"
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (each file = a micro-batch
-    in tests; on a cluster this would be Kafka/files with identical
-    downstream logic). Converts the nanos-as-long timestamp like the batch
-    reader."""
-    # stream-rewrite-guard: exempt — this streams the READ-ONLY testdata
-    # fixture parquet directly, not a catalog table: there is no
-    # history_floor/created_at that could move under the stream, and no
-    # derived state is maintained from it (equality-twin harness only).
-    # Streams over CATALOG tables must use the guarded readers
-    # (streaming/aggview.source_stream, streaming/projections) — pinned
-    # by tests/test_streaming.py::test_every_readstream_guarded_or_exempt.
-    # file-source streams need a directory: stream the sf dir with a glob
-    # pinned to the events file
-    stream = (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir))
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return stream
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
@@ -70,27 +45,6 @@ def sessionize(events: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select("user_id", F.col("w.start").alias("session_start"),
                     "n_events"))
-
-
-def run_available_now(spark: SparkSession, sf_dir: str, builder,
-                      query_name: str, output_mode: str = "complete") -> DataFrame:
-    """Execute a streaming builder with Trigger.AvailableNow into an
-    in-memory sink, wait for completion, return the result as a batch
-    DataFrame.
-
-    ``output_mode``: 'complete' for aggregations (append mode would
-    withhold windows the final watermark never passes), 'append' for
-    row-wise operators like dedup.
-    """
-    stream = read_events_stream(spark, sf_dir)
-    out = builder(stream)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (out.writeStream.format("memory").queryName(query_name)
-             .outputMode(output_mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    return spark.table(query_name)
 
 
 def enrich_with_customer(events: DataFrame, customer: DataFrame) -> DataFrame:

@@ -20,7 +20,9 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor, StatefulProcessorHandle)
 from pyspark.sql import types as T
 
+from cstore_fdw_spark.operators import events_ts_micros
 from cstore_fdw_spark.session import conf_override
+from cstore_fdw_spark.streaming.runner import await_drained, drain
 
 BIG_SPENDER_THRESHOLD = 10_000.0
 
@@ -353,14 +355,8 @@ def holt_hourly_stream(events: DataFrame,
     discipline). Agg state is bounded by |type| x in-flight hours; the
     output stream carries one row per finalized hour, NOT per event."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    if isinstance(events.schema["ts"].dataType, T.LongType):
-        # driver events.parquet stores TIMESTAMP(NANOS) → long under
-        # nanosAsLong; truncate to micros exactly like operators.table()
-        events = events.withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)"))
-    return (events
+    return (events_ts_micros(events)
             .withWatermark("ts", delay)
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.sum(F.expr("CAST(ROUND(value * 100) AS BIGINT)"))
@@ -465,7 +461,7 @@ def run_holt_available_now(spark, sf_dir: str,
 
         # stream-rewrite-guard: exempt — READ-ONLY staged copy of the
         # fixture parquet, not a catalog table (same rationale as
-        # streaming/analytics.read_events_stream).
+        # streaming.runner.fixture_stream).
         stream = (spark.readStream
                   .schema(spark.read.parquet(f"{stage}/0_events.parquet")
                           .schema)
@@ -477,15 +473,9 @@ def run_holt_available_now(spark, sf_dir: str,
             rocksdb = {"spark.sql.streaming.stateStore.providerClass":
                        "org.apache.spark.sql.execution.streaming."
                        "state.RocksDBStateStoreProvider"}
-            with conf_override(spark, rocksdb), \
-                    tempfile.TemporaryDirectory() as ckpt:
-                out = holt_fold_stream(hourly, use_tws=True)
-                q = (out.writeStream.format("memory")
-                     .queryName(query_name)
-                     .outputMode("append")
-                     .option("checkpointLocation", ckpt)
-                     .trigger(availableNow=True).start())
-                q.awaitTermination(180)
+            with conf_override(spark, rocksdb):
+                emitted = drain(holt_fold_stream(hourly, use_tws=True),
+                                query_name, "append")
         else:
             # two queries with a file-sink handoff (Kafka in production)
             hours_dir = f"{stage}/finalized_hours"
@@ -500,7 +490,7 @@ def run_holt_available_now(spark, sf_dir: str,
                       .option("path", hours_dir)
                       .option("checkpointLocation", ckpt1)
                       .trigger(availableNow=True).start())
-                q1.awaitTermination(180)
+                await_drained(q1)
             # stream-rewrite-guard: exempt — stage-1's own file-sink
             # output (exactly-once via its metadata log), not a catalog
             # table.
@@ -509,21 +499,14 @@ def run_holt_available_now(spark, sf_dir: str,
                                     "x long")
                             .option("maxFilesPerTrigger", "1")
                             .parquet(hours_dir))
-            out = holt_fold_stream(hours_stream, use_tws=False)
-            with tempfile.TemporaryDirectory() as ckpt2:
-                q2 = (out.writeStream.format("memory")
-                      .queryName(query_name)
-                      .outputMode("append")
-                      .option("checkpointLocation", ckpt2)
-                      .trigger(availableNow=True).start())
-                q2.awaitTermination(180)
+            emitted = drain(holt_fold_stream(hours_stream, use_tws=False),
+                            query_name, "append")
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    emitted = spark.table(query_name)
     w = Window.partitionBy("event_type").orderBy(F.desc("n_hours"))
     return (emitted.withColumn("rk", F.row_number().over(w))
             .filter("rk = 1").drop("rk").orderBy("event_type"))

@@ -14,26 +14,10 @@ with first-seen semantics over watermarked keys is covered by
 
 from __future__ import annotations
 
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cstore_fdw_spark.operators.text import PII_EMAIL_RE, PII_PHONE_RE
-
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet (each file = a
-    micro-batch in tests; Kafka/files on a real deployment)."""
-    # stream-rewrite-guard: exempt — READ-ONLY fixture parquet, not a
-    # catalog table (no floor/identity to move, no derived state
-    # maintained); catalog-table streams use the guarded readers. See
-    # tests/test_streaming.py::test_every_readstream_guarded_or_exempt.
-    return (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir))
 
 
 def curation_accounting(docs: DataFrame) -> DataFrame:
@@ -68,19 +52,3 @@ def curation_accounting(docs: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("n_tokens").alias("total_tokens"),
                  F.sum("n_pii").alias("pii_redactions")))
-
-
-def run_available_now(spark: SparkSession, sf_dir: str, builder,
-                      query_name: str,
-                      output_mode: str = "complete") -> DataFrame:
-    """Execute a documents-stream builder to completion
-    (Trigger.AvailableNow → memory sink), return the result as batch."""
-    stream = read_documents_stream(spark, sf_dir)
-    out = builder(stream)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (out.writeStream.format("memory").queryName(query_name)
-             .outputMode(output_mode)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-    return spark.table(query_name)

@@ -32,7 +32,7 @@ from cstore_fdw_spark.operators import (  # noqa: E402
     clear_caches, load_all, spread, table, track_cache)
 from cstore_fdw_spark.operators.dedup import (  # noqa: E402
     _CHAR_GRAM_ARR, NGRAM_JACCARD_TAU, ROUTE_PREFIX_K,
-    minhash_band_candidates, routed_jaccard_pairs)
+    minhash_band_kernel, routed_jaccard_pairs)
 from cstore_fdw_spark.session import conf_override, get_spark  # noqa: E402
 
 
@@ -67,7 +67,8 @@ def main() -> None:
                         f" x -> x.it)").alias("shingles")))
         with conf_override(spark, route_confs):
             t0 = time.perf_counter()
-            n_cands = minhash_band_candidates(shingled).count()
+            _, _, pairs = minhash_band_kernel(shingled)
+            n_cands = pairs.count()
             t_cands = time.perf_counter() - t0
             t0 = time.perf_counter()
             n_out = routed_jaccard_pairs(g, NGRAM_JACCARD_TAU).count()

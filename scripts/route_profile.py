@@ -53,7 +53,7 @@ from pyspark.sql.window import Window  # noqa: E402
 from cstore_fdw_spark.operators import (  # noqa: E402
     clear_caches, load_all, table, track_cache)
 from cstore_fdw_spark.operators.dedup import (  # noqa: E402
-    _CHAR_GRAM_ARR, ROUTE_PREFIX_K, minhash_band_candidates,
+    _CHAR_GRAM_ARR, ROUTE_PREFIX_K, minhash_band_kernel,
     routed_jaccard_pairs)
 from cstore_fdw_spark.session import conf_override, get_spark  # noqa: E402
 
@@ -148,8 +148,9 @@ def main() -> None:
         def cut_cands(v):
             _, ex, dfreq = build()
             with conf_override(spark, route_confs):
-                noop(minhash_band_candidates(
-                    prefix_shingled(ex, dfreq, v)))
+                _, _, pairs = minhash_band_kernel(
+                    prefix_shingled(ex, dfreq, v))
+                noop(pairs.select("doc_a", "doc_b"))
 
         def full():
             with conf_override(spark, route_confs):

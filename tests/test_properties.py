@@ -492,6 +492,57 @@ def test_operators_never_set_confs_directly():
     assert not hits, hits
 
 
+def _package_functions_using(predicate):
+    """(file, innermost enclosing function) of every AST node under
+    cstore_fdw_spark/ for which ``predicate(node)`` holds."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark
+
+    hits = []
+    pkg = pathlib.Path(cstore_fdw_spark.__file__).parent
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        scopes = [n for n in ast.walk(tree)
+                  if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for node in ast.walk(tree):
+            if not predicate(node):
+                continue
+            inner = [f for f in scopes
+                     if f.lineno <= node.lineno <= f.end_lineno]
+            name = (max(inner, key=lambda f: f.lineno).name if inner
+                    else "<module>")
+            hits.append((str(path.relative_to(pkg)), name))
+    return hits
+
+
+def test_streams_drain_and_minhash_bands_build_one_way():
+    """One path each: every memory-sink drain under cstore_fdw_spark/
+    goes through streaming.runner.drain (which checks its timeout), and
+    the MinHash coefficients are read by one Spark-side builder and one
+    DuckDB-side generator, so the two engines' signatures cannot fork."""
+    import ast
+
+    def memory_sink(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "format"
+                and [getattr(a, "value", None) for a in node.args]
+                == ["memory"])
+
+    assert _package_functions_using(memory_sink) == [
+        ("streaming/runner.py", "drain")]
+
+    def coeff_read(node):
+        return (isinstance(node, ast.Name) and node.id == "_MH_COEFFS"
+                and isinstance(node.ctx, ast.Load))
+
+    assert sorted(_package_functions_using(coeff_read)) == [
+        ("operators/dedup.py", "_duck_minhash_bands"),
+        ("operators/dedup.py", "minhash_band_kernel")]
+
+
 def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
     """The dedup_minhash_lsh physical plan must not evaluate the shingle
     build inside a scan-level Filter: InferFiltersFromGenerate used to

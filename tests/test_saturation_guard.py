@@ -106,8 +106,8 @@ def test_route_falls_through_to_minhash_tier(spark):
     got = sorted((r.doc_a, r.doc_b, r.n_common, r.jaccard, r.approx)
                  for r in routed.collect())
     direct = minhash_pairs_from_shingled(
-        sets.select("doc_id", F.col("items").alias("shingles")),
-        full=True).filter(F.col("jaccard") >= 0.8)
+        sets.select("doc_id", F.col("items").alias("shingles"))
+    ).filter(F.col("jaccard") >= 0.8)
     want = sorted((r.doc_a, r.doc_b, r.n_common, r.jaccard, True)
                   for r in direct.collect())
     assert got == want

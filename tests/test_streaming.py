@@ -8,13 +8,14 @@ from pyspark.sql import functions as F
 
 from cstore_fdw_spark.operators import load_all, table
 from cstore_fdw_spark.streaming import events as se
+from cstore_fdw_spark.streaming.runner import drain, fixture_stream
 
 REGISTRY = load_all()
 
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir):
-    out = se.run_available_now(spark, sf_dir, se.tumbling_counts,
-                               "t_tumbling", "complete")
+    out = drain(se.tumbling_counts(fixture_stream(spark, sf_dir, "events")),
+                "t_tumbling", "complete")
     batch = (REGISTRY["events_tumbling_hourly"].builder(spark, sf_dir)
              .select("hour_start", "event_type", "n"))
     srows = {tuple(r) for r in out.collect()}
@@ -23,16 +24,16 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir):
 
 
 def test_streaming_dedup(spark, sf_dir):
-    out = se.run_available_now(spark, sf_dir, se.dedup_events,
-                               "t_dedup", "append")
+    out = drain(se.dedup_events(fixture_stream(spark, sf_dir, "events")),
+                "t_dedup", "append")
     n_distinct = (table(spark, sf_dir, "events")
                   .select("event_id").distinct().count())
     assert out.count() == n_distinct
 
 
 def test_streaming_sessionize_matches_batch(spark, sf_dir):
-    out = se.run_available_now(spark, sf_dir, se.sessionize,
-                               "t_sessions", "complete")
+    out = drain(se.sessionize(fixture_stream(spark, sf_dir, "events")),
+                "t_sessions", "complete")
     batch = (REGISTRY["events_sessionize"].builder(spark, sf_dir)
              .select("user_id", "session_start", "n_events"))
     srows = {tuple(r) for r in out.collect()}
@@ -41,7 +42,7 @@ def test_streaming_sessionize_matches_batch(spark, sf_dir):
 
 
 def test_streaming_is_actually_streaming(spark, sf_dir):
-    stream = se.read_events_stream(spark, sf_dir)
+    stream = fixture_stream(spark, sf_dir, "events")
     assert stream.isStreaming
     assert se.tumbling_counts(stream).isStreaming
 
@@ -55,7 +56,7 @@ def test_stream_into_managed_table(spark, sf_dir, tmp_path, catalog):
         "events_ingested",
         "event_id bigint, ts timestamp, user_id bigint, event_type string, "
         "value double, props string")
-    stream = se.read_events_stream(spark, sf_dir)
+    stream = fixture_stream(spark, sf_dir, "events")
     q = stream_into_table(catalog, "events_ingested", stream,
                           checkpoint=str(tmp_path / "ckpt"),
                           trigger_available_now=True)
@@ -63,7 +64,7 @@ def test_stream_into_managed_table(spark, sf_dir, tmp_path, catalog):
     n_src = table(spark, sf_dir, "events").count()
     assert catalog.row_count("events_ingested") == n_src
     # restart with same checkpoint: no duplicate appends (exactly-once)
-    stream2 = se.read_events_stream(spark, sf_dir)
+    stream2 = fixture_stream(spark, sf_dir, "events")
     q2 = stream_into_table(catalog, "events_ingested", stream2,
                            checkpoint=str(tmp_path / "ckpt"),
                            trigger_available_now=True)
@@ -76,7 +77,7 @@ def test_stateful_running_spend(spark, sf_dir, tmp_path):
     equal the batch aggregate over the same events."""
     from cstore_fdw_spark.streaming.stateful import running_spend
 
-    stream = se.read_events_stream(spark, sf_dir)
+    stream = fixture_stream(spark, sf_dir, "events")
     out = running_spend(stream)
     assert out.isStreaming
     q = (out.writeStream.format("memory").queryName("t_spend")
@@ -97,8 +98,8 @@ def test_stateful_running_spend(spark, sf_dir, tmp_path):
 
 def test_stream_static_join_matches_batch(spark, sf_dir):
     customer = table(spark, sf_dir, "customer")
-    out = se.run_available_now(
-        spark, sf_dir, lambda s: se.enrich_with_customer(s, customer),
+    out = drain(se.enrich_with_customer(
+        fixture_stream(spark, sf_dir, "events"), customer),
         "t_enrich", "complete")
     e = table(spark, sf_dir, "events")
     dim = customer.select(F.col("c_custkey").alias("user_id"),
@@ -119,14 +120,14 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     import tempfile
     from cstore_fdw_spark.operators import load_all
     from cstore_fdw_spark.streaming.events import (
-        click_purchase_interval_join, read_events_stream)
+        click_purchase_interval_join)
 
     reg = load_all()
     batch = sorted(
         tuple(r) for r in
         reg["events_click_purchase_interval_join"].builder(
             spark, sf_dir).collect())
-    stream = read_events_stream(spark, sf_dir)
+    stream = fixture_stream(spark, sf_dir, "events")
     out = click_purchase_interval_join(stream, stream)
     with tempfile.TemporaryDirectory() as ckpt:
         q = (out.writeStream.format("memory").queryName("ssj")
@@ -354,8 +355,9 @@ def test_streaming_curation_accounting_matches_batch(spark, sf_dir):
     equals the same stages computed in batch."""
     from cstore_fdw_spark.streaming import text as st
 
-    out = st.run_available_now(spark, sf_dir, st.curation_accounting,
-                               "t_curation", "complete")
+    out = drain(st.curation_accounting(
+        fixture_stream(spark, sf_dir, "documents")),
+        "t_curation", "complete")
     batch = st.curation_accounting(table(spark, sf_dir, "documents"))
     srows = {tuple(r) for r in out.collect()}
     brows = {tuple(r) for r in batch.collect()}
@@ -779,3 +781,54 @@ def test_bloom_streaming_twin_matches_batch_bits(spark, sf_dir):
     streamed = sorted(r["bit"] for r in
                       run_bloom_available_now(spark, sf_dir).collect())
     assert streamed == batch and len(batch) > 0
+
+
+@pytest.mark.parametrize("twin, batch_query", [
+    ("run_cusum_available_now", "timeseries_cusum_changepoint"),
+    ("run_seasonal_available_now", "timeseries_seasonal_decompose"),
+    ("run_mad_anomaly_available_now", "timeseries_anomaly_mad"),
+    ("run_countmin_available_now", "sketch_countmin_user_counts"),
+])
+def test_events_twins_read_nanos_timestamps(spark, sf_dir, tmp_path,
+                                            twin, batch_query):
+    """An events fixture that stores ts as TIMESTAMP(NANOS) (a shape
+    conftest accepts) reaches the streaming twins as a timestamp, the
+    same as the batch reader: each twin still equals its batch query."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cstore_fdw_spark.streaming import analytics as sa
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    ts_at = events.schema.get_field_index("ts")
+    pq.write_table(
+        events.set_column(ts_at, "ts",
+                          events["ts"].cast(pa.timestamp("ns"))),
+        tmp_path / "events.parquet")
+    nanos_dir = str(tmp_path)
+    assert str(pq.read_schema(tmp_path / "events.parquet")
+               .field("ts").type) == "timestamp[ns]"
+
+    batch = sorted(tuple(r) for r in
+                   REGISTRY[batch_query].builder(spark, nanos_dir)
+                   .collect())
+    streamed = sorted(tuple(r) for r in
+                      getattr(sa, twin)(spark, nanos_dir).collect())
+    assert streamed == batch and len(batch) > 0
+
+
+@pytest.mark.parametrize("run", ["drain", "holt"])
+def test_timed_out_drain_raises_and_stops(spark, sf_dir, monkeypatch, run):
+    """A drain that outlives its timeout is stopped and reported, never
+    returned as a partial memory table (Holt's stage-1 file sink too)."""
+    from cstore_fdw_spark.streaming import runner
+    from cstore_fdw_spark.streaming.stateful import run_holt_available_now
+
+    monkeypatch.setattr(runner, "DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="did not drain"):
+        if run == "drain":
+            drain(se.tumbling_counts(fixture_stream(spark, sf_dir, "events")),
+                  "t_timeout", "complete")
+        else:
+            run_holt_available_now(spark, sf_dir, "t_holt_timeout")
+    assert spark.streams.active == []
