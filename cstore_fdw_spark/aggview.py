@@ -54,15 +54,14 @@ the spec and the refresh watermark.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from cstore_fdw_spark.catalog import (
-    CStoreCatalog, CStoreError, _file_epoch)
+from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError
+from cstore_fdw_spark.fsutil import _file_epoch, flocked, write_json_atomic
 
 SIDECAR = "_cstore_aggview.json"
 REFRESH_LOCK = "_cstore_aggview.refresh.lock"
@@ -83,27 +82,15 @@ def _load_spec(catalog: CStoreCatalog, view: str) -> dict[str, Any]:
 
 def _save_spec(catalog: CStoreCatalog, view: str,
                spec: dict[str, Any]) -> None:
-    path = _sidecar_path(catalog, view)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(spec, f)
-    os.replace(tmp, path)
+    write_json_atomic(_sidecar_path(catalog, view), spec)
 
 
-@contextlib.contextmanager
-def _refresh_lock(catalog: CStoreCatalog, view: str) -> Iterator[None]:
+def _refresh_lock(catalog: CStoreCatalog, view: str):
     """Per-view refresh mutex. A separate file from the catalog's writer
     lock because ``insert()`` takes THAT lock internally — flock is not
     reentrant across file descriptors, so holding it here would deadlock
     the state commit."""
-    import fcntl
-    path = os.path.join(catalog.table_path(view), REFRESH_LOCK)
-    with open(path, "w") as f:
-        fcntl.flock(f, fcntl.LOCK_EX)
-        try:
-            yield
-        finally:
-            fcntl.flock(f, fcntl.LOCK_UN)
+    return flocked(os.path.join(catalog.table_path(view), REFRESH_LOCK))
 
 
 def _agg_exprs(measures: list[str]) -> list:
@@ -400,10 +387,7 @@ def _recover_pending(catalog: CStoreCatalog, view: str,
     pending = spec.get("pending")
     if not pending:
         return False
-    vmeta = catalog._load_meta(view)
-    want = int(pending["view_epoch"])
-    committed = any(_file_epoch(p) == want
-                    for p in catalog._visible_files(vmeta))
+    committed = catalog._epoch_committed(view, int(pending["view_epoch"]))
     if committed:
         spec.update(pending["finalize"])
     spec["pending"] = None

@@ -31,11 +31,12 @@ footers/file listings, never data.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import json
 import os
 import shutil
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 from uuid import uuid4
@@ -46,7 +47,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from cstore_fdw_spark.fsutil import _file_epoch, flocked, write_json_atomic
+
 META_FILE = "_cstore_meta.json"
+#: siblings of a table's data dir: ``{data}.stage.{uuid}`` holds one
+#: writer's staged output (only that writer removes it), and
+#: ``{data}.compact.old`` parks the old data between the two renames of
+#: :func:`_swap_in`
+_STAGE = ".stage."
+_OLD = ".compact.old"
 
 #: valid table options, mirroring the reference's validator
 #: (cstore_fdw.c:1273-1340,1523-1571). Compression names map to Parquet
@@ -341,13 +350,7 @@ class CStoreCatalog:
         meta.file_stats = stats
 
     def _save_meta(self, meta: TableMeta) -> None:
-        # atomic replace — parity with the reference's footer.tmp + rename
-        # protocol (cstore_writer.c:344-357)
-        path = self._meta_path(meta.name)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta.__dict__, f)
-        os.replace(tmp, path)
+        write_json_atomic(self._meta_path(meta.name), meta.__dict__)
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self._meta_path(name))
@@ -395,9 +398,9 @@ class CStoreCatalog:
         self._drop_registered(meta)
         if "filename" in meta.options:
             data = self._data_path(meta)
-            shutil.rmtree(data, ignore_errors=True)
-            shutil.rmtree(data + ".compact.tmp", ignore_errors=True)
-            shutil.rmtree(data + ".compact.old", ignore_errors=True)
+            for p in (data, data + _OLD,
+                      *glob.glob(glob.escape(data + _STAGE) + "*")):
+                shutil.rmtree(p, ignore_errors=True)
         shutil.rmtree(self.table_path(name))
 
     def clone_table(self, src: str, dst: str,
@@ -433,8 +436,8 @@ class CStoreCatalog:
         with self._writer_lock(src):
             smeta = self._load_meta(src)
             fmt = self._format(smeta)
-            # repair a crashed compact FIRST: between compact's two swap
-            # renames all rows live in data.compact.old and _visible_files
+            # repair a crashed swap FIRST: between its two renames all
+            # rows live in data.compact.old and _visible_files
             # would return [] — the clone would silently commit empty
             # (read() does the same repair before listing, catalog read
             # path below)
@@ -460,12 +463,7 @@ class CStoreCatalog:
             for p_ in files:
                 rel = os.path.relpath(p_, src_data)
                 kept.add(rel)
-                target = os.path.join(dst_data, rel)
-                os.makedirs(os.path.dirname(target), exist_ok=True)
-                try:
-                    os.link(p_, target)
-                except OSError:  # cross-device: degrade to a real copy
-                    shutil.copy2(p_, target)
+                _link_data_file(p_, os.path.join(dst_data, rel))
             meta = TableMeta(**{**smeta.__dict__})
             meta.name = dst
             meta.registered_names = []
@@ -492,14 +490,13 @@ class CStoreCatalog:
                     shutil.rmtree(full) if os.path.isdir(full) else os.remove(full)
             if "filename" in meta.options:
                 data = self._data_path(meta)
-                # Also clear compaction leftovers: after a compact crash
-                # in the rename window, a surviving data.compact.old would
-                # be restored by the next read()'s _recover_compact and
-                # resurrect truncated rows (default-path tables are safe
-                # because those dirs live inside table_path).
+                # Also clear swap leftovers: after a crash in the rename
+                # window, a surviving data.compact.old would be restored
+                # by the next read()'s _recover_compact and resurrect
+                # truncated rows (default-path tables are safe because
+                # that dir lives inside table_path).
                 shutil.rmtree(data, ignore_errors=True)
-                shutil.rmtree(data + ".compact.tmp", ignore_errors=True)
-                shutil.rmtree(data + ".compact.old", ignore_errors=True)
+                shutil.rmtree(data + _OLD, ignore_errors=True)
             # Bump the epoch BEFORE setting the floor: a truncate issued
             # when history_floor == write_epoch (no appends since the
             # last floor raise) would otherwise leave the floor
@@ -586,102 +583,49 @@ class CStoreCatalog:
             if f_.name not in df.columns:
                 raise CStoreError(f'column "{f_.name}" missing from input')
             cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
-        aligned = df.select(*cols)
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            # reference advises loading sorted for skip efficiency
-            # (README.md:287-294); sortWithinPartitions keeps it shuffle-free
-            aligned = aligned.sortWithinPartitions(*sort_by.split(","))
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        # stage the batch to a sibling temp dir (the long, distributed
-        # part — unserialized), then COMMIT under the table's writer
-        # lock:
-        #   append → stamp files with the next ``e{epoch:012d}-`` prefix
-        #     inside the staging dir, move them in, and only then save
-        #     the epoch to the metadata — the VISIBILITY commit. read()
-        #     ignores files stamped above the committed epoch, so a
-        #     crash mid-move leaves an invisible partial batch (cleaned
-        #     by the next locked writer via :meth:`_recover_orphans`),
-        #     and an in-process failure rolls the moved files back.
-        #   overwrite → the compact two-rename swap (+ its crash
-        #     recovery), so readers see the old or the new table, never
-        #     an empty window.
+        # stage the batch (the long, distributed part — unserialized),
+        # then COMMIT under the table's writer lock:
+        #   append → :func:`_move_in` stamps the files with the next
+        #     ``e{epoch:012d}-`` prefix and moves them in, and only then
+        #     is the epoch saved to the metadata — the VISIBILITY
+        #     commit. read() ignores files stamped above the committed
+        #     epoch, so a crash mid-move leaves an invisible partial
+        #     batch (cleaned by the next locked writer via
+        #     :meth:`_recover_orphans`), and an in-process failure rolls
+        #     the moved files back.
+        #   overwrite → the stamped stage replaces the data dir through
+        #     :func:`_swap_in` (+ its crash recovery), so readers see the
+        #     old or the new table, never an empty window.
         # The epoch is what ADD COLUMN's backfill watermark compares
         # against (O(1) metadata vs listing every file). Move cost is
         # O(batch files) — the same order as the reference's per-stripe
         # footer rewrite (cstore_writer.c:344-357); an object-store
         # deployment would commit a manifest instead of renaming.
-        fmt = self._format(meta)
-        data_path = self._data_path(meta)
-        staged = data_path + f".insert.{uuid4().hex[:8]}"
-        writer = (aligned.write.mode("overwrite")
-                  .option("maxRecordsPerFile", str(stripe_rows * 10)))
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
-        part = meta.options.get("partition_by")
-        if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, fmt, staged)
+        staged = self._stage(meta, df.select(*cols))
         try:
             with self._writer_lock(name):
                 # re-read the committed epoch under the lock: another
                 # writer may have appended while this batch was staging
                 meta = self._load_meta(name)
-                self._recover_orphans(meta, fmt)
+                self._recover_orphans(meta, self._format(meta))
                 epoch = meta.write_epoch + 1
-                prefix = f"e{epoch:012d}-"
-                # bake final names (and drop _SUCCESS/.crc) inside the
-                # staging dir — invisible until the move below
-                for root, _dirs, files in os.walk(staged):
-                    for fn in files:
-                        if fn.startswith(("_", ".")):
-                            os.remove(os.path.join(root, fn))
-                        else:
-                            os.rename(os.path.join(root, fn),
-                                      os.path.join(root, prefix + fn))
                 if overwrite:
-                    old_path = data_path + ".compact.old"
+                    _stamp(staged, epoch)
                     # epoch first: if the swap never happens the bump is
                     # a harmless gap; saving AFTER the swap would make
                     # the new files orphan-deletable in the crash window
                     meta.write_epoch = epoch
                     meta.history_floor = epoch  # prior snapshots die
                     self._save_meta(meta)
-                    if os.path.isdir(data_path):
-                        os.rename(data_path, old_path)
-                    os.rename(staged, data_path)  # commit point
-                    shutil.rmtree(old_path, ignore_errors=True)
-                    # zone maps for the new files land in a second save;
-                    # a crash in between just means footer-fallback for
+                    _swap_in(self._data_path(meta), staged)
+                    # the new files' zone maps land in the save below; a
+                    # crash in between just means footer-fallback for
                     # this batch until the next commit reconciles
-                    self._reconcile_file_stats(meta)
-                    self._save_meta(meta)
                 else:
-                    moved: list[tuple[str, str]] = []
-                    try:
-                        for root, _dirs, files in os.walk(staged):
-                            rel = os.path.relpath(root, staged)
-                            dest = (data_path if rel == "."
-                                    else os.path.join(data_path, rel))
-                            os.makedirs(dest, exist_ok=True)
-                            for fn in files:
-                                s_, d_ = (os.path.join(root, fn),
-                                          os.path.join(dest, fn))
-                                os.replace(s_, d_)
-                                moved.append((s_, d_))
-                    except BaseException:
-                        # roll the partial batch back out of the table —
-                        # the append either fully lands or not at all
-                        for s_, d_ in reversed(moved):
-                            try:
-                                os.replace(d_, s_)
-                            except OSError:
-                                pass
-                        raise
+                    _move_in(staged, self._data_path(meta), epoch)
                     meta.write_epoch = epoch
-                    self._reconcile_file_stats(meta)
-                    self._save_meta(meta)  # visibility commit
+                self._reconcile_file_stats(meta)
+                self._save_meta(meta)  # the append's visibility commit
         finally:
             shutil.rmtree(staged, ignore_errors=True)
 
@@ -698,14 +642,16 @@ class CStoreCatalog:
         lifecycle op. Rows are materialized through the normal read path
         (so constant-default backfill is baked into the rewritten files —
         re-reads are bit-identical before and after), re-partitioned to
-        ~stripe-file size, and committed by writing to a temp directory
-        then swapping it in — the reference's temp-file + rename protocol
-        for the footer (cstore_writer.c:344-357) applied to the data dir.
-        The swap is two renames (data→old, tmp→data), so it is not a
-        single atomic step: a crash in the one-rename window leaves the
-        rows parked in ``data.compact.old``, which :meth:`_recover_compact`
-        (run by both read() and compact()) rolls back or cleans up —
-        readers never silently see an empty table.
+        ~stripe-file size, written to this rewrite's own staging
+        directory (``data.stage.{uuid}``, so a concurrent rewrite can
+        never swap in this one's output) and swapped in — the reference's
+        temp-file + rename protocol for the footer
+        (cstore_writer.c:344-357) applied to the data dir. The swap is
+        two renames (data→old, stage→data), so it is not a single atomic
+        step: a crash in the one-rename window leaves the rows parked in
+        ``data.compact.old``, which :meth:`_recover_compact` (run by both
+        read() and compact()) rolls back or cleans up — readers never
+        silently see an empty table.
         Partitioned tables compact within each partition.
 
         ``zorder_by=[cols]`` additionally CLUSTERS the rewrite on the
@@ -761,8 +707,10 @@ class CStoreCatalog:
 
         At 100 TB this is the bounded-history answer: old epochs stop
         costing file-count/listing overhead while the recent window
-        stays time-travelable. Commits through the compact swap protocol
-        (kept files hard-link into the staging dir — no data copy).
+        stays time-travelable. The consolidated files are staged (with
+        the persisted layout, z-order scale included) and stamped at the
+        cutoff; at commit the kept files hard-link into the stage (no
+        data copy) and :func:`_swap_in` replaces the data dir.
         Returns the number of files reclaimed."""
         meta = self._load_meta(name)
         fmt = self._format(meta)
@@ -785,86 +733,46 @@ class CStoreCatalog:
         if not old_files:
             return 0
         df = self.read(name, as_of_epoch=cutoff)
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        rows_per_file = stripe_rows * 10
         total = df.count()
-        part = meta.options.get("partition_by")
-        zspec = meta.options.get("zorder_by")
-        if part:
-            df = df.repartition(*part.split(","))
-        elif zspec and total:
-            # re-cluster the consolidated cold window on the persisted
-            # Morton order (same contract as compact)
-            from cstore_fdw_spark.sources.zorder import zorder_by as _zorder
-            df = _zorder(df, zspec.split(","),
-                         max(1, -(-total // rows_per_file)),
-                         bits=int(meta.options.get("zorder_bits", 16)))
-        elif total:
-            df = df.repartition(max(1, -(-total // rows_per_file)))
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by.split(","))
-        tmp_path = data_path + ".compact.tmp"
-        old_path = data_path + ".compact.old"
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        if total:
-            writer = (df.write.mode("overwrite")
-                      .option("maxRecordsPerFile", str(rows_per_file)))
-            for k, v in self._writer_options(meta).items():
-                writer = writer.option(k, v)
-            if part:
-                writer = writer.partitionBy(*part.split(","))
-            _save_df(writer, fmt, tmp_path)
-        else:
-            os.makedirs(tmp_path, exist_ok=True)
-        prefix = f"e{cutoff:012d}-"
-        for root, _dirs, files in os.walk(tmp_path):
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    os.remove(os.path.join(root, fn))
-                else:
-                    os.rename(os.path.join(root, fn),
-                              os.path.join(root, prefix + fn))
-        with self._writer_lock(name):
-            # optimistic commit: the staged consolidation covers only
-            # files ≤ cutoff, which concurrent INSERTs never touch (new
-            # batches stamp epochs above the committed write_epoch), so
-            # an epoch advance alone does NOT invalidate it — the new
-            # files simply ride along via the live listing below. A
-            # concurrent REWRITE does invalidate it (the whole dir was
-            # replaced); every rewrite commit raises history_floor, so
-            # that is the conflict signal. The meta saved is re-loaded
-            # here — never the copy from operation start, whose
-            # write_epoch may be stale (saving it would regress the
-            # epoch and orphan-collect a concurrently committed batch).
-            fresh = self._load_meta(name)
-            if fresh.history_floor != meta.history_floor:
-                shutil.rmtree(tmp_path, ignore_errors=True)
-                raise CStoreConcurrentWriteError(
-                    f'concurrent rewrite of "{name}" invalidated this '
-                    "vacuum; re-run it")
-            # kept (newer-epoch) files ride along as hard links — zero
-            # data copied, and the swap stays the atomic commit point.
-            # Logically dropped files must NOT be linked back in: the
-            # swap removes their bytes, completing their GC.
-            dropped = set(fresh.dropped_files)
-            for p in _data_files(data_path, fmt):
-                if _file_epoch(p) > cutoff \
-                        and os.path.relpath(p, data_path) not in dropped:
+        staged = self._stage(
+            meta, _layout(df, meta.options, total) if total else None)
+        try:
+            _stamp(staged, cutoff)
+            with self._writer_lock(name):
+                # optimistic commit: the staged consolidation covers
+                # only files ≤ cutoff, which concurrent INSERTs never
+                # touch (new batches stamp epochs above the committed
+                # write_epoch), so an epoch advance alone does NOT
+                # invalidate it — the new files simply ride along via
+                # the live listing below. A concurrent REWRITE does
+                # invalidate it (the whole dir was replaced); every
+                # rewrite commit raises history_floor, so that is the
+                # conflict signal. The meta saved is re-loaded here —
+                # never the copy from operation start, whose write_epoch
+                # may be stale (saving it would regress the epoch and
+                # orphan-collect a concurrently committed batch).
+                fresh = self._load_meta(name)
+                if fresh.history_floor != meta.history_floor:
+                    raise CStoreConcurrentWriteError(
+                        f'concurrent rewrite of "{name}" invalidated this '
+                        "vacuum; re-run it")
+                # kept (newer-epoch) files ride along as hard links —
+                # zero data copied, and the swap stays the atomic commit
+                # point. Logically dropped files must NOT be linked back
+                # in: the swap removes their bytes, completing their GC.
+                dropped = set(fresh.dropped_files)
+                for p in _data_files(data_path, fmt):
                     rel = os.path.relpath(p, data_path)
-                    dest = os.path.join(tmp_path, rel)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.link(p, dest)
-            os.rename(data_path, old_path)
-            os.rename(tmp_path, data_path)
-            shutil.rmtree(old_path)
-            fresh.dropped_files = []
-            fresh.history_floor = cutoff
-            self._reconcile_file_stats(fresh)
-            self._save_meta(fresh)
-            meta = fresh
-        self._refresh_registered(meta)
+                    if _file_epoch(p) > cutoff and rel not in dropped:
+                        _link_data_file(p, os.path.join(staged, rel))
+                _swap_in(data_path, staged)
+                fresh.dropped_files = []
+                fresh.history_floor = cutoff
+                self._reconcile_file_stats(fresh)
+                self._save_meta(fresh)
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        self._refresh_registered(fresh)
         new_old = sum(1 for p in _data_files(data_path, fmt)
                       if _file_epoch(p) <= cutoff)
         return len(old_files) - new_old
@@ -887,14 +795,7 @@ class CStoreCatalog:
         semantics: only TRUE deletes). Returns the number of rows
         deleted."""
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        for _ in range(3):
-            try:
-                return self._delete_once(name, cond)
-            except CStoreConcurrentWriteError:
-                continue
-        raise CStoreConcurrentWriteError(
-            f'DELETE on "{name}" lost the commit race 3 times to '
-            "concurrent writers; retry when ingest quiesces")
+        return _retry(f'DELETE on "{name}"', self._delete_once, name, cond)
 
     def _delete_once(self, name: str, cond) -> int:
         meta = self._load_meta(name)
@@ -916,40 +817,40 @@ class CStoreCatalog:
         deleted = int(sum(r["count"] for r in per_file))
         touched = sorted(_uri_to_path(r["_file"]) for r in per_file)
         keep = ~cond.eqNullSafe(F.lit(True))
-        if any(not t for t in touched):
-            # python data sources report no input_file_name: file-level
-            # pruning is unavailable, the full rewrite is the safe path
+        if not all(touched) or len(touched) >= len(visible):
+            # python data sources report no input_file_name (file-level
+            # pruning is unavailable), or nothing is left to prune: the
+            # full rewrite is the safe path, and it also repacks
             self._rewrite(name, keep=keep)
             return deleted
-        if len(touched) >= len(visible):
-            # nothing to prune — the full rewrite also repacks
-            self._rewrite(name, keep=keep)
-            return deleted
-        keep_df = self._read_files(meta, touched).filter(keep)
-        staged = self._stage_write(meta, keep_df)
-        try:
-            fresh = self._commit_partial(
-                name, base_epoch, staged,
-                [os.path.relpath(p, data_path) for p in touched])
-        finally:
-            shutil.rmtree(staged, ignore_errors=True)
-        self._refresh_registered(fresh)
+        self._rewrite_df(meta, self._read_files(meta, touched).filter(keep),
+                         base_epoch,
+                         dropped=[os.path.relpath(p, data_path)
+                                  for p in touched])
         return deleted
 
-    def _stage_write(self, meta: TableMeta, df: DataFrame) -> str:
-        """Write ``df`` to a sibling staging directory with the table's
-        layout options (stripe sizing, partitioning, sort, codec); the
-        caller commits it via :meth:`_commit_partial` and removes the
-        leftover dir."""
-        data_path = self._data_path(meta)
-        staged = data_path + f".stage.{uuid4().hex[:8]}"
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
+    def _stage(self, meta: TableMeta, df: DataFrame | None) -> str:
+        """Write ``df`` with the table's layout into a fresh sibling
+        staging directory ``{data}.stage.{uuid}`` and return its path —
+        the one writer build behind every catalog write. It applies the
+        codec options, stripe-sized files (``maxRecordsPerFile`` =
+        stripe rows × 10), ``partition_by``, and ``sort_by`` (the
+        reference advises loading sorted for skip efficiency,
+        README.md:287-294; sortWithinPartitions keeps it shuffle-free).
+        ``df=None`` stages nothing (an empty directory). The name is
+        unique, so concurrent writers never share a stage; only the
+        caller removes it (after a commit has moved its files or
+        renamed it into place)."""
+        staged = self._data_path(meta) + _STAGE + uuid4().hex
+        if df is None:
+            os.makedirs(staged)
+            return staged
         sort_by = meta.options.get("sort_by")
         if sort_by:
             df = df.sortWithinPartitions(*sort_by.split(","))
         writer = (df.write.mode("overwrite")
-                  .option("maxRecordsPerFile", str(stripe_rows * 10)))
+                  .option("maxRecordsPerFile",
+                          str(_rows_per_file(meta.options))))
         for k, v in self._writer_options(meta).items():
             writer = writer.option(k, v)
         part = meta.options.get("partition_by")
@@ -957,6 +858,30 @@ class CStoreCatalog:
             writer = writer.partitionBy(*part.split(","))
         _save_df(writer, self._format(meta), staged)
         return staged
+
+    def _rewrite_df(self, meta: TableMeta, df: DataFrame, base_epoch: int,
+                    mutate=None, dropped: list[str] | None = None) -> None:
+        """Stage ``df`` and commit it as a copy-on-write rewrite.
+        ``dropped`` lists the data-dir-relative files ``df`` replaces (a
+        file-pruned MERGE/DELETE, committed by :meth:`_commit_partial`);
+        ``None`` replaces the whole table (:meth:`_commit_swap`, which
+        also applies ``mutate``). ``base_epoch`` is the committed
+        ``write_epoch`` ``df`` was computed from: the commit is refused
+        with :class:`CStoreConcurrentWriteError` if another writer has
+        advanced it. ``meta`` supplies only layout facts (format,
+        options, data path) for the staged write — the metadata actually
+        saved is re-loaded under the lock."""
+        staged = self._stage(meta, df)
+        try:
+            if dropped is None:
+                fresh = self._commit_swap(meta.name, base_epoch, staged,
+                                          mutate)
+            else:
+                fresh = self._commit_partial(meta.name, base_epoch, staged,
+                                             dropped)
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        self._refresh_registered(fresh)
 
     def merge_into(self, name: str, source: DataFrame,
                    on: str | list[str],
@@ -1012,13 +937,15 @@ class CStoreCatalog:
         ``False``, extra source columns are silently ignored (PG
         semantics: the column list names only known columns).
 
-        Copy-on-write: the merged row set commits through the compact
-        swap protocol (temp dir + two renames + crash recovery), so
-        readers see the old or the new table, never a mix. The whole
-        merge is ONE full-outer join on the merge key, materialized
-        once: row counts, the duplicate-source check, and the rewrite
-        all read that single cached result (exactly one Spark job runs
-        before the rewrite — at 100 TB the join never re-executes).
+        Copy-on-write: the merged row set is staged like every catalog
+        write (:meth:`_stage`, so a ``sort_by`` table stays sorted within
+        each file) and commits through the swap protocol (two renames +
+        crash recovery), so readers see the old or the new table, never
+        a mix. The whole merge is ONE full-outer join on the merge key,
+        materialized once: row counts, the duplicate-source check, and
+        the rewrite all read that single cached result (exactly one
+        Spark job runs before the rewrite — at 100 TB the join never
+        re-executes).
         Files whose merge-key zone map cannot overlap the source's key
         range are pruned from the join AND from the rewrite: they stay
         byte-identical on disk, committed via the partial protocol
@@ -1229,18 +1156,13 @@ class CStoreCatalog:
             # retrying internally would silently re-execute the
             # expensive join, and the caller owns that decision)
             if pruned:
-                staged = self._stage_write(meta, out_df)
-                try:
-                    fresh = self._commit_partial(
-                        name, base_epoch, staged, candidate_rel)
-                finally:
-                    shutil.rmtree(staged, ignore_errors=True)
-                self._refresh_registered(fresh)
+                self._rewrite_df(meta, out_df, base_epoch,
+                                 dropped=candidate_rel)
             elif (stats.n_rows or 0) == 0:
                 self.truncate(name)
                 self._refresh_registered(meta)
             else:
-                self._rewrite_df(meta, out_df, base_epoch=base_epoch)
+                self._rewrite_df(meta, out_df, base_epoch)
         finally:
             merged.unpersist()
         return {"matched": int(stats.n_matched or 0),
@@ -1252,8 +1174,10 @@ class CStoreCatalog:
         (``sort_by``, ``partition_by``, ``compression``,
         ``block_row_count``, ``stripe_row_count``, ``storage_format``,
         ``bloom_filter_columns``/``_ndv``) and REWRITE the data into the
-        new shape in one crash-safe operation (the compact swap
-        protocol: staged write → lock-validated two-rename commit;
+        new shape in one crash-safe operation (the swap protocol: the
+        data re-laid out by :func:`_layout` — partitions co-located, a
+        persisted z-order re-clustered, stripe-sized files — and staged
+        with the new options, then a lock-validated two-rename commit;
         readers always see the old or the new layout, never a window).
         Pass ``option=None`` to remove a layout option. The merged
         option set re-validates as a whole, so invalid combinations
@@ -1286,38 +1210,23 @@ class CStoreCatalog:
         work = TableMeta(**{**meta.__dict__})
         work.options = validated
         df = self.read(name)
-        part = validated.get("partition_by")
-        if part:
-            # co-locate each partition's rows → few files per directory
-            df = df.repartition(*part.split(","))
-        sort = validated.get("sort_by")
-        if sort:
-            df = df.sortWithinPartitions(*sort.split(","))
+        df = _layout(df, validated, df.count())
 
         def mutate(fresh: TableMeta) -> None:
             fresh.options = validated
 
-        # _rewrite_df stages with ``work``'s (new) options — writer
-        # codecs, page limits, blooms, partitionBy — and commits the
-        # option swap together with the data swap under the writer lock
-        self._rewrite_df(work, df, base_epoch=base_epoch, mutate=mutate)
-        self._refresh_registered(meta)
+        # staged with ``work``'s (new) options — writer codecs, page
+        # limits, blooms, partitionBy, sort — and the option swap
+        # commits together with the data swap under the writer lock
+        self._rewrite_df(work, df, base_epoch, mutate)
 
     def _rewrite(self, name: str, keep=None, set_opts=None) -> int:
-        # optimistic-concurrency loop: the distributed rewrite runs
-        # unlocked; if another writer committed meanwhile the lock-held
-        # commit refuses and we redo from a fresh read (which then
-        # includes the concurrent batch). Bounded — losing the race
-        # three times in a row means sustained concurrent ingest, and
-        # the caller should schedule the rewrite differently.
-        for _ in range(3):
-            try:
-                return self._rewrite_once(name, keep, set_opts)
-            except CStoreConcurrentWriteError:
-                continue
-        raise CStoreConcurrentWriteError(
-            f'rewrite of "{name}" lost the commit race 3 times to '
-            "concurrent writers; retry when ingest quiesces")
+        # optimistic concurrency: the distributed rewrite runs unlocked;
+        # if another writer committed meanwhile the lock-held commit
+        # refuses and the next attempt re-reads (which then includes
+        # the concurrent batch)
+        return _retry(f'rewrite of "{name}"', self._rewrite_once, name,
+                      keep, set_opts)
 
     def _rewrite_once(self, name: str, keep=None, set_opts=None) -> int:
         meta = self._load_meta(name)
@@ -1343,50 +1252,16 @@ class CStoreCatalog:
             self.truncate(name)
             self._refresh_registered(meta)
             return 0
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        rows_per_file = stripe_rows * 10
-        part = meta.options.get("partition_by")
         # explicit compact(zorder_by=..) wins; else a previously
         # persisted zorder_by re-clusters every rewrite (the validator
         # guarantees z-order never coexists with sort_by/partition_by)
-        zspec = ((set_opts or {}).get("zorder_by")
-                 or meta.options.get("zorder_by"))
-        n_files = max(1, -(-total // rows_per_file))
-        if part:
-            # co-locate each partition's rows so the writer emits few
-            # files per partition directory
-            df = df.repartition(*part.split(","))
-        elif zspec:
-            from cstore_fdw_spark.sources.zorder import zorder_by as _zorder
-            zbits = int((set_opts or {}).get(
-                "zorder_bits", meta.options.get("zorder_bits", 16)))
-            zscale = str((set_opts or {}).get(
-                "zorder_scale", meta.options.get("zorder_scale", "minmax")))
-            df = _zorder(df, zspec.split(","), n_files, bits=zbits,
-                         scale=zscale)
-        else:
-            df = df.repartition(n_files)
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by.split(","))
-        data_path = self._data_path(meta)
-        tmp_path = data_path + ".compact.tmp"
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        writer = (df.write.mode("overwrite")
-                  .option("maxRecordsPerFile", str(rows_per_file)))
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
-        if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, fmt, tmp_path)
+        df = _layout(df, {**meta.options, **(set_opts or {})}, total)
         mutate = None
         if set_opts:
             def mutate(fresh_meta):
                 fresh_meta.options.update(set_opts)
-        fresh = self._commit_swap(name, base_epoch, tmp_path, mutate)
-        self._refresh_registered(fresh)
-        return sum(1 for _ in _data_files(data_path, fmt))
+        self._rewrite_df(meta, df, base_epoch, mutate)
+        return sum(1 for _ in _data_files(self._data_path(meta), fmt))
 
     def _commit_swap(self, name: str, base_epoch: int, tmp_path: str,
                      mutate=None) -> TableMeta:
@@ -1412,16 +1287,8 @@ class CStoreCatalog:
         RENAME COLUMN's schema change) before the save."""
         with self._writer_lock(name):
             fresh = self._load_meta(name)
-            if fresh.write_epoch != base_epoch:
-                shutil.rmtree(tmp_path, ignore_errors=True)
-                raise CStoreConcurrentWriteError(
-                    f'concurrent write to "{name}" (epoch {base_epoch} '
-                    f"→ {fresh.write_epoch}) invalidated this rewrite")
-            data_path = self._data_path(fresh)
-            old_path = data_path + ".compact.old"
-            os.rename(data_path, old_path)
-            os.rename(tmp_path, data_path)
-            shutil.rmtree(old_path)
+            _refuse_if_moved(fresh, base_epoch, tmp_path)
+            _swap_in(self._data_path(fresh), tmp_path)
             if mutate is not None:
                 mutate(fresh)
             if fresh.backfill_files or fresh.backfill_watermark:
@@ -1460,56 +1327,24 @@ class CStoreCatalog:
            (``write_epoch`` still ``base_epoch`` — else refuse, see
            :class:`CStoreConcurrentWriteError`);
         2. stamp the staged files with the next epoch and move them into
-           the data dir — INVISIBLE until the metadata commit (readers
-           filter epochs above the committed one; a crash here leaves
-           them for :meth:`_recover_orphans`);
+           the data dir (:func:`_move_in`) — INVISIBLE until the
+           metadata commit (readers filter epochs above the committed
+           one; a crash here leaves them for :meth:`_recover_orphans`);
         3. save the metadata with the bumped epoch and ``dropped`` added
            to ``dropped_files`` — the ATOMIC commit point: new files
            become visible and dropped files invisible in the same
            os.replace;
-        4. physically unlink the dropped files and clear the list (a
-           crash between 3 and 4 is repaired by the next locked
-           writer's idempotent GC).
+        4. physically unlink the dropped files and clear the list with
+           :meth:`_recover_orphans` — the same idempotent GC that
+           repairs a crash between 3 and 4 on the next locked writer.
         """
-        fmt = None
         with self._writer_lock(name):
             fresh = self._load_meta(name)
+            _refuse_if_moved(fresh, base_epoch, staged)
             fmt = self._format(fresh)
-            if fresh.write_epoch != base_epoch:
-                shutil.rmtree(staged, ignore_errors=True)
-                raise CStoreConcurrentWriteError(
-                    f'concurrent write to "{name}" (epoch {base_epoch} '
-                    f"→ {fresh.write_epoch}) invalidated this rewrite")
             self._recover_orphans(fresh, fmt)
-            data_path = self._data_path(fresh)
             epoch = fresh.write_epoch + 1
-            prefix = f"e{epoch:012d}-"
-            for root, _dirs, files in os.walk(staged):
-                for fn in files:
-                    if fn.startswith(("_", ".")):
-                        os.remove(os.path.join(root, fn))
-                    else:
-                        os.rename(os.path.join(root, fn),
-                                  os.path.join(root, prefix + fn))
-            moved: list[tuple[str, str]] = []
-            try:
-                for root, _dirs, files in os.walk(staged):
-                    rel = os.path.relpath(root, staged)
-                    dest = (data_path if rel == "."
-                            else os.path.join(data_path, rel))
-                    os.makedirs(dest, exist_ok=True)
-                    for fn in files:
-                        s_, d_ = (os.path.join(root, fn),
-                                  os.path.join(dest, fn))
-                        os.replace(s_, d_)
-                        moved.append((s_, d_))
-            except BaseException:
-                for s_, d_ in reversed(moved):
-                    try:
-                        os.replace(d_, s_)
-                    except OSError:
-                        pass
-                raise
+            _move_in(staged, self._data_path(fresh), epoch)
             fresh.write_epoch = epoch
             # replaced files back every older snapshot — history ends here
             fresh.history_floor = epoch
@@ -1520,34 +1355,18 @@ class CStoreCatalog:
             # dropped files' entries linger until the post-unlink save
             self._reconcile_file_stats(fresh)
             self._save_meta(fresh)  # COMMIT
-            for rel in fresh.dropped_files:
-                try:
-                    os.remove(os.path.join(data_path, rel))
-                    ftr = os.path.join(data_path, rel) + ".footer"
-                    if os.path.exists(ftr):  # cstore sidecar
-                        os.remove(ftr)
-                except OSError:
-                    pass
-            fresh.dropped_files = []
+            self._recover_orphans(fresh, fmt)
             self._reconcile_file_stats(fresh)
             self._save_meta(fresh)
         return fresh
 
-    @contextmanager
     def _writer_lock(self, name: str):
         """Exclusive per-table writer lock (flock on a sidecar file):
         serializes insert commits so epoch stamps never collide and
         orphan recovery never races an in-flight writer. Readers never
         take it — they filter uncommitted epochs instead."""
-        import fcntl
-        lock_path = os.path.join(self.table_path(name),
-                                 "_cstore_writer.lock")
-        with open(lock_path, "w") as f:
-            fcntl.flock(f, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(f, fcntl.LOCK_UN)
+        return flocked(os.path.join(self.table_path(name),
+                                    "_cstore_writer.lock"))
 
     def _recover_orphans(self, meta: TableMeta, fmt: str) -> None:
         """Repair after a writer crash — called only under the writer
@@ -1567,35 +1386,40 @@ class CStoreCatalog:
             return
         for p in list(_data_files(data_path, fmt)):
             if _file_epoch(p) > meta.write_epoch:
-                os.remove(p)
-                if os.path.exists(p + ".footer"):  # cstore sidecar
-                    os.remove(p + ".footer")
+                _unlink_data_file(p)
         for rel in meta.dropped_files:
-            try:
-                os.remove(os.path.join(data_path, rel))
-                ftr = os.path.join(data_path, rel) + ".footer"
-                if os.path.exists(ftr):  # cstore sidecar
-                    os.remove(ftr)
-            except OSError:
-                pass
+            _unlink_data_file(os.path.join(data_path, rel))
         meta.dropped_files = []
 
     def _recover_compact(self, meta: TableMeta, fmt: str) -> None:
-        """Repair the table after a compact() crash.
+        """Repair the table after a crash inside :func:`_swap_in`
+        (compact, vacuum, every full rewrite, INSERT OVERWRITE).
 
         Crash between the two swap renames → no ``data`` dir but a
         ``data.compact.old`` holding every row: roll the rename back.
         Crash after the swap but before cleanup → both dirs exist and
-        ``data`` is the compacted truth: drop the leftovers. A stale
-        ``.compact.tmp`` is always disposable (it's re-created)."""
+        ``data`` is the new truth: drop the leftovers. Staging
+        directories are never read: each belongs to one writer, which
+        removes it."""
         data_path = self._data_path(meta)
-        old_path = data_path + ".compact.old"
+        old_path = data_path + _OLD
         if os.path.isdir(old_path):
             if _has_data_files(data_path, fmt):
                 shutil.rmtree(old_path)
             else:
                 shutil.rmtree(data_path, ignore_errors=True)
                 os.rename(old_path, data_path)
+
+    def _epoch_committed(self, name: str, epoch: int) -> bool:
+        """Whether a visible data file of ``name`` carries ``epoch``'s
+        stamp — proof that the insert stamped with that epoch reached
+        its visibility commit (the stamp is baked under the writer lock
+        right before the metadata save). Sidecar write-ahead records
+        (aggregate views, projections, their streaming twins) recover
+        from this evidence."""
+        meta = self._load_meta(name)
+        return any(_file_epoch(p) == epoch
+                   for p in self._visible_files(meta))
 
     # -------------------------------------------------------------- read
     def read(self, name: str, as_of_epoch: int | None = None,
@@ -2076,11 +1900,11 @@ class CStoreCatalog:
             meta = self._load_meta(name)
             if self._format(meta) == "cstore":
                 raise CStoreError(
-                    "DROP COLUMN is not supported on storage_format="
-                    "cstore tables: the v1.7 format stores no column "
-                    "names, so position is the mapping and dropping a "
-                    "middle column would shift it; convert first via "
-                    "alter_table_layout(storage_format='parquet')")
+                    "ALTER COLUMN TYPE is not supported on storage_format="
+                    "cstore tables: the v1.7 format stores each column "
+                    "in its declared type's binary layout, so existing "
+                    "stripes cannot be re-read as another type; convert "
+                    "first via alter_table_layout(storage_format='parquet')")
             schema = meta.schema()
             if column not in schema.fieldNames():
                 raise CStoreError(f'column "{column}" does not exist')
@@ -2157,33 +1981,7 @@ class CStoreCatalog:
         # renamed partition column), so apply the same edit to the
         # local working copy first (NOT saved).
         mutate(meta)
-        self._rewrite_df(meta, df, base_epoch=base_epoch, mutate=mutate)
-
-    def _rewrite_df(self, meta: TableMeta, df: DataFrame,
-                    base_epoch: int, mutate=None) -> None:
-        """Commit ``df`` as the table's new contents via the compact swap
-        protocol (temp dir + staged write + lock-validated swap).
-        ``base_epoch`` is the committed ``write_epoch`` the caller's
-        ``df`` was computed from; the commit is refused with
-        :class:`CStoreConcurrentWriteError` if another writer has
-        advanced it (see :meth:`_commit_swap`). ``meta`` supplies only
-        immutable layout facts (format/options/data path) for the staged
-        write — the metadata actually saved is re-loaded under the
-        lock."""
-        fmt = self._format(meta)
-        data_path = self._data_path(meta)
-        tmp_path = data_path + ".compact.tmp"
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
-        part = meta.options.get("partition_by")
-        if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, fmt, tmp_path)
-        fresh = self._commit_swap(name=meta.name, base_epoch=base_epoch,
-                                  tmp_path=tmp_path, mutate=mutate)
-        self._refresh_registered(fresh)
+        self._rewrite_df(meta, df, base_epoch, mutate)
 
     # -------------------------------------------------------------- views
     def _view_path(self, name: str) -> str:
@@ -2200,11 +1998,8 @@ class CStoreCatalog:
             raise CStoreError(f'relation "{name}" already exists')
         if os.path.exists(self._view_path(name)) and not replace:
             raise CStoreError(f'view "{name}" already exists')
-        tmp = self._view_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "sql": sql,
-                       "created_at": time.time()}, f)
-        os.replace(tmp, self._view_path(name))
+        write_json_atomic(self._view_path(name), {
+            "name": name, "sql": sql, "created_at": time.time()})
 
     def list_views(self) -> list[str]:
         out = []
@@ -2662,10 +2457,128 @@ def _epoch_expr():
     return F.when(raw == "", F.lit(0)).otherwise(raw.cast("bigint"))
 
 
-def _file_epoch(path: str) -> int:
-    """Epoch stamp of a data file (0 for unstamped/rewritten files)."""
-    base = os.path.basename(path)
-    if base.startswith("e") and len(base) > 13 and base[13] == "-" \
-            and base[1:13].isdigit():
-        return int(base[1:13])
-    return 0
+def _rows_per_file(options: dict[str, Any]) -> int:
+    """Rows per written data file: ten stripes."""
+    return int(options.get("stripe_row_count",
+                           DEFAULT_STRIPE_ROW_COUNT)) * 10
+
+
+def _layout(df: DataFrame, options: dict[str, Any], total: int) -> DataFrame:
+    """The rewrite layout for ``df`` (``total`` rows) under ``options``:
+    co-locate each partition's rows so the writer emits few files per
+    partition directory; else cluster on the persisted Morton order
+    (bits and scale); else repartition to stripe-sized files."""
+    part = options.get("partition_by")
+    if part:
+        return df.repartition(*part.split(","))
+    if not total:
+        return df
+    n_files = max(1, -(-total // _rows_per_file(options)))
+    zspec = options.get("zorder_by")
+    if zspec:
+        from cstore_fdw_spark.sources import zorder
+        return zorder.zorder_by(
+            df, zspec.split(","), n_files,
+            bits=int(options.get("zorder_bits", 16)),
+            scale=str(options.get("zorder_scale", "minmax")))
+    return df.repartition(n_files)
+
+
+def _stamp(staged: str, epoch: int) -> None:
+    """Bake the ``e{epoch:012d}-`` prefix into every staged file name
+    and drop the writer's ``_SUCCESS``/``.crc`` side files — inside the
+    staging directory, so nothing is visible yet."""
+    prefix = f"e{epoch:012d}-"
+    for root, _dirs, files in os.walk(staged):
+        for fn in files:
+            if fn.startswith(("_", ".")):
+                os.remove(os.path.join(root, fn))
+            else:
+                os.rename(os.path.join(root, fn),
+                          os.path.join(root, prefix + fn))
+
+
+def _move_in(staged: str, data_path: str, epoch: int) -> None:
+    """Stamp the staged files with ``epoch`` and move them into
+    ``data_path``, partition subdirectories included. The batch lands
+    whole or not at all: an in-process failure moves the files already
+    moved back out. The caller's metadata save is the visibility
+    commit."""
+    _stamp(staged, epoch)
+    moved: list[tuple[str, str]] = []
+    try:
+        for root, _dirs, files in os.walk(staged):
+            dest = os.path.normpath(
+                os.path.join(data_path, os.path.relpath(root, staged)))
+            os.makedirs(dest, exist_ok=True)
+            for fn in files:
+                s_, d_ = os.path.join(root, fn), os.path.join(dest, fn)
+                os.replace(s_, d_)
+                moved.append((s_, d_))
+    except BaseException:
+        for s_, d_ in reversed(moved):
+            with contextlib.suppress(OSError):
+                os.replace(d_, s_)
+        raise
+
+
+def _swap_in(data_path: str, staged: str) -> None:
+    """Replace the data directory with ``staged`` by two renames (data →
+    ``data.compact.old``, stage → data); the second is the commit
+    point. A crash between them leaves every old row in
+    ``data.compact.old``, which ``_recover_compact`` rolls back."""
+    old = data_path + _OLD
+    if os.path.isdir(data_path):
+        os.rename(data_path, old)
+    os.rename(staged, data_path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _link_data_file(src: str, dest: str) -> None:
+    """Hard-link a data file and its cstore ``.footer`` sidecar, if
+    any, to ``dest`` (a real copy across devices)."""
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    pairs = [(src, dest)]
+    if os.path.exists(src + ".footer"):
+        pairs.append((src + ".footer", dest + ".footer"))
+    for s_, d_ in pairs:
+        try:
+            os.link(s_, d_)
+        except OSError:  # cross-device: degrade to a real copy
+            shutil.copy2(s_, d_)
+
+
+def _unlink_data_file(path: str) -> None:
+    """Remove a data file and its cstore ``.footer`` sidecar; a file
+    already gone is fine (the GC is idempotent)."""
+    for p in (path, path + ".footer"):
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(p)
+
+
+def _refuse_if_moved(fresh: TableMeta, base_epoch: int,
+                     staged: str) -> None:
+    """The rewrite commits' conflict rule, checked under the writer
+    lock: if another writer committed since ``base_epoch``, remove the
+    stage and raise :class:`CStoreConcurrentWriteError`."""
+    if fresh.write_epoch != base_epoch:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise CStoreConcurrentWriteError(
+            f'concurrent write to "{fresh.name}" (epoch {base_epoch} '
+            f"→ {fresh.write_epoch}) invalidated this rewrite")
+
+
+def _retry(what: str, attempt, *args):
+    """Run an optimistic write up to three times: a
+    :class:`CStoreConcurrentWriteError` means another writer committed
+    first, and the next attempt starts from a fresh read. Losing three
+    times in a row means sustained concurrent ingest — the caller
+    should schedule the write differently."""
+    for _ in range(3):
+        try:
+            return attempt(*args)
+        except CStoreConcurrentWriteError:
+            continue
+    raise CStoreConcurrentWriteError(
+        f"{what} lost the commit race 3 times to concurrent writers; "
+        "retry when ingest quiesces")

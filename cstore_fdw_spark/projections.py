@@ -40,13 +40,12 @@ dimension — exactly C-Store's bargain.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
-from typing import Any, Iterator
+from typing import Any
 
-from cstore_fdw_spark.catalog import (
-    CStoreCatalog, CStoreError, _file_epoch)
+from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError
+from cstore_fdw_spark.fsutil import _file_epoch, flocked, write_json_atomic
 
 SIDECAR = "_cstore_projection.json"
 LOCK = "_cstore_projection.refresh.lock"
@@ -67,23 +66,13 @@ def _load_spec(catalog: CStoreCatalog, name: str) -> dict[str, Any]:
 
 def _save_spec(catalog: CStoreCatalog, name: str,
                spec: dict[str, Any]) -> None:
-    path = _sidecar_path(catalog, name)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(spec, f)
-    os.replace(tmp, path)
+    write_json_atomic(_sidecar_path(catalog, name), spec)
 
 
-@contextlib.contextmanager
-def _refresh_lock(catalog: CStoreCatalog, name: str) -> Iterator[None]:
-    import fcntl
-    path = os.path.join(catalog.table_path(name), LOCK)
-    with open(path, "w") as f:
-        fcntl.flock(f, fcntl.LOCK_EX)
-        try:
-            yield
-        finally:
-            fcntl.flock(f, fcntl.LOCK_UN)
+def _refresh_lock(catalog: CStoreCatalog, name: str):
+    """Per-projection refresh mutex, separate from the writer lock that
+    ``insert()`` takes inside it (see ``aggview._refresh_lock``)."""
+    return flocked(os.path.join(catalog.table_path(name), LOCK))
 
 
 def create_projection(catalog: CStoreCatalog, base: str, name: str,
@@ -117,9 +106,7 @@ def _recover_pending(catalog: CStoreCatalog, name: str,
     pending = spec.get("pending")
     if not pending:
         return
-    pmeta = catalog._load_meta(name)
-    want = int(pending["view_epoch"])
-    if any(_file_epoch(p) == want for p in catalog._visible_files(pmeta)):
+    if catalog._epoch_committed(name, int(pending["view_epoch"])):
         spec.update(pending["finalize"])
     spec["pending"] = None
     _save_spec(catalog, name, spec)

@@ -29,6 +29,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual, WriterCommitMessage)
 from pyspark.sql.types import StructType
 
+from cstore_fdw_spark.fsutil import _file_epoch
 from cstore_fdw_spark.sources.cstore_format import (
     read_footer, read_stripe_batches, write_cstore_arrow)
 
@@ -93,16 +94,6 @@ class _StripePartition(InputPartition):
 
 
 EPOCH_COL = "__cstore_epoch"
-
-
-def _file_epoch_stamp(path: str) -> int:
-    """Epoch from the catalog's ``e{epoch:012d}-`` filename stamp
-    (0 for unstamped files) — mirrors catalog._file_epoch."""
-    base = os.path.basename(path)
-    if base.startswith("e") and len(base) > 13 and base[13] == "-" \
-            and base[1:13].isdigit():
-        return int(base[1:13])
-    return 0
 
 
 class CStoreReader(DataSourceReader):
@@ -215,7 +206,7 @@ class CStoreReader(DataSourceReader):
 
         names = [f.name for f in self.schema_.fields]
         data_names = names[:-1] if self.with_epoch else names
-        epoch = _file_epoch_stamp(partition.file)
+        epoch = _file_epoch(partition.file)
         with open(partition.file, "rb") as fh:
             for batch in read_stripe_batches(
                     fh, partition.stripe, self.type_names, data_names,

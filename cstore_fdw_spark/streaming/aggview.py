@@ -50,7 +50,6 @@ continuously instead of paid nightly.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -58,28 +57,16 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cstore_fdw_spark.aggview import (
     _aggregate, _load_spec, _merge_exprs, _refresh_lock)
-from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError, _file_epoch
+from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError
+# a module global of its own, so a test can fail the ledger write
+from cstore_fdw_spark.fsutil import write_json_atomic as _save_ledger
+from cstore_fdw_spark.streaming.ingest import _load_ledger
 
 STREAM_LEDGER = "_cstore_aggview_stream.json"
 
 
 def _ledger_path(catalog: CStoreCatalog, view: str) -> str:
     return os.path.join(catalog.table_path(view), STREAM_LEDGER)
-
-
-def _load_ledger(path: str) -> dict:
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {}
-
-
-def _save_ledger(path: str, ledger: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ledger, f)
-    os.replace(tmp, path)
 
 
 def source_stream(catalog: CStoreCatalog, view: str,
@@ -160,10 +147,8 @@ def view_maintainer(catalog: CStoreCatalog, view: str, checkpoint: str,
             if pending:
                 # same commit-marker evidence as aggview._recover_pending:
                 # the stamped file proves the state insert became visible
-                vmeta = catalog._load_meta(view)
-                want = int(pending["view_epoch"])
-                if any(_file_epoch(p) == want
-                       for p in catalog._visible_files(vmeta)):
+                if catalog._epoch_committed(view,
+                                            int(pending["view_epoch"])):
                     entry["last_batch"] = int(pending["batch_id"])
                 entry["pending"] = None
                 ledger[ledger_key] = entry

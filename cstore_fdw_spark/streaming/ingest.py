@@ -18,7 +18,6 @@ each other's batch 0, 1, ….
 
 from __future__ import annotations
 
-import fcntl
 import json
 import os
 
@@ -26,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from cstore_fdw_spark.catalog import CStoreCatalog
+from cstore_fdw_spark.fsutil import flocked, write_json_atomic
 
 _LEDGER_FILE = "_cstore_stream_batches.json"
 
@@ -34,7 +34,9 @@ def _ledger_path(catalog: CStoreCatalog, table: str) -> str:
     return os.path.join(catalog.table_path(table), _LEDGER_FILE)
 
 
-def _load_ledger(path: str) -> dict[str, int]:
+def _load_ledger(path: str) -> dict:
+    """A streaming sink's JSON ledger; missing or torn reads as empty.
+    Every streaming sink (ingest, aggview, projection) keeps one."""
     try:
         with open(path) as f:
             return json.load(f)
@@ -54,21 +56,13 @@ def batch_writer(catalog: CStoreCatalog, table: str, checkpoint: str):
         # two concurrent streams into the same table each hold their own
         # ledger key, and an unlocked load→insert→replace could drop the
         # other stream's entry, re-enabling duplicate appends on replay.
-        lock_path = path + ".lock"
-        with open(lock_path, "w") as lock_f:
-            fcntl.flock(lock_f, fcntl.LOCK_EX)
-            try:
-                ledger = _load_ledger(path)
-                if ledger.get(ledger_key, -1) >= batch_id:
-                    return  # replay of an already-appended batch
-                catalog.insert(table, batch_df)
-                ledger[ledger_key] = batch_id
-                tmp = path + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(ledger, f)
-                os.replace(tmp, path)
-            finally:
-                fcntl.flock(lock_f, fcntl.LOCK_UN)
+        with flocked(path + ".lock"):
+            ledger = _load_ledger(path)
+            if ledger.get(ledger_key, -1) >= batch_id:
+                return  # replay of an already-appended batch
+            catalog.insert(table, batch_df)
+            ledger[ledger_key] = batch_id
+            write_json_atomic(path, ledger)
 
     return write_batch
 

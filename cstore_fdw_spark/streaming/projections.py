@@ -22,36 +22,22 @@ the epoch metadata instead.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from cstore_fdw_spark.catalog import CStoreCatalog, _file_epoch
+from cstore_fdw_spark.catalog import CStoreCatalog
+from cstore_fdw_spark.fsutil import write_json_atomic
 from cstore_fdw_spark.projections import _load_spec, _refresh_lock
 from cstore_fdw_spark.streaming.aggview import _guard_source_stability
+from cstore_fdw_spark.streaming.ingest import _load_ledger
 
 STREAM_LEDGER = "_cstore_projection_stream.json"
 
 
 def _ledger_path(catalog: CStoreCatalog, name: str) -> str:
     return os.path.join(catalog.table_path(name), STREAM_LEDGER)
-
-
-def _load_ledger(path: str) -> dict:
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {}
-
-
-def _save_ledger(path: str, ledger: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ledger, f)
-    os.replace(tmp, path)
 
 
 def maintain_projection_stream(catalog: CStoreCatalog, name: str,
@@ -88,29 +74,27 @@ def maintain_projection_stream(catalog: CStoreCatalog, name: str,
             _guard_source_stability(catalog, entry, spec["base"],
                                     f'projection "{name}"')
             ledger[ledger_key] = entry
-            _save_ledger(path, ledger)
+            write_json_atomic(path, ledger)
             pending = entry.get("pending")
             if pending:
-                pmeta = catalog._load_meta(name)
-                want = int(pending["view_epoch"])
-                if any(_file_epoch(p) == want
-                       for p in catalog._visible_files(pmeta)):
+                if catalog._epoch_committed(name,
+                                            int(pending["view_epoch"])):
                     entry["last_batch"] = int(pending["batch_id"])
                 entry["pending"] = None
                 ledger[ledger_key] = entry
-                _save_ledger(path, ledger)
+                write_json_atomic(path, ledger)
             if batch_id <= entry["last_batch"]:
                 return  # replay of an already-appended batch
             pmeta = catalog._load_meta(name)
             entry["pending"] = {"batch_id": batch_id,
                                 "view_epoch": pmeta.write_epoch + 1}
             ledger[ledger_key] = entry
-            _save_ledger(path, ledger)
+            write_json_atomic(path, ledger)
             catalog.insert(name, batch_df.repartitionByRange(*sort_by))
             entry["last_batch"] = batch_id
             entry["pending"] = None
             ledger[ledger_key] = entry
-            _save_ledger(path, ledger)
+            write_json_atomic(path, ledger)
 
     writer = (stream.writeStream
               .foreachBatch(apply_batch)

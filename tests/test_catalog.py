@@ -158,6 +158,11 @@ def test_alter_column_type_guard(spark, catalog):
         catalog.alter_column_type("t", "s", "int")  # not implicit — reject
     rows = catalog.read("t").collect()
     assert rows[0].a == 1
+    # the v1.7 format refuses type changes, and says which DDL it refused
+    catalog.create_table("tc", "a int", storage_format="cstore")
+    with pytest.raises(CStoreError, match="ALTER COLUMN TYPE is not "
+                                          "supported on storage_format"):
+        catalog.alter_column_type("tc", "a", "bigint")
 
 
 def test_analyze_stats(spark, catalog):
@@ -200,6 +205,19 @@ def test_sorted_table_option(spark, catalog):
     from cstore_fdw_spark.plans import scan_metrics
     df = catalog.read("st").filter("a < 10")
     assert df.count() == 10
+    # MERGE's full rewrite and RENAME COLUMN stage like every write, so
+    # each rewritten file stays sorted on the (renamed) sort column
+    import pyarrow.parquet as pq
+    src = (spark.range(-50, 1050, 7).selectExpr("cast(id as int) a")
+           .orderBy(F.rand(seed=2)))
+    catalog.merge_into("st", src, on="a", when_matched=None)
+    catalog.rename_column("st", "a", "b")
+    assert catalog.read("st").count() == 1000 + 16
+    meta = catalog._load_meta("st")
+    assert meta.options["sort_by"] == "b"
+    for path in catalog._visible_files(meta):
+        vals = pq.read_table(path).column("b").to_pylist()
+        assert vals == sorted(vals), path
 
 
 def test_orc_storage_format(spark, catalog):
@@ -1054,6 +1072,60 @@ def test_rename_column_conflict_leaves_schema_untouched(
     catalog.rename_column("race_ren", "v", "val")
     assert {r.val for r in catalog.read("race_ren").collect()} \
         == set(range(5)) | {10, 11}
+
+
+def test_compact_keeps_rows_when_another_rewrite_staged_meanwhile(
+        spark, catalog, monkeypatch):
+    # two full rewrites of one table in flight: a compact reaches its
+    # commit while a DELETE rewrite has staged but not committed. Each
+    # rewrite stages into its own directory, so the compact swaps in
+    # its own output (all rows) — never the DELETE's uncommitted rows
+    from cstore_fdw_spark.catalog import CStoreCatalog
+
+    class Paused(Exception):
+        """The DELETE stops right before its commit."""
+
+    catalog.create_table("race_stage", "a int")
+    catalog.insert("race_stage",
+                   spark.range(30).selectExpr("cast(id as int) a")
+                   .coalesce(1))
+    orig = CStoreCatalog._commit_swap
+    state = {"calls": 0}
+
+    def racy(self, name, base_epoch, tmp_path, mutate=None):
+        state["calls"] += 1
+        if state["calls"] == 1:  # the compact's commit
+            # a second full rewrite (one file, all touched) stages now
+            with pytest.raises(Paused):
+                self.delete_where(name, "a >= 5")
+        elif state["calls"] == 2:  # the DELETE's commit: never happens
+            raise Paused()
+        return orig(self, name, base_epoch, tmp_path, mutate=mutate)
+
+    monkeypatch.setattr(CStoreCatalog, "_commit_swap", racy)
+    catalog.compact("race_stage")
+    assert state["calls"] == 2
+    assert sorted(r.a for r in catalog.read("race_stage").collect()) \
+        == list(range(30))
+    # the paused DELETE's stage was removed by its own writer
+    data = catalog._data_path(catalog._load_meta("race_stage"))
+    assert [d for d in os.listdir(os.path.dirname(data))
+            if d.startswith("data.")] == []
+
+
+def test_vacuum_and_clone_link_cstore_footer_sidecars(spark, catalog):
+    # a v1.7 data file is unreadable without its .footer sidecar: the
+    # files vacuum keeps and the files a clone shares are hard-linked
+    # together with their footers
+    catalog.create_table("cf", "a int", storage_format="cstore")
+    for i in range(3):
+        catalog.insert("cf", spark.range(i * 10, i * 10 + 10)
+                       .selectExpr("cast(id as int) a"))
+    assert catalog.vacuum("cf", keep_epochs=1) >= 1
+    assert catalog.read("cf").count() == 30
+    catalog.clone_table("cf", "cf2")
+    assert sorted(r.a for r in catalog.read("cf2").collect()) \
+        == list(range(30))
 
 
 def _file_inventory(path):

@@ -543,6 +543,51 @@ def test_streams_drain_and_minhash_bands_build_one_way():
         ("operators/dedup.py", "minhash_band_kernel")]
 
 
+def test_catalog_writes_stage_and_lock_one_way():
+    """One path each for the catalog write protocol: only
+    ``CStoreCatalog._stage`` builds a table writer (stripe sizing and
+    the format-dispatched save), no fixed ``.compact.tmp`` stage that
+    two rewrites could share remains, one function takes every flock,
+    and the epoch-stamp parser is defined once."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark
+
+    def max_records_option(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "option" and node.args
+                and getattr(node.args[0], "value", None)
+                == "maxRecordsPerFile")
+
+    def call_to(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == name)
+        return pred
+
+    def flock_call(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "flock")
+
+    assert _package_functions_using(max_records_option) == [
+        ("catalog.py", "_stage")]
+    assert _package_functions_using(call_to("_save_df")) == [
+        ("catalog.py", "_stage")]
+    assert _package_functions_using(
+        lambda n: isinstance(n, ast.Constant)
+        and ".compact.tmp" in str(n.value)) == []
+    assert set(_package_functions_using(flock_call)) == {
+        ("fsutil.py", "flocked")}
+    pkg = pathlib.Path(cstore_fdw_spark.__file__).parent
+    defs = [str(p.relative_to(pkg)) for p in sorted(pkg.rglob("*.py"))
+            for n in ast.walk(ast.parse(p.read_text()))
+            if isinstance(n, ast.FunctionDef) and n.name == "_file_epoch"]
+    assert defs == ["fsutil.py"]
+
+
 def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
     """The dedup_minhash_lsh physical plan must not evaluate the shingle
     build inside a scan-level Filter: InferFiltersFromGenerate used to

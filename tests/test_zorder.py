@@ -315,7 +315,7 @@ def test_zorder_quantile_scale_handles_skew(spark, tmp_path):
         assert tuple(got) == tuple(base)
 
 
-def test_zorder_quantile_through_catalog(spark, catalog):
+def test_zorder_quantile_through_catalog(spark, catalog, monkeypatch):
     """zorder_scale persists in the table options and re-applies on
     later rewrites, like the column list itself."""
     catalog.create_table("zq", "a long, b long", stripe_row_count=1000)
@@ -328,5 +328,20 @@ def test_zorder_quantile_through_catalog(spark, catalog):
     assert catalog.read("zq").count() == 30_000
     catalog.compact("zq")  # re-clusters with the persisted scale
     assert catalog.read("zq").count() == 30_000
+    # vacuum re-clusters its consolidated window the same way
+    from cstore_fdw_spark.sources import zorder
+    scales = []
+    real = zorder.zorder_by
+
+    def spy(*args, **kwargs):
+        scales.append(kwargs.get("scale"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(zorder, "zorder_by", spy)
+    catalog.insert("zq", spark.range(100).select(
+        F.col("id").alias("a"), F.col("id").alias("b")))
+    catalog.vacuum("zq")
+    assert scales == ["quantile"]
+    assert catalog.read("zq").count() == 30_100
     with pytest.raises(CStoreError, match="zorder_scale"):
         catalog.compact("zq", zorder_by=["a"], zorder_scale="nope")
