@@ -2120,8 +2120,8 @@ class CStoreCatalog:
                        else (_stats_decode(pair[0]), _stats_decode(pair[1])))
             if rng is None:
                 return None
-            lo = rng[0] if lo is None or rng[0] < lo else lo
-            hi = rng[1] if hi is None or rng[1] > hi else hi
+            lo = rng[0] if lo is None else min(lo, rng[0], key=_nan_last)
+            hi = rng[1] if hi is None else max(hi, rng[1], key=_nan_last)
         return None if lo is None else (lo, hi)
 
     def analyze(self, name: str) -> dict[str, Any]:
@@ -2351,6 +2351,12 @@ def _parquet_minmax(path: str, column: str):
     if not mins:
         return None
     return min(mins), max(maxs)
+
+
+def _nan_last(v):
+    """Sort key putting NaN above every number — Spark's min/max order,
+    and the cstore writer's skip-node bounds order."""
+    return (v != v, v)
 
 
 def _stats_encode(v):

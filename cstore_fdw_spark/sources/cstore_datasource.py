@@ -31,7 +31,7 @@ from pyspark.sql.types import StructType
 
 from cstore_fdw_spark.fsutil import _file_epoch
 from cstore_fdw_spark.sources.cstore_format import (
-    read_footer, read_stripe_batches, write_cstore_arrow)
+    read_footer, read_stripe_batches)
 
 _SPARK_TO_CSTORE = {
     "boolean": "boolean",
@@ -171,6 +171,11 @@ class CStoreReader(DataSourceReader):
 
         def pred(col, lo, hi):
             for op, v in ranges.get(col, ()):  # noqa: B023 — bound once
+                if lo != lo or hi != hi or v != v:
+                    # NaN sorts above every number in Spark (and in the
+                    # writer's bounds), but compares False both ways in
+                    # Python — never refute on it
+                    continue
                 try:
                     if op == "EqualTo" and not (lo <= v <= hi):
                         return False

@@ -940,15 +940,23 @@ def _minmax_key(kind):
     min/max nodes (optional in the proto — nothing prunes on them).
     text/bytea compare bytewise (memcmp in PG; byte order here, never
     collation — the da_DK hazard); date/ts/tstz key on STORAGE so the
-    ±infinity sentinels order against finite values; numerics and
-    by-value scalars order by python value directly. Compound or
-    non-ordered kinds (arrays, composites, ranges, interval, uuid,
-    inet, varbit, json, enum) emit no nodes."""
-    if kind in ("date", "ts", "tstz"):
+    ±infinity sentinels order against finite values; float/double put
+    NaN above every number (PostgreSQL's float btree order, and
+    Spark's); numerics and the other by-value scalars order by python
+    value directly. Compound or non-ordered kinds (arrays, composites,
+    ranges, interval, uuid, inet, varbit, json, enum) emit no nodes.
+
+    Text bounds are therefore written under a C-collation assumption,
+    where the reference uses the column's collation
+    (cstore_writer.c:845-849; input/block_filtering.source:62-71 pins
+    why that matters). This engine's reader never prunes on text
+    bounds; a file handed back to PostgreSQL must be attached to a
+    column with COLLATE "C" (README, interop note)."""
+    if kind in ("date", "ts", "tstz", "text"):
         return lambda v: _to_storage(v, kind)
-    if kind == "text":
-        return lambda v: _to_storage(v, kind)
-    if kind in ("b", "h", "i", "q", "f", "d", "time", "money",
+    if kind in ("f", "d"):
+        return lambda v: (v != v, v)
+    if kind in ("b", "h", "i", "q", "time", "money",
                 "bytea", "num") or kind.startswith("num:"):
         return lambda v: v
     return None
@@ -1054,183 +1062,89 @@ def _stripe_bytes(cols, n_cols: int) -> tuple[bytes, tuple]:
     return bytes(data), (skip_len, data_len, len(sfooter))
 
 
-def _write_footer_file(path: str, stripe_meta, block_row_count: int):
-    """Write the <path>.footer pair half: TableFooter + PostScript +
-    1-byte postscript size (cstore_writer.c:379-414)."""
-    tf = b""
-    for off, sk, dl, fl in stripe_meta:
-        sm = (_field(1, 0, off) + _field(2, 0, sk) + _field(3, 0, dl)
-              + _field(4, 0, fl))
-        tf += _field(1, 2, sm)
-    tf += _field(2, 0, block_row_count)
-    ps = (_field(1, 0, len(tf)) + _field(2, 0, 1) + _field(3, 0, 7)
-          + _field(8000, 2, MAGIC.encode()))
-    assert len(ps) < 256
-    with open(path + ".footer", "wb") as fh:
-        fh.write(tf + ps + bytes([len(ps)]))
+def _encode_block(values: list, typ: tuple, compression: str) -> tuple:
+    """ONE block of python values (None = NULL) -> its block product
+    for :func:`_stripe_bytes`: (exists_buf, value_buf, comp_type,
+    rowcount, minmax_raw_or_None). The one per-datum encoder — it
+    serves every kind of :func:`write_cstore_file` and every kind the
+    Arrow writer's fixed-width fast path (:func:`_encode_fixed_block`)
+    does not cover. Bounds follow :func:`_minmax_key`."""
+    _byval, typlen, align, kind = typ
+    present = [v for v in values if v is not None]
+    vbuf = b"".join(serialize_datum(v, typlen, align, kind)
+                    for v in present)
+    key = _minmax_key(kind)
+    mm = None
+    if present and key is not None:
+        mm = (serialize_datum_raw(min(present, key=key), typlen, kind),
+              serialize_datum_raw(max(present, key=key), typlen, kind))
+    vbuf, comp = _compress_block(vbuf, compression)
+    return (_bitmap([v is not None for v in values]), vbuf, comp,
+            len(values), mm)
 
 
-def _assemble_file(path: str, stripes_blocks, n_cols: int,
-                   block_row_count: int) -> None:
-    """Write the data + footer pair from per-stripe, per-column block
-    products (stripes_blocks = [per-stripe cols, ...] — see
-    :func:`_stripe_bytes`)."""
-    stripe_meta = []
-    offset = 0
-    with open(path, "wb") as fh:
-        for cols in stripes_blocks:
-            data, (sk, dl, fl) = _stripe_bytes(cols, n_cols)
-            fh.write(data)
-            stripe_meta.append((offset, sk, dl, fl))
-            offset += len(data)
-    _write_footer_file(path, stripe_meta, block_row_count)
+def _encode_fixed_block(arr, typ: tuple, compression: str) -> tuple:
+    """The Arrow writer's fast path for the by-value Spark kinds
+    (``_NP_DTYPE``): the value buffer is ONE numpy astype/tobytes and
+    the exists bitmap one packbits. Bounds are the first minimal and
+    first maximal datum under :func:`_minmax_key`'s order (NaN above
+    every number), so the bytes equal :func:`_encode_block`'s."""
+    import numpy as np
+    import pyarrow as pa
 
-
-def write_cstore_file(path: str, rows: list[tuple], type_names: list[str],
-                      stripe_row_count: int = 150000,
-                      block_row_count: int = 10000,
-                      compression: str = "pglz") -> None:
-    """Write rows (tuples, None = NULL) as a cstore v1.7 data+footer
-    file pair readable by the reference."""
-    types = [cstore_type_props(t) for t in type_names]
-    stripes_blocks = []
-    for s0 in range(0, max(len(rows), 1) if rows else 0, stripe_row_count):
-        chunk = rows[s0:s0 + stripe_row_count]
-        cols = []
-        for c, (byval, typlen, align, kind) in enumerate(types):
-            blocks = []
-            for b0 in range(0, len(chunk), block_row_count):
-                block = [r[c] for r in chunk[b0:b0 + block_row_count]]
-                exists = [v is not None for v in block]
-                vbuf = b"".join(
-                    serialize_datum(v, typlen, align, kind)
-                    for v in block if v is not None)
-                vbuf, comp = _compress_block(vbuf, compression)
-                present = [v for v in block if v is not None]
-                key = _minmax_key(kind)
-                if present and key is not None:
-                    mm = (serialize_datum_raw(min(present, key=key),
-                                              typlen, kind),
-                          serialize_datum_raw(max(present, key=key),
-                                              typlen, kind))
-                else:
-                    mm = None
-                blocks.append((_bitmap(exists), vbuf, comp, len(block),
-                               mm))
-            cols.append(blocks)
-        stripes_blocks.append(cols)
-    _assemble_file(path, stripes_blocks, len(types), block_row_count)
+    _byval, typlen, _align, kind = typ
+    valid = ~np.asarray(arr.is_null())
+    pres = arr.drop_null()
+    if kind == "date":
+        st = (pres.cast(pa.int32()).to_numpy(zero_copy_only=False)
+              .astype("<i4") - _PG_DATE_EPOCH_DAYS)
+    elif kind == "ts":
+        st = (pres.cast(pa.int64()).to_numpy(zero_copy_only=False)
+              .astype("<i8") - _PG_TS_EPOCH_MICROS)
+    elif kind == "b":
+        st = pres.cast(pa.uint8()).to_numpy(zero_copy_only=False)
+    else:
+        st = pres.to_numpy(zero_copy_only=False).astype(_NP_DTYPE[kind])
+    mm = None
+    if len(st):
+        fin, nan = st, None
+        if kind in ("f", "d"):
+            isnan = np.isnan(st)
+            if isnan.any():
+                nan, fin = st[isnan][0], st[~isnan]
+        lo = fin[fin.argmin()] if len(fin) else nan
+        hi = fin[fin.argmax()] if nan is None else nan
+        mm = (pack_storage_raw(lo.item(), typlen, kind),
+              pack_storage_raw(hi.item(), typlen, kind))
+    vbuf, comp = _compress_block(st.tobytes(), compression)
+    return (np.packbits(valid, bitorder="little").tobytes(), vbuf, comp,
+            len(arr), mm)
 
 
 def _arrow_stripe_blocks(stripe, types, block_row_count: int,
                          compression: str):
     """ONE stripe of a pyarrow Table -> per-column block products for
-    :func:`_stripe_bytes`: fixed-width columns serialize as ONE numpy
-    astype/tobytes per block and exists bitmaps as one packbits (the
-    write-side twin of :func:`read_stripe_batches`; per-datum Python
-    only for varlena text)."""
-    import numpy as np
-    import pyarrow as pa
-
+    :func:`_stripe_bytes`: by-value Spark kinds through the numpy
+    :func:`_encode_fixed_block`, every other Spark kind (text, bytea,
+    numeric, arrays) through the per-datum :func:`_encode_block`."""
     cols = []
-    for c, (byval, typlen, align, kind) in enumerate(types):
+    for c, typ in enumerate(types):
+        kind = typ[3]
+        try:
+            _pa_type(kind)
+        except KeyError:
+            # time/tstz/money/interval/uuid/inet/...: storable by
+            # write_cstore_file, but no Spark type carries them here
+            raise ValueError(f"arrow writer: kind {kind!r} is not "
+                             "Spark-expressible") from None
         col = stripe.column(c).combine_chunks()
         blocks = []
         for b0 in range(0, stripe.num_rows, block_row_count):
             arr = col.slice(b0, block_row_count)
-            n = len(arr)
-            valid = ~np.asarray(arr.is_null())
-            ebuf = np.packbits(valid, bitorder="little").tobytes()
-            pres = arr.drop_null()
-            mm = None
-            if typlen < 0:
-                # varlena path (per-datum by design). text min/max
-                # compare in encoded-byte order; numerics in Decimal
-                # value order (their encoding doesn't sort bytewise);
-                # arrays carry NO min/max nodes.
-                # WRITE POLICY, text min/max: emitted in UTF-8 BYTE
-                # order, i.e. under a recorded C-collation assumption.
-                # The reference computes them under the column's
-                # collation (cstore_writer.c:845-849; its da_DK
-                # regression input/block_filtering.source:62-71 pins
-                # why that matters). Our own reader never prunes on
-                # text bounds, so this engine is unaffected; a file
-                # handed back to PostgreSQL must be attached to a
-                # column with COLLATE "C" (or the bounds ignored), or
-                # an 'aa'<x<'az' style predicate under da_DK could
-                # over-prune. README "interop" states the same.
-                if kind == "text":
-                    vals = [v.encode("utf-8")
-                            for v in pres.to_pylist()]
-                    if vals:
-                        mm = (pack_storage_raw(min(vals), typlen, kind),
-                              pack_storage_raw(max(vals), typlen, kind))
-                elif kind.startswith("arr:"):
-                    elemkind = kind[4:]
-                    etl, eal = _elem_props(elemkind)
-                    vals = [pg_array_encode(v, elemkind, etl, eal)
-                            for v in pres.to_pylist()]
-                elif kind == "bytea":
-                    # bytea compares bytewise (memcmp) — min/max valid
-                    vals = [bytes(v) for v in pres.to_pylist()]
-                    if vals:
-                        mm = (pack_storage_raw(min(vals), typlen, kind),
-                              pack_storage_raw(max(vals), typlen, kind))
-                elif not kind.startswith("num:"):
-                    raise ValueError(
-                        f"arrow writer: varlena kind {kind!r} is not "
-                        "Spark-expressible")
-                else:
-                    scale = int(kind.rsplit(":", 1)[1])
-                    decs = pres.to_pylist()
-                    vals = [pg_numeric_encode(v, scale) for v in decs]
-                    if decs:
-                        mm = (pack_storage_raw(
-                                  pg_numeric_encode(min(decs), scale),
-                                  typlen, kind),
-                              pack_storage_raw(
-                                  pg_numeric_encode(max(decs), scale),
-                                  typlen, kind))
-                vbuf = bytearray()
-                for payload in vals:
-                    raw = (struct.pack("<I", (len(payload) + 4) << 2)
-                           + payload)
-                    pad = _align_up(len(raw), align) - len(raw)
-                    vbuf += raw + b"\x00" * pad
-                vbuf = bytes(vbuf)
-            else:
-                if kind == "date":
-                    st = (pres.cast(pa.int32()).to_numpy(
-                        zero_copy_only=False).astype("<i4")
-                        - _PG_DATE_EPOCH_DAYS)
-                elif kind == "ts":
-                    st = (pres.cast(pa.int64()).to_numpy(
-                        zero_copy_only=False).astype("<i8")
-                        - _PG_TS_EPOCH_MICROS)
-                elif kind == "b":
-                    st = pres.cast(pa.uint8()).to_numpy(
-                        zero_copy_only=False).astype("u1")
-                elif kind not in _NP_DTYPE:
-                    # time/tstz/money/interval/uuid etc: fixed width on
-                    # disk but no Spark type — same loud error as the
-                    # varlena branch, not a bare KeyError
-                    raise ValueError(
-                        f"arrow writer: fixed-width kind {kind!r} is "
-                        "not Spark-expressible")
-                else:
-                    st = pres.to_numpy(zero_copy_only=False).astype(
-                        _NP_DTYPE[kind])
-                vbuf = st.tobytes()
-                if len(st):
-                    lo, hi = st.min(), st.max()
-                    if kind in ("f", "d"):
-                        lo, hi = float(lo), float(hi)
-                    else:
-                        lo, hi = int(lo), int(hi)
-                    mm = (pack_storage_raw(lo, typlen, kind),
-                          pack_storage_raw(hi, typlen, kind))
-            vbuf, comp = _compress_block(vbuf, compression)
-            blocks.append((ebuf, vbuf, comp, n, mm))
+            blocks.append(
+                _encode_fixed_block(arr, typ, compression)
+                if kind in _NP_DTYPE
+                else _encode_block(arr.to_pylist(), typ, compression))
         cols.append(blocks)
     return cols
 
@@ -1238,11 +1152,12 @@ def _arrow_stripe_blocks(stripe, types, block_row_count: int,
 class CStoreFileWriter:
     """Incremental stripe-at-a-time writer for one data+footer pair —
     the reference's own flush discipline (cstore_writer.c:493 flushes
-    every stripe_row_count rows; the whole table is NEVER buffered).
-    ``append_stripe`` serializes one pyarrow Table (≤ stripe_row_count
-    rows, split internally if larger) straight to the open data file;
-    ``close`` writes the footer pair half. Output is byte-identical to
-    :func:`write_cstore_arrow` at the same stripe boundaries."""
+    every stripe_row_count rows; the whole table is NEVER buffered) and
+    the only file assembler: both :func:`write_cstore_file` and
+    :func:`write_cstore_arrow` write through it. ``append_stripe``
+    serializes one pyarrow Table (≤ stripe_row_count rows, split
+    internally if larger) straight to the open data file; ``close``
+    writes the footer pair half (cstore_writer.c:379-414)."""
 
     def __init__(self, path: str, type_names: list[str],
                  stripe_row_count: int = 150000,
@@ -1259,19 +1174,54 @@ class CStoreFileWriter:
 
     def append_stripe(self, tbl) -> None:
         for s0 in range(0, tbl.num_rows, self.stripe_row_count):
-            stripe = tbl.slice(s0, self.stripe_row_count)
-            cols = _arrow_stripe_blocks(stripe, self.types,
-                                        self.block_row_count,
-                                        self.compression)
-            data, (sk, dl, fl) = _stripe_bytes(cols, len(self.types))
-            self._fh.write(data)
-            self._stripe_meta.append((self._offset, sk, dl, fl))
-            self._offset += len(data)
+            self._write_stripe(_arrow_stripe_blocks(
+                tbl.slice(s0, self.stripe_row_count), self.types,
+                self.block_row_count, self.compression))
+
+    def _write_stripe(self, cols) -> None:
+        data, (sk, dl, fl) = _stripe_bytes(cols, len(self.types))
+        self._fh.write(data)
+        self._stripe_meta.append((self._offset, sk, dl, fl))
+        self._offset += len(data)
 
     def close(self) -> None:
+        """Close the data file and write TableFooter + PostScript +
+        1-byte postscript size to ``<path>.footer``."""
         self._fh.close()
-        _write_footer_file(self.path, self._stripe_meta,
-                           self.block_row_count)
+        tf = b""
+        for off, sk, dl, fl in self._stripe_meta:
+            sm = (_field(1, 0, off) + _field(2, 0, sk)
+                  + _field(3, 0, dl) + _field(4, 0, fl))
+            tf += _field(1, 2, sm)
+        tf += _field(2, 0, self.block_row_count)
+        ps = (_field(1, 0, len(tf)) + _field(2, 0, 1) + _field(3, 0, 7)
+              + _field(8000, 2, MAGIC.encode()))
+        assert len(ps) < 256
+        with open(self.path + ".footer", "wb") as fh:
+            fh.write(tf + ps + bytes([len(ps)]))
+
+
+def write_cstore_file(path: str, rows: list[tuple], type_names: list[str],
+                      stripe_row_count: int = 150000,
+                      block_row_count: int = 10000,
+                      compression: str = "pglz") -> None:
+    """Write rows (tuples, None = NULL) as a cstore v1.7 data+footer
+    file pair readable by the reference. Every datum goes through the
+    per-datum :func:`_encode_block`, so every storable kind is
+    accepted."""
+    w = CStoreFileWriter(path, type_names, stripe_row_count,
+                         block_row_count, compression)
+    try:
+        for s0 in range(0, len(rows), stripe_row_count):
+            chunk = rows[s0:s0 + stripe_row_count]
+            w._write_stripe([
+                [_encode_block([r[c] for r in
+                                chunk[b0:b0 + block_row_count]],
+                               typ, compression)
+                 for b0 in range(0, len(chunk), block_row_count)]
+                for c, typ in enumerate(w.types)])
+    finally:
+        w.close()
 
 
 def write_cstore_arrow(path: str, tbl, type_names: list[str],
@@ -1279,12 +1229,14 @@ def write_cstore_arrow(path: str, tbl, type_names: list[str],
                        block_row_count: int = 10000,
                        compression: str = "pglz") -> None:
     """Vectorized writer: a pyarrow Table goes to disk stripe by stripe
-    through :class:`CStoreFileWriter`. Produces the same format as
-    :func:`write_cstore_file`."""
+    through :class:`CStoreFileWriter`. For every Spark type the bytes
+    equal :func:`write_cstore_file`'s on the same rows."""
     w = CStoreFileWriter(path, type_names, stripe_row_count,
                          block_row_count, compression)
-    w.append_stripe(tbl)
-    w.close()
+    try:
+        w.append_stripe(tbl)
+    finally:
+        w.close()
 
 
 # ------------------------------------------------------------- file reader
@@ -1322,107 +1274,117 @@ def deserialize_datum_raw(buf: bytes, typlen: int, kind: str):
     return _from_storage(raw, kind)
 
 
+def _stripe_sections(fh, stripe) -> list[tuple]:
+    """Parse ONE stripe's footer -> per PHYSICAL column (skip_start,
+    skip_size, exists_start, values_start); the only stripe-footer
+    parse. Section offsets come from the footer sizes alone, so a
+    column's own sections are never read to find another's. The
+    FILE's column count is its footer's — files written before an ADD
+    COLUMN have fewer columns than the read schema and their missing
+    tail reads as NULL, the reference's read repair
+    (cstore_reader.c:698-728); extra physical columns (logical subset
+    reads) are simply never touched."""
+    offset, skip_len, data_len, footer_len = stripe
+    fh.seek(offset + skip_len + data_len)
+    sfooter = _parse(fh.read(footer_len))
+    exists_sizes = sfooter.get(2, [])
+    value_sizes = sfooter.get(3, [])
+    out = []
+    skip_at, data_at = offset, offset + skip_len
+    for c, size in enumerate(sfooter.get(1, [])):
+        out.append((skip_at, size, data_at, data_at + exists_sizes[c]))
+        skip_at += size
+        data_at += exists_sizes[c] + value_sizes[c]
+    return out
+
+
+def _skip_nodes(fh, section) -> list[dict]:
+    """One column's skip list: a parsed node per block (1 rowCount,
+    2/3 min/max, 4/5 value offset/length, 6 compression, 7/8 exists
+    offset/length)."""
+    fh.seek(section[0])
+    return [_parse(b) for b in _parse(fh.read(section[1])).get(1, [])]
+
+
+def _node_bounds(node: dict, typlen: int, kind: str):
+    """(lo, hi) python values of a skip node; None when it carries no
+    min/max (all-NULL blocks, kinds without an order)."""
+    if 2 not in node or 3 not in node:
+        return None
+    return (deserialize_datum_raw(node[2][0], typlen, kind),
+            deserialize_datum_raw(node[3][0], typlen, kind))
+
+
+def _stripe_blocks(fh, stripe, types, positions, block_pred=None):
+    """The block walk under both readers. ``positions[i]`` = the
+    physical column backing field i, ``types[i]`` its type props.
+    Parses the stripe footer once and the skip lists of the needed
+    physical columns only (column 0's when no field is physical — the
+    per-block rowCounts must come from somewhere). A block is skipped
+    when ``block_pred(i, lo, hi)`` is False for any field with bounds.
+    Yields ``(rowcount, [(exists_buf, value_buf) | None per field])``
+    with pglz already undone; None marks a field past the file's
+    width (read as NULL)."""
+    sections = _stripe_sections(fh, stripe)
+    n_file = len(sections)
+    need = sorted({pc for pc in positions if pc < n_file}) or \
+        [0][:n_file]
+    nodes = {pc: _skip_nodes(fh, sections[pc]) for pc in need}
+
+    def refuted(bi):
+        for i, pc in enumerate(positions):
+            if pc < n_file:
+                b = _node_bounds(nodes[pc][bi], types[i][1], types[i][3])
+                if b is not None and not block_pred(i, *b):
+                    return True
+        return False
+
+    for bi, rc_node in enumerate(nodes[need[0]] if need else ()):
+        if block_pred is not None and refuted(bi):
+            continue
+        bufs = []
+        for pc in positions:
+            if pc >= n_file:
+                bufs.append(None)
+                continue
+            nd = nodes[pc][bi]
+            _skip_at, _size, exists_at, values_at = sections[pc]
+            fh.seek(exists_at + _iv(nd, 7, 0))
+            ebuf = fh.read(_iv(nd, 8, 0))
+            fh.seek(values_at + _iv(nd, 4, 0))
+            vbuf = fh.read(_iv(nd, 5, 0))
+            if _iv(nd, 6, 0) == 1:
+                # [vl_len|compressed-flag][rawsize] + the pglz stream;
+                # called through the module global so a wrapper
+                # installed at run time sees every block
+                hdr, rawsize = struct.unpack_from("<Ii", vbuf, 0)
+                vbuf = pglz_decompress(vbuf[8:hdr >> 2], rawsize)
+            bufs.append((ebuf, vbuf))
+        yield _iv(rc_node, 1, 0), bufs
+
+
 def read_stripe(fh, stripe, type_names: list[str],
                 wanted: list[int] | None = None,
                 block_pred=None):
-    """Yield row tuples from one stripe. ``wanted`` = column indexes to
-    decode (projection pushdown: unwanted columns' buffers are never
-    read). ``block_pred(col_idx, lo, hi) -> bool`` returns False to
-    SKIP a block — the reference's skip-list pruning; skipped blocks
-    yield no rows (callers must only prune on predicates that refute
-    the whole block)."""
-    offset, skip_len, data_len, footer_len = stripe
+    """Yield row tuples from one stripe — the per-datum decoder over
+    :func:`_stripe_blocks`, and the read path for every storable kind.
+    ``wanted`` = column indexes to decode (projection pushdown:
+    unwanted columns' skip lists and buffers are never read).
+    ``block_pred(col_idx, lo, hi) -> bool`` returns False to SKIP a
+    block — the reference's skip-list pruning; skipped blocks yield no
+    rows (callers must only prune on predicates that refute the whole
+    block)."""
     types = [cstore_type_props(t) for t in type_names]
-    fh.seek(offset + skip_len + data_len)
-    sfooter = _parse(fh.read(footer_len))
-    skip_sizes = sfooter.get(1, [])
-    exists_sizes = sfooter.get(2, [])
-    value_sizes = sfooter.get(3, [])
-    # the FILE's column count comes from its own stripe footer (one
-    # entry per physical column) — files written before an ADD COLUMN
-    # have fewer columns than the read schema and their missing tail
-    # reads as NULL, exactly the reference's read repair
-    # (cstore_reader.c:698-728 creates empty skip nodes for missing
-    # columns); files with MORE columns than the schema (logical subset
-    # reads) simply never have their extra sections touched
-    n_file_cols = len(skip_sizes)
-    n_cols = min(len(types), n_file_cols)
-    skip_starts = []
-    run = offset
-    for c in range(n_file_cols):
-        skip_starts.append(run)
-        run += skip_sizes[c]
-    nodes_per_col = []
-    for c in range(n_cols):
-        fh.seek(skip_starts[c])
-        nodes = [_parse(b)
-                 for b in _parse(fh.read(skip_sizes[c])).get(1, [])]
-        nodes_per_col.append(nodes)
-    n_blocks = len(nodes_per_col[0]) if nodes_per_col else 0
-    # section start offsets per column (walk ALL physical columns)
-    data_start = offset + skip_len
-    col_starts = []
-    run = data_start
-    for c in range(n_file_cols):
-        col_starts.append(run)
-        run += exists_sizes[c] + value_sizes[c]
     if wanted is None:
         wanted = list(range(len(types)))
-    # decide skipped blocks (a block is read unless EVERY wanted
-    # predicate column refutes it — conservative AND of per-col prunes)
-    skip_block = [False] * n_blocks
-    if block_pred is not None:
-        for bi in range(n_blocks):
-            for c in wanted:
-                if c >= n_cols:
-                    continue  # column not in this file -> all NULL
-                nd = nodes_per_col[c][bi]
-                if 2 in nd and 3 in nd:
-                    byval, typlen, align, kind = types[c]
-                    lo = deserialize_datum_raw(nd[2][0], typlen, kind)
-                    hi = deserialize_datum_raw(nd[3][0], typlen, kind)
-                    if not block_pred(c, lo, hi):
-                        skip_block[bi] = True
-                        break
-    cols_data: dict[int, list] = {}
-    rowcounts = [(_iv(nodes_per_col[0][bi], 1, 0) if nodes_per_col else 0)
-                 for bi in range(n_blocks)]
-    for c in wanted:
-        if c >= n_cols:
-            # schema column the file predates: NULL-filled blocks
-            cols_data[c] = [None if skip_block[bi]
-                            else [None] * rowcounts[bi]
-                            for bi in range(n_blocks)]
-            continue
-        byval, typlen, align, kind = types[c]
-        nodes = nodes_per_col[c]
-        col_rows = []
-        for bi in range(n_blocks):
-            nd = nodes[bi]
-            rowcount = _iv(nd, 1, 0)
-            if skip_block[bi]:
-                col_rows.append(None)  # marker: whole block skipped
-                continue
-            e_off, e_len = _iv(nd, 7, 0), _iv(nd, 8, 0)
-            v_off, v_len = _iv(nd, 4, 0), _iv(nd, 5, 0)
-            comp = _iv(nd, 6, 0)
-            fh.seek(col_starts[c] + e_off)
-            exists = _unbitmap(fh.read(e_len), rowcount)
-            fh.seek(col_starts[c] + exists_sizes[c] + v_off)
-            vbuf = fh.read(v_len)
-            if comp == 1:
-                (hdr,) = struct.unpack_from("<I", vbuf, 0)
-                (rawsize,) = struct.unpack_from("<i", vbuf, 4)
-                vbuf = pglz_decompress(vbuf[8:hdr >> 2], rawsize)
-            col_rows.append(deserialize_datums(vbuf, exists, typlen,
-                                               align, kind))
-        cols_data[c] = col_rows
-    for bi in range(n_blocks):
-        if skip_block[bi]:
-            continue
-        blocks = [cols_data[c][bi] for c in wanted]
-        for row in zip(*blocks):
-            yield row
+    sel = [types[c] for c in wanted]
+    pred = None if block_pred is None else \
+        (lambda i, lo, hi: block_pred(wanted[i], lo, hi))
+    for rowcount, bufs in _stripe_blocks(fh, stripe, sel, wanted, pred):
+        yield from zip(*[
+            [None] * rowcount if b is None else deserialize_datums(
+                b[1], _unbitmap(b[0], rowcount), typlen, align, kind)
+            for b, (_bv, typlen, align, kind) in zip(bufs, sel)])
 
 
 def read_cstore_file(path: str, type_names: list[str],
@@ -1446,14 +1408,11 @@ def cstore_row_count(path: str) -> int:
     _brc, stripes = read_footer(path)
     total = 0
     with open(path, "rb") as fh:
-        for offset, skip_len, data_len, footer_len in stripes:
-            fh.seek(offset + skip_len + data_len)
-            sfooter = _parse(fh.read(footer_len))
-            first_skip = sfooter.get(1, [0])[0]
-            fh.seek(offset)
-            nodes = _parse(fh.read(first_skip)).get(1, [])
-            for nd_raw in nodes:
-                total += _iv(_parse(nd_raw), 1, 0)
+        for stripe in stripes:
+            sections = _stripe_sections(fh, stripe)
+            if sections:
+                total += sum(_iv(nd, 1, 0)
+                             for nd in _skip_nodes(fh, sections[0]))
     return total
 
 
@@ -1463,10 +1422,8 @@ def cstore_column_count(path: str) -> int:
     _brc, stripes = read_footer(path)
     if not stripes:
         return 0
-    offset, skip_len, data_len, footer_len = stripes[0]
     with open(path, "rb") as fh:
-        fh.seek(offset + skip_len + data_len)
-        return len(_parse(fh.read(footer_len)).get(1, []))
+        return len(_stripe_sections(fh, stripes[0]))
 
 
 # -------------------------------------------------- vectorized Arrow path
@@ -1558,10 +1515,11 @@ def _decode_block_arrow(vbuf: bytes, ebuf: bytes, rowcount: int,
 def read_stripe_batches(fh, stripe, type_names: list[str],
                         field_names: list[str], block_pred=None,
                         positions: list[int] | None = None):
-    """Arrow twin of :func:`read_stripe`: yields one RecordBatch per
-    block (block_row_count rows — a natural Arrow batch), decoding
-    fixed-width columns vectorized. Schema columns beyond the file's
-    own width null-pad, like the tuple path.
+    """Yield one RecordBatch per block (block_row_count rows — a natural
+    Arrow batch) from one stripe: the vectorized decoder
+    (:func:`_decode_block_arrow`) over :func:`_stripe_blocks`, for the
+    Spark-expressible kinds. Schema columns beyond the file's own width
+    null-pad.
 
     ``positions[i]`` = the PHYSICAL file column backing output field i
     — projection pushdown, the reference's signature A2 optimization
@@ -1569,85 +1527,22 @@ def read_stripe_batches(fh, stripe, type_names: list[str],
     masked columns, cstore_reader.c:501-526). Default is the identity
     (field i reads physical column i). Unwanted physical columns cost
     only their stripe-footer SIZE entries: their skip lists are never
-    parsed and their exists/value buffers never read — section offsets
-    come from the footer sizes alone. ``block_pred(field_idx, lo, hi)``
-    indexes OUTPUT fields (so pushed filters keep working under a
-    pruned projection)."""
+    parsed and their exists/value buffers never read.
+    ``block_pred(field_idx, lo, hi)`` indexes OUTPUT fields (so pushed
+    filters keep working under a pruned projection)."""
     import pyarrow as pa
 
-    offset, skip_len, data_len, footer_len = stripe
     types = [cstore_type_props(t) for t in type_names]
     if positions is None:
         positions = list(range(len(types)))
-    fh.seek(offset + skip_len + data_len)
-    sfooter = _parse(fh.read(footer_len))
-    skip_sizes = sfooter.get(1, [])
-    exists_sizes = sfooter.get(2, [])
-    value_sizes = sfooter.get(3, [])
-    n_file_cols = len(skip_sizes)
-    run = offset
-    skip_starts = []
-    for c in range(n_file_cols):
-        skip_starts.append(run)
-        run += skip_sizes[c]
-    data_start = offset + skip_len
-    col_starts = []
-    run = data_start
-    for c in range(n_file_cols):
-        col_starts.append(run)
-        run += exists_sizes[c] + value_sizes[c]
-    # skip lists of NEEDED physical columns only (plus column 0 when no
-    # wanted column is physical — per-block rowcounts must come from
-    # somewhere; every column's skip list carries identical rowCounts)
-    need = sorted({pc for pc in positions if pc < n_file_cols})
-    if not need and n_file_cols:
-        need = [0]
-    nodes_by_phys: dict[int, list] = {}
-    for pc in need:
-        fh.seek(skip_starts[pc])
-        nodes_by_phys[pc] = [
-            _parse(b)
-            for b in _parse(fh.read(skip_sizes[pc])).get(1, [])]
-    rc_nodes = nodes_by_phys[need[0]] if need else []
-    n_blocks = len(rc_nodes)
-    skip_block = [False] * n_blocks
-    if block_pred is not None:
-        for bi in range(n_blocks):
-            for si, pc in enumerate(positions):
-                if pc >= n_file_cols:
-                    continue
-                nd = nodes_by_phys[pc][bi]
-                if 2 in nd and 3 in nd:
-                    byval, typlen, align, kind = types[si]
-                    lo = deserialize_datum_raw(nd[2][0], typlen, kind)
-                    hi = deserialize_datum_raw(nd[3][0], typlen, kind)
-                    if not block_pred(si, lo, hi):
-                        skip_block[bi] = True
-                        break
-    for bi in range(n_blocks):
-        if skip_block[bi]:
-            continue
-        rowcount = _iv(rc_nodes[bi], 1, 0)
-        arrays = []
-        for si, pc in enumerate(positions):
-            byval, typlen, align, kind = types[si]
-            if pc >= n_file_cols:
-                arrays.append(pa.nulls(rowcount, type=_pa_type(kind)))
-                continue
-            nd = nodes_by_phys[pc][bi]
-            e_off, e_len = _iv(nd, 7, 0), _iv(nd, 8, 0)
-            v_off, v_len = _iv(nd, 4, 0), _iv(nd, 5, 0)
-            fh.seek(col_starts[pc] + e_off)
-            ebuf = fh.read(e_len)
-            fh.seek(col_starts[pc] + exists_sizes[pc] + v_off)
-            vbuf = fh.read(v_len)
-            if _iv(nd, 6, 0) == 1:
-                (hdr,) = struct.unpack_from("<I", vbuf, 0)
-                (rawsize,) = struct.unpack_from("<i", vbuf, 4)
-                vbuf = pglz_decompress(vbuf[8:hdr >> 2], rawsize)
-            arrays.append(_decode_block_arrow(vbuf, ebuf, rowcount,
-                                              typlen, align, kind))
-        yield pa.RecordBatch.from_arrays(arrays, names=field_names)
+    for rowcount, bufs in _stripe_blocks(fh, stripe, types, positions,
+                                         block_pred):
+        yield pa.RecordBatch.from_arrays([
+            pa.nulls(rowcount, type=_pa_type(kind)) if b is None
+            else _decode_block_arrow(b[1], b[0], rowcount, typlen, align,
+                                     kind)
+            for b, (_bv, typlen, align, kind) in zip(bufs, types)],
+            names=field_names)
 
 
 def cstore_file_minmax(path: str, type_names: list[str]):
@@ -1655,31 +1550,26 @@ def cstore_file_minmax(path: str, type_names: list[str]):
     from the skip-list nodes ONLY (no exists/value bytes read) — the
     reference's per-block zone maps lifted to a per-file zone map, the
     same structure the catalog's merge/delete planner prunes with.
-    A column whose every block lacks min/max (all-NULL blocks) yields
-    ``None``. Columns beyond the file's physical width are ``None``."""
+    Folds under the writer's bound order (:func:`_minmax_key`: NaN
+    above every number). A column whose every block lacks min/max
+    (all-NULL blocks) yields ``None``. Columns beyond the file's
+    physical width are ``None``."""
     types = [cstore_type_props(t) for t in type_names]
     _brc, stripes = read_footer(path)
     folds: list = [None] * len(types)
     with open(path, "rb") as fh:
-        for offset, skip_len, data_len, footer_len in stripes:
-            fh.seek(offset + skip_len + data_len)
-            sfooter = _parse(fh.read(footer_len))
-            skip_sizes = sfooter.get(1, [])
-            run = offset
-            for c, size in enumerate(skip_sizes):
-                if c < len(types):
-                    byval, typlen, align, kind = types[c]
-                    fh.seek(run)
-                    for nd_raw in _parse(fh.read(size)).get(1, []):
-                        nd = _parse(nd_raw)
-                        if 2 not in nd or 3 not in nd:
-                            continue
-                        lo = deserialize_datum_raw(nd[2][0], typlen, kind)
-                        hi = deserialize_datum_raw(nd[3][0], typlen, kind)
-                        if folds[c] is None:
-                            folds[c] = (lo, hi)
-                        else:
-                            folds[c] = (min(folds[c][0], lo),
-                                        max(folds[c][1], hi))
-                run += size
+        for stripe in stripes:
+            sections = _stripe_sections(fh, stripe)
+            for c, (_bv, typlen, _al, kind) in enumerate(types):
+                if c >= len(sections):
+                    break
+                key = _minmax_key(kind) or (lambda v: v)
+                for nd in _skip_nodes(fh, sections[c]):
+                    b = _node_bounds(nd, typlen, kind)
+                    if b is None:
+                        continue
+                    if folds[c] is not None:
+                        b = (min(folds[c][0], b[0], key=key),
+                             max(folds[c][1], b[1], key=key))
+                    folds[c] = b
     return folds

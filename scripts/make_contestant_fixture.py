@@ -33,6 +33,11 @@ sys.path.insert(0, REPO)
 from cstore_fdw_spark.sources.cstore_format import write_cstore_file  # noqa: E402
 
 CSV_PATH = "/root/reference/data/contestants.1.csv"
+if not os.path.exists(CSV_PATH):
+    # the same CSV decoded from the committed fixture
+    # (scripts/vendor_reference_data.py)
+    CSV_PATH = os.path.join(REPO, "tests", "fixtures", "reference_data",
+                            "contestants.1.csv")
 OUT = os.path.join(REPO, "tests", "fixtures", "contestant.cstore")
 TYPES = ["string", "date", "integer", "double", "string", "string"]
 #: second fixture: achievements as a REAL PG text[] array datum

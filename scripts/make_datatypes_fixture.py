@@ -29,6 +29,10 @@ from cstore_fdw_spark.sources.pg_text import (  # noqa: E402
     parse_pg_csv_line, parse_pg_value)
 
 REF_DATA = "/root/reference/data"
+#: the same CSVs decoded from the committed fixtures
+#: (scripts/vendor_reference_data.py), read when REF_DATA is absent
+VENDORED_DATA = os.path.join(REPO, "tests", "fixtures", "reference_data")
+DATA_DIR = REF_DATA if os.path.isdir(REF_DATA) else VENDORED_DATA
 OUT_DIR = os.path.join(REPO, "tests", "fixtures", "datatypes")
 
 #: corpus table -> (csv file, column type names) — the foreign-table
@@ -57,7 +61,7 @@ CORPUS_TABLES = {
 def load_corpus_rows(csv_name: str, type_names: list[str]) -> list[tuple]:
     kinds = [cstore_type_props(t)[3] for t in type_names]
     rows = []
-    with open(os.path.join(REF_DATA, csv_name)) as fh:
+    with open(os.path.join(DATA_DIR, csv_name)) as fh:
         for line in fh.read().splitlines():
             fields = parse_pg_csv_line(line)
             rows.append(tuple(parse_pg_value(f, k)

@@ -28,29 +28,16 @@ from cstore_fdw_spark.sources.cstore_format import (
     PgInet, PgInterval, PgRange, cstore_type_props, pg_composite_decode,
     pg_composite_encode, pg_range_decode, pg_range_encode,
     read_cstore_file, write_cstore_file)
-from cstore_fdw_spark.sources.pg_text import (
-    parse_pg_csv_line, parse_pg_value, render_pg_value)
-
-REF_DATA = "/root/reference/data"
+from cstore_fdw_spark.sources.pg_text import render_pg_value
+from scripts.make_datatypes_fixture import load_corpus_rows
 
 INF = float("inf")
-
-
-def _load_corpus(csv_name: str, type_names: list[str]) -> list[tuple]:
-    kinds = [cstore_type_props(t)[3] for t in type_names]
-    rows = []
-    with open(os.path.join(REF_DATA, csv_name)) as fh:
-        for line in fh.read().splitlines():
-            fields = parse_pg_csv_line(line)
-            rows.append(tuple(parse_pg_value(f, k)
-                              for f, k in zip(fields, kinds)))
-    return rows
 
 
 def _regress(tmp_path, name, csv_name, type_names, expected):
     """CSV -> codec round trip -> rendered cells == the reference's
     pinned psql output (output/data_types.source)."""
-    rows = _load_corpus(csv_name, type_names)
+    rows = load_corpus_rows(csv_name, type_names)
     path = str(tmp_path / f"{name}.cstore")
     write_cstore_file(path, rows, type_names, compression="pglz")
     back = list(read_cstore_file(path, type_names))

@@ -8,6 +8,7 @@ import datetime
 import os
 import random
 import struct
+from decimal import Decimal
 
 import pytest
 
@@ -710,3 +711,185 @@ def test_arrow_paths_reject_non_spark_fixed_width_kinds():
 
     with pytest.raises(ValueError, match="not\\s+Spark-expressible"):
         _decode_block_arrow(b"\x00" * 8, b"\x01", 1, 8, 8, "time")
+
+
+# ------------------------------------------- writer / reader differentials
+
+def _f32(x):
+    return struct.unpack("<f", struct.pack("<f", x))[0]
+
+
+_NAN = float("nan")
+_D0 = datetime.date(2000, 1, 1)
+_T0 = datetime.datetime(2000, 1, 1)
+
+#: every Spark-expressible cstore type -> a value generator (rnd -> value);
+#: the floats draw NaN, ±0.0 and ±infinity often enough to land in
+#: several blocks, and at every position within them
+_SPARK_TYPES = {
+    "boolean": lambda r: r.random() < 0.5,
+    "smallint": lambda r: r.randrange(-2 ** 15, 2 ** 15),
+    "integer": lambda r: r.randrange(-2 ** 31, 2 ** 31),
+    "bigint": lambda r: r.randrange(-2 ** 63, 2 ** 63),
+    "float": lambda r: r.choice(
+        [_NAN, -0.0, 0.0, float("inf"), _f32(r.uniform(-1e6, 1e6))]
+        + [_f32(r.uniform(-1e6, 1e6))] * 6),
+    "double": lambda r: r.choice(
+        [_NAN, -0.0, 0.0, float("-inf"), r.uniform(-1e12, 1e12)]
+        + [r.uniform(-1e12, 1e12)] * 6),
+    "date": lambda r: _D0 + datetime.timedelta(
+        days=r.randrange(-20000, 20000)),
+    "timestamp": lambda r: _T0 + datetime.timedelta(
+        microseconds=r.randrange(-10 ** 15, 10 ** 15)),
+    "string": lambda r: "".join(r.choice("aö€z,\"{}") for _ in
+                                range(r.randrange(0, 9))),
+    "bytea": lambda r: bytes(r.randrange(256)
+                             for _ in range(r.randrange(0, 9))),
+    "decimal(12,3)": lambda r: Decimal(
+        r.randrange(-10 ** 12, 10 ** 12)).scaleb(-3),
+    "array<integer>": lambda r: [
+        None if r.random() < 0.2 else r.randrange(-999, 999)
+        for _ in range(r.randrange(0, 4))],
+    "array<string>": lambda r: [
+        None if r.random() < 0.2 else "s" * r.randrange(0, 3)
+        for _ in range(r.randrange(0, 4))],
+    "array<double>": lambda r: [
+        r.choice([_NAN, r.uniform(-9, 9)]) for _ in range(r.randrange(3))],
+    "array<decimal(10,2)>": lambda r: [
+        Decimal(r.randrange(-10 ** 6, 10 ** 6)).scaleb(-2)
+        for _ in range(r.randrange(3))],
+    "array<date>": lambda r: [
+        _D0 + datetime.timedelta(days=r.randrange(-99, 99))
+        for _ in range(r.randrange(3))],
+    "array<timestamp>": lambda r: [
+        _T0 + datetime.timedelta(seconds=r.randrange(-99, 99))
+        for _ in range(r.randrange(3))],
+}
+
+
+def _typed_rows(type_name, n, seed=7):
+    rnd = random.Random(seed)
+    gen = _SPARK_TYPES[type_name]
+    return [(i, None if i % 7 == 3 else gen(rnd)) for i in range(n)]
+
+
+def _canon(v):
+    """NaN-safe comparable form (NaN != NaN would fail equal tables)."""
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    if isinstance(v, (list, tuple)):
+        return type(v)(_canon(x) for x in v)
+    return v
+
+
+def _arrow_table(rows, type_name):
+    import pyarrow as pa
+
+    from cstore_fdw_spark.sources.cstore_format import (
+        _pa_type, cstore_type_props)
+
+    kind = cstore_type_props(type_name)[3]
+    return pa.table({
+        "k": pa.array([r[0] for r in rows], pa.int64()),
+        "v": pa.array([r[1] for r in rows], type=_pa_type(kind))})
+
+
+@pytest.mark.parametrize("comp", ["none", "pglz"])
+@pytest.mark.parametrize("type_name", sorted(_SPARK_TYPES))
+def test_row_and_arrow_writers_write_identical_bytes(tmp_path, type_name,
+                                                     comp):
+    """write_cstore_file (per datum) and write_cstore_arrow (numpy fast
+    path for by-value kinds) share one block encoder and one bound
+    order: identical data and footer bytes for every Spark type, NULLs,
+    NaN and ±0.0 included, over several stripes and blocks — and for an
+    empty table."""
+    from cstore_fdw_spark.sources.cstore_format import write_cstore_arrow
+
+    types = ["bigint", type_name]
+    for n in (1000, 0):
+        rows = _typed_rows(type_name, n)
+        a, b = str(tmp_path / f"rows{n}"), str(tmp_path / f"arrow{n}")
+        write_cstore_file(a, rows, types, stripe_row_count=400,
+                          block_row_count=150, compression=comp)
+        write_cstore_arrow(b, _arrow_table(rows, type_name), types,
+                           stripe_row_count=400, block_row_count=150,
+                           compression=comp)
+        for suffix in ("", ".footer"):
+            with open(a + suffix, "rb") as fa, open(b + suffix, "rb") as fb:
+                assert fa.read() == fb.read(), (type_name, n, suffix)
+
+
+@pytest.mark.parametrize("type_name", sorted(_SPARK_TYPES))
+def test_row_and_arrow_readers_agree(tmp_path, type_name):
+    """read_cstore_file (per-datum decode) and read_stripe_batches
+    (vectorized decode) walk the same blocks: equal values for every
+    Spark type, and under a block_pred both ask it the same questions
+    in the same order and so skip the same blocks."""
+    from cstore_fdw_spark.sources.cstore_format import read_stripe_batches
+
+    types = ["bigint", type_name]
+    rows = _typed_rows(type_name, 1000)
+    path = str(tmp_path / "t.cstore")
+    write_cstore_file(path, rows, types, stripe_row_count=400,
+                      block_row_count=150, compression="pglz")
+    _brc, stripes = read_footer(path)
+
+    def every_third_refutes(calls):
+        def pred(col, lo, hi):
+            calls.append(_canon((col, lo, hi)))
+            return len(calls) % 3 != 1
+        return pred
+
+    def batch_rows(pred=None):
+        with open(path, "rb") as fh:
+            return [tuple(r.values()) for s in stripes
+                    for b in read_stripe_batches(fh, s, types, ["k", "v"],
+                                                 block_pred=pred)
+                    for r in b.to_pylist()]
+
+    assert _canon(list(read_cstore_file(path, types))) == _canon(rows)
+    assert _canon(batch_rows()) == _canon(rows)
+    row_calls, arrow_calls = [], []
+    kept = list(read_cstore_file(path, types,
+                                 block_pred=every_third_refutes(row_calls)))
+    assert _canon(batch_rows(every_third_refutes(arrow_calls))) == _canon(kept)
+    assert row_calls == arrow_calls
+    assert 0 < len(kept) < len(rows), "nothing (or everything) skipped"
+
+
+@pytest.mark.parametrize("nan_at", [0, 1, 2])
+def test_nan_bounds_never_drop_rows(spark, tmp_path, nan_at):
+    """NaN sorts above every number in Spark; a block holding
+    [NaN, 1.0, 10.0] (NaN at any position) must not be skipped for
+    ``x > 5``, ``x >= 10`` or ``x = NaN`` — format('cstore') and the
+    catalog answer like parquet, and column_minmax equals Spark's
+    min/max (1.0, NaN)."""
+    import pyspark.sql.functions as F
+
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    from cstore_fdw_spark.sources.cstore_datasource import register_cstore
+
+    register_cstore(spark)
+    xs = [1.0, 10.0]
+    xs.insert(nan_at, _NAN)
+    df = spark.createDataFrame(list(enumerate(xs)),
+                               "k BIGINT, x DOUBLE").coalesce(1)
+    pq_path, cs_path = str(tmp_path / "pq"), str(tmp_path / "cs")
+    df.write.parquet(pq_path)
+    df.write.format("cstore").mode("overwrite").save(cs_path)
+    cat = CStoreCatalog(spark, warehouse=str(tmp_path / "wh"))
+    cat.create_table("t", "k BIGINT, x DOUBLE", storage_format="cstore")
+    cat.insert("t", df)
+    want_src = spark.read.parquet(pq_path)
+    sources = {
+        "format": spark.read.format("cstore").schema(
+            "k BIGINT, x DOUBLE").load(cs_path),
+        "catalog": cat.read("t")}
+    for cond in ("x > 5", "x >= 10", "x = CAST('NaN' AS DOUBLE)"):
+        want = sorted(r.k for r in want_src.filter(cond).collect())
+        assert want, cond
+        for name, src in sources.items():
+            got = sorted(r.k for r in src.filter(cond).collect())
+            assert got == want, (name, cond)
+    spark_mm = want_src.agg(F.min("x"), F.max("x")).collect()[0]
+    assert _canon(cat.column_minmax("t", "x")) == _canon(tuple(spark_mm))

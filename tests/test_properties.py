@@ -588,6 +588,54 @@ def test_catalog_writes_stage_and_lock_one_way():
     assert defs == ["fsutil.py"]
 
 
+def test_cstore_format_walks_and_encodes_one_way():
+    """One path each inside the cstore v1.7 codec: the stripe footer is
+    parsed at one site, pglz is undone at one site (called through the
+    module global, so a wrapper swapped in at run time sees every
+    block), skip-node bounds are computed only by the shared block
+    encoder, the fixed-width Arrow fast path and the file-level fold,
+    datums are encoded by one function, and the second file assembler
+    is gone."""
+    import ast
+
+    from cstore_fdw_spark.sources import cstore_format
+
+    def in_format(predicate):
+        return sorted({fn for f, fn in _package_functions_using(predicate)
+                       if f == "sources/cstore_format.py"})
+
+    def call_to(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == name)
+        return pred
+
+    def bound_reduction(node):
+        if not isinstance(node, ast.Call):
+            return False
+        f = node.func
+        if isinstance(f, ast.Attribute):
+            return f.attr in ("min", "max", "argmin", "argmax")
+        # min(xs) / min(a, b, key=...): a reduction, not min(273, n)
+        return (getattr(f, "id", None) in ("min", "max")
+                and (len(node.args) == 1
+                     or any(k.arg == "key" for k in node.keywords)))
+
+    assert in_format(lambda n: isinstance(n, ast.Name)
+                     and n.id == "footer_len"
+                     and isinstance(n.ctx, ast.Load)) == \
+        ["_stripe_sections"]
+    assert in_format(call_to("pglz_decompress")) == ["_stripe_blocks"]
+    assert in_format(bound_reduction) == [
+        "_encode_block", "_encode_fixed_block", "cstore_file_minmax"]
+    assert in_format(call_to("_minmax_key")) == [
+        "_encode_block", "cstore_file_minmax"]
+    for encoder in ("pg_numeric_encode", "pg_array_encode"):
+        assert in_format(call_to(encoder)) == ["_to_storage"], encoder
+    assert in_format(call_to("_stripe_bytes")) == ["_write_stripe"]
+    assert not hasattr(cstore_format, "_assemble_file")
+
+
 def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
     """The dedup_minhash_lsh physical plan must not evaluate the shingle
     build inside a scan-level Filter: InferFiltersFromGenerate used to
