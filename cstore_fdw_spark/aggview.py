@@ -10,87 +10,36 @@ state (count/sum/min/max — avg is sum/count at read time) into the
 stored per-group rows. At 100 TB this turns a nightly
 full-table-group-by into a scan of one day's appends.
 
-Rewrites (compact / DELETE / MERGE / vacuum / overwrite) collapse epoch
-history — they raise the source's ``history_floor``, and the view
-cannot tell a byte-identical compact from a destructive delete, so any
-floor advance past the view's watermark triggers an honest FULL
-recompute (same contract as ``read(as_of_epoch)`` refusing vacuumed
-snapshots: never silently-wrong rows). A drop+recreate of the source
-under the same name is detected the same way: the sidecar stores the
-source's ``created_at`` identity, and a mismatch forces a full
-recompute instead of serving state built from a dead table.
+Each view has a state KIND, one ``(partial aggregate, merge)`` pair in
+``_KINDS``: the measures kind (SUM/MIN/MAX per group) and the HLL
+(MAX), Bloom (OR) and quantile-histogram (SUM) sketches. The batch
+refresh and the stream sink (``streaming.aggview``) both merge through
+that one table. Join views (``create_join_agg_view``) keep measures
+state over ``fact ⋈ dim``.
 
-Crash atomicity. The state commit (``insert(view, state,
-overwrite=True)``) and the watermark advance live in different files,
-so a crash between them could otherwise re-merge the same delta on the
-next refresh and silently double-count — violating this module's own
-contract. The refresh therefore runs a write-ahead pending record:
-
-1. the sidecar records ``pending = {view_epoch, finalize}`` where
-   ``view_epoch`` is the epoch the state commit WILL stamp and
-   ``finalize`` the watermark fields that advance applies;
-2. the state commits through the ordinary insert protocol;
-3. the sidecar applies ``finalize`` and clears ``pending``.
-
-Recovery on the next refresh inspects the pending record against the
-view's own epoch-stamped data files — the stamp IS the commit marker,
-no new machinery: a visible file stamped ``e{view_epoch}-`` proves step
-2's visibility commit happened (finalize the watermark, no re-merge); no
-such file proves it did not (discard pending, redo the delta against the
-still-intact old state). Either way exactly-once. Refreshes serialize on
-a per-view flock so two concurrent refreshes cannot interleave their
-pending records (the same discipline as the catalog's writer lock).
-
-Full recomputes pin their scan to the metadata snapshot taken at
-refresh start (explicit ``_read_files`` list, never a re-resolving
-``read()``): a source commit landing while the refresh executes is NOT
-folded into state stamped with the older watermark — it is picked up,
-exactly once, by the next incremental refresh.
-
-The view itself is an ordinary managed table — readable, SQL-exposable
-via ``register_table``, time-travelable — plus one JSON sidecar holding
-the spec and the refresh watermark.
+Refresh modes, the rewrite and drop+recreate fallback to a full
+recompute, the crash-atomic write-ahead pending commit and the refresh
+lock are the derived-table protocol of ``cstore_fdw_spark.derived``,
+shared with projections and every stream maintainer. The view itself
+is an ordinary managed table — readable, SQL-exposable via
+``register_table``, time-travelable — plus one JSON sidecar holding the
+spec and the refresh watermark.
 """
 
 from __future__ import annotations
 
-import json
-import os
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError
-from cstore_fdw_spark.fsutil import _file_epoch, flocked, write_json_atomic
+from cstore_fdw_spark import derived
+from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError, TableMeta
 
 SIDECAR = "_cstore_aggview.json"
 REFRESH_LOCK = "_cstore_aggview.refresh.lock"
-
-
-def _sidecar_path(catalog: CStoreCatalog, view: str) -> str:
-    return os.path.join(catalog.table_path(view), SIDECAR)
-
-
-def _load_spec(catalog: CStoreCatalog, view: str) -> dict[str, Any]:
-    try:
-        with open(_sidecar_path(catalog, view)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise CStoreError(
-            f'"{view}" is not an aggregate view (no {SIDECAR})') from None
-
-
-def _save_spec(catalog: CStoreCatalog, view: str,
-               spec: dict[str, Any]) -> None:
-    write_json_atomic(_sidecar_path(catalog, view), spec)
-
-
-def _refresh_lock(catalog: CStoreCatalog, view: str):
-    """Per-view refresh mutex. A separate file from the catalog's writer
-    lock because ``insert()`` takes THAT lock internally — flock is not
-    reentrant across file descriptors, so holding it here would deadlock
-    the state commit."""
-    return flocked(os.path.join(catalog.table_path(view), REFRESH_LOCK))
+_VIEWS = derived.Family(SIDECAR, REFRESH_LOCK, "_cstore_aggview_stream.json",
+                        "an aggregate view")
+_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
 def _agg_exprs(measures: list[str]) -> list:
@@ -114,9 +63,95 @@ def _merge_exprs(measures: list[str]) -> list:
     return exprs
 
 
-def _aggregate(df: DataFrame, keys: list[str],
-               measures: list[str]) -> DataFrame:
-    return df.groupBy(*keys).agg(*_agg_exprs(measures))
+class _Kind(NamedTuple):
+    partial: Callable[[DataFrame], DataFrame]  # source rows -> state rows
+    merge: Callable[[DataFrame], DataFrame]    # stored ∪ partial -> state
+
+
+def _measures(spec: dict[str, Any]) -> _Kind:
+    keys, measures = spec["keys"], spec["measures"]
+    return _Kind(lambda df: df.groupBy(*keys).agg(*_agg_exprs(measures)),
+                 lambda union: union.groupBy(*keys)
+                 .agg(*_merge_exprs(measures)))
+
+
+def _hll(spec: dict[str, Any]) -> _Kind:
+    # MAX-merge state kind: the aggregate is the register rollup and the
+    # delta merge is per-(keys, reg) MAX — idempotent as well as
+    # mergeable (a hypothetical re-merge couldn't even drift)
+    from cstore_fdw_spark.operators.analytics import hll_registers
+    keys, column = spec["keys"], spec["column"]
+    return _Kind(lambda df: hll_registers(df, keys, column),
+                 lambda union: union.groupBy(*keys, "reg")
+                 .agg(F.max("m_rho").alias("m_rho")))
+
+
+def _bloom(spec: dict[str, Any]) -> _Kind:
+    # OR-merge state kind: the state is the distinct set-bit table, and
+    # the delta merge is distinct union — idempotent like MAX
+    from cstore_fdw_spark.operators.analytics import bloom_bits
+    keys, column, m, k = spec["keys"], spec["column"], spec["m"], spec["k"]
+    return _Kind(lambda df: bloom_bits(df, keys, column, m, k),
+                 lambda union: union.distinct())
+
+
+def _quantile(spec: dict[str, Any]) -> _Kind:
+    # SUM-merge state kind over histogram buckets: the delta's per-(keys,
+    # bucket) counts add onto the stored ones — the counter algebra of
+    # the measures kind, so it relies on the same exactly-once commit
+    from cstore_fdw_spark.operators.analytics import quantile_buckets
+    keys, column = spec["keys"], spec["column"]
+    lo, hi, nb = spec["lo"], spec["hi"], spec["nbuckets"]
+    return _Kind(lambda df: quantile_buckets(df, keys, column, lo, hi, nb),
+                 lambda union: union.groupBy(*keys, "bucket")
+                 .agg(F.sum("cnt").cast("long").alias("cnt")))
+
+
+#: state kind -> its (partial aggregate, merge) pair for a view's spec
+_KINDS = {"measures": _measures, "join": _measures, "hll": _hll,
+          "bloom": _bloom, "quantile": _quantile}
+
+
+def _kind(spec: dict[str, Any]) -> _Kind:
+    return _KINDS[spec.get("kind", "measures")](spec)
+
+
+def _state(catalog: CStoreCatalog, view: str, spec: dict[str, Any],
+           partial: DataFrame, full: bool = False) -> tuple[DataFrame, bool]:
+    """The view's next state (always an overwrite): ``partial`` itself
+    after a full recompute, else ``partial`` merged into the stored
+    state by the view's kind."""
+    if full:
+        return partial, True
+    return _kind(spec).merge(catalog.read(view).unionByName(partial)), True
+
+
+def _require(spec: dict[str, Any], view: str, join: bool, use: str) -> None:
+    """Refuse a view of the other shape than the entry point serves,
+    naming the entry point ``use`` that serves it."""
+    if (spec.get("kind") == "join") != join:
+        shape = "single-table" if join else "join"
+        raise CStoreError(
+            f'"{view}" is a {shape} aggregate view — use {use}')
+
+
+def _source_meta(catalog: CStoreCatalog, source: str,
+                 columns: list[str]) -> TableMeta:
+    smeta = catalog._load_meta(source)
+    fields = set(smeta.schema().fieldNames())
+    for c in columns:
+        if c not in fields:
+            raise CStoreError(
+                f'column "{c}" not in source table "{source}"')
+    return smeta
+
+
+def _create(catalog: CStoreCatalog, view: str, spec: dict[str, Any],
+            metas: dict[str, TableMeta], rows: DataFrame) -> None:
+    """Create the view empty: its state schema is the kind's partial
+    aggregate over ``rows`` (a zero-row plan gives the exact types)."""
+    derived.create(catalog, _VIEWS, view, _kind(spec).partial(rows).schema,
+                   spec, metas, version=2)
 
 
 def create_hll_agg_view(catalog: CStoreCatalog, view: str, source: str,
@@ -129,17 +164,10 @@ def create_hll_agg_view(catalog: CStoreCatalog, view: str, source: str,
     ``refresh_agg_view`` maintains an always-current distinct-count
     sketch from appends without ever rescanning history (the "archived
     sketches" leg of HLL mergeability). Read the estimate with
-    :func:`hll_view_estimate`. Shares the single-table refresh skeleton:
-    epoch-delta scans, rewrite/identity full-recompute fallback, and the
-    crash-atomic pending commit."""
-    from cstore_fdw_spark.operators.analytics import hll_registers
-
-    smeta = catalog._load_meta(source)
-    fields = set(smeta.schema().fieldNames())
-    for c in keys + [column]:
-        if c not in fields:
-            raise CStoreError(
-                f'column "{c}" not in source table "{source}"')
+    :func:`hll_view_estimate`. Maintained by the derived-table protocol
+    like every view: epoch-delta scans, rewrite/identity full-recompute
+    fallback, and the crash-atomic pending commit."""
+    smeta = _source_meta(catalog, source, keys + [column])
     if not keys:
         raise CStoreError("hll agg view needs at least one key")
     if column in keys:
@@ -152,12 +180,9 @@ def create_hll_agg_view(catalog: CStoreCatalog, view: str, source: str,
         if c in ("reg", "m_rho", "rho", "__hll_h"):
             raise CStoreError(
                 f'key "{c}" collides with a reserved HLL state column')
-    probe = hll_registers(catalog.read(source), keys, column)
-    catalog.create_table(view, probe.schema)
-    _save_spec(catalog, view, {
-        "kind": "hll", "source": source, "keys": keys, "column": column,
-        "last_epoch": 0, "source_created_at": smeta.created_at,
-        "pending": None, "version": 2})
+    _create(catalog, view, {
+        "kind": "hll", "source": source, "keys": keys, "column": column},
+        {"source": smeta}, catalog.read(source))
 
 
 def hll_view_estimate(catalog: CStoreCatalog, view: str) -> DataFrame:
@@ -168,7 +193,7 @@ def hll_view_estimate(catalog: CStoreCatalog, view: str) -> DataFrame:
     from cstore_fdw_spark.operators.analytics import (
         hll_estimate_from_registers)
 
-    spec = _load_spec(catalog, view)
+    spec = _VIEWS.load_spec(catalog, view)
     if spec.get("kind") != "hll":
         raise CStoreError(f'"{view}" is not an HLL sketch view')
     keys = spec["keys"]
@@ -191,19 +216,12 @@ def create_bloom_agg_view(catalog: CStoreCatalog, view: str, source: str,
     batches also combines EPOCH DELTAS, completing the three sketch
     merge algebras the aggview family maintains (SUM for counters, MAX
     for HLL registers, OR for bit sets). ``keys`` may be empty (one
-    global filter). Probe with :func:`bloom_view_membership`. Shares
-    the single-table refresh skeleton: epoch-delta scans,
-    rewrite/identity full-recompute fallback (a rewrite can CLEAR bits,
-    which only a rebuild expresses — Bloom filters famously don't
-    support deletion), and the crash-atomic pending commit."""
-    from cstore_fdw_spark.operators.analytics import bloom_bits
-
-    smeta = catalog._load_meta(source)
-    fields = set(smeta.schema().fieldNames())
-    for c in keys + [column]:
-        if c not in fields:
-            raise CStoreError(
-                f'column "{c}" not in source table "{source}"')
+    global filter). Probe with :func:`bloom_view_membership`. Maintained
+    by the derived-table protocol: epoch-delta scans, rewrite/identity
+    full-recompute fallback (a rewrite can CLEAR bits, which only a
+    rebuild expresses — Bloom filters famously don't support deletion),
+    and the crash-atomic pending commit."""
+    smeta = _source_meta(catalog, source, keys + [column])
     if column in keys:
         raise CStoreError("the filtered column cannot also be a key")
     # same reserved-name guard as the HLL view: the state table and the
@@ -216,13 +234,10 @@ def create_bloom_agg_view(catalog: CStoreCatalog, view: str, source: str,
                 'state column "bit"')
     if m < 2 or k < 1:
         raise CStoreError("bloom geometry needs m >= 2 and k >= 1")
-    probe = bloom_bits(catalog.read(source), keys, column, m, k)
-    catalog.create_table(view, probe.schema)
-    _save_spec(catalog, view, {
+    _create(catalog, view, {
         "kind": "bloom", "source": source, "keys": keys,
-        "column": column, "m": m, "k": k,
-        "last_epoch": 0, "source_created_at": smeta.created_at,
-        "pending": None, "version": 2})
+        "column": column, "m": m, "k": k},
+        {"source": smeta}, catalog.read(source))
 
 
 def bloom_view_membership(catalog: CStoreCatalog, view: str,
@@ -235,7 +250,7 @@ def bloom_view_membership(catalog: CStoreCatalog, view: str,
     rows), so probing any corpus is one map-side join."""
     from cstore_fdw_spark.functions.portable_hash import spark_w32
 
-    spec = _load_spec(catalog, view)
+    spec = _VIEWS.load_spec(catalog, view)
     if spec.get("kind") != "bloom":
         raise CStoreError(f'"{view}" is not a Bloom filter view')
     keys, column = spec["keys"], spec["column"]
@@ -275,18 +290,11 @@ def create_quantile_agg_view(catalog: CStoreCatalog, view: str,
     NULLs in the one shared definition, so the maintained state never
     holds a bucket=NULL row and ``n`` counts non-null rows only (the
     ``percentile_cont`` convention).
-    Shares the single-table refresh skeleton: epoch-delta scans,
+    Maintained by the derived-table protocol: epoch-delta scans,
     rewrite/identity full-recompute fallback (a rewrite can shrink
     counts, which only a rebuild expresses), and the crash-atomic
     pending commit."""
-    from cstore_fdw_spark.operators.analytics import quantile_buckets
-
-    smeta = catalog._load_meta(source)
-    fields = set(smeta.schema().fieldNames())
-    for c in keys + [column]:
-        if c not in fields:
-            raise CStoreError(
-                f'column "{c}" not in source table "{source}"')
+    smeta = _source_meta(catalog, source, keys + [column])
     if not keys:
         raise CStoreError("quantile agg view needs at least one key")
     if column in keys:
@@ -297,22 +305,17 @@ def create_quantile_agg_view(catalog: CStoreCatalog, view: str,
                 f'key "{c}" collides with a reserved quantile state '
                 'column')
     dt = smeta.schema()[column].dataType.simpleString()
-    if dt not in ("tinyint", "smallint", "int", "bigint",
-                  "float", "double"):
+    if dt not in _NUMERIC:
         raise CStoreError(
             f'bucketed column "{column}" has non-numeric type {dt}')
     if not (lo < hi) or nbuckets < 2:
         raise CStoreError(
             "quantile geometry needs lo < hi and nbuckets >= 2")
-    probe = quantile_buckets(catalog.read(source), keys, column,
-                             lo, hi, nbuckets)
-    catalog.create_table(view, probe.schema)
-    _save_spec(catalog, view, {
+    _create(catalog, view, {
         "kind": "quantile", "source": source, "keys": keys,
         "column": column, "lo": float(lo), "hi": float(hi),
-        "nbuckets": int(nbuckets),
-        "last_epoch": 0, "source_created_at": smeta.created_at,
-        "pending": None, "version": 2})
+        "nbuckets": int(nbuckets)},
+        {"source": smeta}, catalog.read(source))
 
 
 def quantile_view_estimate(catalog: CStoreCatalog, view: str,
@@ -325,7 +328,7 @@ def quantile_view_estimate(catalog: CStoreCatalog, view: str,
     from cstore_fdw_spark.operators.analytics import (
         quantile_estimate_from_buckets)
 
-    spec = _load_spec(catalog, view)
+    spec = _VIEWS.load_spec(catalog, view)
     if spec.get("kind") != "quantile":
         raise CStoreError(f'"{view}" is not a quantile sketch view')
     keys = spec["keys"]
@@ -344,55 +347,17 @@ def create_agg_view(catalog: CStoreCatalog, view: str, source: str,
     ``{m}_sum/_min/_max`` for each measure. The view starts EMPTY at
     watermark 0 — the first :func:`refresh_agg_view` populates it (and,
     on a fresh source, is already the incremental path)."""
-    smeta = catalog._load_meta(source)
-    fields = set(smeta.schema().fieldNames())
-    for c in keys + measures:
-        if c not in fields:
-            raise CStoreError(
-                f'column "{c}" not in source table "{source}"')
+    smeta = _source_meta(catalog, source, keys + measures)
     if not keys or not measures:
         raise CStoreError("agg view needs at least one key and one measure")
     for m in measures:
         dt = smeta.schema()[m].dataType.simpleString()
-        if dt not in ("tinyint", "smallint", "int", "bigint",
-                      "float", "double"):
+        if dt not in _NUMERIC:
             raise CStoreError(
                 f'measure "{m}" has non-numeric type {dt}')
-    # schema probe: a zero-row plan gives the exact aggregate types
-    probe = _aggregate(catalog.read(source), keys, measures)
-    catalog.create_table(view, probe.schema)
-    _save_spec(catalog, view, {
-        "source": source, "keys": keys, "measures": measures,
-        "last_epoch": 0, "source_created_at": smeta.created_at,
-        "pending": None, "version": 2})
-
-
-def _recover_pending(catalog: CStoreCatalog, view: str,
-                     spec: dict[str, Any]) -> bool:
-    """Resolve a refresh that crashed between its state commit and its
-    watermark finalize (or between the pending write and the commit).
-
-    The view's data-file epoch stamps decide which side of the commit
-    point the crash fell on: a visible file stamped with the pending
-    ``view_epoch`` can only exist if the state insert's visibility
-    commit happened (the stamp is baked under the writer lock right
-    before the metadata save — the same evidence ``_recover_orphans``
-    uses in the other direction). Note the view's ``write_epoch`` alone
-    is NOT sufficient evidence: an overwrite-insert saves the bumped
-    epoch before swapping the data directories, so a crash inside that
-    window advances the epoch while the old state files remain — the
-    stamp check reads as not-committed there, which is exactly right
-    (the old state is still what's on disk, so the delta re-merges
-    against it). Returns True if the watermark was finalized."""
-    pending = spec.get("pending")
-    if not pending:
-        return False
-    committed = catalog._epoch_committed(view, int(pending["view_epoch"]))
-    if committed:
-        spec.update(pending["finalize"])
-    spec["pending"] = None
-    _save_spec(catalog, view, spec)
-    return committed
+    _create(catalog, view, {
+        "source": source, "keys": keys, "measures": measures},
+        {"source": smeta}, catalog.read(source))
 
 
 def refresh_agg_view(catalog: CStoreCatalog, view: str) -> dict[str, Any]:
@@ -402,8 +367,9 @@ def refresh_agg_view(catalog: CStoreCatalog, view: str) -> dict[str, Any]:
     - ``noop``: nothing committed since the watermark.
     - ``incremental``: only data files stamped in
       ``(last_epoch, write_epoch]`` are scanned; their partial
-      aggregates merge with the stored state (count/sum via sum,
-      min/max via min/max) and the small state table is rewritten.
+      aggregates merge with the stored state by the view's kind
+      (count/sum via sum, min/max via min/max, registers via max, bits
+      via union) and the small state table is rewritten.
     - ``full``: the source's ``history_floor`` moved past the watermark
       (some rewrite collapsed history — the epochs the view was built
       from no longer exist as files), or the source table was dropped
@@ -413,116 +379,16 @@ def refresh_agg_view(catalog: CStoreCatalog, view: str) -> dict[str, Any]:
       refresh-start metadata snapshot. Correct for every rewrite kind,
       including ones that changed no data.
 
-    Crash-safe and serialized: see the module docstring's write-ahead
-    pending protocol — a crash anywhere inside refresh never
+    Crash-safe and serialized by ``derived.refresh``'s write-ahead
+    pending commit — a crash anywhere inside refresh never
     double-counts and never loses committed source rows."""
-    with _refresh_lock(catalog, view):
-        return _refresh_locked(catalog, view)
+    def build(spec, snaps, full):
+        rows = snaps["source"].read("all" if full else "new")
+        return _state(catalog, view, spec, _kind(spec).partial(rows), full)
 
-
-def _refresh_locked(catalog: CStoreCatalog, view: str) -> dict[str, Any]:
-    spec = _load_spec(catalog, view)
-    if spec.get("kind") == "join":
-        raise CStoreError(
-            f'"{view}" is a join aggregate view — use '
-            "refresh_join_agg_view")
-    _recover_pending(catalog, view, spec)
-    smeta = catalog._load_meta(spec["source"])
-    keys = spec["keys"]
-    if spec.get("kind") == "hll":
-        # MAX-merge state kind: the aggregate is the register rollup and
-        # the delta merge is per-(keys, reg) MAX — idempotent as well as
-        # mergeable, which is why the same crash-atomic commit tail needs
-        # no changes (a hypothetical re-merge couldn't even drift)
-        from cstore_fdw_spark.operators.analytics import hll_registers
-        column = spec["column"]
-
-        def _agg(df: DataFrame) -> DataFrame:
-            return hll_registers(df, keys, column)
-
-        def _merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-            return (old.unionByName(partial).groupBy(*keys, "reg")
-                    .agg(F.max("m_rho").alias("m_rho")))
-    elif spec.get("kind") == "bloom":
-        # OR-merge state kind: the state is the distinct set-bit table,
-        # and the delta merge is distinct union — idempotent like MAX
-        from cstore_fdw_spark.operators.analytics import bloom_bits
-        column, m, k = spec["column"], spec["m"], spec["k"]
-
-        def _agg(df: DataFrame) -> DataFrame:
-            return bloom_bits(df, keys, column, m, k)
-
-        def _merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-            return old.unionByName(partial).distinct()
-    elif spec.get("kind") == "quantile":
-        # SUM-merge state kind over histogram buckets: the delta's
-        # per-(keys, bucket) counts add onto the stored ones — the same
-        # counter algebra as the standard measures kind, so the
-        # crash-atomic commit tail (pending record -> state insert ->
-        # finalize) provides the exactly-once the non-idempotent SUM
-        # needs, exactly as it does for n_rows/_sum measures
-        from cstore_fdw_spark.operators.analytics import quantile_buckets
-        column = spec["column"]
-        lo, hi, nb = spec["lo"], spec["hi"], spec["nbuckets"]
-
-        def _agg(df: DataFrame) -> DataFrame:
-            return quantile_buckets(df, keys, column, lo, hi, nb)
-
-        def _merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-            return (old.unionByName(partial).groupBy(*keys, "bucket")
-                    .agg(F.sum("cnt").cast("long").alias("cnt")))
-    else:
-        measures = spec["measures"]
-
-        def _agg(df: DataFrame) -> DataFrame:
-            return _aggregate(df, keys, measures)
-
-        def _merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-            return (old.unionByName(partial).groupBy(*keys)
-                    .agg(*_merge_exprs(measures)))
-    last = int(spec["last_epoch"])
-    cur = smeta.write_epoch
-    # drop+recreate under the same name restarts the epoch counter: the
-    # stored identity unmasks it (a fresh table can reuse watermark-low
-    # epochs for entirely different data)
-    same_source = spec.get("source_created_at",
-                           smeta.created_at) == smeta.created_at
-    if same_source and smeta.history_floor <= last and cur == last:
-        return {"mode": "noop", "from_epoch": last, "to_epoch": cur}
-    if not same_source or smeta.history_floor > last:
-        # full recompute, pinned to the snapshot captured above: a
-        # commit landing during execution stamps an epoch > cur and must
-        # wait for the NEXT refresh (last_epoch records cur)
-        state = _agg(
-            catalog._read_files(smeta, catalog._visible_files(smeta)))
-        mode = "full"
-    else:
-        delta_files = [p for p in catalog._visible_files(smeta)
-                       if _file_epoch(p) > last]
-        delta = catalog._read_files(smeta, delta_files)
-        state = _merge(catalog.read(view), _agg(delta))
-        mode = "incremental"
-    # write-ahead pending record: the state commit below will stamp the
-    # view's next epoch; recovery uses that stamp as the commit marker
-    finalize = {"last_epoch": cur, "source_created_at": smeta.created_at}
-    _commit_state(catalog, view, spec, state, finalize)
-    return {"mode": mode, "from_epoch": last, "to_epoch": cur}
-
-
-def _commit_state(catalog: CStoreCatalog, view: str, spec: dict[str, Any],
-                  state: DataFrame, finalize: dict[str, Any]) -> None:
-    """The shared crash-atomic commit tail: pending record → state
-    insert → finalize. ``finalize`` holds exactly the spec fields the
-    watermark advance sets; recovery applies it verbatim when the view's
-    epoch stamp proves the insert committed."""
-    vmeta = catalog._load_meta(view)
-    spec["pending"] = {"view_epoch": vmeta.write_epoch + 1,
-                       "finalize": finalize}
-    _save_spec(catalog, view, spec)
-    catalog.insert(view, state, overwrite=True)
-    spec.update(finalize)
-    spec["pending"] = None
-    _save_spec(catalog, view, spec)
+    return derived.refresh(
+        catalog, _VIEWS, view, ("source",), build,
+        lambda spec: _require(spec, view, False, "refresh_join_agg_view"))
 
 
 # ------------------------------------------------------- join agg views
@@ -559,20 +425,14 @@ def create_join_agg_view(catalog: CStoreCatalog, view: str, fact: str,
                for f in list(fmeta.schema().fields)
                + list(dmeta.schema().fields)}
     for m in measures:
-        if mschema[m] not in ("tinyint", "smallint", "int", "bigint",
-                              "float", "double"):
+        if mschema[m] not in _NUMERIC:
             raise CStoreError(
                 f'measure "{m}" has non-numeric type {mschema[m]}')
-    probe = _aggregate(catalog.read(fact).join(catalog.read(dim), on),
-                       keys, measures)
-    catalog.create_table(view, probe.schema)
-    _save_spec(catalog, view, {
+    _create(catalog, view, {
         "kind": "join", "fact": fact, "dim": dim, "on": on,
-        "keys": keys, "measures": measures,
-        "last_fact_epoch": 0, "last_dim_epoch": 0,
-        "fact_created_at": fmeta.created_at,
-        "dim_created_at": dmeta.created_at,
-        "pending": None, "version": 2})
+        "keys": keys, "measures": measures},
+        {"fact": fmeta, "dim": dmeta},
+        catalog.read(fact).join(catalog.read(dim), on))
 
 
 def refresh_join_agg_view(catalog: CStoreCatalog,
@@ -595,57 +455,17 @@ def refresh_join_agg_view(catalog: CStoreCatalog,
     changing). Rewrites or drop+recreate on EITHER side force the same
     honest full recompute, pinned to both metadata snapshots, as the
     single-table path; the crash-atomic pending commit is shared."""
-    with _refresh_lock(catalog, view):
-        return _refresh_join_locked(catalog, view)
+    def build(spec, snaps, full):
+        fact, dim, on = snaps["fact"], snaps["dim"], spec["on"]
+        if full:
+            rows = fact.read().join(dim.read(), on)
+        else:
+            cols = spec["keys"] + spec["measures"]
+            rows = (fact.read("new").join(dim.read(), on).select(*cols)
+                    .unionByName(fact.read("old").join(dim.read("new"), on)
+                                 .select(*cols)))
+        return _state(catalog, view, spec, _kind(spec).partial(rows), full)
 
-
-def _refresh_join_locked(catalog: CStoreCatalog,
-                         view: str) -> dict[str, Any]:
-    spec = _load_spec(catalog, view)
-    if spec.get("kind") != "join":
-        raise CStoreError(
-            f'"{view}" is a single-table aggregate view — use '
-            "refresh_agg_view")
-    _recover_pending(catalog, view, spec)
-    fmeta = catalog._load_meta(spec["fact"])
-    dmeta = catalog._load_meta(spec["dim"])
-    on, keys, measures = spec["on"], spec["keys"], spec["measures"]
-    lastf = int(spec["last_fact_epoch"])
-    lastd = int(spec["last_dim_epoch"])
-    curf, curd = fmeta.write_epoch, dmeta.write_epoch
-    same = (spec.get("fact_created_at") == fmeta.created_at
-            and spec.get("dim_created_at") == dmeta.created_at)
-    result = {"from_fact_epoch": lastf, "to_fact_epoch": curf,
-              "from_dim_epoch": lastd, "to_dim_epoch": curd}
-    if (same and fmeta.history_floor <= lastf and curf == lastf
-            and dmeta.history_floor <= lastd and curd == lastd):
-        return {"mode": "noop", **result}
-    fact_all = catalog._visible_files(fmeta)
-    dim_all = catalog._visible_files(dmeta)
-    if (not same or fmeta.history_floor > lastf
-            or dmeta.history_floor > lastd):
-        state = _aggregate(
-            catalog._read_files(fmeta, fact_all)
-            .join(catalog._read_files(dmeta, dim_all), on),
-            keys, measures)
-        mode = "full"
-    else:
-        f_delta = [p for p in fact_all if _file_epoch(p) > lastf]
-        f_old = [p for p in fact_all if _file_epoch(p) <= lastf]
-        d_delta = [p for p in dim_all if _file_epoch(p) > lastd]
-        new_fact = (catalog._read_files(fmeta, f_delta)
-                    .join(catalog._read_files(dmeta, dim_all), on))
-        old_x_newdim = (catalog._read_files(fmeta, f_old)
-                        .join(catalog._read_files(dmeta, d_delta), on))
-        cols = keys + measures
-        partial = _aggregate(
-            new_fact.select(*cols).unionByName(old_x_newdim.select(*cols)),
-            keys, measures)
-        state = (catalog.read(view).unionByName(partial)
-                 .groupBy(*keys).agg(*_merge_exprs(measures)))
-        mode = "incremental"
-    finalize = {"last_fact_epoch": curf, "last_dim_epoch": curd,
-                "fact_created_at": fmeta.created_at,
-                "dim_created_at": dmeta.created_at}
-    _commit_state(catalog, view, spec, state, finalize)
-    return {"mode": mode, **result}
+    return derived.refresh(
+        catalog, _VIEWS, view, ("fact", "dim"), build,
+        lambda spec: _require(spec, view, True, "refresh_agg_view"))

@@ -1414,9 +1414,8 @@ class CStoreCatalog:
         """Whether a visible data file of ``name`` carries ``epoch``'s
         stamp — proof that the insert stamped with that epoch reached
         its visibility commit (the stamp is baked under the writer lock
-        right before the metadata save). Sidecar write-ahead records
-        (aggregate views, projections, their streaming twins) recover
-        from this evidence."""
+        right before the metadata save). The derived-table write-ahead
+        records (``derived._recover``) recover from this evidence."""
         meta = self._load_meta(name)
         return any(_file_epoch(p) == epoch
                    for p in self._visible_files(meta))

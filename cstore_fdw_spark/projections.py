@@ -15,20 +15,18 @@ it Spark-natively over the epoch commit protocol:
 - ``refresh_projection`` syncs it INCREMENTALLY — only the base's data
   files stamped since the watermark are read, range-repartitioned on
   the sort key, sorted within partitions, and appended (a rewrite on
-  the base — DELETE/MERGE/compact/drop+recreate — honestly rebuilds,
-  same floor/identity discipline as the aggview family);
+  the base — DELETE/MERGE/compact/drop+recreate — honestly rebuilds);
 - ``best_projection`` picks the projection whose sort prefix matches
   the queried columns and is FRESH (watermark == base epoch); anything
   stale or unmatched falls back to the base, never silently serving
   missing rows.
 
-Crash atomicity reuses the aggview write-ahead pattern with append
-evidence: the sidecar records the epoch the append WILL stamp before
-the insert; recovery finds a visible file with that stamp (append
-committed → finalize watermark) or not (redo the delta — the old
-projection content is untouched, appends either fully land or roll
-back under the insert protocol). Either way the projection never holds
-a delta twice.
+Refresh modes, the rebuild fallback, the crash-atomic pending commit
+(an append either fully lands or is redone, never held twice) and the
+refresh lock are the derived-table protocol of
+``cstore_fdw_spark.derived``; this module adds only the range-sorted
+write (``_sorted``), which the batch refresh and the stream
+(``streaming.projections``) share.
 
 Scale: refresh cost is O(delta); the range repartition gives each
 appended batch globally-ordered files so parquet row-group zone maps
@@ -40,39 +38,26 @@ dimension — exactly C-Store's bargain.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any
 
+from pyspark.sql import DataFrame
+
+from cstore_fdw_spark import derived
 from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError
-from cstore_fdw_spark.fsutil import _file_epoch, flocked, write_json_atomic
 
 SIDECAR = "_cstore_projection.json"
 LOCK = "_cstore_projection.refresh.lock"
+_PROJECTIONS = derived.Family(SIDECAR, LOCK, "_cstore_projection_stream.json",
+                              "a projection")
 
 
-def _sidecar_path(catalog: CStoreCatalog, name: str) -> str:
-    return os.path.join(catalog.table_path(name), SIDECAR)
-
-
-def _load_spec(catalog: CStoreCatalog, name: str) -> dict[str, Any]:
-    try:
-        with open(_sidecar_path(catalog, name)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise CStoreError(
-            f'"{name}" is not a projection (no {SIDECAR})') from None
-
-
-def _save_spec(catalog: CStoreCatalog, name: str,
-               spec: dict[str, Any]) -> None:
-    write_json_atomic(_sidecar_path(catalog, name), spec)
-
-
-def _refresh_lock(catalog: CStoreCatalog, name: str):
-    """Per-projection refresh mutex, separate from the writer lock that
-    ``insert()`` takes inside it (see ``aggview._refresh_lock``)."""
-    return flocked(os.path.join(catalog.table_path(name), LOCK))
+def _sorted(spec: dict[str, Any], rows: DataFrame,
+            full: bool = False) -> tuple[DataFrame, bool]:
+    """Write ``rows`` into the projection: appended, or overwriting on a
+    rebuild. Range partitioning gives every output file a disjoint
+    sort-key range, so zone maps prune within each write."""
+    return rows.repartitionByRange(*spec["sort_by"]), full
 
 
 def create_projection(catalog: CStoreCatalog, base: str, name: str,
@@ -94,22 +79,9 @@ def create_projection(catalog: CStoreCatalog, base: str, name: str,
                      "storage_format", "bloom_filter_columns",
                      "bloom_filter_ndv")}
     opts["sort_by"] = ",".join(sort_by)
-    catalog.create_table(name, bmeta.schema(), **opts)
-    _save_spec(catalog, name, {
-        "base": base, "sort_by": sort_by, "last_epoch": 0,
-        "base_created_at": bmeta.created_at, "pending": None,
-        "version": 1})
-
-
-def _recover_pending(catalog: CStoreCatalog, name: str,
-                     spec: dict[str, Any]) -> None:
-    pending = spec.get("pending")
-    if not pending:
-        return
-    if catalog._epoch_committed(name, int(pending["view_epoch"])):
-        spec.update(pending["finalize"])
-    spec["pending"] = None
-    _save_spec(catalog, name, spec)
+    derived.create(catalog, _PROJECTIONS, name, bmeta.schema(),
+                   {"base": base, "sort_by": sort_by}, {"base": bmeta},
+                   version=1, **opts)
 
 
 def refresh_projection(catalog: CStoreCatalog,
@@ -118,50 +90,18 @@ def refresh_projection(catalog: CStoreCatalog,
     aggview contract: ``noop`` / ``incremental`` (delta files only,
     appended sorted) / ``full`` (base history collapsed or identity
     changed → rebuild via overwrite)."""
-    with _refresh_lock(catalog, name):
-        spec = _load_spec(catalog, name)
-        _recover_pending(catalog, name, spec)
-        bmeta = catalog._load_meta(spec["base"])
-        last = int(spec["last_epoch"])
-        cur = bmeta.write_epoch
-        sort_by = spec["sort_by"]
-        same = spec.get("base_created_at") == bmeta.created_at
-        if same and bmeta.history_floor <= last and cur == last:
-            return {"mode": "noop", "from_epoch": last, "to_epoch": cur}
-        vis = catalog._visible_files(bmeta)
-        if not same or bmeta.history_floor > last:
-            df = catalog._read_files(bmeta, vis)
-            overwrite, mode = True, "full"
-        else:
-            delta = [p for p in vis if _file_epoch(p) > last]
-            df = catalog._read_files(bmeta, delta)
-            overwrite, mode = False, "incremental"
-        # global order per batch: range partitioning makes every output
-        # file cover a disjoint sort-key range, so zone maps prune
-        df = df.repartitionByRange(*sort_by)
-        pmeta = catalog._load_meta(name)
-        spec["pending"] = {"view_epoch": pmeta.write_epoch + 1,
-                           "finalize": {
-                               "last_epoch": cur,
-                               "base_created_at": bmeta.created_at}}
-        _save_spec(catalog, name, spec)
-        catalog.insert(name, df, overwrite=overwrite)
-        spec["last_epoch"] = cur
-        spec["base_created_at"] = bmeta.created_at
-        spec["pending"] = None
-        _save_spec(catalog, name, spec)
-        return {"mode": mode, "from_epoch": last, "to_epoch": cur}
+    def build(spec, snaps, full):
+        return _sorted(spec, snaps["base"].read("all" if full else "new"),
+                       full)
+
+    return derived.refresh(catalog, _PROJECTIONS, name, ("base",), build)
 
 
 def list_projections(catalog: CStoreCatalog, base: str) -> list[str]:
-    out = []
-    for t in catalog.list_tables():
-        path = _sidecar_path(catalog, t)
-        if os.path.exists(path):
-            with open(path) as f:
-                if json.load(f).get("base") == base:
-                    out.append(t)
-    return sorted(out)
+    return sorted(
+        t for t in catalog.list_tables()
+        if os.path.exists(_PROJECTIONS.sidecar_path(catalog, t))
+        and _PROJECTIONS.load_spec(catalog, t).get("base") == base)
 
 
 def best_projection(catalog: CStoreCatalog, base: str,
@@ -175,11 +115,8 @@ def best_projection(catalog: CStoreCatalog, base: str,
     want = set(filter_cols)
     best_name, best_len = base, 0
     for t in list_projections(catalog, base):
-        spec = _load_spec(catalog, t)
-        fresh = (spec.get("base_created_at") == bmeta.created_at
-                 and int(spec["last_epoch"]) == bmeta.write_epoch
-                 and bmeta.history_floor <= int(spec["last_epoch"]))
-        if not fresh:
+        spec = _PROJECTIONS.load_spec(catalog, t)
+        if derived.refresh_mode(spec, {"base": bmeta}) != "noop":
             continue
         n = 0
         for c in spec["sort_by"]:

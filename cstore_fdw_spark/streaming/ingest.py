@@ -26,6 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cstore_fdw_spark.catalog import CStoreCatalog
 from cstore_fdw_spark.fsutil import flocked, write_json_atomic
+from cstore_fdw_spark.streaming.runner import start_foreach_batch
 
 _LEDGER_FILE = "_cstore_stream_batches.json"
 
@@ -36,7 +37,8 @@ def _ledger_path(catalog: CStoreCatalog, table: str) -> str:
 
 def _load_ledger(path: str) -> dict:
     """A streaming sink's JSON ledger; missing or torn reads as empty.
-    Every streaming sink (ingest, aggview, projection) keeps one."""
+    Every streaming sink (ingest and the derived-table sink) keeps
+    one."""
     try:
         with open(path) as f:
             return json.load(f)
@@ -84,9 +86,6 @@ def stream_into_table(catalog: CStoreCatalog, table: str, stream: DataFrame,
     ``trigger_available_now=True`` drains the current source content and
     stops (used by tests and backfills); the default runs continuously.
     """
-    writer = (stream.writeStream
-              .foreachBatch(batch_writer(catalog, table, checkpoint))
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream,
+                               batch_writer(catalog, table, checkpoint),
+                               checkpoint, trigger_available_now)

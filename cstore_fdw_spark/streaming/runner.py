@@ -1,7 +1,9 @@
-"""The one fixture reader and the one availableNow drain behind every
-streaming twin: ``fixture_stream`` turns a fixture parquet into a
-file-source stream, ``drain`` runs a streaming DataFrame to completion
-into a memory sink and hands back the result as a batch DataFrame."""
+"""The one fixture reader, the one availableNow drain and the one
+``foreachBatch`` start behind every stream: ``fixture_stream`` turns a
+fixture parquet into a file-source stream, ``drain`` runs a streaming
+DataFrame to completion into a memory sink and hands back the result as
+a batch DataFrame, and ``start_foreach_batch`` starts a stream into a
+catalog sink."""
 
 from __future__ import annotations
 
@@ -25,9 +27,9 @@ def fixture_stream(spark: SparkSession, sf_dir: str,
     # parquet directly, not a catalog table: there is no
     # history_floor/created_at that could move under the stream, and no
     # derived state is maintained from it (equality-twin harness only).
-    # Streams over CATALOG tables must use the guarded readers
-    # (streaming/aggview.source_stream, streaming/projections) — pinned
-    # by tests/test_streaming.py::test_every_readstream_guarded_or_exempt.
+    # Streams over CATALOG tables must use the guarded reader
+    # (derived.source_stream) — pinned by tests/test_streaming.py::
+    # test_every_readstream_guarded_or_exempt.
     # File-source streams need a directory: stream the sf dir with a glob
     # pinned to the table's file.
     stream = (spark.readStream.schema(
@@ -63,3 +65,15 @@ def drain(df: DataFrame, query_name: str, output_mode: str) -> DataFrame:
              .trigger(availableNow=True).start())
         await_drained(q)
     return df.sparkSession.table(query_name)
+
+
+def start_foreach_batch(stream: DataFrame, sink, checkpoint: str,
+                        available_now: bool) -> StreamingQuery:
+    """Start ``stream`` into the ``foreachBatch`` function ``sink``,
+    checkpointed at ``checkpoint``. ``available_now`` drains the current
+    source content and stops; otherwise the query runs continuously."""
+    writer = (stream.writeStream.foreachBatch(sink)
+              .option("checkpointLocation", checkpoint))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

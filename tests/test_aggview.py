@@ -131,17 +131,17 @@ def test_refresh_crash_after_state_commit_never_double_counts(
     catalog.insert("src", spark.createDataFrame(
         [("a", 10)], "g string, x long"))
 
-    real_save = aggview_mod._save_spec
+    real_save = aggview_mod._VIEWS.save_spec
 
     def crash_on_finalize(cat, view, spec):
         if spec.get("pending") is None and spec.get("last_epoch", 0) == 2:
             raise RuntimeError("injected crash before watermark finalize")
         return real_save(cat, view, spec)
 
-    monkeypatch.setattr(aggview_mod, "_save_spec", crash_on_finalize)
+    monkeypatch.setattr(aggview_mod._VIEWS, "save_spec", crash_on_finalize)
     with pytest.raises(RuntimeError, match="injected crash"):
         refresh_agg_view(catalog, "v")
-    monkeypatch.setattr(aggview_mod, "_save_spec", real_save)
+    monkeypatch.setattr(aggview_mod._VIEWS, "save_spec", real_save)
 
     # state committed but watermark is stale + pending: recovery must
     # finalize (noop), not re-merge epoch 2's delta a second time
@@ -364,7 +364,7 @@ def test_join_agg_view_rewrite_and_crash(spark, catalog, monkeypatch):
     # re-merge the delta
     catalog.insert("f", spark.createDataFrame(
         [(1, 100)], "dk long, x long"))
-    real_save = aggview_mod._save_spec
+    real_save = aggview_mod._VIEWS.save_spec
     fired = []
 
     def crash_on_finalize(cat, view, spec):
@@ -373,10 +373,10 @@ def test_join_agg_view_rewrite_and_crash(spark, catalog, monkeypatch):
             raise RuntimeError("injected crash")
         return real_save(cat, view, spec)
 
-    monkeypatch.setattr(aggview_mod, "_save_spec", crash_on_finalize)
+    monkeypatch.setattr(aggview_mod._VIEWS, "save_spec", crash_on_finalize)
     with pytest.raises(RuntimeError, match="injected crash"):
         refresh_join_agg_view(catalog, "jv")
-    monkeypatch.setattr(aggview_mod, "_save_spec", real_save)
+    monkeypatch.setattr(aggview_mod._VIEWS, "save_spec", real_save)
     r = refresh_join_agg_view(catalog, "jv")
     assert r["mode"] == "noop"
     assert _view2(catalog, "jv") == _jfull(spark, catalog,

@@ -94,7 +94,7 @@ def test_projection_refresh_crash_never_duplicates(spark, catalog,
 
     # crash AFTER the append, before the watermark finalize
     catalog.insert("b", spark.createDataFrame([(3, 3)], "k long, v long"))
-    real_save = proj_mod._save_spec
+    real_save = proj_mod._PROJECTIONS.save_spec
     fired = []
 
     def crash_finalize(cat, name, spec):
@@ -103,10 +103,10 @@ def test_projection_refresh_crash_never_duplicates(spark, catalog,
             raise RuntimeError("injected post-append crash")
         return real_save(cat, name, spec)
 
-    monkeypatch.setattr(proj_mod, "_save_spec", crash_finalize)
+    monkeypatch.setattr(proj_mod._PROJECTIONS, "save_spec", crash_finalize)
     with pytest.raises(RuntimeError, match="post-append"):
         refresh_projection(catalog, "p")
-    monkeypatch.setattr(proj_mod, "_save_spec", real_save)
+    monkeypatch.setattr(proj_mod._PROJECTIONS, "save_spec", real_save)
     assert refresh_projection(catalog, "p")["mode"] == "noop"
     assert catalog.read("p").count() == 3  # NOT 4: no double append
 
@@ -214,6 +214,52 @@ def test_streaming_projection_fails_loudly_after_base_rewrite(
     with pytest.raises(Exception, match="rewritten under a running stream"):
         q.awaitTermination(120)
     assert sorted(tuple(r) for r in catalog.read("ps").collect()) == before
+
+
+def test_streaming_projection_crash_between_append_and_ledger(
+        spark, catalog, tmp_path, monkeypatch):
+    """Crash injected between the projection stream's append and its
+    ledger finalize: the restarted stream replays the batch, recovery
+    sees the append's epoch stamp, finishes the ledger entry, and does
+    NOT append the batch a second time."""
+    import cstore_fdw_spark.derived as derived
+    from cstore_fdw_spark.streaming.projections import (
+        maintain_projection_stream)
+
+    catalog.create_table("b", "k long, v long")
+    create_projection(catalog, "b", "ps", sort_by=["k"])
+    # one partition per insert: one non-empty file each, so batch 0 (one
+    # file per micro-batch) carries rows whose double append would show
+    for rows in ([(5, 1), (1, 2), (3, 3)], [(9, 4)]):
+        catalog.insert("b", spark.createDataFrame(
+            rows, "k long, v long").coalesce(1))
+
+    real_save = derived._save_ledger
+    calls = []
+
+    def crash_on_finalize(path, ledger):
+        entry = next(iter(ledger.values()))
+        if entry.get("pending") is None and entry.get("last_batch") == 0:
+            calls.append(1)
+            raise RuntimeError("injected ledger-finalize crash")
+        return real_save(path, ledger)
+
+    monkeypatch.setattr(derived, "_save_ledger", crash_on_finalize)
+    q = maintain_projection_stream(catalog, "ps", str(tmp_path / "pck"))
+    try:
+        q.awaitTermination(120)
+    except Exception:
+        pass  # the injected crash fails the streaming query
+    assert calls, "injection never fired"
+    monkeypatch.setattr(derived, "_save_ledger", real_save)
+    landed = catalog.read("ps").count()
+    assert landed > 0  # batch 0's append committed before the crash
+
+    # restart replays batch 0; recovery must finish it, not re-append
+    q = maintain_projection_stream(catalog, "ps", str(tmp_path / "pck"))
+    q.awaitTermination(120)
+    rows = lambda t: sorted(tuple(r) for r in catalog.read(t).collect())
+    assert rows("ps") == rows("b")  # a double append repeats batch 0
 
 
 def test_projection_routed_scan_prunes(spark, sf_dir):

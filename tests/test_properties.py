@@ -636,6 +636,67 @@ def test_cstore_format_walks_and_encodes_one_way():
     assert not hasattr(cstore_format, "_assemble_file")
 
 
+def test_derived_tables_maintain_one_way():
+    """One maintenance protocol for every derived table (aggregate,
+    sketch and join views, projections and their streams): outside
+    catalog.py one function reads the epoch-stamp commit evidence and
+    one writes a pending record; the sidecar path, load, save and
+    refresh lock are each defined once; one function opens a stream
+    over a catalog table (the fixture readers stream read-only files and
+    stay exempt); one function starts every foreachBatch sink."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark
+
+    def method_call(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == name)
+        return pred
+
+    def pending_record(node):
+        def is_none(v):
+            return isinstance(v, ast.Constant) and v.value is None
+        if isinstance(node, ast.Assign):
+            return not is_none(node.value) and any(
+                isinstance(t, ast.Subscript)
+                and getattr(t.slice, "value", None) == "pending"
+                for t in node.targets)
+        if isinstance(node, ast.Dict):
+            return any(getattr(k, "value", None) == "pending"
+                       and not is_none(v)
+                       for k, v in zip(node.keys, node.values))
+        return False
+
+    def read_stream(node):
+        return isinstance(node, ast.Attribute) and node.attr == "readStream"
+
+    assert [hit for hit in _package_functions_using(
+        method_call("_epoch_committed")) if hit[0] != "catalog.py"] == [
+        ("derived.py", "_recover")]
+    assert _package_functions_using(pending_record) == [
+        ("derived.py", "_commit")]
+    pkg = pathlib.Path(cstore_fdw_spark.__file__).parent
+    defs = sorted((str(p.relative_to(pkg)), n.name)
+                  for p in pkg.rglob("*.py")
+                  for n in ast.walk(ast.parse(p.read_text()))
+                  if isinstance(n, ast.FunctionDef)
+                  and n.name.lstrip("_") in ("sidecar_path", "load_spec",
+                                             "save_spec", "refresh_lock"))
+    assert defs == [("derived.py", "load_spec"),
+                    ("derived.py", "refresh_lock"),
+                    ("derived.py", "save_spec"),
+                    ("derived.py", "sidecar_path")]
+    assert [hit for hit in _package_functions_using(read_stream)
+            if hit[0] not in ("streaming/runner.py",
+                              "streaming/stateful.py")] == [
+        ("derived.py", "source_stream")]
+    assert _package_functions_using(method_call("foreachBatch")) == [
+        ("streaming/runner.py", "start_foreach_batch")]
+
+
 def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
     """The dedup_minhash_lsh physical plan must not evaluate the shingle
     build inside a scan-level Filter: InferFiltersFromGenerate used to

@@ -406,7 +406,7 @@ def test_streaming_aggview_crash_between_commit_and_ledger(
     """Crash injected between the stream sink's state commit and its
     ledger finalize: the restarted stream replays the batch, recovery
     sees the stamped view epoch, finalizes, and does NOT re-merge."""
-    import cstore_fdw_spark.streaming.aggview as sagg
+    import cstore_fdw_spark.derived as derived
     from cstore_fdw_spark.aggview import create_agg_view
     from cstore_fdw_spark.streaming.aggview import maintain_agg_view_stream
 
@@ -415,7 +415,7 @@ def test_streaming_aggview_crash_between_commit_and_ledger(
     catalog.insert("src", spark.createDataFrame(
         [("a", 1), ("a", 10)], "g string, x long"))
 
-    real_save = sagg._save_ledger
+    real_save = derived._save_ledger
     calls = []
 
     def crash_on_finalize(path, ledger):
@@ -425,20 +425,84 @@ def test_streaming_aggview_crash_between_commit_and_ledger(
             raise RuntimeError("injected ledger-finalize crash")
         return real_save(path, ledger)
 
-    monkeypatch.setattr(sagg, "_save_ledger", crash_on_finalize)
+    monkeypatch.setattr(derived, "_save_ledger", crash_on_finalize)
     q = maintain_agg_view_stream(catalog, "vs", str(tmp_path / "ck"))
     try:
         q.awaitTermination(120)
     except Exception:
         pass  # the injected crash fails the streaming query
     assert calls, "injection never fired"
-    monkeypatch.setattr(sagg, "_save_ledger", real_save)
+    monkeypatch.setattr(derived, "_save_ledger", real_save)
 
     # restart replays batch 0; recovery must finalize, not re-merge
     q = maintain_agg_view_stream(catalog, "vs", str(tmp_path / "ck"))
     q.awaitTermination(120)
     [(g, n, s, mn, mx)] = [tuple(r) for r in catalog.read("vs").collect()]
     assert (g, n, s, mn, mx) == ("a", 2, 11, 1, 10)  # doubled = (4, 22)
+
+
+@pytest.mark.parametrize("kind", ["hll", "bloom", "quantile"])
+def test_streaming_sketch_view_matches_batch_refresh(spark, catalog,
+                                                     tmp_path, kind):
+    """Sketch views stream too: the sink merges each micro-batch through
+    the view kind's own (partial aggregate, merge) pair, so after every
+    append the streamed state equals the batch refresh of a twin view
+    (the sink used to hard-code the measures kind and died with
+    KeyError: 'measures')."""
+    from cstore_fdw_spark.aggview import (
+        create_bloom_agg_view, create_hll_agg_view,
+        create_quantile_agg_view, refresh_agg_view)
+    from cstore_fdw_spark.streaming.aggview import maintain_agg_view_stream
+
+    catalog.create_table("src", "g string, x long")
+    for view in ("vb", "vs"):
+        if kind == "hll":
+            create_hll_agg_view(catalog, view, "src", ["g"], "x")
+        elif kind == "bloom":
+            create_bloom_agg_view(catalog, view, "src", ["g"], "x",
+                                  m=64, k=3)
+        else:
+            create_quantile_agg_view(catalog, view, "src", ["g"], "x",
+                                     lo=0.0, hi=100.0, nbuckets=16)
+
+    def state(view):
+        return sorted(tuple(r) for r in catalog.read(view).collect())
+
+    for rows in ([("a", 1), ("a", 7), ("b", 40)],
+                 [("a", 7), ("b", 99), ("c", 3), ("a", 55)]):
+        catalog.insert("src", spark.createDataFrame(rows, "g string, x long"))
+        refresh_agg_view(catalog, "vb")
+        q = maintain_agg_view_stream(catalog, "vs", str(tmp_path / "ck"))
+        q.awaitTermination(120)
+        assert state("vs") == state("vb") and state("vb")
+
+
+def test_agg_view_streams_refuse_the_other_view_shape(spark, catalog,
+                                                      tmp_path):
+    """A join view given to the single-table stream entry, or a
+    single-table view given to the join entry, is refused with a
+    CStoreError naming the right entry point (it used to die with
+    KeyError: 'source' / 'fact'), and no stream is left running."""
+    from cstore_fdw_spark.aggview import (
+        create_agg_view, create_join_agg_view)
+    from cstore_fdw_spark.catalog import CStoreError
+    from cstore_fdw_spark.streaming.aggview import (
+        maintain_agg_view_stream, maintain_join_agg_view_stream)
+
+    catalog.create_table("f", "dk long, x long")
+    catalog.create_table("d", "dk long, region string")
+    create_join_agg_view(catalog, "jv", "f", "d", on=["dk"],
+                         keys=["region"], measures=["x"])
+    create_agg_view(catalog, "sv", "f", keys=["dk"], measures=["x"])
+    with pytest.raises(CStoreError,
+                       match="join aggregate view — use "
+                             "maintain_join_agg_view_stream"):
+        maintain_agg_view_stream(catalog, "jv", str(tmp_path / "a"))
+    with pytest.raises(CStoreError,
+                       match="single-table aggregate view — use "
+                             "maintain_agg_view_stream"):
+        maintain_join_agg_view_stream(catalog, "sv", str(tmp_path / "b"))
+    assert not spark.streams.active
 
 
 def test_streaming_join_aggview_matches_batch_refresh(spark, catalog,
