@@ -426,8 +426,8 @@ class CStoreCatalog:
         ``as_of_epoch`` clones a HISTORICAL snapshot instead of the
         current state — the restore idiom: ``clone_table(t, t_restored,
         as_of_epoch=N)`` materializes epoch N as a live table without
-        copying data. Refused below the ``history_floor`` with the same
-        vacuumed-snapshot error as ``read(as_of_epoch=...)``."""
+        copying data. Refused outside ``[history_floor, write_epoch]``
+        with the same snapshot errors as ``read(as_of_epoch=...)``."""
         if self.exists(dst):
             raise CStoreError(f'relation "{dst}" already exists')
         if "filename" in self._load_meta(src).options:
@@ -444,13 +444,6 @@ class CStoreCatalog:
             self._recover_compact(smeta, fmt)
             self._recover_orphans(smeta, fmt)
             src_data = self._data_path(smeta)
-            if (as_of_epoch is not None
-                    and as_of_epoch < smeta.history_floor):
-                raise CStoreError(
-                    f'snapshot epoch {as_of_epoch} of "{src}" predates '
-                    f"the last file rewrite (history floor "
-                    f"{smeta.history_floor}): the files backing it were "
-                    "vacuumed")
             files = self._visible_files(smeta, as_of_epoch=as_of_epoch)
             dst_dir = self.table_path(dst)
             # a crashed earlier clone left a meta-less dir: clear it
@@ -823,7 +816,7 @@ class CStoreCatalog:
             # full rewrite is the safe path, and it also repacks
             self._rewrite(name, keep=keep)
             return deleted
-        self._rewrite_df(meta, self._read_files(meta, touched).filter(keep),
+        self._rewrite_df(meta, self._scan(meta, touched).filter(keep),
                          base_epoch,
                          dropped=[os.path.relpath(p, data_path)
                                   for p in touched])
@@ -1045,31 +1038,9 @@ class CStoreCatalog:
             lohi = src.agg(F.min(keys[0]).alias("lo"),
                            F.max(keys[0]).alias("hi")).collect()[0]
             if lohi.lo is not None:
-                # a key column with an ACTIVE backfill watermark (or a
-                # drop/re-add reset epoch) reads the DEFAULT (or NULL)
-                # from files at/below it — their physical stats describe
-                # bytes the reader never returns, so those files are
-                # always candidates
-                wm = meta.backfill_watermark.get(keys[0])
-                rs = meta.column_reset_epoch.get(keys[0])
-                horizon = max((e for e in (wm, rs) if e is not None),
-                              default=None)
-                legacy_bf = set(meta.backfill_files.get(keys[0]) or [])
                 cand = []
                 for p in visible:
-                    if ((horizon is not None
-                         and _file_epoch(p) <= horizon)
-                            or os.path.basename(p) in legacy_bf):
-                        cand.append(p)
-                        continue
-                    rel = os.path.relpath(p, data_path)
-                    if rel in meta.file_stats:
-                        ent = meta.file_stats[rel].get(keys[0])
-                        rng = (None if ent is None
-                               else (_stats_decode(ent[0]),
-                                     _stats_decode(ent[1])))
-                    else:  # legacy meta — no commit-time zone map yet
-                        rng = _parquet_minmax(p, keys[0])
+                    rng = self._zone_map(meta, p, keys[0])
                     try:
                         untouched = (rng is not None
                                      and (rng[1] < lohi.lo
@@ -1082,7 +1053,7 @@ class CStoreCatalog:
                     pruned = True
                     candidate_rel = [os.path.relpath(p, data_path)
                                      for p in cand]
-                    tgt = self._read_files(meta, cand)
+                    tgt = self._scan(meta, cand)
 
         # one shuffle on the merge key: full-outer join of (key, packed
         # target row) with (key, packed source row); every downstream
@@ -1452,35 +1423,74 @@ class CStoreCatalog:
         ``history_floor``, and requesting a snapshot BELOW the floor
         raises a clear vacuumed-snapshot error — never silently wrong
         rows. Same contract as VACUUM'd MVCC or an expired Iceberg
-        snapshot. Current epoch: ``current_epoch()``.
+        snapshot. Current epoch: ``current_epoch()``; a snapshot past
+        it raises too.
         """
         meta = self._load_meta(name)
-        fmt = self._format(meta)
-        target = meta.schema()
         if columns is not None:
-            known = set(target.fieldNames())
+            known = set(meta.schema().fieldNames())
             missing = [c for c in columns if c not in known]
             if missing:
                 raise CStoreError(
                     f'column(s) {missing} do not exist in "{name}"')
-        out_schema = (target if columns is None else T.StructType(
-            [f_ for f_ in target.fields if f_.name in set(columns)]))
-        self._recover_compact(meta, fmt)
+        self._recover_compact(meta, self._format(meta))
+        return self._scan(meta, self._visible_files(meta, as_of_epoch),
+                          columns, live=True)
+
+    def _visible_files(self, meta: TableMeta,
+                       as_of_epoch: int | None = None) -> list[str]:
+        """The data files a reader may see: committed (epoch stamp ≤ the
+        visibility horizon — files above it belong to an uncommitted or
+        crashed insert batch) and not logically dropped by a file-pruned
+        rewrite whose physical unlink hasn't completed. ``as_of_epoch``
+        moves the horizon back and must lie in ``[history_floor,
+        write_epoch]``: below the floor the files backing it were
+        vacuumed, above the current epoch no commit has made it yet."""
         if as_of_epoch is not None and as_of_epoch < meta.history_floor:
             raise CStoreError(
-                f'snapshot epoch {as_of_epoch} of "{name}" predates the '
-                f"last file rewrite (history floor "
+                f'snapshot epoch {as_of_epoch} of "{meta.name}" predates '
+                f"the last file rewrite (history floor "
                 f"{meta.history_floor}): the files backing it were "
                 "vacuumed by compact/DELETE/MERGE/OVERWRITE/TRUNCATE")
+        if as_of_epoch is not None and as_of_epoch > meta.write_epoch:
+            raise CStoreError(
+                f'snapshot epoch {as_of_epoch} of "{meta.name}" is past '
+                f"its current epoch {meta.write_epoch}: no commit has "
+                "made it yet")
+        fmt = self._format(meta)
         data_path = self._data_path(meta)
-        all_files = (list(_data_files(data_path, fmt))
-                     if os.path.isdir(data_path) else [])
-        if not all_files:
-            return self.spark.createDataFrame([], out_schema)
-        paths = self._visible_files(meta, as_of_epoch=as_of_epoch)
+        if not os.path.isdir(data_path):
+            return []
+        horizon = (meta.write_epoch if as_of_epoch is None
+                   else as_of_epoch)
+        dropped = set(meta.dropped_files)
+        return [p for p in _data_files(data_path, fmt)
+                if _file_epoch(p) <= horizon
+                and os.path.relpath(p, data_path) not in dropped]
+
+    def _scan(self, meta: TableMeta, paths: list[str],
+              columns: list[str] | None = None,
+              live: bool = False) -> DataFrame:
+        """The one reader build: the data files ``paths`` (chosen by
+        :meth:`_visible_files`, or a pruned subset of them) read through
+        the schema-evolution projection, restricted to ``columns`` when
+        given. The physical schema comes from ``paths`` alone, so no
+        uncommitted or logically dropped file is ever opened.
+
+        ``live`` reads the table as :meth:`read` does: when ``paths`` is
+        every data file, the data directory itself loads. Without it the
+        read stays pinned to ``paths`` — the cstore data source lists a
+        directory only when the query runs, so a directory load would
+        also return rows a later commit adds (a derived-table refresh
+        would count them twice)."""
+        fmt = self._format(meta)
+        target = meta.schema()
         if not paths:
-            return self.spark.createDataFrame([], out_schema)
-        phys = _physical_schema(target, data_path, fmt)
+            keep = set(target.fieldNames() if columns is None else columns)
+            return self.spark.createDataFrame([], T.StructType(
+                [f_ for f_ in target.fields if f_.name in keep]))
+        data_path = self._data_path(meta)
+        phys = _physical_schema(target, paths, data_path, fmt)
         positions = None
         if columns is not None:
             wanted = set(columns)
@@ -1512,61 +1522,20 @@ class CStoreCatalog:
             from cstore_fdw_spark.sources.cstore_datasource import EPOCH_COL
             epoch_col = EPOCH_COL
             phys = phys.add(EPOCH_COL, T.LongType())
-        if len(paths) < len(all_files):
-            reader = (self.spark.read.schema(phys)
-                      # explicit file lists disable partition discovery
-                      # unless the hive-layout root is pinned
-                      .option("basePath", data_path))
-        else:
-            reader = self.spark.read.schema(phys)
+        reader = self.spark.read.schema(phys)
+        if live and len(paths) == sum(1 for _ in _data_files(data_path, fmt)):
             paths = [data_path]
+        else:
+            # explicit file lists disable partition discovery unless the
+            # hive-layout root is pinned
+            reader = reader.option("basePath", data_path)
         if epoch_col:
             reader = reader.option("with_epoch", "true")
         if positions is not None:
             reader = reader.option(
                 "column_positions", ",".join(map(str, positions)))
-        df = _load_df(reader, fmt, *paths)
-        return self._project(meta, df, epoch_col=epoch_col,
-                             subset=columns)
-
-    def _visible_files(self, meta: TableMeta,
-                       as_of_epoch: int | None = None) -> list[str]:
-        """The data files a reader may see: committed (epoch stamp ≤ the
-        visibility horizon — files above it belong to an uncommitted or
-        crashed insert batch) and not logically dropped by a file-pruned
-        rewrite whose physical unlink hasn't completed."""
-        fmt = self._format(meta)
-        data_path = self._data_path(meta)
-        if not os.path.isdir(data_path):
-            return []
-        horizon = (meta.write_epoch if as_of_epoch is None
-                   else as_of_epoch)
-        dropped = set(meta.dropped_files)
-        return [p for p in _data_files(data_path, fmt)
-                if _file_epoch(p) <= horizon
-                and os.path.relpath(p, data_path) not in dropped]
-
-    def _read_files(self, meta: TableMeta, paths: list[str]) -> DataFrame:
-        """Read an explicit subset of the table's data files through the
-        same schema-evolution projection as :meth:`read` — the scan side
-        of file-pruned MERGE/DELETE."""
-        target = meta.schema()
-        if not paths:
-            return self.spark.createDataFrame([], target)
-        fmt = self._format(meta)
-        data_path = self._data_path(meta)
-        phys = _physical_schema(target, data_path, fmt)
-        epoch_col = None
-        if fmt == "cstore":
-            from cstore_fdw_spark.sources.cstore_datasource import EPOCH_COL
-            epoch_col = EPOCH_COL
-            phys = phys.add(EPOCH_COL, T.LongType())
-        reader = (self.spark.read.schema(phys)
-                  .option("basePath", data_path))
-        if epoch_col:
-            reader = reader.option("with_epoch", "true")
         return self._project(meta, _load_df(reader, fmt, *paths),
-                             epoch_col=epoch_col)
+                             epoch_col=epoch_col, subset=columns)
 
     def _project(self, meta: TableMeta, df: DataFrame,
                  epoch_col: str | None = None,
@@ -1789,9 +1758,10 @@ class CStoreCatalog:
         projection that a catalog table can't express — compact() first
         (it bakes the defaults into the files)."""
         meta = self._load_meta(name)
+        data, fmt = self._data_path(meta), self._format(meta)
         if any(meta.backfill_watermark.get(c) is not None
                or meta.backfill_files.get(c) or c not in
-               _physical_columns(self._data_path(meta), self._format(meta))
+               _physical_columns(list(_data_files(data, fmt)), data, fmt)
                for c in meta.column_defaults):
             raise CStoreError(
                 f'table "{name}" has pending default backfill; run '
@@ -2081,47 +2051,57 @@ class CStoreCatalog:
 
     def column_minmax(self, name: str, column: str):
         """Metadata-only ``(min, max)`` of a column: folds the per-file
-        zone maps captured at commit time (``TableMeta.file_stats``) —
-        zero data reads, zero footer reads when stats are complete
-        (legacy files fall back to one footer read each). The companion
-        to :meth:`row_count` (A20) over the same stats the merge/delete
-        planner prunes with.
+        ranges of :meth:`_zone_map` (the commit-time zone maps in
+        ``TableMeta.file_stats``) over the visible files — zero data
+        reads, zero footer reads when stats are complete (legacy files
+        fall back to one footer read each). The companion to
+        :meth:`row_count` (A20) over the same rule the merge planner
+        prunes with.
 
         Returns ``None`` whenever a metadata answer could differ from
-        what a reader returns: a visible file without usable stats for
-        the column, an active backfill watermark / drop-re-add reset
-        (rows read a default the physical stats don't describe), or a
-        column carrying NULLs-only files. Callers fall back to a scan
+        what a reader returns: some visible file has no range for the
+        column (no usable stats, NULLs only, or rows that read a default
+        the physical stats don't describe). Callers fall back to a scan
         (or :meth:`analyze`)."""
         meta = self._load_meta(name)
-        fmt = self._format(meta)
-        if fmt not in ("parquet", "cstore"):
+        if self._format(meta) not in ("parquet", "cstore"):
             return None
         if column not in meta.schema().fieldNames():
             raise CStoreError(f'column "{column}" does not exist')
-        if meta.backfill_watermark.get(column) is not None \
-                or meta.backfill_files.get(column) \
-                or column in meta.column_reset_epoch:
-            return None
-        data_path = self._data_path(meta)
         lo = hi = None
         for p in self._visible_files(meta):
-            rel = os.path.relpath(p, data_path)
-            ent = meta.file_stats.get(rel)
-            if ent is None:
-                if fmt == "cstore":
-                    return None  # no footer fallback for the binary fmt
-                # legacy meta: one footer read for this file
-                rng = _parquet_minmax(p, column)
-            else:
-                pair = ent.get(column)
-                rng = (None if pair is None
-                       else (_stats_decode(pair[0]), _stats_decode(pair[1])))
+            rng = self._zone_map(meta, p, column)
             if rng is None:
                 return None
             lo = rng[0] if lo is None else min(lo, rng[0], key=_nan_last)
             hi = rng[1] if hi is None else max(hi, rng[1], key=_nan_last)
         return None if lo is None else (lo, hi)
+
+    def _zone_map(self, meta: TableMeta, path: str, column: str):
+        """The ``(min, max)`` a reader returns for ``column`` from data
+        file ``path``, taken from the commit-time zone map; ``None``
+        when the stats lack the column or :meth:`_project` replaces the
+        file's stored values (a backfill watermark or drop/re-add reset
+        epoch at or above the file's epoch, or a legacy
+        ``backfill_files`` entry naming the file). A file with no stats
+        entry (a pre-stats meta) costs one parquet footer read; a cstore
+        file then has no range."""
+        epoch = _file_epoch(path)
+        if any(h is not None and epoch <= h
+               for h in (meta.backfill_watermark.get(column),
+                         meta.column_reset_epoch.get(column))):
+            return None
+        if os.path.basename(path) in (meta.backfill_files.get(column)
+                                      or ()):
+            return None
+        ent = meta.file_stats.get(
+            os.path.relpath(path, self._data_path(meta)))
+        if ent is None:
+            return (_parquet_minmax(path, column)
+                    if self._format(meta) == "parquet" else None)
+        pair = ent.get(column)
+        return (None if pair is None
+                else (_stats_decode(pair[0]), _stats_decode(pair[1])))
 
     def analyze(self, name: str) -> dict[str, Any]:
         """A14 ANALYZE: column statistics for the optimizer. The reference
@@ -2281,25 +2261,25 @@ def _load_df(reader, fmt: str, *paths):
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def _physical_columns(data_path: str, fmt: str) -> set[str]:
-    """Union of column names physically present across the data files
-    (plus hive-style partition directory columns)."""
+def _physical_columns(paths: list[str], data_path: str,
+                      fmt: str) -> set[str]:
+    """Union of column names physically present in the data files
+    ``paths`` (plus the hive-style partition columns of their
+    directories under ``data_path``)."""
     phys_names: set[str] = set()
-    for root, dirs, _files in os.walk(data_path):
-        for d in dirs:
-            # hive-style partition directories carry partition columns
-            if "=" in d:
-                phys_names.add(d.split("=", 1)[0])
-    for path in _data_files(data_path, fmt):
+    for path in paths:
+        rel = os.path.relpath(os.path.dirname(path), data_path)
+        phys_names.update(d.split("=", 1)[0]
+                          for d in rel.split(os.sep) if "=" in d)
         phys_names.update(_file_schema_names(path, fmt))
     return phys_names
 
 
-def _physical_schema(target: T.StructType, data_path: str,
-                     fmt: str) -> T.StructType:
-    """Schema to hand the file reader: target columns that physically
-    exist in the files (added-but-never-written columns must not be
-    requested from the reader)."""
+def _physical_schema(target: T.StructType, paths: list[str],
+                     data_path: str, fmt: str) -> T.StructType:
+    """Schema to hand the file reader of ``paths``: target columns that
+    physically exist in those files (added-but-never-written columns
+    must not be requested from the reader)."""
     if fmt == "cstore":
         # nameless format: physical columns are a PREFIX of the target
         # schema (columns are append-only on cstore tables — DROP COLUMN
@@ -2308,11 +2288,10 @@ def _physical_schema(target: T.StructType, data_path: str,
         # and NULL-pads from old ones
         from cstore_fdw_spark.sources.cstore_format import (
             cstore_column_count)
-        width = max((cstore_column_count(pth)
-                     for pth in _data_files(data_path, fmt)), default=0)
+        width = max(map(cstore_column_count, paths), default=0)
         return T.StructType(
             target.fields[:min(width, len(target.fields))])
-    phys_names = _physical_columns(data_path, fmt)
+    phys_names = _physical_columns(paths, data_path, fmt)
     fields = [f_ for f_ in target.fields if f_.name in phys_names]
     return T.StructType(fields)
 
@@ -2339,7 +2318,13 @@ def _parquet_minmax(path: str, column: str):
     names = [md.schema.column(i).name for i in range(md.num_columns)]
     if column not in names:
         return None
-    ci = names.index(column)
+    return _row_group_minmax(md, names.index(column))
+
+
+def _row_group_minmax(md, ci: int):
+    """(min, max) of leaf column ``ci`` folded over every row group's
+    footer statistics in the parquet metadata ``md``; None when any row
+    group lacks them (or there are none)."""
     mins, maxs = [], []
     for g in range(md.num_row_groups):
         st = md.row_group(g).column(ci).statistics
@@ -2347,9 +2332,7 @@ def _parquet_minmax(path: str, column: str):
             return None
         mins.append(st.min)
         maxs.append(st.max)
-    if not mins:
-        return None
-    return min(mins), max(maxs)
+    return (min(mins), max(maxs)) if mins else None
 
 
 def _nan_last(v):
@@ -2434,19 +2417,11 @@ def _file_stats_from_footer(path: str) -> dict[str, list]:
     for ci, col in enumerate(names):
         if "." in col:  # nested leaf, not a prunable top-level column
             continue
-        mins: list = []
-        maxs: list = []
         try:
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    mins = []
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if not mins:
+            rng = _row_group_minmax(md, ci)
+            if rng is None:
                 continue
-            lo, hi = _stats_encode(min(mins)), _stats_encode(max(maxs))
+            lo, hi = _stats_encode(rng[0]), _stats_encode(rng[1])
         except Exception:  # unextractable/incomparable stats: omit column
             continue
         if lo is not None and hi is not None:

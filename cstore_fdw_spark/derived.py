@@ -166,7 +166,7 @@ class Snapshot(NamedTuple):
         after the watermark, or of the ``old`` ones at or below it."""
         files = [p for p in self.files if part == "all"
                  or (_file_epoch(p) > self.last) == (part == "new")]
-        return self.catalog._read_files(self.meta, files)
+        return self.catalog._scan(self.meta, files)
 
 
 def refresh(catalog: CStoreCatalog, family: Family, name: str,

@@ -13,6 +13,7 @@ with ``""`` escapes; we mirror that (SURVEY §7 hard-spot #4).
 
 from __future__ import annotations
 
+import contextlib
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -209,17 +210,12 @@ def copy_to_program(catalog: CStoreCatalog, table_or_df: str | DataFrame,
     ``cstore_fdw.c:651-707``). Returns the program's exit code (0; a
     failing program raises).
 
-    The export is staged through the distributed CSV writer, then the
-    part files stream into the program in deterministic (sorted) name
-    order."""
-    import glob
+    The export is staged through the distributed CSV writer, then
+    streams into the program (:func:`_staged_csv`)."""
     import subprocess
-    import tempfile
     import threading
 
-    with tempfile.TemporaryDirectory() as staged:
-        out_dir = f"{staged}/out"
-        copy_to_csv(catalog, table_or_df, out_dir, **csv_options)
+    with _staged_csv(catalog, table_or_df, csv_options) as chunks:
         proc = subprocess.Popen(command, shell=True,
                                 stdin=subprocess.PIPE,
                                 stderr=subprocess.PIPE)
@@ -232,10 +228,8 @@ def copy_to_program(catalog: CStoreCatalog, table_or_df: str | DataFrame,
             target=lambda: stderr_chunks.append(proc.stderr.read()))
         drain.start()
         try:
-            for part in sorted(glob.glob(f"{out_dir}/part-*")):
-                with open(part, "rb") as f:
-                    while chunk := f.read(1 << 20):
-                        proc.stdin.write(chunk)
+            for chunk in chunks:
+                proc.stdin.write(chunk)
             proc.stdin.close()
         except BrokenPipeError:
             # Early-exiting consumer (e.g. `head`) — not an error unless
@@ -251,6 +245,36 @@ def copy_to_program(catalog: CStoreCatalog, table_or_df: str | DataFrame,
                 f"program failed (exit {proc.returncode}): "
                 f"{stderr.decode(errors='replace')[:500]}")
     return 0
+
+
+@contextlib.contextmanager
+def _staged_csv(catalog: CStoreCatalog, table_or_df: str | DataFrame,
+                csv_options: dict[str, Any]):
+    """Stage a :func:`copy_to_csv` export in a temporary directory and
+    yield its bytes as one stream: part files in deterministic (sorted)
+    name order, 1 MiB chunks. The CSV writer puts the header line at the
+    top of every part file, so with ``header`` only the first is kept."""
+    import glob
+    import tempfile
+
+    header = str(csv_options.get("header", False)).lower() == "true"
+
+    def chunks(parts):
+        headed = False
+        for part in parts:
+            with open(part, "rb") as f:
+                if header:
+                    line = f.readline()
+                    if not headed:
+                        yield line
+                    headed = headed or bool(line)
+                while chunk := f.read(1 << 20):
+                    yield chunk
+
+    with tempfile.TemporaryDirectory() as staged:
+        out_dir = f"{staged}/out"
+        copy_to_csv(catalog, table_or_df, out_dir, **csv_options)
+        yield chunks(sorted(glob.glob(f"{out_dir}/part-*")))
 
 
 def copy_from_program(catalog: CStoreCatalog, table: str, command: str,
@@ -313,21 +337,13 @@ def copy_to_stdout(catalog: CStoreCatalog, table_or_df: str | DataFrame,
     """A6 (STDOUT form): ``COPY table TO STDOUT WITH CSV`` — export the
     table (or query DataFrame) as CSV into any writable file object,
     the symmetric twin of :func:`copy_from_stdin`. Returns the number of
-    bytes written. Part files stream in deterministic (sorted) order;
-    the writer handles binary and text streams alike."""
-    import glob
-    import tempfile
-
+    bytes written. The export streams as :func:`_staged_csv` lays it
+    out; the writer handles binary and text streams alike."""
     wants_bytes = not hasattr(stream, "encoding")
     written = 0
-    with tempfile.TemporaryDirectory() as staged:
-        out_dir = f"{staged}/out"
-        copy_to_csv(catalog, table_or_df, out_dir, header=header,
-                    **csv_options)
-        for part in sorted(glob.glob(f"{out_dir}/part-*")):
-            with open(part, "rb") as f:
-                while chunk := f.read(1 << 20):
-                    stream.write(chunk if wants_bytes
-                                 else chunk.decode())
-                    written += len(chunk)
+    with _staged_csv(catalog, table_or_df,
+                     {**csv_options, "header": header}) as chunks:
+        for chunk in chunks:
+            stream.write(chunk if wants_bytes else chunk.decode())
+            written += len(chunk)
     return written

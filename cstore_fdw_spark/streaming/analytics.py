@@ -97,20 +97,13 @@ def run_hll_available_now(spark: SparkSession, sf_dir: str,
     complete-mode streaming aggregation maintains the IDENTICAL sketch
     the batch query computes (state bounded by |groups| x 1024, never
     by rows seen: the sketch's 100 TB contract, live on a stream).
-    Drain with Trigger.AvailableNow, then run the literally shared
-    ``hll_estimate_from_registers`` finisher."""
-    from cstore_fdw_spark.functions.portable_hash import spark_h60
+    Drain with Trigger.AvailableNow; the state
+    (``hll_register_rollup``) and the finisher
+    (``hll_estimate_from_registers``) are the batch operator's own."""
     from cstore_fdw_spark.operators.analytics import (
-        HLL_M, HLL_RANK_BITS, _hll_rho_sql, hll_estimate_from_registers)
+        hll_estimate_from_registers, hll_register_rollup)
 
-    li = fixture_stream(spark, sf_dir, "lineitem")
-    h = spark_h60("cast(l_orderkey as string)")
-    rho = _hll_rho_sql(f"(h div {HLL_M}) % {1 << HLL_RANK_BITS}")
-    regs = (li.select(F.col("l_returnflag").alias("grp"),
-                      F.expr(h).alias("h"))
-            .select("grp", (F.col("h") % HLL_M).alias("reg"),
-                    F.expr(rho).alias("rho"))
-            .groupBy("grp", "reg").agg(F.max("rho").alias("m_rho")))
+    regs = hll_register_rollup(fixture_stream(spark, sf_dir, "lineitem"))
     t = drain(regs, query_name, "complete")
     # rebind the drained registers as a local relation (the finisher
     # left-joins the register frame against a grid derived from itself,

@@ -36,6 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bring_up  # noqa: E402
 from cstore_fdw_spark.operators import clear_caches, load_all  # noqa: E402
 from cstore_fdw_spark.session import get_spark  # noqa: E402
 
@@ -102,8 +103,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
 
-    from cstore_fdw_spark.operators.similarity import ensure_index_artifacts
-
     rows: dict[str, dict[str, int]] = {}
     times: dict[str, dict[str, float | None]] = {n: {} for n in names}
     index_build: dict[str, float] = {}
@@ -111,17 +110,9 @@ def main() -> None:
         label = os.path.basename(d.rstrip("/"))
         rows[label] = {t: table_rows(d, t) for t in
                        sorted({HEAVY.get(n, "lineitem") for n in names})}
-        spark.read.parquet(f"{d}/lineitem.parquet").limit(1).count()
-        t0 = time.perf_counter()
-        if not args.skip_index_build:
-            ensure_index_artifacts(spark, d)  # offline build, reported apart
-        if "scan_cstore_format_roundtrip" in names:
-            # marker-guarded v1.7 file-set write happens at builder
-            # construction — prebuild so the timed runs measure SERVING
-            # (bench.py's bring-up discipline)
-            registry["scan_cstore_format_roundtrip"].builder(spark, d)
-        index_build[label] = round(time.perf_counter() - t0, 3)
-        clear_caches(spark)
+        # offline builds, reported apart
+        index_build[label], _ = bring_up(
+            spark, d, registry, index=not args.skip_index_build)
         for n in names:
             prev = [v for v in times[n].values() if v is not None]
             if prev and prev[-1] > args.budget_sec:

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Time ONE registered query with the bench's exact methodology
-(noop sink, clear_caches between runs, N runs, run 1 = cold) and print
-a JSON line — the per-query A/B arm used by interleaved optimization
-measurements.
+(bench.py's bring-up, noop sink, clear_caches between runs, N runs,
+run 1 = cold) and print a JSON line — the per-query A/B arm used by
+interleaved optimization measurements.
 
 Usage::
 
@@ -28,15 +28,15 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
+    from bench import bring_up
     from cstore_fdw_spark.operators import clear_caches, load_all
     from cstore_fdw_spark.session import get_spark
 
     spark = get_spark(app_name=f"sqb-{args.query}")
     spark.sparkContext.setLogLevel("ERROR")
-    spec = load_all()[args.query]
-    warmup = f"{args.sf_dir}/lineitem.parquet"
-    if os.path.exists(warmup):
-        spark.read.parquet(warmup).limit(1).count()
+    registry = load_all()
+    spec = registry[args.query]
+    bring_up(spark, args.sf_dir, registry)
     runs = []
     for _ in range(args.runs):
         clear_caches(spark)

@@ -52,7 +52,7 @@ def test_incremental_refresh_matches_full_recompute(spark, catalog):
 
 
 def test_incremental_reads_only_delta_files(spark, catalog, monkeypatch):
-    """The incremental path must hand _read_files ONLY the files stamped
+    """The incremental path must hand _scan ONLY the files stamped
     after the watermark — the 100 TB contract."""
     catalog.create_table("src", "g string, x long")
     create_agg_view(catalog, "v", "src", keys=["g"], measures=["x"])
@@ -62,13 +62,13 @@ def test_incremental_reads_only_delta_files(spark, catalog, monkeypatch):
     refresh_agg_view(catalog, "v")  # watermark -> 3
 
     seen: list[list[str]] = []
-    orig = catalog_mod.CStoreCatalog._read_files
+    orig = catalog_mod.CStoreCatalog._scan
 
-    def spy(self, meta, paths):
+    def spy(self, meta, paths, *args, **kwargs):
         seen.append(sorted(paths))
-        return orig(self, meta, paths)
+        return orig(self, meta, paths, *args, **kwargs)
 
-    monkeypatch.setattr(catalog_mod.CStoreCatalog, "_read_files", spy)
+    monkeypatch.setattr(catalog_mod.CStoreCatalog, "_scan", spy)
     catalog.insert("src", spark.createDataFrame(
         [("a", 999)], "g string, x long"))
     r = refresh_agg_view(catalog, "v")
@@ -191,9 +191,22 @@ def test_full_recompute_pinned_to_snapshot_under_concurrent_insert(
     """A source commit landing between the refresh's metadata snapshot
     and its execution must NOT be folded into state stamped with the
     older watermark (it would then merge AGAIN on the next incremental
-    refresh = double count). The pinned ``_read_files`` list excludes
+    refresh = double count). The pinned ``_scan`` list excludes
     it; the next refresh picks it up exactly once."""
-    catalog.create_table("src", "g string, x long")
+    _check_full_recompute_pinned(spark, catalog, monkeypatch)
+
+
+def test_full_recompute_pinned_on_cstore_source(spark, catalog,
+                                                monkeypatch):
+    """The same pin over a cstore source, whose data source lists a
+    directory only when the query runs: the refresh must read its
+    snapshot's files, never the data directory."""
+    _check_full_recompute_pinned(spark, catalog, monkeypatch,
+                                 storage_format="cstore")
+
+
+def _check_full_recompute_pinned(spark, catalog, monkeypatch, **options):
+    catalog.create_table("src", "g string, x long", **options)
     create_agg_view(catalog, "v", "src", keys=["g"], measures=["x"])
     catalog.insert("src", spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 5)], "g string, x long"))
@@ -405,7 +418,7 @@ def test_join_agg_view_validation(spark, catalog):
 
 def test_join_refresh_reads_only_delta_fact_files(spark, catalog,
                                                   monkeypatch):
-    """The fact side of ΔF ⋈ D must hand _read_files ONLY the fact files
+    """The fact side of ΔF ⋈ D must hand _scan ONLY the fact files
     stamped after the fact watermark — a fact-only append never rescans
     old fact data (the 100 TB contract for star-schema views)."""
     from cstore_fdw_spark.aggview import (
@@ -423,13 +436,13 @@ def test_join_refresh_reads_only_delta_fact_files(spark, catalog,
     refresh_join_agg_view(catalog, "jv")  # fact watermark -> 3
 
     seen: list[list[str]] = []
-    orig = catalog_mod.CStoreCatalog._read_files
+    orig = catalog_mod.CStoreCatalog._scan
 
-    def spy(self, meta, paths):
+    def spy(self, meta, paths, *args, **kwargs):
         seen.append(sorted(paths))
-        return orig(self, meta, paths)
+        return orig(self, meta, paths, *args, **kwargs)
 
-    monkeypatch.setattr(catalog_mod.CStoreCatalog, "_read_files", spy)
+    monkeypatch.setattr(catalog_mod.CStoreCatalog, "_scan", spy)
     catalog.insert("f", spark.createDataFrame(
         [(1, 999)], "dk long, x long"))
     r = refresh_join_agg_view(catalog, "jv")

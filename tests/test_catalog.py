@@ -1543,3 +1543,79 @@ def test_clone_table_recovers_crashed_compact(spark, catalog):
     catalog.clone_table("cc", "cc2")
     assert catalog.read("cc2").count() == 10
     assert catalog.read("cc").count() == 10
+
+
+def _plant_uncommitted_copy(catalog, name, with_footer):
+    """Copy one committed data file under the next, never-committed
+    epoch stamp: what a writer killed inside its move-in leaves behind
+    (a cstore move renames ``x.cstore`` before ``x.cstore.footer``)."""
+    import shutil
+
+    meta = catalog._load_meta(name)
+    src = catalog._visible_files(meta)[0]
+    fn = os.path.basename(src)
+    dest = os.path.join(os.path.dirname(src),
+                        f"e{meta.write_epoch + 1:012d}-{fn[14:]}")
+    shutil.copy(src, dest)
+    if with_footer:
+        shutil.copy(src + ".footer", dest + ".footer")
+    return meta.write_epoch
+
+
+def test_killed_cstore_insert_keeps_table_readable(spark, catalog):
+    """A cstore insert killed between renaming a data file and its
+    footer leaves a footerless file stamped above the committed epoch.
+    Readers see only committed files, so the table reads its committed
+    rows, whole and projected, before any writer cleans up."""
+    catalog.create_table("kc", "a long, b long", storage_format="cstore")
+    catalog.insert("kc", spark.range(10).selectExpr("id as a", "id as b"))
+    _plant_uncommitted_copy(catalog, "kc", with_footer=False)
+
+    assert sorted(r.a for r in catalog.read("kc").collect()) == \
+        list(range(10))
+    assert catalog.read("kc", columns=["b"]).count() == 10
+    assert catalog.row_count("kc") == 10
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_snapshot_past_current_epoch_refused(spark, catalog, fmt):
+    """A snapshot epoch above the committed one names rows no commit
+    made visible: read(as_of_epoch=...) and clone_table(as_of_epoch=...)
+    refuse it with the current epoch, like a snapshot below the floor."""
+    catalog.create_table("fe", "a long", storage_format=fmt)
+    catalog.insert("fe", spark.range(10).selectExpr("id as a"))
+    epoch = _plant_uncommitted_copy(catalog, "fe",
+                                    with_footer=fmt == "cstore")
+
+    assert catalog.read("fe").count() == 10
+    assert catalog.read("fe", as_of_epoch=epoch).count() == 10
+    with pytest.raises(CStoreError, match=f"current epoch {epoch}"):
+        catalog.read("fe", as_of_epoch=epoch + 1)
+    with pytest.raises(CStoreError, match=f"current epoch {epoch}"):
+        catalog.clone_table("fe", "fe_clone", as_of_epoch=epoch + 5)
+    assert not catalog.exists("fe_clone")
+
+
+def test_copy_to_stdout_and_program_write_one_header(spark, catalog,
+                                                     tmp_path):
+    """COPY ... TO STDOUT / PROGRAM WITH HEADER writes the header once,
+    first, however many part files the export stages."""
+    import io as _io
+
+    from cstore_fdw_spark.io import copy_to_program, copy_to_stdout
+
+    catalog.create_table("h", "a long, b long")
+    catalog.insert("h", spark.range(40).repartition(4)
+                   .selectExpr("id as a", "id * 2 as b"))
+    expected = ["a,b"] + sorted(f"{i},{2 * i}" for i in range(40))
+
+    out = _io.StringIO()
+    n = copy_to_stdout(catalog, "h", out, header=True)
+    lines = out.getvalue().splitlines()
+    assert n == len(out.getvalue())
+    assert [lines[0]] + sorted(lines[1:]) == expected
+
+    sink = tmp_path / "sink.csv"
+    copy_to_program(catalog, "h", f"cat > {sink}", header=True)
+    lines = sink.read_text().splitlines()
+    assert [lines[0]] + sorted(lines[1:]) == expected

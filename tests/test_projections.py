@@ -52,13 +52,13 @@ def test_projection_incremental_reads_only_delta(spark, catalog,
     refresh_projection(catalog, "p")  # watermark -> 3
 
     seen = []
-    orig = catalog_mod.CStoreCatalog._read_files
+    orig = catalog_mod.CStoreCatalog._scan
 
-    def spy(self, meta, paths):
+    def spy(self, meta, paths, *args, **kwargs):
         seen.append(sorted(paths))
-        return orig(self, meta, paths)
+        return orig(self, meta, paths, *args, **kwargs)
 
-    monkeypatch.setattr(catalog_mod.CStoreCatalog, "_read_files", spy)
+    monkeypatch.setattr(catalog_mod.CStoreCatalog, "_scan", spy)
     catalog.insert("b", spark.createDataFrame([(9, 9)], "k long, v long"))
     r = refresh_projection(catalog, "p")
     assert r["mode"] == "incremental"

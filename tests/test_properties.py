@@ -717,3 +717,36 @@ def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
         if line.startswith("Condition") and "array_distinct" in line:
             raise AssertionError(
                 "shingle build found in a Filter condition:\n" + line)
+
+
+def test_catalog_reads_scan_one_way():
+    """One path each for the catalog read protocol: ``CStoreCatalog.
+    _scan`` is the only reader build (the physical schema, the format-
+    dispatched load and the schema-evolution projection), the snapshot
+    bounds are checked in one function, and the second reader build is
+    gone."""
+    import ast
+
+    from cstore_fdw_spark.catalog import CStoreCatalog
+
+    def call_to(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == name)
+        return pred
+
+    def method_call(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == name)
+        return pred
+
+    for pred in (call_to("_load_df"), call_to("_physical_schema"),
+                 method_call("_project")):
+        assert _package_functions_using(pred) == [("catalog.py", "_scan")]
+    assert _package_functions_using(
+        lambda n: isinstance(n, ast.Constant)
+        and "predates the last file rewrite" in str(n.value)) == [
+        ("catalog.py", "_visible_files")]
+    assert not hasattr(CStoreCatalog, "_read_files")
