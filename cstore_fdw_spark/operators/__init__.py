@@ -26,10 +26,13 @@ Determinism conventions (required for oracle hash-parity):
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from cstore_fdw_spark.session import conf_override
 
@@ -187,8 +190,56 @@ def load_all() -> dict[str, QuerySpec]:
     return REGISTRY
 
 
+#: session confs that change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: :func:`_schema_key` -> the schema ``spark.read.parquet`` inferred. A
+#: table's schema is declared once, as cstore_fdw declares it at CREATE
+#: FOREIGN TABLE, instead of being inferred by one Spark job per read.
+#: Process-wide and never cleared by :func:`clear_caches`: the key
+#: changes whenever the inferred schema could, so no entry goes stale.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """(absolute path, footer digest, inference confs) of the parquet
+    file at ``path``. Inference reads only the footer (its length is in
+    the last 8 bytes), so a same-size rewrite with another column type
+    changes the key where a file timestamp might not. None when
+    ``path`` is not a local parquet file (a directory, a URL): such a
+    table is inferred on every read."""
+    try:
+        with open(path, "rb") as fh:
+            fh.seek(-8, os.SEEK_END)
+            tail = fh.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            fh.seek(-8 - int.from_bytes(tail[:4], "little"), os.SEEK_END)
+            footer = fh.read()
+    except OSError:
+        return None
+    return (os.path.abspath(path), hashlib.blake2b(footer).digest(),
+            tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The fixture table ``{sf_dir}/{name}.parquet`` — the one parquet
+    table loader of the operators. Its schema is inferred on the first
+    read and declared on every later one, which launches no Spark job;
+    ``events`` comes out with a micros ``ts`` (:func:`events_ts_micros`)."""
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key:
+            _SCHEMAS[key] = df.schema
     return events_ts_micros(df) if name == "events" else df
 
 

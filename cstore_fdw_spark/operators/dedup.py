@@ -578,17 +578,17 @@ def lsh_verified_pairs(e: DataFrame, tau: float,
 
     ``dedup=False`` skips the candidate ``distinct()`` (one whole
     shuffle of the candidate set): a pair found in k of the LSH tables
-    then comes out k times. Callers whose downstream is a set-semantics
-    aggregate that shuffles anyway (connected components' min-label
-    propagation folds its own dropDuplicates into the edge-partitioning
-    exchange) get the same answer one exchange cheaper; callers that
-    COUNT pairs must keep the default."""
+    then comes out k times. Callers whose downstream has set semantics
+    (connected components' union-find absorbs a repeated edge) get the
+    same answer one exchange cheaper; callers that COUNT pairs must
+    keep the default."""
     from cstore_fdw_spark.operators.similarity import (
         cosine, lsh_bits_for, lsh_buckets)
 
-    # occupancy-targeted bit count from the corpus row count (parquet-
-    # footer count, no data scan): per-(label, table, bucket) occupancy
-    # stays ~constant as N grows, so candidate pairs stay flat-per-row
+    # occupancy-targeted bit count from the corpus row count (e.count()
+    # runs 2 jobs before the caller's action): per-(label, table,
+    # bucket) occupancy stays ~constant as N grows, so candidate pairs
+    # stay flat-per-row
     sig = (e.select("vec_id", "label",
                     F.posexplode(lsh_buckets("embedding",
                                              lsh_bits_for(e.count()))))
@@ -1383,13 +1383,98 @@ def dedup_connected_components(spark, sf_dir):
     way; the closure semantics over the blocked graph are then verified
     bit-for-bit).
 
-    Iterative min-label propagation: each round every vertex takes the
-    min of its own component id and its neighbors'; converges in
-    O(component diameter) rounds (checked distributedly — the driver only
-    sees a changed-row count per round). Per-round lineage is cut with
-    localCheckpoint so the plan doesn't grow with iterations — the
-    standard large-graph CC shape (GraphX/GraphFrames use the same
-    algorithm); edges shuffle-partition by src once and stay put.
+    Every verified pair shares a label, so no component crosses one:
+    each edge takes its label from ``vec_a`` and
+    :func:`label_blocked_components` closes every label's edges in one
+    grouped-map stage — no driver rounds, no checkpoints, and no job
+    before the caller's action except the corpus count that sizes the
+    LSH bits."""
+    e = table(spark, sf_dir, "embeddings")
+    # dedup=False: a pair found in k LSH tables comes out k times, which
+    # the union-find absorbs; a distinct() would cost its own exchange
+    pairs = lsh_verified_pairs(e, EMB_DEDUP_TAU, dedup=False)
+    edges = pairs.join(
+        e.select(F.col("vec_id").alias("vec_a"), "label"), "vec_a")
+    return label_blocked_components(
+        e.select("vec_id"),
+        edges.select("label", F.col("vec_a").alias("src"),
+                     F.col("vec_b").alias("dst")))
+
+
+def _min_root_components(pdf):
+    """Union-find over one label's ``(src, dst)`` edges: (vec_id,
+    component) for every vertex an edge touches. The larger root always
+    hangs under the smaller one, so each root is its component's
+    minimum vec_id."""
+    import pandas as pd
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    return pd.DataFrame({"vec_id": ids,
+                         "component": [find(v) for v in ids]},
+                        dtype="int64")
+
+
+def label_blocked_components(vertices: DataFrame,
+                             edges: DataFrame) -> DataFrame:
+    """Connected components of a graph whose edges never cross a label:
+    ``edges`` is (label, src, dst), each undirected edge in either (or
+    both, or duplicated — tolerated) orientation, and both ends of an
+    edge carry its label; ``vertices`` is a (vec_id) frame of every
+    node. Returns (vec_id, component), component = min reachable vec_id;
+    a vertex no edge touches is its own component.
+
+    One grouped-map stage: the edges shuffle by label and each label's
+    edges run through a union-find (:func:`_min_root_components`) in one
+    ``applyInPandas`` call, then the vertices left-join the result. Only
+    edges enter the groups, never a label's vertices, so the memory
+    bound is ONE LABEL'S VERIFIED EDGE SET in one Python worker. This is
+    the kernel for labeled edge streams (the LSH-verified embedding
+    graph); an edge stream without a label runs the distributed
+    :func:`connected_components_from_pairs` instead."""
+    comps = (edges.select("label", "src", "dst").groupBy("label")
+             .applyInPandas(_min_root_components,
+                            "vec_id long, component long"))
+    return (vertices.join(comps, "vec_id", "left")
+            .select("vec_id",
+                    F.coalesce("component", "vec_id").alias("component")))
+
+
+def connected_components_from_pairs(vertices: DataFrame,
+                                    pairs: DataFrame) -> DataFrame:
+    """Min-label propagation over an arbitrary verified near-dup pair
+    stream. ``vertices`` is a (vec_id) frame of every node (isolated
+    nodes come out as their own component); ``pairs`` is (src, dst)
+    with each undirected edge in either (or both, or duplicated —
+    tolerated) orientation. Returns (vec_id, component), component =
+    min reachable vec_id.
+
+    This is the kernel for edge streams WITHOUT a label that bounds
+    every component (the SimHash graph, :func:`simhash_components`),
+    where no single worker may hold a component's edges. When every
+    edge carries a label no component crosses,
+    :func:`label_blocked_components` computes the same answer in one
+    stage.
+
+    Each round every vertex takes the min of its own component id and
+    its neighbors'; converges in O(component diameter) rounds (checked
+    distributedly — the driver only sees a changed-row count per
+    round). Per-round lineage is cut with localCheckpoint so the plan
+    doesn't grow with iterations — the standard large-graph CC shape
+    (GraphX/GraphFrames use the same algorithm); edges
+    shuffle-partition by src once and stay put.
 
     TWO propagation steps run per job: at small scale the loop is
     round-scheduling-bound (near-dup clusters have tiny diameters), so
@@ -1399,31 +1484,6 @@ def dedup_connected_components(spark, sf_dir):
     stop test needs only the SECOND step's changed-count: step 2
     observing zero changes certifies a fixed point regardless of what
     step 1 did."""
-    e = table(spark, sf_dir, "embeddings")
-    # dedup=False: the candidate distinct's shuffle is FOLDED into the
-    # edge-partitioning exchange inside the shared propagation loop —
-    # repartition("src") clusters the (multi-table-duplicated) edges,
-    # so dropDuplicates there needs no exchange of its own
-    pairs = lsh_verified_pairs(e, EMB_DEDUP_TAU, dedup=False).select(
-        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-    return connected_components_from_pairs(e.select("vec_id"), pairs)
-
-
-def connected_components_from_pairs(vertices: DataFrame,
-                                    pairs: DataFrame) -> DataFrame:
-    """Min-label propagation over an arbitrary verified near-dup pair
-    stream — the ONE component-consumer shared by the embedding-cosine
-    graph (:func:`dedup_connected_components`) and the SimHash graph
-    (:func:`simhash_components`). ``vertices`` is a (vec_id) frame of
-    every node (isolated nodes come out as their own component);
-    ``pairs`` is (src, dst) with each undirected edge in either (or
-    both, or duplicated — tolerated) orientation. Returns
-    (vec_id, component), component = min reachable vec_id.
-
-    The algorithmic shape is documented on
-    :func:`dedup_connected_components` (double-step rounds, lazy
-    localCheckpoint lineage cuts, edges repartitioned by src once and
-    reused exchange-free every round)."""
     # repartition("src") clusters the (possibly duplicated) edges, so
     # dropDuplicates then needs NO exchange of its own (hash(src)
     # already co-locates every (src, dst) group), and the checkpoint
@@ -1510,8 +1570,9 @@ def simhash_components(spark, sf_dir):
     matter how dense the near-dup graph gets. One definition end to
     end: the edge stream IS :func:`dedup_simhash` (same signatures,
     same chunk blocking, same first-match dedup), and the propagation
-    loop IS :func:`connected_components_from_pairs` — the machinery
-    dedup_connected_components already runs on the embedding graph.
+    loop IS :func:`connected_components_from_pairs` — its pairs carry
+    no label that bounds a component, so the one-stage
+    :func:`label_blocked_components` does not apply.
     Every document appears (tokenless docs are their own singleton
     component); component = min doc_id reachable through any chain of
     Hamming-≤3 near-duplicates."""

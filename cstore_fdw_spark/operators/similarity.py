@@ -269,7 +269,7 @@ def ann_lsh_bucketed(spark, sf_dir):
     projections fold in dimension order (see lsh_buckets), so the DuckDB
     oracle recomputes the identical buckets, candidates, and ranking.
     The bit count is occupancy-targeted (lsh_bits_for over the corpus
-    row count — a parquet-footer count, no data scan): occupancy per
+    row count, whose ``count()`` runs 2 jobs in the builder): occupancy per
     (table, bucket) stays ~LSH_TARGET_OCCUPANCY as N grows, so candidate
     pairs stay flat-per-row instead of growing linearly per bucket.
     Output: (query_id, neighbor_id, rank, cos)."""

@@ -29,6 +29,13 @@ DEFAULT_ROW_GROUP_BYTES = 128 * 1024 * 1024  # stripe analog: row-group size
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS",
                        str(len(os.sched_getaffinity(0))))
 
+#: driver heap: a quarter of the host's RAM, at least 1g and at most
+#: 16g (see get_spark for why not more), unless SPARK_GRAFT_DRIVER_MEM
+#: says otherwise
+_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                             f"{max(1024, min(16384, _RAM_MB // 4))}m")
+
 #: the optimizer-rule exclusion list; :func:`conf_override` appends to
 #: it instead of replacing it
 EXCLUDED_RULES_CONF = "spark.sql.optimizer.excludedRules"
@@ -119,17 +126,16 @@ def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,
     # every cached block; the JVM-ergonomics default heap (~1/4 of RAM)
     # is memory-marginal for a 32-thread run (round-3 bench OOM'd there
     # — from unbounded cache accumulation, since fixed by track_cache).
-    # 16g is deliberate: with caches bounded to one query's working set
-    # the bench peaks far below it, and a LARGER heap measurably hurts —
+    # 16g is the cap, and a quarter of RAM below it (_DRIVER_MEM): with
+    # caches bounded to one query's working set the bench peaks far
+    # below it, and a LARGER heap measurably hurts —
     # at 64g G1's young generation grows to tens of GB and one allocation
     # burst per bench run ate a multi-second collection pause (observed
     # as a random query 3-4x over its steady-state time). Set before JVM
     # launch (PySpark passes builder confs to spark-submit at gateway
     # start); env-overridable for bigger scale factors. On a real
     # cluster spark-submit's own --driver-memory wins.
-    builder = builder.config(
-        "spark.driver.memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    builder = builder.config("spark.driver.memory", _DRIVER_MEM)
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_confs or {}).items():

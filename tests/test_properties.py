@@ -750,3 +750,84 @@ def test_catalog_reads_scan_one_way():
         and "predates the last file rewrite" in str(n.value)) == [
         ("catalog.py", "_visible_files")]
     assert not hasattr(CStoreCatalog, "_read_files")
+
+
+@st.composite
+def _labeled_graph(draw):
+    """(vertices, edges): vertex ids in random order, each with a label;
+    edges only inside a label, plus mirrored and duplicated copies of
+    some of them and self loops; label -1 always has a vertex and never
+    an edge."""
+    labels = draw(st.lists(st.integers(0, 3), min_size=1, max_size=12))
+    ids = draw(st.permutations(range(1, len(labels) + 2)))
+    verts = list(zip(ids, labels + [-1]))
+    ends = st.integers(0, len(labels) - 1)
+    edges = [(ids[a], ids[b])
+             for a, b in draw(st.lists(st.tuples(ends, ends), max_size=16))
+             if labels[a] == labels[b]]
+    if edges:
+        again = draw(st.lists(st.sampled_from(edges), max_size=4))
+        edges += again + [(b, a) for a, b in again]
+    edges += [(ids[v], ids[v]) for v in draw(st.lists(ends, max_size=2))]
+    label_of = dict(verts)
+    return verts, [(label_of[a], a, b) for a, b in edges]
+
+
+@SLOW
+@given(_labeled_graph())
+def test_label_blocked_components_equal_propagation(spark, graph):
+    """The one-stage label-blocked kernel and the distributed
+    propagation loop give every vertex the same component on any
+    labeled graph: isolated vertices, labels without edges, mirrored,
+    duplicated and self-loop edges included."""
+    from cstore_fdw_spark.operators.dedup import (
+        connected_components_from_pairs, label_blocked_components)
+
+    verts, edges = graph
+    vdf = spark.createDataFrame([(v,) for v, _ in verts], "vec_id long")
+    edf = spark.createDataFrame(edges, "label int, src long, dst long")
+
+    def components(df):
+        return {r["vec_id"]: r["component"] for r in df.collect()}
+
+    blocked = components(label_blocked_components(vdf, edf))
+    assert blocked == components(
+        connected_components_from_pairs(vdf, edf.select("src", "dst")))
+    assert len(blocked) == len(verts)
+
+
+def test_operators_load_tables_one_way():
+    """One table loader: under operators/, a parquet file is read only
+    by ``table``, which declares each table's cached schema instead of
+    inferring it per read, and by the trained index artifact read in
+    ``similarity._cached_codebook``."""
+    import ast
+
+    def receiver_attrs(node):
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                node = node.func
+        return names
+
+    def parquet_read(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and not {"write", "writeStream"}
+                & set(receiver_attrs(node.func.value)))
+
+    def schema_call(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "schema")
+
+    assert {hit for hit in _package_functions_using(parquet_read)
+            if hit[0].startswith("operators/")} == {
+        ("operators/__init__.py", "table"),
+        ("operators/similarity.py", "_cached_codebook")}
+    assert ("operators/__init__.py", "table") in _package_functions_using(
+        schema_call)
