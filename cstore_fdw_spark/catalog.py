@@ -1477,12 +1477,14 @@ class CStoreCatalog:
         given. The physical schema comes from ``paths`` alone, so no
         uncommitted or logically dropped file is ever opened.
 
-        ``live`` reads the table as :meth:`read` does: when ``paths`` is
-        every data file, the data directory itself loads. Without it the
-        read stays pinned to ``paths`` — the cstore data source lists a
-        directory only when the query runs, so a directory load would
-        also return rows a later commit adds (a derived-table refresh
-        would count them twice)."""
+        ``live`` reads a parquet table as :meth:`read` does: when
+        ``paths`` is every data file, the data directory itself loads,
+        because Spark lists a parquet directory when the DataFrame is
+        built, while an explicit list of more than 32 files starts a
+        listing job. Every other scan, and every cstore scan, stays
+        pinned to ``paths``: the cstore data source lists a directory
+        only when the query runs, so a directory load would also return
+        rows a later or uncommitted batch adds."""
         fmt = self._format(meta)
         target = meta.schema()
         if not paths:
@@ -1523,7 +1525,8 @@ class CStoreCatalog:
             epoch_col = EPOCH_COL
             phys = phys.add(EPOCH_COL, T.LongType())
         reader = self.spark.read.schema(phys)
-        if live and len(paths) == sum(1 for _ in _data_files(data_path, fmt)):
+        if (live and fmt != "cstore"
+                and len(paths) == sum(1 for _ in _data_files(data_path, fmt))):
             paths = [data_path]
         else:
             # explicit file lists disable partition discovery unless the
@@ -1534,7 +1537,7 @@ class CStoreCatalog:
         if positions is not None:
             reader = reader.option(
                 "column_positions", ",".join(map(str, positions)))
-        return self._project(meta, _load_df(reader, fmt, *paths),
+        return self._project(meta, _load_df(reader, fmt, paths),
                              epoch_col=epoch_col, subset=columns)
 
     def _project(self, meta: TableMeta, df: DataFrame,
@@ -2249,16 +2252,9 @@ def _save_df(writer, fmt: str, path: str) -> None:
         writer.format(fmt).save(path)
 
 
-def _load_df(reader, fmt: str, *paths):
-    """Format-dispatched read. The cstore python data source reads one
-    path per load; explicit multi-file reads union identical-schema
-    loads (same rows, stripe-per-partition parallelism preserved)."""
-    if fmt in ("parquet", "orc"):
-        return getattr(reader, fmt)(*paths)
-    from functools import reduce
-    loader = reader.format(fmt)
-    dfs = [loader.load(p) for p in paths]
-    return reduce(lambda a, b: a.unionByName(b), dfs)
+def _load_df(reader, fmt: str, paths: list[str]) -> DataFrame:
+    """Format-dispatched read of ``paths`` in one load, so one scan."""
+    return reader.format(fmt).load(paths)
 
 
 def _physical_columns(paths: list[str], data_path: str,

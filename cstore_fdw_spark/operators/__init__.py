@@ -243,6 +243,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return events_ts_micros(df) if name == "events" else df
 
 
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of the fixture table ``{sf_dir}/{name}.parquet``, read
+    from its parquet footer: no Spark job, unlike ``table(...).count()``
+    (two jobs before the caller's action)."""
+    import pyarrow.parquet as pq
+    return pq.read_metadata(f"{sf_dir}/{name}.parquet").num_rows
+
+
 def events_ts_micros(events: DataFrame) -> DataFrame:
     """The events ``ts`` column as a timestamp, batch or stream.
 

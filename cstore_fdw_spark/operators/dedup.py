@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from cstore_fdw_spark.operators import register, spread, table, track_cache
+from cstore_fdw_spark.operators import (register, spread, table, table_rows,
+                                        track_cache)
 
 #: Spark settings of the queries whose shuffles are CPU-dense per byte:
 #: hash self-joins and window ranks over 8-byte digests (the PPJoin
@@ -565,7 +566,7 @@ def dedup_embedding_cosine(spark, sf_dir):
                     (F.col("keeper_id") != F.col("vec_id")).alias("is_dup")))
 
 
-def lsh_verified_pairs(e: DataFrame, tau: float,
+def lsh_verified_pairs(e: DataFrame, tau: float, n_rows: int,
                        dedup: bool = True) -> DataFrame:
     """The scale-path candidate generator shared by the embedding-dedup
     family: sign-random-projection buckets (the deterministic multi-table
@@ -576,6 +577,10 @@ def lsh_verified_pairs(e: DataFrame, tau: float,
     100 TB. Candidates are then verified with the exact ordered-fold
     cosine. Output: (vec_a, vec_b) with vec_a < vec_b, cosine ≥ tau.
 
+    ``n_rows``, the corpus row count, sizes the LSH bits
+    (``lsh_bits_for``); callers take it from the table's parquet footer
+    (``operators.table_rows``), which runs no job.
+
     ``dedup=False`` skips the candidate ``distinct()`` (one whole
     shuffle of the candidate set): a pair found in k of the LSH tables
     then comes out k times. Callers whose downstream has set semantics
@@ -585,13 +590,12 @@ def lsh_verified_pairs(e: DataFrame, tau: float,
     from cstore_fdw_spark.operators.similarity import (
         cosine, lsh_bits_for, lsh_buckets)
 
-    # occupancy-targeted bit count from the corpus row count (e.count()
-    # runs 2 jobs before the caller's action): per-(label, table,
-    # bucket) occupancy stays ~constant as N grows, so candidate pairs
-    # stay flat-per-row
+    # occupancy-targeted bit count from the corpus row count: per-(label,
+    # table, bucket) occupancy stays ~constant as N grows, so candidate
+    # pairs stay flat-per-row
     sig = (e.select("vec_id", "label",
                     F.posexplode(lsh_buckets("embedding",
-                                             lsh_bits_for(e.count()))))
+                                             lsh_bits_for(n_rows))))
            .select("vec_id", "label",
                    F.struct(F.col("pos").alias("t"),
                             F.col("col").alias("b")).alias("tb")))
@@ -612,7 +616,8 @@ def lsh_verified_pairs(e: DataFrame, tau: float,
             .select("vec_a", "vec_b"))
 
 
-def embedding_lsh_dedup(e: DataFrame, tau: float) -> DataFrame:
+def embedding_lsh_dedup(e: DataFrame, tau: float,
+                        n_rows: int) -> DataFrame:
     """LSH pre-blocked embedding dedup over any (vec_id, label, embedding)
     DataFrame: candidate pairs from :func:`lsh_verified_pairs`, then every
     vector takes keeper = min(vec_id) over itself and its verified
@@ -620,7 +625,7 @@ def embedding_lsh_dedup(e: DataFrame, tau: float) -> DataFrame:
     dedup_embedding_cosine (whose output is the recall anchor: verified
     blocked pairs ⊆ exact pairs by construction).
     Output: (vec_id, keeper_id, is_dup)."""
-    pairs = lsh_verified_pairs(e, tau)
+    pairs = lsh_verified_pairs(e, tau, n_rows)
     edges = (pairs.select(F.col("vec_a").alias("vec_id"),
                           F.col("vec_b").alias("nb"))
              .unionByName(pairs.select(F.col("vec_b").alias("vec_id"),
@@ -689,7 +694,8 @@ def dedup_embedding_lsh_blocked(spark, sf_dir):
     (tests/test_properties.py asserts blocked ⊆ exact and full recall on
     clustered vectors)."""
     return embedding_lsh_dedup(table(spark, sf_dir, "embeddings"),
-                               EMB_DEDUP_TAU)
+                               EMB_DEDUP_TAU,
+                               table_rows(sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------- MinHash
@@ -1387,12 +1393,13 @@ def dedup_connected_components(spark, sf_dir):
     each edge takes its label from ``vec_a`` and
     :func:`label_blocked_components` closes every label's edges in one
     grouped-map stage — no driver rounds, no checkpoints, and no job
-    before the caller's action except the corpus count that sizes the
-    LSH bits."""
+    before the caller's action: the corpus count that sizes the LSH bits
+    comes from the parquet footer."""
     e = table(spark, sf_dir, "embeddings")
     # dedup=False: a pair found in k LSH tables comes out k times, which
     # the union-find absorbs; a distinct() would cost its own exchange
-    pairs = lsh_verified_pairs(e, EMB_DEDUP_TAU, dedup=False)
+    pairs = lsh_verified_pairs(e, EMB_DEDUP_TAU,
+                               table_rows(sf_dir, "embeddings"), dedup=False)
     edges = pairs.join(
         e.select(F.col("vec_id").alias("vec_a"), "label"), "vec_a")
     return label_blocked_components(

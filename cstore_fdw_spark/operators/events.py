@@ -517,6 +517,30 @@ def timeseries_trending_ratio(spark, sf_dir):
             .orderBy(F.col("trend_permille").desc(), "event_type"))
 
 
+def hourly_cents(events: DataFrame) -> DataFrame:
+    """The per-(event_type, hour) cents rollup ``(event_type, h, x)``,
+    ``x`` the hour's summed ``ROUND(value * 100)``: the one input of the
+    time-series operators below, batch or stream. It is a mergeable SUM
+    bounded by |event_type| x wall-time hours, never by rows, so a
+    complete-mode stream maintains the same state across micro-batches
+    that the batch query builds in one map-side-combined shuffle."""
+    return (events.select("event_type",
+                          F.date_trunc("hour", "ts").alias("h"),
+                          F.expr("CAST(ROUND(value * 100) AS BIGINT)")
+                          .alias("cents"))
+            .groupBy("event_type", "h")
+            .agg(F.sum("cents").alias("x")))
+
+
+def hourly_counts(events: DataFrame) -> DataFrame:
+    """The per-(event_type, hour) event count ``(event_type, h, cnt)``:
+    the MAD screen's one input, batch or stream, with the same mergeable
+    bound as :func:`hourly_cents`."""
+    return (events.groupBy("event_type",
+                           F.date_trunc("hour", "ts").alias("h"))
+            .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
+
+
 #: Holt smoothing horizon: hourly buckets folded per event type (the
 #: recursion depth of the oracle, NOT a corpus bound)
 HOLT_HOURS = 48
@@ -599,13 +623,7 @@ def timeseries_holt_smoothing(spark, sf_dir):
     surprise before ~2^59 hourly cents). At 100 TB the same shape
     holds: state per key is O(1), steps are time-bounded, and a
     1000-executor cluster folds every key in parallel."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     w = Window.partitionBy("event_type").orderBy("h")
     ranked = (hourly.withColumn("rn", F.row_number().over(w))
               .filter(F.col("rn") <= HOLT_HOURS)
@@ -681,13 +699,7 @@ def timeseries_cusum_changepoint(spark, sf_dir):
     argument as timeseries_holt_smoothing), and the argmax is a second
     window over those same rows, no extra shuffle of the corpus. All
     integers, so the oracle hash-matches bit for bit."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     return cusum_changepoints(hourly)
 
 
@@ -807,13 +819,7 @@ def timeseries_autocorr_lag1(spark, sf_dir):
     keyed final aggregate. Overflow headroom: Σc² needs
     n³·x̄² < 2^63 — beyond ~10^5 hours × 10^5-cent means, promote the
     products to DECIMAL(38,0); the plan shape is unchanged."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     wall = Window.partitionBy("event_type")
     word = Window.partitionBy("event_type").orderBy("h")
     centered = (hourly
@@ -877,13 +883,7 @@ def timeseries_mannkendall_trend(spark, sf_dir):
     is still ~26 M rows/key: if that ever dominates, the O(n log n)
     inversion-count form (merge-sort fold per key) drops in without
     changing this operator's contract."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     a, b = hourly.alias("a"), hourly.alias("b")
     sg = (F.when(F.col("b.x") > F.col("a.x"), 1)
           .when(F.col("b.x") < F.col("a.x"), -1).otherwise(0))
@@ -962,13 +962,7 @@ def timeseries_seasonal_decompose(spark, sf_dir):
     hod profile is |type| × 24 and joins back broadcast-sized, the two
     argmax windows partition by event_type over wall-time-bounded
     series. No corpus-sized exchange after the rollup."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     return seasonal_decompose_from_hourly(hourly)
 
 
@@ -1122,13 +1116,7 @@ def timeseries_downsample_lttb(spark, sf_dir):
     exact. Keys shorter than {LTTB_POINTS} hours are passed through
     untouched by real deployments; here they are excluded (both
     engines) to keep the contract total."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
 
     schema = ("event_type string, sel_idx long, rn long, h timestamp, "
               "x_cents long")
@@ -1312,13 +1300,7 @@ def timeseries_theilsen_slope(spark, sf_dir):
     median. The O(n log n) Theil-Sen variants exist if retention ever
     grows 100x; at any realistic monitoring window the model table is
     the whole cost."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     word = Window.partitionBy("event_type").orderBy("h")
     seq = hourly.withColumn("rn", F.row_number().over(word)) \
         .select("event_type", "rn", "x")
@@ -1483,13 +1465,7 @@ def timeseries_sma_crossover(spark, sf_dir):
     Scale: one map-side-combined corpus rollup, then per-key windows
     over the wall-time-bounded hourly series — the CUSUM/Holt shape;
     output is event-sized (crossovers), not series-sized."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.select("event_type",
-                       F.date_trunc("hour", "ts").alias("h"),
-                       F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                       .alias("cents"))
-              .groupBy("event_type", "h")
-              .agg(F.sum("cents").alias("x")))
+    hourly = hourly_cents(table(spark, sf_dir, "events"))
     word = Window.partitionBy("event_type").orderBy("h")
     wf = word.rowsBetween(-(SMA_FAST - 1), 0)
     ws = word.rowsBetween(-(SMA_SLOW - 1), 0)
@@ -1570,11 +1546,8 @@ def timeseries_anomaly_mad(spark, sf_dir):
     hourly aggregate; both rank windows and both join-backs run on the
     model table only, the same shape as the Mann-Kendall and Theil-Sen
     stages."""
-    e = table(spark, sf_dir, "events")
-    hourly = (e.groupBy("event_type",
-                        F.date_trunc("hour", "ts").alias("h"))
-              .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    return mad_anomalies_from_hourly(hourly)
+    return mad_anomalies_from_hourly(
+        hourly_counts(table(spark, sf_dir, "events")))
 
 
 def mad_anomalies_from_hourly(hourly) -> DataFrame:

@@ -42,9 +42,9 @@ from __future__ import annotations
 import math
 import struct
 
-from pyspark.sql import functions as F
-
-from cstore_fdw_spark.operators import register, table
+from cstore_fdw_spark.operators import register
+from cstore_fdw_spark.operators.multimodal import (
+    _PIXEL_SCHEMA, _decode_rows, _media_payloads, _pixel_stats)
 
 # --------------------------------------------------------------- tables
 
@@ -704,36 +704,11 @@ def multimodal_jpeg_decode(spark, sf_dir):
     form without ever seeing a JPEG byte. Batch-level Arrow
     ``mapInPandas`` on both sides — the decode parallelizes per
     partition, no Python in any shuffle."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 29 == 0).select("doc_id"))
+    def payload(doc_id):
+        wb, hb = 1 + doc_id % 3, 1 + doc_id % 2
+        return jpeg_encode_gray_blocks(
+            8 * wb, 8 * hb,
+            lambda bx, by: (doc_id * 37 + (by * wb + bx) * 13) % 256)
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                wb, hb = 1 + doc_id % 3, 1 + doc_id % 2
-                payloads.append(jpeg_encode_gray_blocks(
-                    8 * wb, 8 * hb,
-                    lambda bx, by, i=doc_id, w=wb:
-                        (i * 37 + (by * w + bx) * 13) % 256))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = jpeg_decode_baseline(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_bytes",
-                               "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 29, payload),
+                        _pixel_stats(jpeg_decode_baseline), _PIXEL_SCHEMA)

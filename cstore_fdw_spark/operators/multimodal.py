@@ -18,6 +18,12 @@ progressive decoder in ``jpeg_codec.py``). Everything around the codecs — bina
 metadata struct, Arrow batch iteration, UDF signatures,
 partition-parallel execution — is real and tested.
 
+Every codec query is a closed-form payload, a decode call and a schema
+over one round trip: :func:`_media_payloads` fabricates each selected
+document's payload and :func:`_decode_rows` decodes it into rows, two
+Arrow ``mapInPandas`` stages. The oracle recomputes the decoded values
+from the same closed form without seeing a byte.
+
 Scale notes: mapInPandas streams Arrow batches (no per-row Python), binary
 payloads never shuffle (all derivations are per-partition projections),
 and aggregations happen after feature extraction reduces width.
@@ -51,6 +57,58 @@ def media_table(spark, sf_dir) -> DataFrame:
             F.lit("application/octet-stream").alias("media_type"),
             F.octet_length(F.encode("text", "utf-8")).cast("long").alias("byte_len"),
             F.col("source").alias("source")).alias("meta"))
+
+
+def _media_payloads(spark, sf_dir, every: int, payload) -> DataFrame:
+    """``(doc_id, payload)`` for every ``every``-th document, with the
+    bytes fabricated by ``payload(doc_id)`` in one Arrow ``mapInPandas``
+    stage: the encode half of every codec query, whose payloads the
+    oracle recomputes in closed form without seeing a byte."""
+    d = (table(spark, sf_dir, "documents")
+         .filter(F.col("doc_id") % every == 0).select("doc_id"))
+
+    def encode(batches):
+        import pandas as pd
+        for pdf in batches:
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "payload": [payload(int(i)) for i in pdf["doc_id"]]})
+
+    return d.mapInPandas(encode, "doc_id long, payload binary")
+
+
+def _decode_rows(media: DataFrame, decode, schema: str) -> DataFrame:
+    """The rows ``decode(doc_id, payload)`` returns for each
+    ``(doc_id, payload)`` row of ``media``, under the DDL ``schema``, in
+    one Arrow ``mapInPandas`` stage: the decode half of every codec
+    query. A list of rows, not one row, because a video decode emits one
+    per frame. Payloads stay inside the batch and never shuffle."""
+    columns = [c.split()[0] for c in schema.split(",")]
+
+    def rows(batches):
+        import pandas as pd
+        for pdf in batches:
+            yield pd.DataFrame(
+                [r for doc_id, p in zip(pdf["doc_id"], pdf["payload"])
+                 for r in decode(int(doc_id), bytes(p))],
+                columns=columns)
+
+    return media.mapInPandas(rows, schema)
+
+
+#: the row every image decode query emits (:func:`_pixel_stats`)
+_PIXEL_SCHEMA = ("doc_id long, width long, height long, n_bytes long, "
+                 "px_sum long")
+
+
+def _pixel_stats(decoder):
+    """A :func:`_decode_rows` decode for an image ``decoder`` returning
+    ``(width, height, channels, raster)``: one row of the dimensions,
+    the raster length and its byte sum."""
+    def stats(doc_id: int, payload: bytes) -> list[tuple]:
+        w, h, _ch, raster = decoder(payload)
+        return [(doc_id, w, h, len(raster), sum(raster))]
+    return stats
 
 
 def decode_stub(payload: bytes) -> dict:
@@ -122,19 +180,12 @@ def multimodal_decode_meta(spark, sf_dir):
 def multimodal_frame_sample(spark, sf_dir):
     """Frame sampling over fake video payloads: every {stride}-th byte is a
     'frame'; counts + first frame byte per document via mapInPandas."""
-    def frames(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_frames": [(len(p) - 1) // FRAME_STRIDE + 1 for p in payloads],
-                "first_frame_byte": [p[0] for p in payloads],
-            })
-    schema = "doc_id long, n_frames long, first_frame_byte long"
-    return (media_table(spark, sf_dir)
-            .filter(F.col("meta.byte_len") > 0)
-            .mapInPandas(frames, schema=schema))
+    def frames(doc_id, payload):
+        return [(doc_id, (len(payload) - 1) // FRAME_STRIDE + 1, payload[0])]
+
+    return _decode_rows(
+        media_table(spark, sf_dir).filter(F.col("meta.byte_len") > 0),
+        frames, "doc_id long, n_frames long, first_frame_byte long")
 
 
 @register(
@@ -257,21 +308,12 @@ def multimodal_image_dims(spark, sf_dir):
                F.unbase64(F.lit(PNG_1x1_B64)))
          .otherwise(F.encode("text", "utf-8")).alias("payload"))
 
-    def dims(batches):
-        import pandas as pd
-        for pdf in batches:
-            parsed = [parse_image_dims(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "fmt": [p[0] if p else "raw" for p in parsed],
-                "width": [p[1] if p else None for p in parsed],
-                "height": [p[2] if p else None for p in parsed],
-                "byte_len": [len(b) for b in pdf["payload"]],
-            })
+    def dims(doc_id, payload):
+        fmt, w, h = parse_image_dims(payload) or ("raw", None, None)
+        return [(doc_id, fmt, w, h, len(payload))]
 
-    return media.mapInPandas(
-        dims, "doc_id long, fmt string, width long, height long, "
-              "byte_len long")
+    return _decode_rows(media, dims, "doc_id long, fmt string, width long, "
+                                     "height long, byte_len long")
 
 
 # ----------------------------------------------------- real pixel decode
@@ -283,6 +325,22 @@ def _png_chunk(tag: bytes, data: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
 
 
+def _png_file(width: int, height: int, depth: int, ctype: int,
+              scanlines: bytes, interlace: int = 0,
+              plte: bytes = b"") -> bytes:
+    """The one PNG container writer (RFC 2083 §3): signature, IHDR, an
+    optional PLTE, one zlib IDAT over the filtered ``scanlines``, IEND."""
+    import struct
+    import zlib
+
+    ihdr = struct.pack(">IIBBBBB", width, height, depth, ctype, 0, 0,
+                       interlace)
+    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+            + (_png_chunk(b"PLTE", plte) if plte else b"")
+            + _png_chunk(b"IDAT", zlib.compress(scanlines))
+            + _png_chunk(b"IEND", b""))
+
+
 def png_encode_rgb(width: int, height: int, raster: bytes,
                    filter_type: int = 0) -> bytes:
     """REAL PNG writer (stdlib struct+zlib): 8-bit RGB, non-interlaced,
@@ -290,41 +348,10 @@ def png_encode_rgb(width: int, height: int, raster: bytes,
     image payloads whose pixels the oracle can recompute in closed form.
     Supports all five PNG filters (None/Sub/Up/Average/Paeth, RFC 2083
     §6), so the decoder's unfilter paths are each exercised for real."""
-    import struct
-    import zlib
-
     stride = width * 3
-    prev = bytes(stride)
-    out = []
-    for y in range(height):
-        raw = raster[y * stride:(y + 1) * stride]
-        f = filter_type
-        filt = bytearray()
-        for x in range(stride):
-            a = raw[x - 3] if x >= 3 else 0      # left
-            b = prev[x]                           # up
-            c = prev[x - 3] if x >= 3 else 0     # up-left
-            if f == 0:
-                v = raw[x]
-            elif f == 1:
-                v = (raw[x] - a) % 256
-            elif f == 2:
-                v = (raw[x] - b) % 256
-            elif f == 3:
-                v = (raw[x] - (a + b) // 2) % 256
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else \
-                    (b if pb <= pc else c)
-                v = (raw[x] - pred) % 256
-            filt.append(v)
-        out.append(bytes([f]) + bytes(filt))
-        prev = raw
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(b"".join(out)))
-            + _png_chunk(b"IEND", b""))
+    rows = [raster[y * stride:(y + 1) * stride] for y in range(height)]
+    return _png_file(width, height, 8, 2,
+                     _filter_scanlines(rows, 3, [filter_type] * height))
 
 
 #: channels per PNG color type (RFC 2083 §4.1.1); type 3 = palette
@@ -337,35 +364,46 @@ _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
           (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
 
 
+def _paeth(a: int, b: int, c: int) -> int:
+    """The Paeth predictor (RFC 2083 §6.6): whichever of left ``a``, up
+    ``b`` and up-left ``c`` is closest to ``a + b - c``, ties in that
+    order."""
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+
+
+def _predict(f: int, a: int, b: int, c: int) -> int:
+    """The predictor of PNG scanline filter ``f`` (RFC 2083 §6) from the
+    left, up and up-left bytes; the filter subtracts it, the decoder
+    adds it back."""
+    if f == 0:
+        return 0
+    if f == 1:
+        return a
+    if f == 2:
+        return b
+    if f == 3:
+        return (a + b) // 2
+    if f == 4:
+        return _paeth(a, b, c)
+    raise ValueError(f"bad PNG filter {f}")
+
+
 def _filter_scanlines(rows: list[bytes], bpp: int,
-                      filter_type: int) -> bytes:
-    """Apply one PNG scanline filter (RFC 2083 §6) to every row; returns
-    the concatenated (filter byte + filtered row) stream. Shared by the
-    sequential and the per-Adam7-pass encoders."""
+                      filters: list[int]) -> bytes:
+    """Apply PNG scanline filter ``filters[y]`` (RFC 2083 §6) to row
+    ``y``, each against the true previous row; returns the concatenated
+    (filter byte + filtered row) stream. The one filter of every PNG
+    writer, sequential or per Adam7 pass."""
     prev = bytes(len(rows[0])) if rows else b""
     out = []
-    for raw in rows:
-        f = filter_type
+    for raw, f in zip(rows, filters):
         filt = bytearray()
         for x in range(len(raw)):
             a = raw[x - bpp] if x >= bpp else 0
-            b = prev[x]
             c = prev[x - bpp] if x >= bpp else 0
-            if f == 0:
-                v = raw[x]
-            elif f == 1:
-                v = (raw[x] - a) % 256
-            elif f == 2:
-                v = (raw[x] - b) % 256
-            elif f == 3:
-                v = (raw[x] - (a + b) // 2) % 256
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else \
-                    (b if pb <= pc else c)
-                v = (raw[x] - pred) % 256
-            filt.append(v)
+            filt.append((raw[x] - _predict(f, a, prev[x], c)) % 256)
         out.append(bytes([f]) + bytes(filt))
         prev = raw
     return b"".join(out)
@@ -387,24 +425,8 @@ def _unfilter_scanlines(raw: bytes, offset: int, stride: int, height: int,
         cur = bytearray()
         for x in range(stride):
             a = cur[x - bpp] if x >= bpp else 0
-            b = prev[x]
             c = prev[x - bpp] if x >= bpp else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) // 2
-            elif f == 4:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else \
-                    (b if pb <= pc else c)
-            else:
-                raise ValueError(f"bad PNG filter {f}")
-            cur.append((row[x] + pred) % 256)
+            cur.append((row[x] + _predict(f, a, prev[x], c)) % 256)
         prev = bytes(cur)
         rows.append(prev)
     return rows, offset
@@ -443,9 +465,6 @@ def png_encode_rgb_interlaced(width: int, height: int,
     varies by pass so the unfilter paths are exercised under interlace
     too), then compressed as one IDAT stream. Used to fabricate genuine
     interlaced payloads for the decoder's round-trip tests."""
-    import struct
-    import zlib
-
     bpp = 3
     out = []
     for p, ((x0, y0, dx, dy), (pw, ph)) in enumerate(
@@ -460,11 +479,8 @@ def png_encode_rgb_interlaced(width: int, height: int,
                 pos = (y * width + x0 + rx * dx) * bpp
                 row.extend(raster[pos:pos + bpp])
             rows.append(bytes(row))
-        out.append(_filter_scanlines(rows, bpp, p % 5))
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 1)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(b"".join(out)))
-            + _png_chunk(b"IEND", b""))
+        out.append(_filter_scanlines(rows, bpp, [p % 5] * ph))
+    return _png_file(width, height, 8, 2, b"".join(out), interlace=1)
 
 
 def png_encode_palette(width: int, height: int, indices: bytes,
@@ -474,42 +490,10 @@ def png_encode_palette(width: int, height: int, indices: bytes,
     chunk of RGB entries plus one index byte per pixel, scanline-filtered
     like any other PNG (bpp = 1). Fabricates genuine type-3 payloads
     whose pixels the oracle recomputes in closed form."""
-    import struct
-    import zlib
-
-    prev = bytes(width)
-    out = []
-    for y in range(height):
-        raw = indices[y * width:(y + 1) * width]
-        f = filter_type
-        filt = bytearray()
-        for x in range(width):
-            a = raw[x - 1] if x >= 1 else 0
-            b = prev[x]
-            c = prev[x - 1] if x >= 1 else 0
-            if f == 0:
-                v = raw[x]
-            elif f == 1:
-                v = (raw[x] - a) % 256
-            elif f == 2:
-                v = (raw[x] - b) % 256
-            elif f == 3:
-                v = (raw[x] - (a + b) // 2) % 256
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else \
-                    (b if pb <= pc else c)
-                v = (raw[x] - pred) % 256
-            filt.append(v)
-        out.append(bytes([f]) + bytes(filt))
-        prev = raw
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 3, 0, 0, 0)
-    plte = b"".join(bytes(rgb) for rgb in palette)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"PLTE", plte)
-            + _png_chunk(b"IDAT", zlib.compress(b"".join(out)))
-            + _png_chunk(b"IEND", b""))
+    rows = [indices[y * width:(y + 1) * width] for y in range(height)]
+    return _png_file(width, height, 8, 3,
+                     _filter_scanlines(rows, 1, [filter_type] * height),
+                     plte=b"".join(bytes(rgb) for rgb in palette))
 
 
 def _pil_decode(payload: bytes) -> tuple[int, int, int, bytes]:
@@ -621,42 +605,15 @@ def multimodal_pixel_decode(spark, sf_dir):
     are covered by their own stdlib paths (multimodal_palette_decode,
     test_multimodal round-trips); only JPEG stays codec-library
     territory."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 5 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 1 + doc_id % 4, 1 + doc_id % 3
+        raster = bytes((doc_id * 31 + k) % 256 for k in range(w * h * 3))
+        # doc_id % 5 is always 0 here (every 5th doc is encoded) — vary
+        # on doc_id//5 so the pipeline exercises all five PNG filters
+        return png_encode_rgb(w, h, raster, filter_type=(doc_id // 5) % 5)
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 1 + doc_id % 4, 1 + doc_id % 3
-                raster = bytes((doc_id * 31 + k) % 256
-                               for k in range(w * h * 3))
-                # doc_id % 5 is always 0 here (the filter above selects
-                # every 5th doc) — vary on doc_id//5 so the pipeline
-                # actually exercises all five PNG filter types
-                payloads.append(png_encode_rgb(
-                    w, h, raster, filter_type=(doc_id // 5) % 5))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = png_decode_pixels(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height",
-                               "n_bytes", "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 5, payload),
+                        _pixel_stats(png_decode_pixels), _PIXEL_SCHEMA)
 
 
 @register(
@@ -688,44 +645,17 @@ def multimodal_palette_decode(spark, sf_dir):
     end-to-end. Adam7-interlaced PNG decodes in stdlib too
     (:func:`_adam7_deinterlace`); only JPEG remains behind the
     optional-PIL fallback (:func:`_pil_decode`)."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 11 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 1 + doc_id % 4, 1 + doc_id % 3
+        palette = [((doc_id * 7 + i * 3) % 256,
+                    (doc_id * 11 + i * 5) % 256,
+                    (doc_id * 13 + i * 7) % 256) for i in range(16)]
+        indices = bytes((doc_id + k) % 16 for k in range(w * h))
+        return png_encode_palette(w, h, indices, palette,
+                                  filter_type=(doc_id // 11) % 5)
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 1 + doc_id % 4, 1 + doc_id % 3
-                palette = [((doc_id * 7 + i * 3) % 256,
-                            (doc_id * 11 + i * 5) % 256,
-                            (doc_id * 13 + i * 7) % 256)
-                           for i in range(16)]
-                indices = bytes((doc_id + k) % 16 for k in range(w * h))
-                payloads.append(png_encode_palette(
-                    w, h, indices, palette,
-                    filter_type=(doc_id // 11) % 5))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, raster = png_decode_pixels(bytes(payload))
-                assert ch == 3  # palette expands to RGB
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height",
-                               "n_bytes", "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 11, payload),
+                        _pixel_stats(png_decode_pixels), _PIXEL_SCHEMA)
 
 
 @register(
@@ -754,38 +684,14 @@ def multimodal_interlaced_decode(spark, sf_dir):
     pixel statistics from the closed-form raster — it never sees the
     PNG — so the interlaced encode+decode path is value-checked
     end-to-end. JPEG remains the one codec-library shape."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 13 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 3 + doc_id % 7, 2 + doc_id % 5
+        return png_encode_rgb_interlaced(
+            w, h, bytes((doc_id * 17 + k * 5) % 256
+                        for k in range(w * h * 3)))
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 3 + doc_id % 7, 2 + doc_id % 5
-                raster = bytes((doc_id * 17 + k * 5) % 256
-                               for k in range(w * h * 3))
-                payloads.append(png_encode_rgb_interlaced(w, h, raster))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = png_decode_pixels(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height",
-                               "n_bytes", "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 13, payload),
+                        _pixel_stats(png_decode_pixels), _PIXEL_SCHEMA)
 
 
 # ------------------------------------------------------------- audio/WAV
@@ -874,38 +780,14 @@ def multimodal_wav_energy(spark, sf_dir):
 
     Scale: payload fabrication and decode are per-row projections inside
     Arrow batches — binary columns never shuffle."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 9 == 0).select("doc_id"))
+    def payload(doc_id):
+        return wav_encode_pcm16(8000, [(doc_id * 31 + k * 7) % 65536 - 32768
+                                       for k in range(200 + doc_id % 700)])
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 200 + doc_id % 700
-                samples = [(doc_id * 31 + k * 7) % 65536 - 32768
-                           for k in range(n)]
-                payloads.append(wav_encode_pcm16(8000, samples))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                sr, ns, ss = wav_decode_pcm16(bytes(payload))
-                rows.append((int(doc_id), sr, ns, ss))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sample_rate", "n_samples",
-                               "sum_sq"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, sample_rate long, n_samples long, "
-                "sum_sq long")
+    return _decode_rows(
+        _media_payloads(spark, sf_dir, 9, payload),
+        lambda doc_id, p: [(doc_id, *wav_decode_pcm16(p))],
+        "doc_id long, sample_rate long, n_samples long, sum_sq long")
 
 
 # G.711 mu-law companding (ITU-T G.711 §4.2, tables 2a/2b — the bit
@@ -1051,38 +933,14 @@ def multimodal_wav_ulaw_energy(spark, sf_dir):
     Scale: same shape as multimodal_wav_energy — both stages are
     per-row projections inside Arrow batches; binary columns never
     shuffle."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 11 == 0).select("doc_id"))
+    def payload(doc_id):
+        return wav_encode_ulaw(8000, [(doc_id * 37 + k * 11) % 65536 - 32768
+                                      for k in range(150 + doc_id % 500)])
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 150 + doc_id % 500
-                samples = [(doc_id * 37 + k * 11) % 65536 - 32768
-                           for k in range(n)]
-                payloads.append(wav_encode_ulaw(8000, samples))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                sr, ns, ss = wav_decode_ulaw(bytes(payload))
-                rows.append((int(doc_id), sr, ns, ss))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sample_rate", "n_samples",
-                               "sum_sq"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, sample_rate long, n_samples long, "
-                "sum_sq long")
+    return _decode_rows(
+        _media_payloads(spark, sf_dir, 11, payload),
+        lambda doc_id, p: [(doc_id, *wav_decode_ulaw(p))],
+        "doc_id long, sample_rate long, n_samples long, sum_sq long")
 
 
 # ------------------------------------------------------------- video/Y4M
@@ -1170,47 +1028,21 @@ def multimodal_y4m_frames(spark, sf_dir):
 
     Scale: per-row projections inside Arrow batches; binary payloads
     never shuffle."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 17 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 4 + 2 * (doc_id % 3), 2 + 2 * (doc_id % 2)
+        chroma = (w // 2) * (h // 2)
+        return y4m_encode(w, h, [
+            (bytes((doc_id * 13 + (f * w * h + p) * 3) % 256
+                   for p in range(w * h)),
+             bytes([(doc_id * 7 + f) % 256] * chroma),
+             bytes([(doc_id * 11 + f) % 256] * chroma))
+            for f in range(2 + doc_id % 4)])
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 4 + 2 * (doc_id % 3), 2 + 2 * (doc_id % 2)
-                nf = 2 + doc_id % 4
-                frames = []
-                for f in range(nf):
-                    base = f * w * h
-                    y = bytes((doc_id * 13 + (base + p) * 3) % 256
-                              for p in range(w * h))
-                    u = bytes((doc_id * 7 + f) % 256
-                              for _ in range((w // 2) * (h // 2)))
-                    v = bytes((doc_id * 11 + f) % 256
-                              for _ in range((w // 2) * (h // 2)))
-                    frames.append((y, u, v))
-                payloads.append(y4m_encode(w, h, frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nf, ls = y4m_decode(bytes(payload))
-                rows.append((int(doc_id), w, h, nf, ls))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_frames",
-                               "luma_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_frames long, "
-                "luma_sum long")
+    return _decode_rows(
+        _media_payloads(spark, sf_dir, 17, payload),
+        lambda doc_id, p: [(doc_id, *y4m_decode(p))],
+        "doc_id long, width long, height long, n_frames long, "
+        "luma_sum long")
 
 
 # ------------------------------------------------------------- image/GIF
@@ -1411,40 +1243,16 @@ def multimodal_gif_decode(spark, sf_dir):
 
     Scale: per-row projections inside Arrow batches; payloads never
     shuffle."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 21 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 2 + doc_id % 6, 1 + doc_id % 5
+        pal = [((doc_id * 3 + 11 * c) % 256,
+                (doc_id * 5 + 7 * c) % 256,
+                (doc_id * 7 + 13 * c) % 256) for c in range(4)]
+        return gif_encode(w, h, bytes((doc_id + p * 3) % 4
+                                      for p in range(w * h)), pal)
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 2 + doc_id % 6, 1 + doc_id % 5
-                pal = [((doc_id * 3 + 11 * c) % 256,
-                        (doc_id * 5 + 7 * c) % 256,
-                        (doc_id * 7 + 13 * c) % 256) for c in range(4)]
-                idx = bytes((doc_id + p * 3) % 4 for p in range(w * h))
-                payloads.append(gif_encode(w, h, idx, pal))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = gif_decode(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_bytes",
-                               "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 21, payload),
+                        _pixel_stats(gif_decode), _PIXEL_SCHEMA)
 
 
 def png_encode_gray16(width: int, height: int,
@@ -1455,43 +1263,11 @@ def png_encode_gray16(width: int, height: int,
     so the bytewise-filter-at-depth-16 semantics (§6.2: filtering acts
     on BYTES, not samples — filter distance bpp=2) are exercised end to
     end by the decoder."""
-    import struct
-    import zlib
-
-    bpp = 2
     rows = [b"".join(bytes([s >> 8, s & 0xFF])
                      for s in samples[y * width:(y + 1) * width])
             for y in range(height)]
-    out = []
-    prev = bytes(width * bpp)
-    for y, raw in enumerate(rows):
-        f = y % 5
-        filt = bytearray()
-        for x in range(len(raw)):
-            a = raw[x - bpp] if x >= bpp else 0
-            b = prev[x]
-            c = prev[x - bpp] if x >= bpp else 0
-            if f == 0:
-                v = raw[x]
-            elif f == 1:
-                v = (raw[x] - a) % 256
-            elif f == 2:
-                v = (raw[x] - b) % 256
-            elif f == 3:
-                v = (raw[x] - (a + b) // 2) % 256
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else \
-                    (b if pb <= pc else c)
-                v = (raw[x] - pred) % 256
-            filt.append(v)
-        out.append(bytes([f]) + bytes(filt))
-        prev = raw
-    ihdr = struct.pack(">IIBBBBB", width, height, 16, 0, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(b"".join(out)))
-            + _png_chunk(b"IEND", b""))
+    return _png_file(width, height, 16, 0, _filter_scanlines(
+        rows, 2, [y % 5 for y in range(height)]))
 
 
 @register(
@@ -1519,38 +1295,15 @@ def multimodal_png16_decode(spark, sf_dir):
     distance bpp=2 (RFC 2083 §6.2), which is exactly the subtle path
     this query locks. The DuckDB oracle recomputes the byte statistics
     from the closed form without seeing a PNG byte."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 23 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 3 + doc_id % 6, 2 + doc_id % 4
+        return png_encode_gray16(w, h, [(doc_id * 97 + p * 13) % 65536
+                                        for p in range(w * h)])
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 3 + doc_id % 6, 2 + doc_id % 4
-                samples = [(doc_id * 97 + p * 13) % 65536
-                           for p in range(w * h)]
-                payloads.append(png_encode_gray16(w, h, samples))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = png_decode_pixels(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_bytes",
-                               "byte_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "byte_sum long")
+    return _decode_rows(
+        _media_payloads(spark, sf_dir, 23, payload),
+        _pixel_stats(png_decode_pixels),
+        _PIXEL_SCHEMA.replace("px_sum", "byte_sum"))
 
 
 # ------------------------------------------------------------- image/BMP
@@ -1634,38 +1387,13 @@ def multimodal_bmp_decode(spark, sf_dir):
     oracle recomputes the pixel statistics from the closed form — it
     never sees a BMP byte — so the layout arithmetic is value-checked
     end-to-end."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 27 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 1 + doc_id % 7, 1 + doc_id % 6
+        return bmp_encode_rgb(w, h, bytes((doc_id * 19 + k * 7) % 256
+                                          for k in range(w * h * 3)))
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 1 + doc_id % 7, 1 + doc_id % 6
-                raster = bytes((doc_id * 19 + k * 7) % 256
-                               for k in range(w * h * 3))
-                payloads.append(bmp_encode_rgb(w, h, raster))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = bmp_decode(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_bytes",
-                               "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 27, payload),
+                        _pixel_stats(bmp_decode), _PIXEL_SCHEMA)
 
 
 # ------------------------------------------------------- dHash dedup
@@ -1738,49 +1466,28 @@ def multimodal_image_dhash_dedup(spark, sf_dir):
     Output: (doc_id, dhash, keeper_id, is_dup)."""
     from pyspark.sql.window import Window
 
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 6 == 0).select("doc_id"))
+    def payload(doc_id):
+        g = doc_id % 7
+        raster = bytearray()
+        for y in range(DHASH_H):
+            for x in range(DHASH_W):
+                v = (10 * ((g * 31 + (x // 2) * 7 + (y // 2) * 13) % 20)
+                     + (doc_id * 13 + x * 7 + y * 11) % 2)  # base + noise
+                raster += bytes((v, v, v))
+        return bmp_encode_rgb(DHASH_W, DHASH_H, bytes(raster))
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                g = doc_id % 7
-                raster = bytearray()
-                for y in range(DHASH_H):
-                    for x in range(DHASH_W):
-                        base = 10 * ((g * 31 + (x // 2) * 7
-                                      + (y // 2) * 13) % 20)
-                        noise = (doc_id * 13 + x * 7 + y * 11) % 2
-                        v = base + noise
-                        raster += bytes((v, v, v))
-                payloads.append(bmp_encode_rgb(DHASH_W, DHASH_H,
-                                               bytes(raster)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def to_hash(doc_id, payload):
+        w, _h, _ch, raster = bmp_decode(payload)
 
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
+        def bsum(bx, by):
+            return sum(raster[((2 * by + dy) * w + 2 * bx + dx) * 3]
+                       for dx in (0, 1) for dy in (0, 1))
+        return [(doc_id, "".join(
+            "1" if bsum(i % 8, i // 8) > bsum(i % 8 + 1, i // 8) else "0"
+            for i in range(64)))]
 
-    def to_hash(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = bmp_decode(bytes(payload))
-                def gray(x, y):
-                    return raster[(y * w + x) * 3]
-                def bsum(bx, by):
-                    return sum(gray(2 * bx + dx, 2 * by + dy)
-                               for dx in (0, 1) for dy in (0, 1))
-                bits = "".join(
-                    "1" if bsum(i % 8, i // 8) > bsum(i % 8 + 1, i // 8)
-                    else "0" for i in range(64))
-                rows.append((int(doc_id), bits))
-            yield pd.DataFrame(rows, columns=["doc_id", "dhash"])
-
-    hashed = media.mapInPandas(to_hash, "doc_id long, dhash string")
+    hashed = _decode_rows(_media_payloads(spark, sf_dir, 6, payload),
+                          to_hash, "doc_id long, dhash string")
     wk = Window.partitionBy("dhash")
     return (hashed
             .withColumn("keeper_id", F.min("doc_id").over(wk))
@@ -1866,43 +1573,21 @@ def multimodal_video_scene_cuts(spark, sf_dir):
     Output: (doc_id, n_frames, n_cuts, first_cut_frame)."""
     from pyspark.sql.window import Window
 
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 8 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 4 + 2 * (doc_id % 3), 2 + 2 * (doc_id % 2)
+        gray = bytes([128] * ((w // 2) * (h // 2)))
+        return y4m_encode(w, h, [
+            (bytes((30 if (f // 2) % 2 == 0 else 200) + (p % 3)
+                   for p in range(w * h)), gray, gray)
+            for f in range(3 + doc_id % 5)])
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 4 + 2 * (doc_id % 3), 2 + 2 * (doc_id % 2)
-                nf = 3 + doc_id % 5
-                frames = []
-                for f in range(nf):
-                    c = 30 if (f // 2) % 2 == 0 else 200
-                    y = bytes(c + (p % 3) for p in range(w * h))
-                    u = bytes(128 for _ in range((w // 2) * (h // 2)))
-                    v = bytes(128 for _ in range((w // 2) * (h // 2)))
-                    frames.append((y, u, v))
-                payloads.append(y4m_encode(w, h, frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def frame_features(doc_id, payload):
+        w, h, sums = y4m_frame_lumas(payload)
+        return [(doc_id, w * h, f, s) for f, s in enumerate(sums)]
 
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def frame_features(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, sums = y4m_frame_lumas(bytes(payload))
-                for f, s in enumerate(sums):
-                    rows.append((int(doc_id), w * h, f, s))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "px", "f", "fsum"])
-
-    feats = media.mapInPandas(
-        frame_features, "doc_id long, px long, f long, fsum long")
+    feats = _decode_rows(_media_payloads(spark, sf_dir, 8, payload),
+                         frame_features,
+                         "doc_id long, px long, f long, fsum long")
     w_lag = Window.partitionBy("doc_id").orderBy("f")
     cut = (F.abs(F.col("fsum") - F.lag("fsum").over(w_lag))
            > 100 * F.col("px"))
@@ -2068,42 +1753,16 @@ def multimodal_qoi_decode(spark, sf_dir):
     Scale: identical to the rest of the codec family — encode/decode
     are per-row projections inside Arrow batches (mapInPandas); binary
     payloads never shuffle."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 29 == 0).select("doc_id"))
+    def payload(doc_id):
+        w, h = 4 + doc_id % 5, 3 + doc_id % 4
+        return qoi_encode(w, h, b"".join(
+            bytes([(doc_id * 19 + (k // 4) * 7) % 256,
+                   (doc_id * 23 + (k // 4) * 5) % 256,
+                   (doc_id * 29 + (k // 4) * 3) % 256])
+            for k in range(w * h)))
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 4 + doc_id % 5, 3 + doc_id % 4
-                raster = bytearray()
-                for k in range(w * h):
-                    g4 = k // 4
-                    raster += bytes([(doc_id * 19 + g4 * 7) % 256,
-                                     (doc_id * 23 + g4 * 5) % 256,
-                                     (doc_id * 29 + g4 * 3) % 256])
-                payloads.append(qoi_encode(w, h, bytes(raster)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _ch, raster = qoi_decode(bytes(payload))
-                rows.append((int(doc_id), w, h, len(raster), sum(raster)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_bytes",
-                               "px_sum"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, width long, height long, n_bytes long, "
-                "px_sum long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 29, payload),
+                        _pixel_stats(qoi_decode), _PIXEL_SCHEMA)
 
 
 # ------------------------------------------------------- audio/IMA ADPCM
@@ -2186,14 +1845,15 @@ def ima_adpcm_encode(samples: list[int]) -> tuple[int, int, list[int]]:
     return samples[0], 0, nibbles
 
 
-def wav_encode_ima_adpcm(samples: list[int], rate: int = 8000) -> bytes:
-    """RIFF/WAVE writer for IMA ADPCM (format tag 0x11, mono, one block
-    per stream): 4-byte block header (predictor s16, step index u8,
-    reserved u8) + packed nibbles (LOW nibble first), plus the fact
-    chunk the spec requires for compressed formats."""
+def _ima_wav(pred0: int, idx0: int, nibbles: list[int], n_samples: int,
+             rate: int = 8000) -> bytes:
+    """RIFF/WAVE container for one IMA ADPCM block (format tag 0x11,
+    mono): 4-byte block header (predictor s16, step index u8, reserved
+    u8) + packed nibbles (LOW nibble first, an odd count padded with a
+    zero nibble), plus the fact chunk of ``n_samples`` that the spec
+    requires for compressed formats."""
     import struct
 
-    pred0, idx0, nibbles = ima_adpcm_encode(samples)
     if len(nibbles) % 2:
         nibbles = nibbles + [0]
     body = bytearray(struct.pack("<hBB", pred0, idx0, 0))
@@ -2203,12 +1863,19 @@ def wav_encode_ima_adpcm(samples: list[int], rate: int = 8000) -> bytes:
     spb = (block_align - 4) * 2 + 1
     fmt = struct.pack("<HHIIHHHH", 0x11, 1, rate,
                       rate * block_align // spb, block_align, 4, 2, spb)
-    fact = struct.pack("<I", len(samples))
+    fact = struct.pack("<I", n_samples)
     chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
               + b"fact" + struct.pack("<I", len(fact)) + fact
               + b"data" + struct.pack("<I", len(body)) + bytes(body))
     return (b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE"
             + chunks)
+
+
+def wav_encode_ima_adpcm(samples: list[int], rate: int = 8000) -> bytes:
+    """RIFF/WAVE writer for IMA ADPCM: :func:`ima_adpcm_encode` in one
+    block, wrapped by :func:`_ima_wav`."""
+    pred0, idx0, nibbles = ima_adpcm_encode(samples)
+    return _ima_wav(pred0, idx0, nibbles, len(samples), rate)
 
 
 def wav_decode_ima_adpcm(payload: bytes) -> list[int]:
@@ -2318,57 +1985,20 @@ def multimodal_wav_adpcm_energy(spark, sf_dir):
 
     Scale: per-row Arrow projections like the whole codec family;
     the automaton runs inside the batch, no shuffle sees audio bytes."""
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 31 == 0).select("doc_id"))
+    def payload(doc_id):
+        n = 32 + 2 * (doc_id % 9)
+        return _ima_wav(((doc_id * 1103) % 65536) - 32768, doc_id % 89,
+                        [(doc_id * 7 + k * 3) % 16 for k in range(n)],
+                        n + 1)
 
-    def encode(batches):
-        import pandas as pd
-        import struct
+    def energy(doc_id, payload):
+        samples = wav_decode_ima_adpcm(payload)
+        return [(doc_id, len(samples), sum(samples),
+                 sum(s * s for s in samples))]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 32 + 2 * (doc_id % 9)
-                pred0 = ((doc_id * 1103) % 65536) - 32768
-                idx0 = doc_id % 89
-                nibbles = [(doc_id * 7 + k * 3) % 16 for k in range(n)]
-                body = bytearray(struct.pack("<hBB", pred0, idx0, 0))
-                for i in range(0, n, 2):
-                    body.append(nibbles[i] | (nibbles[i + 1] << 4))
-                block_align = len(body)
-                spb = (block_align - 4) * 2 + 1
-                fmt = struct.pack("<HHIIHHHH", 0x11, 1, 8000,
-                                  8000 * block_align // spb, block_align,
-                                  4, 2, spb)
-                fact = struct.pack("<I", n + 1)
-                chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                          + b"fact" + struct.pack("<I", len(fact)) + fact
-                          + b"data" + struct.pack("<I", len(body))
-                          + bytes(body))
-                payloads.append(b"RIFF"
-                                + struct.pack("<I", 4 + len(chunks))
-                                + b"WAVE" + chunks)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples = wav_decode_ima_adpcm(bytes(payload))
-                rows.append((int(doc_id), len(samples), sum(samples),
-                             sum(s * s for s in samples)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "sample_sum",
-                               "energy"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, n_samples long, sample_sum long, "
-                "energy long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 31, payload), energy,
+                        "doc_id long, n_samples long, sample_sum long, "
+                        "energy long")
 
 
 # --------------------------------------------------- audio/FLAC (lossless)
@@ -2453,40 +2083,20 @@ def multimodal_flac_energy(spark, sf_dir):
     from cstore_fdw_spark.operators.flac_codec import (flac_decode,
                                                        flac_encode)
 
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 37 == 0).select("doc_id"))
+    def payload(doc_id):
+        return flac_encode(_flac_signal(doc_id, 200 + (doc_id % 57)),
+                           plan=_flac_plan)
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 200 + (doc_id % 57)
-                payloads.append(flac_encode(_flac_signal(doc_id, n),
-                                            plan=_flac_plan))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def energy(doc_id, payload):
+        sr, bps, samples = flac_decode(payload)
+        if (sr, bps) != (8000, 16):
+            raise ValueError("unexpected FLAC stream parameters")
+        return [(doc_id, len(samples), sum(samples),
+                 sum(s * s for s in samples))]
 
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                sr, bps, samples = flac_decode(bytes(payload))
-                if (sr, bps) != (8000, 16):
-                    raise ValueError("unexpected FLAC stream parameters")
-                rows.append((int(doc_id), len(samples), sum(samples),
-                             sum(s * s for s in samples)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "sample_sum",
-                               "energy"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, n_samples long, sample_sum long, "
-                "energy long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 37, payload), energy,
+                        "doc_id long, n_samples long, sample_sum long, "
+                        "energy long")
 
 
 def _flac_stereo_signal(doc_id: int, n: int) -> tuple[list[int], list[int]]:
@@ -2544,40 +2154,17 @@ def multimodal_flac_stereo_energy(spark, sf_dir):
     from cstore_fdw_spark.operators.flac_codec import (flac_decode,
                                                        flac_encode)
 
-    d = (table(spark, sf_dir, "documents")
-         .filter(F.col("doc_id") % 41 == 0).select("doc_id"))
+    def payload(doc_id):
+        return flac_encode(_flac_stereo_signal(doc_id, 180 + (doc_id % 77)),
+                           plan=_flac_stereo_plan)
 
-    def encode(batches):
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 180 + (doc_id % 77)
-                payloads.append(flac_encode(
-                    _flac_stereo_signal(doc_id, n),
-                    plan=_flac_stereo_plan))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def energy(doc_id, payload):
+        sr, bps, (left, right) = flac_decode(payload)
+        if (sr, bps) != (8000, 16):
+            raise ValueError("unexpected FLAC stream parameters")
+        return [(doc_id, len(left), sum(left), sum(right),
+                 sum(v * v for v in left) + sum(v * v for v in right))]
 
-    media = d.mapInPandas(encode, "doc_id long, payload binary")
-
-    def decode(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                sr, bps, (left, right) = flac_decode(bytes(payload))
-                if (sr, bps) != (8000, 16):
-                    raise ValueError("unexpected FLAC stream parameters")
-                rows.append((int(doc_id), len(left), sum(left),
-                             sum(right),
-                             sum(v * v for v in left)
-                             + sum(v * v for v in right)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "sum_left",
-                               "sum_right", "energy"])
-
-    return media.mapInPandas(
-        decode, "doc_id long, n_samples long, sum_left long, "
-                "sum_right long, energy long")
+    return _decode_rows(_media_payloads(spark, sf_dir, 41, payload), energy,
+                        "doc_id long, n_samples long, sum_left long, "
+                        "sum_right long, energy long")

@@ -15,7 +15,7 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.window import Window
 
 from cstore_fdw_spark.operators import (register, spread, table,
-                                        track_cache)
+                                        table_rows, track_cache)
 from cstore_fdw_spark.session import conf_override
 
 N_QUERIES = 5    # demo query set: vec_id < 5
@@ -269,12 +269,12 @@ def ann_lsh_bucketed(spark, sf_dir):
     projections fold in dimension order (see lsh_buckets), so the DuckDB
     oracle recomputes the identical buckets, candidates, and ranking.
     The bit count is occupancy-targeted (lsh_bits_for over the corpus
-    row count, whose ``count()`` runs 2 jobs in the builder): occupancy per
+    row count, read from the parquet footer): occupancy per
     (table, bucket) stays ~LSH_TARGET_OCCUPANCY as N grows, so candidate
     pairs stay flat-per-row instead of growing linearly per bucket.
     Output: (query_id, neighbor_id, rank, cos)."""
     e = table(spark, sf_dir, "embeddings")
-    bits = lsh_bits_for(e.count())
+    bits = lsh_bits_for(table_rows(sf_dir, "embeddings"))
     sig = (e.select("vec_id", "embedding",
                     F.posexplode(lsh_buckets("embedding", bits)),
                     F.sqrt(dot(F.col("embedding"), F.col("embedding")))

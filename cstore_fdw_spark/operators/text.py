@@ -10,7 +10,7 @@ it carries a full oracle like the md5 content fingerprint.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
 from cstore_fdw_spark.operators import register, table, track_cache
 
@@ -744,6 +744,29 @@ PII_EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
 PII_PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
 
 
+def pii_injected_text() -> Column:
+    """``text`` with closed-form PII appended: every 3rd document an
+    email derived from ``doc_id``, every 4th a NNN-NNN-NNNN phone. The
+    corpus has no PII of its own, so this gives the scrub pass real work
+    while the oracle recomputes every scrubbed character in closed form;
+    the one injection of the batch and streaming scrub stages."""
+    did = F.col("doc_id")
+    email = F.when(did % 3 == 0, F.concat(
+        F.lit(" contact user"), did.cast("string"),
+        F.lit("@ex"), (did % 7).cast("string"),
+        F.lit(".example.com"))).otherwise(F.lit(""))
+    phone = F.when(did % 4 == 0, F.concat(
+        F.lit(" call 555-"), (did % 900 + 100).cast("string"),
+        F.lit("-"), (did % 9000 + 1000).cast("string"))).otherwise(F.lit(""))
+    return F.concat("text", email, phone)
+
+
+def pii_count(text) -> Column:
+    """Emails plus phones the scrub regexes match in ``text``."""
+    return (F.regexp_count(text, F.lit(PII_EMAIL_RE)).cast("long")
+            + F.regexp_count(text, F.lit(PII_PHONE_RE)).cast("long"))
+
+
 @register(
     "text_pii_redact",
     category="text",
@@ -782,15 +805,7 @@ def text_pii_redact(spark, sf_dir):
     Scale: pure per-row projection — no shuffle, no Python; regex cost
     is linear in bytes scanned and runs where the data sits."""
     d = table(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    email = F.when(did % 3 == 0, F.concat(
-        F.lit(" contact user"), did.cast("string"),
-        F.lit("@ex"), (did % 7).cast("string"),
-        F.lit(".example.com"))).otherwise(F.lit(""))
-    phone = F.when(did % 4 == 0, F.concat(
-        F.lit(" call 555-"), (did % 900 + 100).cast("string"),
-        F.lit("-"), (did % 9000 + 1000).cast("string"))).otherwise(F.lit(""))
-    dirty = F.concat("text", email, phone)
+    dirty = pii_injected_text()
     redacted = F.regexp_replace(
         F.regexp_replace(dirty, PII_EMAIL_RE, "<EMAIL>"),
         PII_PHONE_RE, "<PHONE>")
@@ -876,17 +891,7 @@ def text_curation_pipeline(spark, sf_dir):
     # the REAL scrub pass from text_pii_redact: inject the closed-form
     # PII, count with the Java regexes (the oracle counts in closed
     # form, so the regex path stays value-checked inside the chain too)
-    did = F.col("doc_id")
-    email = F.when(did % 3 == 0, F.concat(
-        F.lit(" contact user"), did.cast("string"),
-        F.lit("@ex"), (did % 7).cast("string"),
-        F.lit(".example.com"))).otherwise(F.lit(""))
-    phone = F.when(did % 4 == 0, F.concat(
-        F.lit(" call 555-"), (did % 900 + 100).cast("string"),
-        F.lit("-"), (did % 9000 + 1000).cast("string"))).otherwise(F.lit(""))
-    dirty = F.concat("text", email, phone)
-    n_pii = (F.regexp_count(dirty, F.lit(PII_EMAIL_RE)).cast("long")
-             + F.regexp_count(dirty, F.lit(PII_PHONE_RE)).cast("long"))
+    n_pii = pii_count(pii_injected_text())
     return (keepers
             .select("lang", "source", "n_tokens", n_pii.alias("n_pii"))
             .groupBy("lang", "source")

@@ -3,7 +3,9 @@ integration of :mod:`cstore_fdw_spark.sources.cstore_format`.
 
 - ``spark.dataSource.register(CStoreDataSource)`` then
   ``spark.read.format("cstore").schema(ddl).load(path)`` /
-  ``df.write.format("cstore").save(path)``.
+  ``df.write.format("cstore").save(path)``. ``load([file, ...])``
+  reads exactly those files in one scan; a directory is listed when
+  the query runs.
 - A schema is REQUIRED on read: like the reference (CREATE FOREIGN
   TABLE declares columns; the binary format stores no names/types —
   cstore_fdw.h:55, README.md:197-213), the file is schema-on-read.
@@ -20,6 +22,7 @@ integration of :mod:`cstore_fdw_spark.sources.cstore_format`.
 """
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -99,8 +102,11 @@ EPOCH_COL = "__cstore_epoch"
 class CStoreReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
         self.schema_ = schema
-        self.path = options.get("path")
-        if not self.path:
+        # load([a, b]) hands a python data source its files as the JSON
+        # list ``paths``; one file or directory still arrives as ``path``
+        paths = options.get("paths")
+        self.paths = json.loads(paths) if paths else [options.get("path")]
+        if not all(self.paths):
             raise ValueError("cstore source requires a path")
         # with_epoch: the catalog's schema-evolution projection needs
         # each row's source-file epoch, and input_file_name() is empty
@@ -195,10 +201,10 @@ class CStoreReader(DataSourceReader):
 
     def partitions(self):
         parts = []
-        for f in _data_files(self.path):
-            _brc, stripes = read_footer(f)
-            for s in stripes:
-                parts.append(_StripePartition(f, s))
+        for p in self.paths:
+            for f in _data_files(p):
+                _brc, stripes = read_footer(f)
+                parts.extend(_StripePartition(f, s) for s in stripes)
         return parts or [_StripePartition("", None)]
 
     def read(self, partition):

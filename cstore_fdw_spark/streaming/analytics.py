@@ -34,28 +34,16 @@ def run_sketch_available_now(spark: SparkSession, sf_dir: str,
 
 # ------------------------------------------------ CUSUM changepoint twin
 
-def hourly_cents_stream(events: DataFrame) -> DataFrame:
-    """Maintain the per-(type, hour) cents rollup over the stream: the
-    CUSUM statistic's ONLY state is this mergeable SUM — bounded by
-    |event_type| × hours seen (wall time, not rows), which is what
-    makes the changepoint monitor affordable on an unbounded stream."""
-    return (events
-            .select("event_type",
-                    F.date_trunc("hour", "ts").alias("h"),
-                    F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-                    .alias("cents"))
-            .groupBy("event_type", "h")
-            .agg(F.sum("cents").alias("x")))
-
-
 def run_cusum_available_now(spark: SparkSession, sf_dir: str,
                             query_name: str = "cusum_hourly") -> DataFrame:
     """Drain the streamed hourly rollup with Trigger.AvailableNow into a
     memory sink, then run the SAME cusum_changepoints finisher the
-    batch query uses — bit-identical localization by construction."""
-    from cstore_fdw_spark.operators.events import cusum_changepoints
+    batch query uses — bit-identical localization by construction. The
+    stream's only state is ``hourly_cents``, the batch rollup itself."""
+    from cstore_fdw_spark.operators.events import (cusum_changepoints,
+                                                   hourly_cents)
 
-    out = hourly_cents_stream(fixture_stream(spark, sf_dir, "events"))
+    out = hourly_cents(fixture_stream(spark, sf_dir, "events"))
     return cusum_changepoints(drain(out, query_name, "complete"))
 
 
@@ -66,15 +54,15 @@ def run_seasonal_available_now(spark: SparkSession, sf_dir: str,
                                ) -> DataFrame:
     """Streaming twin of ``timeseries_seasonal_decompose``: maintain
     the per-(type, hour) cents rollup over the stream (the SAME
-    ``hourly_cents_stream`` state the CUSUM monitor uses — one
+    ``events.hourly_cents`` state the CUSUM monitor uses — one
     mergeable SUM bounded by |event_type| x wall-time hours), drain
     with Trigger.AvailableNow, then run the LITERALLY shared
     ``seasonal_decompose_from_hourly`` finisher — peak hour-of-day and
     worst residual anomaly identical to batch by construction."""
     from cstore_fdw_spark.operators.events import (
-        seasonal_decompose_from_hourly)
+        hourly_cents, seasonal_decompose_from_hourly)
 
-    out = hourly_cents_stream(fixture_stream(spark, sf_dir, "events"))
+    out = hourly_cents(fixture_stream(spark, sf_dir, "events"))
     t = drain(out, query_name, "complete")
     # rebind the drained rollup as a local relation: the finisher
     # self-joins its input (seasonal profile back onto the hours), and
@@ -131,12 +119,10 @@ def run_mad_anomaly_available_now(spark: SparkSession, sf_dir: str,
     Trigger.AvailableNow, then run through the literally shared
     ``mad_anomalies_from_hourly`` finisher (exact rank medians over the
     drained model table)."""
-    from cstore_fdw_spark.operators.events import mad_anomalies_from_hourly
+    from cstore_fdw_spark.operators.events import (
+        hourly_counts, mad_anomalies_from_hourly)
 
-    ev = fixture_stream(spark, sf_dir, "events")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("h"))
-              .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
+    hourly = hourly_counts(fixture_stream(spark, sf_dir, "events"))
     t = drain(hourly, query_name, "complete")
     # model-sized rebind (|type| x hours): the finisher joins the rollup
     # against frames derived from itself — same memory-sink self-join

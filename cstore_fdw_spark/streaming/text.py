@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cstore_fdw_spark.operators.text import PII_EMAIL_RE, PII_PHONE_RE
+from cstore_fdw_spark.operators.text import pii_count, pii_injected_text
 
 
 def curation_accounting(docs: DataFrame) -> DataFrame:
@@ -30,17 +30,7 @@ def curation_accounting(docs: DataFrame) -> DataFrame:
     n_tokens = F.size(toks).cast("long")
     n_stop = F.size(F.filter(
         toks, lambda w: w.isin("the", "a", "of", "and"))).cast("long")
-    did = F.col("doc_id")
-    email = F.when(did % 3 == 0, F.concat(
-        F.lit(" contact user"), did.cast("string"),
-        F.lit("@ex"), (did % 7).cast("string"),
-        F.lit(".example.com"))).otherwise(F.lit(""))
-    phone = F.when(did % 4 == 0, F.concat(
-        F.lit(" call 555-"), (did % 900 + 100).cast("string"),
-        F.lit("-"), (did % 9000 + 1000).cast("string"))).otherwise(F.lit(""))
-    dirty = F.concat("text", email, phone)
-    n_pii = (F.regexp_count(dirty, F.lit(PII_EMAIL_RE)).cast("long")
-             + F.regexp_count(dirty, F.lit(PII_PHONE_RE)).cast("long"))
+    n_pii = pii_count(pii_injected_text())
     return (docs
             .select("doc_id", "lang", "source",
                     n_tokens.alias("n_tokens"), n_stop.alias("n_stop"),

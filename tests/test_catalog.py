@@ -1577,6 +1577,20 @@ def test_killed_cstore_insert_keeps_table_readable(spark, catalog):
     assert catalog.row_count("kc") == 10
 
 
+@pytest.mark.parametrize("with_footer", [True, False])
+def test_cstore_read_pinned_to_its_snapshot(spark, catalog, with_footer):
+    """read() of a cstore table opens the files of the snapshot it was
+    built on: a batch another writer moves in before the query runs, not
+    yet committed, adds no rows (with its footer landed) and breaks
+    nothing (without it)."""
+    catalog.create_table("pin", "a long", storage_format="cstore")
+    catalog.insert("pin", spark.range(10).selectExpr("id as a"))
+    df = catalog.read("pin")
+    _plant_uncommitted_copy(catalog, "pin", with_footer=with_footer)
+
+    assert sorted(r.a for r in df.collect()) == list(range(10))
+
+
 @pytest.mark.parametrize("fmt", ["parquet", "cstore"])
 def test_snapshot_past_current_epoch_refused(spark, catalog, fmt):
     """A snapshot epoch above the committed one names rows no commit

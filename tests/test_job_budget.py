@@ -17,15 +17,17 @@ REGISTRY = load_all()
 #: query -> (builder jobs, action jobs), upper bounds
 JOB_BUDGET = {
     # the registry_queries benchmark workload: table reads launch no
-    # job, and the 2 builder jobs of dedup_connected_components are the
-    # corpus count that sizes its LSH bits
+    # job, and the corpus count that sizes the LSH bits of
+    # dedup_connected_components and ann_lsh_bucketed is read from the
+    # parquet footer
     "q1_pricing_summary": (0, 4),
     "q3_shipping_priority": (0, 4),
     "q5_local_supplier_volume": (0, 7),
     "q6_forecast_revenue": (0, 2),
     "q18_large_volume_customer": (0, 6),
     "subquery_scalar_uncorrelated": (0, 4),
-    "dedup_connected_components": (2, 7),
+    "dedup_connected_components": (0, 7),
+    "ann_lsh_bucketed": (0, 4),
     "dedup_minhash_lsh": (5, 10),
     "route_ngram_minhash_tier": (10, 4),
 }

@@ -111,13 +111,14 @@ def test_cc_edges_are_lsh_blocked_not_all_pairs(spark, sf_dir):
     candidate stage: the pair-join condition must include the (table,
     bucket) struct key, never a bare label-only equi-join that goes
     quadratic inside a label group at scale."""
-    from cstore_fdw_spark.operators import table
+    from cstore_fdw_spark.operators import table, table_rows
     from cstore_fdw_spark.operators.dedup import (
         EMB_DEDUP_TAU, lsh_verified_pairs)
     from cstore_fdw_spark.plans.verify import explain_str
 
     e = table(spark, sf_dir, "embeddings")
-    pairs = lsh_verified_pairs(e, EMB_DEDUP_TAU)
+    pairs = lsh_verified_pairs(e, EMB_DEDUP_TAU,
+                               table_rows(sf_dir, "embeddings"))
     plan = explain_str(pairs)
     # the candidate join keys on the exploded (t, b) struct
     assert "tb" in plan
@@ -831,3 +832,49 @@ def test_operators_load_tables_one_way():
         ("operators/similarity.py", "_cached_codebook")}
     assert ("operators/__init__.py", "table") in _package_functions_using(
         schema_call)
+
+
+def test_registry_media_and_rollups_one_way():
+    """One path each for the steps the registry operators share: the
+    codec queries fabricate and decode payloads only through the
+    ``multimodal._media_payloads`` / ``_decode_rows`` round trip (the two
+    feature queries over ``media_table`` keep their own stage), the
+    Paeth predictor is written once for the PNG filter and unfilter,
+    the hourly cents rollup once for every batch and streaming
+    time-series operator, and the closed-form PII once for the batch
+    and streaming scrub stages."""
+    import ast
+
+    def map_in_pandas(node):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas")
+
+    assert sorted(hit for hit in _package_functions_using(map_in_pandas)
+                  if hit[0] in ("operators/multimodal.py",
+                                "operators/jpeg_codec.py")) == [
+        ("operators/multimodal.py", "_decode_rows"),
+        ("operators/multimodal.py", "_media_payloads"),
+        ("operators/multimodal.py", "multimodal_decode_meta"),
+        ("operators/multimodal.py", "multimodal_feature_extract")]
+
+    def unparsed(text):
+        return lambda node: (isinstance(node, ast.expr)
+                             and ast.unparse(node) == text)
+
+    assert _package_functions_using(unparsed("abs(p - a)")) == [
+        ("operators/multimodal.py", "_paeth")]
+
+    def constant(value):
+        return lambda node: (isinstance(node, ast.Constant)
+                             and node.value == value)
+
+    # per-row cents (stats_iqr_outliers) and the watermarked window
+    # rollup of the Holt stream are not this rollup
+    assert set(_package_functions_using(
+        constant("CAST(ROUND(value * 100) AS BIGINT)"))) & set(
+        _package_functions_using(unparsed("F.date_trunc('hour', 'ts')"))
+    ) == {("operators/events.py", "hourly_cents")}
+    for literal in (" contact user", "@ex", ".example.com", " call 555-"):
+        assert _package_functions_using(constant(literal)) == [
+            ("operators/text.py", "pii_injected_text")], literal
