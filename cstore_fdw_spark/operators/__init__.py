@@ -246,9 +246,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count of the fixture table ``{sf_dir}/{name}.parquet``, read
     from its parquet footer: no Spark job, unlike ``table(...).count()``
-    (two jobs before the caller's action)."""
+    (two jobs before the caller's action). A table Spark wrote is a
+    directory of part files; their footers are summed."""
     import pyarrow.parquet as pq
-    return pq.read_metadata(f"{sf_dir}/{name}.parquet").num_rows
+    path = f"{sf_dir}/{name}.parquet"
+    files = ([os.path.join(path, f) for f in os.listdir(path)
+              if f.endswith(".parquet") and not f.startswith((".", "_"))]
+             if os.path.isdir(path) else [path])
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def events_ts_micros(events: DataFrame) -> DataFrame:

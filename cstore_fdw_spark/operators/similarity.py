@@ -338,17 +338,18 @@ _NLIST_SQL = (f"(SELECT GREATEST({IVF_NLIST_MIN}, "
               "CAST(ceil(sqrt(COUNT(*))) AS BIGINT)) FROM embeddings)")
 
 
-def _ivf_centroids(e):
+def _ivf_centroids(e, n_rows: int):
     """(cell, centroid, centnorm) — the deterministic hash-seeded coarse
-    centers (the vectors with the nlist smallest portable hashes). Tiny
-    (nlist×dim) → always broadcast; the top-nlist-by-hash sample is a
-    cheap metadata-size top-k, not a full sort (plan-locked by
+    centers (the vectors with the nlist smallest portable hashes) of the
+    ``n_rows``-row corpus ``e``. Tiny (nlist×dim) → always broadcast;
+    the top-nlist-by-hash sample is a cheap metadata-size top-k, not a
+    full sort (plan-locked by
     test_pushdown.py::test_seed_topk_never_globally_sorts_corpus). The
-    one eager action is the count() sizing nlist — a metadata-cheap
-    columnar count, amortized across the whole pipeline."""
+    callers read ``n_rows`` from the parquet footer
+    (``operators.table_rows``), so sizing nlist runs no job."""
     from cstore_fdw_spark.functions.portable_hash import spark_h60
 
-    nlist = ivf_nlist(e.count())
+    nlist = ivf_nlist(n_rows)
     wc = Window.orderBy("h", "vec_id")
     return (e.select("vec_id", "embedding",
                      F.expr(spark_h60("cast(vec_id as string)")).alias("h"))
@@ -360,15 +361,12 @@ def _ivf_centroids(e):
                     .alias("centnorm")))
 
 
-def _ivf_scored_cells(e, cents=None):
+def _ivf_scored_cells(e, cents):
     """(vec_id, embedding, norm, cell, ccos, rn) — every vector scored
-    against the deterministic hash-seeded coarse centroids, rn ordering
-    cells by cosine per vector (rn=1 is the vector's home cell). Shared
-    by IVF search and clustered semantic dedup. Pass a prebuilt
-    ``_ivf_centroids`` frame to share it with stages that need the
-    centroid VECTORS too (residual encoding in vector_ivf_pq_topk)."""
-    if cents is None:
-        cents = _ivf_centroids(e)
+    against the coarse centroids ``cents`` (the hash-seeded
+    ``_ivf_centroids``, or vector_ivf_pq_topk's trained ones), rn
+    ordering cells by cosine per vector (rn=1 is the vector's home
+    cell). Shared by IVF search and clustered semantic dedup."""
     v = e.select("vec_id", "embedding",
                  F.sqrt(dot(F.col("embedding"), F.col("embedding")))
                  .alias("norm"))
@@ -449,7 +447,8 @@ def ann_ivf_coarse(spark, sf_dir):
     reproduces cells, probes, and ranking bit-for-bit.
     Output: (query_id, neighbor_id, rank, cos)."""
     e = table(spark, sf_dir, "embeddings")
-    scored_cells = _ivf_scored_cells(e)
+    scored_cells = _ivf_scored_cells(
+        e, _ivf_centroids(e, table_rows(sf_dir, "embeddings")))
     assigned = (scored_cells.filter(F.col("rn") == 1)
                 .select("vec_id", "embedding", "norm", "cell"))
     probes = (scored_cells.filter((F.col("vec_id") < N_QUERIES)
@@ -540,7 +539,8 @@ def dedup_semantic_clustered(spark, sf_dir):
     cells, pairs, and keeper choice bit-for-bit.
     Output: (dup_id, keeper_id, cell, cos)."""
     e = table(spark, sf_dir, "embeddings")
-    assigned = (_ivf_scored_cells(e).filter(F.col("rn") == 1)
+    cents = _ivf_centroids(e, table_rows(sf_dir, "embeddings"))
+    assigned = (_ivf_scored_cells(e, cents).filter(F.col("rn") == 1)
                 .select("vec_id", "embedding", "norm",
                         F.col("cell").cast("long").alias("cell")))
     a = assigned.select(F.col("vec_id").alias("va"),
@@ -1277,7 +1277,7 @@ def _ivfadc_adc(spark, sf_dir):
     # (asserted by test_ann_ladder_recall_quality_gate's distortion
     # comparison).
     dim = PQ_M * PQ_SUBDIM
-    nlist = ivf_nlist(e.count())
+    nlist = ivf_nlist(table_rows(sf_dir, "embeddings"))
     # train-once, serve-many: the trained coarse centroids are a
     # maintained index artifact (_cached_codebook); on a cache hit this
     # is a tiny parquet read, nlist rows

@@ -15,6 +15,7 @@ import contextlib
 import os
 import shutil
 import tempfile
+import zipimport
 from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
@@ -106,6 +107,46 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.files.maxRecordsPerFile": "5000000",
     "spark.sql.shuffle.partitions": _CPUS,
 }
+
+
+#: archive -> ((st_mtime_ns, st_size) taken before its directory was
+#: read, that directory)
+_ZIP_DIRECTORIES: dict[str, tuple[tuple[int, int], dict]] = {}
+
+
+def _keep_unchanged_zip_directory(importer) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads an archive's
+    directory only when the archive changed since it was last read.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` before
+    every data-source planning call, task and commit; on CPython < 3.13
+    that re-reads the central directory of every zip on the worker's
+    path (12 importers over ``pyspark.zip`` alone, 2 over the spark-core
+    jar), ~0.2 s per call. The stamp is taken before the read, so an
+    archive rewritten during the read is read again next time."""
+    path = importer.archive
+    try:
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_size)
+        known = _ZIP_DIRECTORIES.get(path)
+        if known is None or known[0] != stamp:
+            known = (stamp, zipimport._read_directory(path))
+            _ZIP_DIRECTORIES[path] = known
+    except (OSError, zipimport.ZipImportError):
+        _ZIP_DIRECTORIES.pop(path, None)
+        zipimport._zip_directory_cache.pop(path, None)
+        importer._files = {}
+        return
+    importer._files = known[1]
+    zipimport._zip_directory_cache[path] = known[1]
+
+
+# Only inside a Spark Python worker (planner and executor workers have
+# the factory secret, the driver does not), and only where the importer
+# re-reads eagerly: 3.13's importers read lazily through _get_files.
+if ("PYTHON_WORKER_FACTORY_SECRET" in os.environ
+        and not hasattr(zipimport.zipimporter, "_get_files")):
+    zipimport.zipimporter.invalidate_caches = _keep_unchanged_zip_directory
 
 
 def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,

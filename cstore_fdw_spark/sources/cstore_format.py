@@ -22,10 +22,17 @@ Layout (studied from the reference, reimplemented from scratch):
 """
 from __future__ import annotations
 
+import ctypes
 import dataclasses
+import functools
+import hashlib
 import os
+import pkgutil
 import re
+import shutil
 import struct
+import subprocess
+import tempfile
 from decimal import Decimal, ROUND_HALF_UP, localcontext
 
 # ------------------------------------------------------------ protobuf wire
@@ -86,8 +93,12 @@ def _parse(buf: bytes) -> dict[int, list]:
 
 # ------------------------------------------------------------------- pglz
 
-def pglz_decompress(data: bytes, rawsize: int) -> bytes:
-    """PostgreSQL LZ stream: control bytes gate 8 items LSB-first;
+def _pglz_decompress_py(data: bytes, rawsize: int) -> bytes:
+    """The Python pglz decoder: the reference the C kernel
+    (``pglz.c``) is tested against, and the decoder where no C compiler
+    is found. Raises ``ValueError`` on any malformed stream.
+
+    PostgreSQL LZ stream: control bytes gate 8 items LSB-first;
     literal = 1 raw byte; match tag = [off_hi4|len-3][off_lo8]
     (+1 length-extension byte when the nibble saturates at 15);
     matches copy byte-by-byte from the sliding output window.
@@ -129,12 +140,16 @@ def pglz_decompress(data: bytes, rawsize: int) -> bytes:
             if pos >= n or out_len >= rawsize:
                 break
             if ctrl & 1:
+                if pos + 2 > n:
+                    raise ValueError("pglz: stream ends inside a match")
                 b0 = data[pos]
                 b1 = data[pos + 1]
                 pos += 2
                 length = (b0 & 0x0F) + 3
                 offset = ((b0 & 0xF0) << 4) | b1
                 if length == 18:
+                    if pos >= n:
+                        raise ValueError("pglz: stream ends inside a match")
                     length += data[pos]
                     pos += 1
                 start = out_len - offset
@@ -171,8 +186,10 @@ def pglz_decompress(data: bytes, rawsize: int) -> bytes:
     return bytes(out)
 
 
-def pglz_compress(data: bytes) -> bytes | None:
-    """Greedy LZ with a positions table — emits a format-valid stream
+def _pglz_compress_py(data: bytes) -> bytes | None:
+    """The Python pglz encoder: the reference the C kernel (``pglz.c``)
+    is tested against, and the encoder where no C compiler is found.
+    Greedy LZ with a positions table — emits a format-valid stream
     (offset <= 4095, length 3..273); returns None unless it shrinks
     the input (the reference keeps such blocks uncompressed)."""
     n = len(data)
@@ -256,6 +273,106 @@ def pglz_compress(data: bytes) -> bytes | None:
     if ctrl_pos >= 0:
         out[ctrl_pos] = ctrl
     return bytes(out) if len(out) < n else None
+
+# ------------------------------------------------------------ pglz in C
+
+#: a pglz stream of n bytes decodes to at most 2184 bytes per 25 (a
+#: control byte and 8 length-extended matches), so a larger rawsize is
+#: malformed before any output is allocated
+_PGLZ_MAX_RATIO = 88
+
+_PGLZ_ERRORS = {-1: "pglz: bad match offset",
+                -2: "pglz: stream ends inside a match",
+                -3: "pglz: stream does not decode to rawsize bytes"}
+
+
+class _NativePglz:
+    """ctypes bindings over the compiled ``pglz.c``: the same streams,
+    results and ``ValueError`` cases as the Python kernels."""
+
+    def __init__(self, lib: ctypes.CDLL):
+        lib.pglz_compress.argtypes = [ctypes.c_char_p, ctypes.c_int64,
+                                      ctypes.c_char_p]
+        lib.pglz_compress.restype = ctypes.c_int64
+        lib.pglz_decompress.argtypes = [ctypes.c_char_p, ctypes.c_int64,
+                                        ctypes.c_char_p, ctypes.c_int64]
+        lib.pglz_decompress.restype = ctypes.c_int
+        self._lib = lib
+
+    def compress(self, data: bytes) -> bytes | None:
+        data = bytes(data)
+        out = ctypes.create_string_buffer(len(data))
+        got = self._lib.pglz_compress(data, len(data), out)
+        if got == -2:
+            raise MemoryError("pglz: no scratch memory")
+        return ctypes.string_at(out, got) if got >= 0 else None
+
+    def decompress(self, data: bytes, rawsize: int) -> bytes:
+        data = bytes(data)
+        if not 0 <= rawsize <= _PGLZ_MAX_RATIO * len(data):
+            raise ValueError(_PGLZ_ERRORS[-3])
+        out = ctypes.create_string_buffer(rawsize)
+        rc = self._lib.pglz_decompress(data, len(data), out, rawsize)
+        if rc:
+            raise ValueError(_PGLZ_ERRORS[rc])
+        return out.raw
+
+
+#: the per-user build cache: one library per hash of ``pglz.c``
+_NATIVE_CACHE = os.path.join(os.path.expanduser("~"), ".cache",
+                             "cstore_fdw_spark")
+
+
+@functools.cache
+def _native_pglz() -> _NativePglz | None:
+    """The C pglz kernels, built on first use: ``pglz.c`` (read through
+    the package loader, since executors import this package from a
+    zip) is compiled by the host's ``cc`` into :data:`_NATIVE_CACHE`,
+    named by its source hash so an edited source builds anew, and
+    loaded with ctypes. None when no compiler is found or the build
+    fails; the Python kernels then serve."""
+    src = pkgutil.get_data(__package__, "pglz.c")
+    lib = os.path.join(_NATIVE_CACHE, "pglz-%s.so"
+                       % hashlib.sha256(src).hexdigest()[:16])
+    try:
+        if not os.path.exists(lib):
+            cc = shutil.which("cc")
+            if cc is None:
+                return None
+            os.makedirs(_NATIVE_CACHE, mode=0o700, exist_ok=True)
+            with tempfile.TemporaryDirectory(dir=_NATIVE_CACHE) as tmp:
+                c_file = os.path.join(tmp, "pglz.c")
+                with open(c_file, "wb") as fh:
+                    fh.write(src)
+                built = os.path.join(tmp, "pglz.so")
+                if subprocess.run([cc, "-O2", "-shared", "-fPIC", "-o",
+                                   built, c_file],
+                                  capture_output=True).returncode:
+                    return None
+                os.replace(built, lib)  # concurrent builders: last wins
+        return _NativePglz(ctypes.CDLL(lib))
+    except OSError:
+        return None
+
+
+def pglz_decompress(data: bytes, rawsize: int) -> bytes:
+    """Undo one pglz stream into exactly ``rawsize`` bytes; raises
+    ``ValueError`` on a malformed stream. The C kernel when it builds,
+    the Python kernel otherwise (byte-identical, tested)."""
+    native = _native_pglz()
+    if native is None:
+        return _pglz_decompress_py(data, rawsize)
+    return native.decompress(data, rawsize)
+
+
+def pglz_compress(data: bytes) -> bytes | None:
+    """pglz-compress ``data``; None unless the stream is shorter. The C
+    kernel when it builds, the Python kernel otherwise (the same
+    bytes, tested)."""
+    native = _native_pglz()
+    if native is None:
+        return _pglz_compress_py(data)
+    return native.compress(data)
 
 # ------------------------------------------------------------- pg numeric
 

@@ -7,14 +7,17 @@ from __future__ import annotations
 import datetime
 import os
 import random
+import shutil
 import struct
 from decimal import Decimal
 
 import pytest
 
+from cstore_fdw_spark.sources import cstore_format
 from cstore_fdw_spark.sources.cstore_format import (
-    CSTORE_TYPES, MAGIC, pglz_compress, pglz_decompress, read_cstore_file,
-    read_footer, write_cstore_file)
+    CSTORE_TYPES, MAGIC, _pglz_compress_py, _pglz_decompress_py,
+    pglz_compress, pglz_decompress, read_cstore_file, read_footer,
+    write_cstore_file)
 
 
 def test_pglz_spec_vectors_and_round_trips():
@@ -27,22 +30,186 @@ def test_pglz_spec_vectors_and_round_trips():
     # length extension: literal 'x' then match(off=1, len=20)
     stream = bytes([0b00000010, ord("x"), 0x0F, 0x01, 20 - 18])
     assert pglz_decompress(stream, 21) == b"x" * 21
-    random.seed(5)
-    for trial in range(40):
-        n = random.randint(0, 4000)
-        mode = trial % 3
-        if mode == 0:
-            data = bytes(random.randrange(256) for _ in range(n))
-        elif mode == 1:
-            data = (b"the quick brown fox " * (n // 10 + 1))[:n]
-        else:
-            data = bytes(random.choice(b"ab") for _ in range(n))
+    # truncated streams: a match tag cut after its first byte, and a
+    # saturated tag whose length-extension byte is missing; after 256
+    # literals, a zero byte read past the end would complete either one
+    # into a valid offset-256 match, so a kernel that reads past the
+    # stream decodes them
+    lits = b"".join(b"\x00" + bytes(range(i, i + 8))
+                    for i in range(0, 256, 8))
+    for decode in (pglz_decompress, _pglz_decompress_py):
+        for stream, rawsize in ((bytes([0x01, 0x05]), 10),
+                                (bytes([0b10, ord("x"), 0x0F, 0x01]), 21),
+                                (lits + bytes([0x01, 0x11]), 260),
+                                (lits + bytes([0x01, 0x1F, 0x00]), 274)):
+            with pytest.raises(ValueError):
+                decode(stream, rawsize)
+    for trial, data in enumerate(_random_pglz_inputs()):
         packed = pglz_compress(data)
         if packed is not None:
             assert len(packed) < len(data)
             assert pglz_decompress(packed, len(data)) == data, trial
     # incompressible data is declined, like the reference's CompressBuffer
     assert pglz_compress(bytes(range(256))) is None
+
+
+def _random_pglz_inputs():
+    """40 seeded buffers: random bytes, repeated text, two-letter runs."""
+    rng = random.Random(5)
+    for trial in range(40):
+        n = rng.randint(0, 4000)
+        mode = trial % 3
+        if mode == 0:
+            yield bytes(rng.randrange(256) for _ in range(n))
+        elif mode == 1:
+            yield (b"the quick brown fox " * (n // 10 + 1))[:n]
+        else:
+            yield bytes(rng.choice(b"ab") for _ in range(n))
+
+
+def _native_kernels():
+    native = cstore_format._native_pglz()
+    if native is None:
+        assert shutil.which("cc") is None, "cc exists but pglz.c did not load"
+        pytest.skip("no C compiler: the Python pglz kernels serve")
+    return native
+
+
+def _lineitem_blocks(sf_dir, tmp_path, block_row_count):
+    """Every value buffer the writer hands to pglz when lineitem, sorted
+    by l_orderkey as the table_writes benchmark loads it, is written at
+    ``block_row_count``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    names = {pa.int64(): "bigint", pa.int32(): "integer",
+             pa.float64(): "double", pa.string(): "string"}
+    tbl = pq.read_table(f"{sf_dir}/lineitem.parquet").sort_by("l_orderkey")
+    tbl = tbl.cast(pa.schema([
+        pa.field(f.name, pa.timestamp("us")
+                 if pa.types.is_timestamp(f.type) else f.type)
+        for f in tbl.schema]))
+    types = [names.get(f.type, "timestamp") for f in tbl.schema]
+    seen = []
+    real = cstore_format.pglz_compress
+
+    def record(data):
+        seen.append(bytes(data))
+        return real(data)
+    cstore_format.pglz_compress = record
+    try:
+        cstore_format.write_cstore_arrow(
+            str(tmp_path / f"li{block_row_count}.cstore"), tbl, types,
+            block_row_count=block_row_count)
+    finally:
+        cstore_format.pglz_compress = real
+    return seen
+
+
+def test_pglz_c_compress_matches_python_byte_for_byte(sf_dir, tmp_path):
+    """The C encoder emits the Python encoder's exact stream (or
+    declines the same inputs) over the spec vectors, the seeded random
+    buffers, hypothesis buffers, and every lineitem block the benchmark's
+    writer compresses at block sizes 1000 and 10000."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    native = _native_kernels()
+
+    def same(data):
+        want = _pglz_compress_py(data)
+        assert native.compress(data) == want, len(data)
+        if want is not None:
+            assert native.decompress(want, len(data)) == data
+
+    # the abort rule's boundary: past n/4 the stream is exactly as long
+    # as the input consumed, which already declines the buffer
+    boundary = bytes.fromhex("6261616262616262626261626162616161616162"
+                             "616261626261626270cfb1")
+    assert _pglz_compress_py(boundary) is None
+    buffers = [b"ababab", b"x" * 21, bytes(range(256)), b"", boundary,
+               *_random_pglz_inputs()]
+    for brc in (1000, 10000):
+        blocks = _lineitem_blocks(sf_dir, tmp_path, brc)
+        assert len(blocks) >= 11
+        buffers += blocks
+    for data in buffers:
+        same(data)
+
+    @settings(max_examples=150, deadline=None)
+    @given(st.one_of(
+        st.binary(max_size=3000),
+        st.lists(st.sampled_from([b"a", b"ab", b"abc", b"\x00" * 7,
+                                  b"xyzxyzxyz", bytes(range(40))]),
+                 max_size=400).map(b"".join)))
+    def inner(data):
+        same(data)
+    inner()
+
+
+def _fixture_streams():
+    """(stream, rawsize) of every pglz block of the committed
+    tests/fixtures/contestant*.cstore files."""
+    from scripts.make_contestant_fixture import OUT, OUT_ARR, TYPES, TYPES_ARR
+    seen = []
+    real = cstore_format.pglz_decompress
+
+    def record(data, rawsize):
+        seen.append((bytes(data), rawsize))
+        return real(data, rawsize)
+    cstore_format.pglz_decompress = record
+    try:
+        for path, types in ((OUT, TYPES), (OUT_ARR, TYPES_ARR)):
+            list(read_cstore_file(path, types))
+    finally:
+        cstore_format.pglz_decompress = real
+    return seen
+
+
+def test_pglz_c_decompress_matches_python_on_fixtures_and_fuzz():
+    """The C decoder returns the Python decoder's bytes for every block
+    of the committed contestant fixtures, and over corrupted and
+    truncated versions of those streams and of the seeded random
+    buffers' streams the two kernels either both raise ValueError or
+    both return the same bytes."""
+    native = _native_kernels()
+    streams = _fixture_streams()
+    assert streams
+    for data, rawsize in streams:
+        assert native.decompress(data, rawsize) == \
+            _pglz_decompress_py(data, rawsize)
+    rng = random.Random(11)
+    # short streams put every corruption near a tag or the stream's end
+    short = [bytes(rng.choice(b"abc") for _ in range(n))
+             for n in range(20, 400, 3)]
+    streams += [(packed, len(data))
+                for data in [*_random_pglz_inputs(), *short]
+                if (packed := _pglz_compress_py(data)) is not None]
+
+    def outcome(kernel, data, rawsize):
+        try:
+            return kernel(data, rawsize)
+        except ValueError:
+            return ValueError
+
+    outcomes = set()
+    for trial in range(6000):
+        data, rawsize = rng.choice(streams)
+        data = bytearray(data)
+        kind = trial % 4
+        if kind == 0:    # flipped bytes
+            for _ in range(rng.randint(1, 4)):
+                data[rng.randrange(len(data))] = rng.randrange(256)
+        elif kind == 1:  # truncated stream
+            del data[rng.randrange(len(data)):]
+        elif kind == 2:  # wrong rawsize
+            rawsize += rng.choice([-100, -1, 1, 7, 10**6])
+        else:            # a random byte inserted
+            data.insert(rng.randrange(len(data) + 1), rng.randrange(256))
+        want = outcome(_pglz_decompress_py, bytes(data), rawsize)
+        assert outcome(native.decompress, bytes(data), rawsize) == want, \
+            trial
+        outcomes.add(want is ValueError)
+    assert outcomes == {True, False}  # the fuzz hit both outcomes
 
 
 def _sample_rows(n):

@@ -150,7 +150,7 @@ def test_ivf_nlist_scales_with_corpus(spark):
     from pyspark.sql import functions as F
 
     from cstore_fdw_spark.operators.similarity import (
-        IVF_NLIST_MIN, _ivf_scored_cells, ivf_nlist)
+        IVF_NLIST_MIN, _ivf_centroids, _ivf_scored_cells, ivf_nlist)
 
     assert ivf_nlist(100) == IVF_NLIST_MIN == 16
     assert ivf_nlist(500) == 23
@@ -166,7 +166,8 @@ def test_ivf_nlist_scales_with_corpus(spark):
 
     stats = {}
     for n in (500, 5000):
-        row = (_ivf_scored_cells(synth(n)).filter("rn = 1")
+        row = (_ivf_scored_cells(synth(n), _ivf_centroids(synth(n), n))
+               .filter("rn = 1")
                .groupBy("cell").count()
                .agg(F.count("*").alias("cells"),
                     F.max("count").alias("mx")).collect()[0])
@@ -596,8 +597,10 @@ def test_cstore_format_walks_and_encodes_one_way():
     block), skip-node bounds are computed only by the shared block
     encoder, the fixed-width Arrow fast path and the file-level fold,
     datums are encoded by one function, and the second file assembler
-    is gone."""
+    is gone. The C pglz kernels are loaded at one site and chosen by
+    nothing but whether they build."""
     import ast
+    import inspect
 
     from cstore_fdw_spark.sources import cstore_format
 
@@ -626,7 +629,40 @@ def test_cstore_format_walks_and_encodes_one_way():
                      and n.id == "footer_len"
                      and isinstance(n.ctx, ast.Load)) == \
         ["_stripe_sections"]
-    assert in_format(call_to("pglz_decompress")) == ["_stripe_blocks"]
+    def calls_pglz_decompress(node):
+        # the global, by name or as cstore_format.pglz_decompress
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and (
+            getattr(f, "id", None) == "pglz_decompress"
+            or (getattr(f, "attr", None) == "pglz_decompress"
+                and getattr(f.value, "id", None) == "cstore_format"))
+
+    def named(*names):
+        def pred(node):
+            return (getattr(node, "id", None) in names
+                    or (isinstance(node, ast.Attribute)
+                        and node.attr in names))
+        return pred
+
+    assert _package_functions_using(calls_pglz_decompress) == [
+        ("sources/cstore_format.py", "_stripe_blocks")]
+    # pglz in C: the library is loaded at one site; only the two module
+    # kernels pick between it and the Python reference, and nothing
+    # they read (no environment variable, no option) picks for them
+    loaders = named("CDLL", "PyDLL", "LoadLibrary")
+    assert _package_functions_using(
+        lambda n: isinstance(n, ast.Call) and loaders(n.func)) == [
+        ("sources/cstore_format.py", "_native_pglz")]
+    assert sorted(set(_package_functions_using(named(
+        "_native_pglz", "_pglz_compress_py", "_pglz_decompress_py")))) == [
+        ("sources/cstore_format.py", "pglz_compress"),
+        ("sources/cstore_format.py", "pglz_decompress")]
+    assert not in_format(named("environ", "environb", "getenv"))
+    assert list(inspect.signature(cstore_format.pglz_decompress)
+                .parameters) == ["data", "rawsize"]
+    assert list(inspect.signature(cstore_format.pglz_compress)
+                .parameters) == ["data"]
+    assert not inspect.signature(cstore_format._native_pglz).parameters
     assert in_format(bound_reduction) == [
         "_encode_block", "_encode_fixed_block", "cstore_file_minmax"]
     assert in_format(call_to("_minmax_key")) == [
