@@ -248,18 +248,16 @@ def bloom_view_membership(catalog: CStoreCatalog, view: str,
     all k positions are set — never false for a present key, the
     one-sided guarantee). The set-bit table broadcasts (<= |groups| x m
     rows), so probing any corpus is one map-side join."""
-    from cstore_fdw_spark.functions.portable_hash import spark_w32
+    from cstore_fdw_spark.operators.analytics import bloom_positions
 
     spec = _VIEWS.load_spec(catalog, view)
     if spec.get("kind") != "bloom":
         raise CStoreError(f'"{view}" is not a Bloom filter view')
     keys, column = spec["keys"], spec["column"]
-    m, k = spec["m"], spec["k"]
-    key = f"cast({column} as string)"
-    arr = F.array(*[(F.expr(spark_w32(key, i)) % m) for i in range(k)])
     bits = catalog.read(view).withColumn("present", F.lit(1))
     cols = keys + [column]
-    pb = probes.select(*cols, F.explode(arr).alias("bit"))
+    pb = probes.select(*cols, F.explode(bloom_positions(
+        column, spec["m"], spec["k"])).alias("bit"))
     # all-positions-set via MIN, not SUM == k: a duplicate probe row
     # contributes 2k exploded rows and would break the SUM count while
     # MIN stays a pure all() — the no-false-negative guarantee must

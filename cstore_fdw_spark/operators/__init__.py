@@ -63,6 +63,14 @@ class QuerySpec:
     #: build or ``clear_caches`` — so they hold through the caller's
     #: action and never leak into the next query.
     confs: dict[str, str] = field(default_factory=dict)
+    #: streaming-twin declaration ``(source table, (state, ...),
+    #: finisher)``: each state is a mergeable rollup of the source
+    #: frame, batch or stream, and the finisher turns the states into
+    #: the query's result. The registry builds the batch query from it
+    #: (``finisher(*(state(table(source)) for state in states))``) and
+    #: ``streaming.runner.run_twin`` builds the stream from it, so the
+    #: two cannot fork.
+    twin: tuple | None = None
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -160,11 +168,15 @@ def scratch_catalog(spark, sf_dir: str, tag: str, build):
 
 def register(name: str, oracle: str | None = None, category: str = "general",
              bench: bool = False, allow_bnlj: bool = False,
-             confs: dict[str, str] | None = None):
+             confs: dict[str, str] | None = None,
+             twin: tuple | None = None):
     confs = confs or {}
 
     def deco(fn):
         import functools
+
+        if twin is not None:  # the declaration is the builder
+            fn = functools.wraps(fn)(functools.partial(_twin_batch, twin))
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,9 +187,18 @@ def register(name: str, oracle: str | None = None, category: str = "general",
 
         REGISTRY[name] = QuerySpec(name, wrapped, oracle, category,
                                    (fn.__doc__ or "").strip(), bench,
-                                   allow_bnlj, confs)
+                                   allow_bnlj, confs, twin)
         return fn
     return deco
+
+
+def _twin_batch(twin: tuple, spark: SparkSession,
+                sf_dir: str) -> DataFrame:
+    """The batch query a twin declaration describes: every state over
+    one read of the source table, then the finisher."""
+    source, states, finisher = twin
+    src = table(spark, sf_dir, source)
+    return finisher(*(state(src) for state in states))
 
 
 def load_all() -> dict[str, QuerySpec]:
@@ -206,31 +227,51 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The data files of the parquet table at ``path``: the file itself,
+    or the part files of a directory Spark wrote."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet") and not f.startswith((".", "_")))
+
+
 def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     """(absolute path, footer digest, inference confs) of the parquet
-    file at ``path``. Inference reads only the footer (its length is in
-    the last 8 bytes), so a same-size rewrite with another column type
-    changes the key where a file timestamp might not. None when
-    ``path`` is not a local parquet file (a directory, a URL): such a
-    table is inferred on every read."""
+    table at ``path``: one file, or a directory Spark wrote, whose part
+    files' names and footers are digested in name order. Inference
+    reads only footers (a footer's length is in the file's last 8
+    bytes), so a same-size rewrite with another column type changes the
+    key where a file timestamp might not. None when ``path`` is not
+    local parquet (a URL, an empty directory): such a table is inferred
+    on every read."""
+    digest = hashlib.blake2b()
     try:
-        with open(path, "rb") as fh:
-            fh.seek(-8, os.SEEK_END)
-            tail = fh.read(8)
-            if tail[4:] != b"PAR1":
-                return None
-            fh.seek(-8 - int.from_bytes(tail[:4], "little"), os.SEEK_END)
-            footer = fh.read()
+        files = _parquet_files(path)
+        for name in files:
+            with open(name, "rb") as fh:
+                fh.seek(-8, os.SEEK_END)
+                tail = fh.read(8)
+                if tail[4:] != b"PAR1":
+                    return None
+                fh.seek(-8 - int.from_bytes(tail[:4], "little"),
+                        os.SEEK_END)
+                digest.update(os.path.basename(name).encode() + b"\0")
+                digest.update(fh.read())
     except OSError:
         return None
-    return (os.path.abspath(path), hashlib.blake2b(footer).digest(),
+    if not files:
+        return None
+    return (os.path.abspath(path), digest.digest(),
             tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The fixture table ``{sf_dir}/{name}.parquet`` — the one parquet
-    table loader of the operators. Its schema is inferred on the first
-    read and declared on every later one, which launches no Spark job;
+    """The parquet table ``{sf_dir}/{name}.parquet`` (a fixture file, or
+    a directory Spark wrote, such as a trained index artifact) — the
+    one parquet table loader of the operators. Its schema is inferred
+    on the first read and declared on every later one, which launches
+    no Spark job;
     ``events`` comes out with a micros ``ts`` (:func:`events_ts_micros`)."""
     path = f"{sf_dir}/{name}.parquet"
     key = _schema_key(spark, path)
@@ -249,11 +290,8 @@ def table_rows(sf_dir: str, name: str) -> int:
     (two jobs before the caller's action). A table Spark wrote is a
     directory of part files; their footers are summed."""
     import pyarrow.parquet as pq
-    path = f"{sf_dir}/{name}.parquet"
-    files = ([os.path.join(path, f) for f in os.listdir(path)
-              if f.endswith(".parquet") and not f.startswith((".", "_"))]
-             if os.path.isdir(path) else [path])
-    return sum(pq.read_metadata(f).num_rows for f in files)
+    return sum(pq.read_metadata(f).num_rows
+               for f in _parquet_files(f"{sf_dir}/{name}.parquet"))
 
 
 def events_ts_micros(events: DataFrame) -> DataFrame:

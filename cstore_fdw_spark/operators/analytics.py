@@ -798,8 +798,41 @@ def _hdr_oracle() -> str:
     """
 
 
+def hdr_histogram(lineitem: DataFrame) -> DataFrame:
+    """(g, idx, cnt) per-return-flag HDR histogram: the sketch itself,
+    a per-bucket COUNT bounded by the geometry, never by rows seen —
+    the query's only state, batch or stream."""
+    return (lineitem.select(F.col("l_returnflag").alias("g"),
+                            hdr_bucket_idx())
+            .groupBy("g", "idx").agg(F.count(F.lit(1)).alias("cnt")))
+
+
+def hdr_quantiles(hist: DataFrame) -> DataFrame:
+    """Finisher: (g, idx, cnt) histogram -> per-group p50/p95/p99
+    bucket bounds (the rank picks, over the histogram only)."""
+    w = Window.partitionBy("g").orderBy("idx")
+    ranked = (hist
+              .withColumn("cum", F.sum("cnt").over(w))
+              .withColumn("n", F.sum("cnt").over(Window.partitionBy("g"))))
+    picks = [F.min(F.when(F.col("cum") >= F.expr(f"CEIL(0.{q} * n)"),
+                          F.col("idx"))).alias(f"i{q}")
+             for q in ("50", "95", "99")]
+    picked = ranked.groupBy("g").agg(F.max("n").alias("n"), *picks)
+    cols = [F.col("g").alias("l_returnflag"),
+            F.col("n").cast("long").alias("n")]
+    for q in ("50", "95", "99"):
+        ds = f"GREATEST(0, i{q} DIV {HDR_SUB} - 1)"
+        lo = f"SHIFTLEFT(i{q} - {ds} * {HDR_SUB}, CAST({ds} AS INT))"
+        cols.append(F.expr(f"CAST({lo} AS BIGINT)").alias(f"p{q}_lo"))
+        cols.append(F.expr(
+            f"CAST({lo} + SHIFTLEFT(CAST(1 AS BIGINT),"
+            f" CAST({ds} AS INT)) - 1 AS BIGINT)").alias(f"p{q}_hi"))
+    return picked.select(*cols).orderBy("l_returnflag")
+
+
 @register(
     "stats_hdr_quantile_sketch",
+    twin=("lineitem", (hdr_histogram,), hdr_quantiles),
     category="analytics",
     oracle=_hdr_oracle())
 def stats_hdr_quantile_sketch(spark, sf_dir):
@@ -826,28 +859,6 @@ def stats_hdr_quantile_sketch(spark, sf_dir):
     value inside the reported [lo, hi], width ≤ 2^-M · lo) is asserted
     in tests/test_analytics.py. Output: (l_returnflag, n, p50_lo,
     p50_hi, p95_lo, p95_hi, p99_lo, p99_hi)."""
-    li = table(spark, sf_dir, "lineitem")
-    hist = (li.select(F.col("l_returnflag").alias("g"),
-                      hdr_bucket_idx())
-            .groupBy("g", "idx").agg(F.count(F.lit(1)).alias("cnt")))
-    w = Window.partitionBy("g").orderBy("idx")
-    ranked = (hist
-              .withColumn("cum", F.sum("cnt").over(w))
-              .withColumn("n", F.sum("cnt").over(Window.partitionBy("g"))))
-    picks = [F.min(F.when(F.col("cum") >= F.expr(f"CEIL(0.{q} * n)"),
-                          F.col("idx"))).alias(f"i{q}")
-             for q in ("50", "95", "99")]
-    picked = ranked.groupBy("g").agg(F.max("n").alias("n"), *picks)
-    cols = [F.col("g").alias("l_returnflag"),
-            F.col("n").cast("long").alias("n")]
-    for q in ("50", "95", "99"):
-        ds = f"GREATEST(0, i{q} DIV {HDR_SUB} - 1)"
-        lo = f"SHIFTLEFT(i{q} - {ds} * {HDR_SUB}, CAST({ds} AS INT))"
-        cols.append(F.expr(f"CAST({lo} AS BIGINT)").alias(f"p{q}_lo"))
-        cols.append(F.expr(
-            f"CAST({lo} + SHIFTLEFT(CAST(1 AS BIGINT),"
-            f" CAST({ds} AS INT)) - 1 AS BIGINT)").alias(f"p{q}_hi"))
-    return picked.select(*cols).orderBy("l_returnflag")
 
 
 # ---------------------------------------------------------------- PageRank
@@ -1672,61 +1683,6 @@ def _hll_oracle() -> str:
     """
 
 
-@register(
-    "sketch_hyperloglog_distinct",
-    category="analytics",
-    bench=True,
-    # CBO off: a bare-path read has no catalog stats, so the CBO stats
-    # visitor is pure driver overhead, and AQE re-costs this query's
-    # plan (the widest expression tree in the bench set: the finisher's
-    # 1024-entry ln-ppm literal) at every stage boundary. Interleaved
-    # min-of-3 at sf0.1: 2.93 s with CBO vs 1.77 s without; every other
-    # bench query was within noise, so this is declared per query.
-    confs={"spark.sql.cbo.enabled": "false",
-           "spark.sql.cbo.joinReorder.enabled": "false"},
-    oracle=_hll_oracle())
-def sketch_hyperloglog_distinct(spark, sf_dir):
-    """HyperLogLog distinct-count sketch (Flajolet et al. 2007), fully
-    portable and integer-exact: estimate distinct orders per return
-    flag from the line-item fact table with a 1024-register sketch
-    instead of an exact distinct shuffle (~11k distinct per group at
-    sf0.01 — safely above the 2.5m small-range threshold where the raw
-    estimator is unbiased). The register index is the low 10 bits of the portable md5
-    hash (the same h60 scheme every signature operator uses — DuckDB
-    recomputes identical values); the rank is the trailing-zero count
-    of the next 22 bits (the PCSA convention — same geometric law, so
-    HLL's alpha_m applies); the harmonic mean is computed EXACTLY by
-    scaling each 2^-M term to the integer 2^24 // 2^M, and the final
-    estimate uses alpha_1024 in Q16 fixed point — no IEEE float
-    anywhere, so Spark and DuckDB agree bit-for-bit. Standard error
-    1.04/sqrt(1024) ~ 3.3% (asserted against the exact count in
-    tests). The paper's §4 small-range correction is applied exactly:
-    when the raw estimate falls below 2.5m and zero registers remain,
-    the estimate switches to linear counting m*ln(m/V) — the ln values
-    are 1024 PRE-ROUNDED ppm literals (the only irrational inputs,
-    fixed at module definition and shared verbatim with the oracle
-    text), so even the correction is engine-exact integer arithmetic.
-    Both raw_estimate and the corrected distinct_estimate are emitted.
-
-    Scale: THE 100 TB distinct-count story — the corpus is touched
-    once, the shuffle carries at most |groups| x 1024 register rows
-    (map-side combined by the partial MAX), and the estimate is a
-    5-row projection. An exact COUNT(DISTINCT) shuffles every distinct
-    key; this shuffles 4 KB per group no matter how many trillions of
-    rows flow in. The register rollup is a mergeable MAX — the same
-    property that merges it across partitions merges it across
-    micro-batches, so ``streaming.analytics.run_hll_available_now``
-    maintains the identical sketch on an unbounded stream and runs
-    THIS function's finisher (``hll_estimate_from_registers``)."""
-    est = hll_estimate_from_registers(
-        hll_register_rollup(table(spark, sf_dir, "lineitem")))
-    # the finisher is table-agnostic (returns ``grp``); THIS query owns
-    # the lineitem-specific output name
-    return est.select(F.col("grp").alias("l_returnflag"),
-                      "zero_registers", "denom", "raw_estimate",
-                      "distinct_estimate")
-
-
 def hll_registers(df: DataFrame, keys: list[str],
                   column: str) -> DataFrame:
     """(keys..., reg, m_rho) register rollup over ANY frame: the
@@ -1750,7 +1706,7 @@ def hll_registers(df: DataFrame, keys: list[str],
 
 def hll_register_rollup(lineitem: DataFrame) -> DataFrame:
     """(grp, reg, m_rho) sketch frame from the raw fact table — the
-    operator's ONLY state (shared verbatim with the streaming twin)."""
+    operator's ONLY state, batch or stream (its twin declaration)."""
     return hll_registers(
         lineitem.select(F.col("l_returnflag").alias("grp"), "l_orderkey"),
         ["grp"], "l_orderkey")
@@ -1758,7 +1714,7 @@ def hll_register_rollup(lineitem: DataFrame) -> DataFrame:
 
 def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
     """Finisher: register frame -> per-group estimate (shared verbatim
-    between the batch operator and the streaming twin)."""
+    by the batch operator, its streaming twin and the aggview reader)."""
     # full 1024-register grid per group: explode a sequence literal over
     # the distinct groups taken from the SKETCH frame (<= |groups|*1024
     # rows), not the corpus — one corpus pass total
@@ -1783,6 +1739,67 @@ def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
                         "div") + " AS BIGINT)")
                     .alias("distinct_estimate"))
             .orderBy("grp"))
+
+
+def hll_returnflag_estimate(regs: DataFrame) -> DataFrame:
+    """The twin finisher of ``sketch_hyperloglog_distinct``: the
+    table-agnostic estimate, with the group named after the lineitem
+    column it came from."""
+    return (hll_estimate_from_registers(regs)
+            .select(F.col("grp").alias("l_returnflag"),
+                    "zero_registers", "denom", "raw_estimate",
+                    "distinct_estimate"))
+
+
+@register(
+    "sketch_hyperloglog_distinct",
+    twin=("lineitem", (hll_register_rollup,), hll_returnflag_estimate),
+    category="analytics",
+    bench=True,
+    # CBO off: a bare-path read has no catalog stats, so the CBO stats
+    # visitor is pure driver overhead, and AQE re-costs this query's
+    # plan (the widest expression tree in the bench set: the finisher's
+    # 1024-entry ln-ppm literal) at every stage boundary. Interleaved
+    # min-of-3 at sf0.1: 2.93 s with CBO vs 1.77 s without; every other
+    # bench query was within noise, so this is declared per query.
+    confs={"spark.sql.cbo.enabled": "false",
+           "spark.sql.cbo.joinReorder.enabled": "false"},
+    oracle=_hll_oracle())
+def sketch_hyperloglog_distinct(spark, sf_dir):
+    """HyperLogLog distinct-count sketch (Flajolet et al. 2007), fully
+    portable and integer-exact: estimate distinct orders per return
+    flag from the line-item fact table with a 1024-register sketch
+    instead of an exact distinct shuffle (~11k distinct per group at
+    sf0.01 — safely above the 2.5m small-range threshold where the raw
+    estimator is unbiased). The register index is the low 10 bits of the
+    portable md5 hash (the same h60 scheme every signature operator
+    uses — DuckDB recomputes identical values); the rank is the
+    trailing-zero count of the next 22 bits (the PCSA convention — same
+    geometric law, so HLL's alpha_m applies); the harmonic mean is
+    computed EXACTLY by scaling each 2^-M term to the integer
+    2^24 // 2^M, and the final estimate uses alpha_1024 in Q16 fixed
+    point — no IEEE float
+    anywhere, so Spark and DuckDB agree bit-for-bit. Standard error
+    1.04/sqrt(1024) ~ 3.3% (asserted against the exact count in
+    tests). The paper's §4 small-range correction is applied exactly:
+    when the raw estimate falls below 2.5m and zero registers remain,
+    the estimate switches to linear counting m*ln(m/V) — the ln values
+    are 1024 PRE-ROUNDED ppm literals (the only irrational inputs,
+    fixed at module definition and shared verbatim with the oracle
+    text), so even the correction is engine-exact integer arithmetic.
+    Both raw_estimate and the corrected distinct_estimate are emitted.
+
+    Scale: THE 100 TB distinct-count story — the corpus is touched
+    once, the shuffle carries at most |groups| x 1024 register rows
+    (map-side combined by the partial MAX), and the estimate is a
+    5-row projection. An exact COUNT(DISTINCT) shuffles every distinct
+    key; this shuffles 4 KB per group no matter how many trillions of
+    rows flow in. The register rollup is a mergeable MAX — the same
+    property that merges it across partitions merges it across
+    micro-batches, so the query declares its twin as that rollup and
+    ``hll_returnflag_estimate``: ``streaming.runner.run_twin`` maintains
+    the identical sketch on an unbounded stream and runs the same
+    finisher."""
 
 
 def _temperature_mix_oracle() -> str:
@@ -1940,8 +1957,35 @@ _BENFORD_CASE = "CASE digit " + " ".join(
     f"WHEN {d} THEN {ppm}" for d, ppm in enumerate(BENFORD_PPM, 1)) + " END"
 
 
+def benford_digit_counts(lineitem: DataFrame) -> DataFrame:
+    """(digit, obs): the first digit of each price in cents, counted —
+    nine mergeable counters, the Benford screen's only state, batch or
+    stream."""
+    return (lineitem.select(
+        F.expr("CAST(substr(CAST(CAST(ROUND(l_extendedprice * 100) AS "
+               "BIGINT) AS STRING), 1, 1) AS BIGINT)").alias("digit"))
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).cast("long").alias("obs")))
+
+
+def benford_from_digit_counts(counts: DataFrame) -> DataFrame:
+    """Finisher: (digit, obs) counts -> ppm comparison vs the Benford
+    literals (shared verbatim by the batch query and its streaming
+    twin)."""
+    cells = counts.withColumn(
+        "n", F.sum("obs").over(Window.partitionBy()))
+    return (cells.select(
+        "digit", "obs",
+        F.expr("obs * 1000000 div n").cast("long").alias("obs_ppm"),
+        F.expr(_BENFORD_CASE).cast("long").alias("benford_ppm"),
+        F.expr(f"obs * 1000000 div n - {_BENFORD_CASE}").cast("long")
+        .alias("deviation_ppm"))
+        .orderBy("digit"))
+
+
 @register(
     "stats_benford_first_digit",
+    twin=("lineitem", (benford_digit_counts,), benford_from_digit_counts),
     category="analytics",
     oracle=f"""
     WITH digits AS (
@@ -1977,29 +2021,6 @@ def stats_benford_first_digit(spark, sf_dir):
     Scale: one map-side-combined 9-group aggregate over the corpus —
     the digit projection is pure codegen string arithmetic on an
     int64; the ppm comparison is a projection over 9 rows."""
-    li = table(spark, sf_dir, "lineitem")
-    digits = li.select(
-        F.expr("CAST(substr(CAST(CAST(ROUND(l_extendedprice * 100) AS "
-               "BIGINT) AS STRING), 1, 1) AS BIGINT)").alias("digit"))
-    return benford_from_digit_counts(
-        digits.groupBy("digit")
-        .agg(F.count(F.lit(1)).cast("long").alias("obs")))
-
-
-def benford_from_digit_counts(counts: DataFrame) -> DataFrame:
-    """Finisher: (digit, obs) counts -> ppm comparison vs the Benford
-    literals (shared verbatim with the streaming twin — the 9-row
-    digit-count frame, a mergeable COUNT, is the operator's only
-    state)."""
-    cells = counts.withColumn(
-        "n", F.sum("obs").over(Window.partitionBy()))
-    return (cells.select(
-        "digit", "obs",
-        F.expr("obs * 1000000 div n").cast("long").alias("obs_ppm"),
-        F.expr(_BENFORD_CASE).cast("long").alias("benford_ppm"),
-        F.expr(f"obs * 1000000 div n - {_BENFORD_CASE}").cast("long")
-        .alias("deviation_ppm"))
-        .orderBy("digit"))
 
 
 def _hll_union_oracle() -> str:
@@ -2130,35 +2151,6 @@ def _countmin_oracle() -> str:
     """
 
 
-@register(
-    "sketch_countmin_user_counts",
-    category="analytics",
-    oracle=_countmin_oracle())
-def sketch_countmin_user_counts(spark, sf_dir):
-    """Count-Min frequency sketch (Cormode & Muthukrishnan 2005) over
-    the event stream's user_id: estimate per-user event counts from a
-    4x512-counter sketch instead of an exact per-key shuffle, evaluated
-    here on a deterministic probe set (user_id % 37 = 0) against the
-    exact counts so the one-sided guarantee (est_cnt >= exact_cnt,
-    over-count bounded by ~2N/w) is visible in the output. Hashing is
-    the portable 4-window md5 scheme, all arithmetic integer — the
-    DuckDB oracle recomputes the identical sketch and estimates.
-
-    Scale: THE bounded-state frequency story, the counting twin of the
-    HLL distinct sketch. The corpus is touched once; the per-(row,
-    bucket) COUNT combines map-side so at most d x w = 2048 rows per map
-    partition ever shuffle, and serving is a broadcast join against a
-    2048-row table. The sketch is sum-mergeable — across partitions,
-    micro-batches, and epoch deltas: its state IS a per-(i, b) count,
-    exactly the shape ``aggview.create_agg_view`` already maintains
-    incrementally (keys=[i, b], n_rows), so a lakehouse deployment gets
-    an always-current CM sketch from the existing crash-atomic refresh
-    with zero new machinery."""
-    ev = table(spark, sf_dir, "events")
-    return countmin_estimates(countmin_rollup(ev),
-                              countmin_probe_counts(ev))
-
-
 def _cm_bucket_arr():
     """The d (row, bucket) pairs of a user_id — one md5, four windows."""
     from cstore_fdw_spark.functions.portable_hash import spark_w32
@@ -2198,11 +2190,50 @@ def countmin_estimates(cm: DataFrame, probes: DataFrame) -> DataFrame:
             .agg(F.min("cnt").cast("long").alias("est_cnt")))
 
 
+@register(
+    "sketch_countmin_user_counts",
+    twin=("events", (countmin_rollup, countmin_probe_counts),
+          countmin_estimates),
+    category="analytics",
+    oracle=_countmin_oracle())
+def sketch_countmin_user_counts(spark, sf_dir):
+    """Count-Min frequency sketch (Cormode & Muthukrishnan 2005) over
+    the event stream's user_id: estimate per-user event counts from a
+    4x512-counter sketch instead of an exact per-key shuffle, evaluated
+    here on a deterministic probe set (user_id % 37 = 0) against the
+    exact counts so the one-sided guarantee (est_cnt >= exact_cnt,
+    over-count bounded by ~2N/w) is visible in the output. Hashing is
+    the portable 4-window md5 scheme, all arithmetic integer — the
+    DuckDB oracle recomputes the identical sketch and estimates.
+
+    Scale: THE bounded-state frequency story, the counting twin of the
+    HLL distinct sketch. The corpus is touched once; the per-(row,
+    bucket) COUNT combines map-side so at most d x w = 2048 rows per map
+    partition ever shuffle, and serving is a broadcast join against a
+    2048-row table. The sketch is sum-mergeable — across partitions,
+    micro-batches, and epoch deltas: its state IS a per-(i, b) count,
+    exactly the shape ``aggview.create_agg_view`` already maintains
+    incrementally (keys=[i, b], n_rows), so a lakehouse deployment gets
+    an always-current CM sketch from the existing crash-atomic refresh
+    with zero new machinery."""
+
+
 #: Bloom geometry: m=1024 bits, k=4 hash positions (the four 32-bit md5
 #: windows). Fixed m keeps the oracle deterministic; production sizes m
 #: to the expected key count (m/n ~ 10 bits/key for ~1% FP at k=4).
 BLOOM_M = 1024
 BLOOM_K = 4
+
+
+def bloom_positions(column: str, m: int = BLOOM_M, k: int = BLOOM_K):
+    """The k bit positions of ``column`` in an m-bit Bloom filter as an
+    array Column (the four 32-bit md5 windows, mod m) — the one
+    definition behind the filter build (:func:`bloom_bits`) and every
+    probe, so a probe tests exactly the bits a build sets."""
+    from cstore_fdw_spark.functions.portable_hash import spark_w32
+
+    key = f"cast({column} as string)"
+    return F.array(*[(F.expr(spark_w32(key, i)) % m) for i in range(k)])
 
 
 def bloom_bits(df: DataFrame, keys: list[str], column: str,
@@ -2214,11 +2245,8 @@ def bloom_bits(df: DataFrame, keys: list[str], column: str,
     aggview ``bloom`` state kind). Shared by the registered operator
     and ``aggview.create_bloom_agg_view`` — one definition, so filters
     built anywhere merge exactly."""
-    from cstore_fdw_spark.functions.portable_hash import spark_w32
-
-    key = f"cast({column} as string)"
-    arr = F.array(*[(F.expr(spark_w32(key, i)) % m) for i in range(k)])
-    return (df.select(*keys, F.explode(arr).alias("bit")).distinct())
+    return (df.select(*keys, F.explode(bloom_positions(column, m, k))
+                      .alias("bit")).distinct())
 
 
 def _bloom_oracle() -> str:
@@ -2270,18 +2298,14 @@ def sketch_bloom_order_membership(spark, sf_dir):
     batches, and archived filters. m is a fixture constant here — a
     production build sizes m ~ 10n for ~1% FP and shards the bit space
     by key range."""
-    from cstore_fdw_spark.functions.portable_hash import spark_w32
-
-    ckey = "cast(c_custkey as string)"
     keys = (table(spark, sf_dir, "orders")
             .filter(F.col("o_orderstatus") == "P")
             .select("o_custkey").distinct())
     bits = (bloom_bits(keys, [], "o_custkey")
             .withColumn("present", F.lit(1)))
-    cbit_arr = F.array(*[(F.expr(spark_w32(ckey, i)) % BLOOM_M)
-                         for i in range(BLOOM_K)])
     probe = (table(spark, sf_dir, "customer")
-             .select("c_custkey", F.explode(cbit_arr).alias("bit")))
+             .select("c_custkey",
+                     F.explode(bloom_positions("c_custkey")).alias("bit")))
     hits = (probe.join(F.broadcast(bits), "bit", "left")
             .groupBy("c_custkey")
             .agg(F.sum(F.coalesce("present", F.lit(0))).alias("nhit")))
@@ -2417,8 +2441,28 @@ def _qhist_pipeline_sql(qs: tuple = QH_QS) -> str:
             FROM picked)"""
 
 
+def quantile_price_buckets(lineitem: DataFrame) -> DataFrame:
+    """(grp, bucket, cnt): the per-return-flag price histogram, the
+    only state of ``sketch_quantile_histogram``, batch or stream."""
+    return quantile_buckets(
+        lineitem.select(F.col("l_returnflag").alias("grp"),
+                        "l_extendedprice"),
+        ["grp"], "l_extendedprice")
+
+
+def quantile_returnflag_estimate(counts: DataFrame) -> DataFrame:
+    """The twin finisher of ``sketch_quantile_histogram``: the
+    table-agnostic estimate, with the group named after the lineitem
+    column it came from."""
+    return (quantile_estimate_from_buckets(counts)
+            .select(F.col("grp").alias("l_returnflag"),
+                    "q", "n", "rnk", "bucket", "q_lo", "q_hi"))
+
+
 @register(
     "sketch_quantile_histogram",
+    twin=("lineitem", (quantile_price_buckets,),
+          quantile_returnflag_estimate),
     category="analytics",
     bench=True,
     oracle=f"""
@@ -2432,9 +2476,9 @@ def sketch_quantile_histogram(spark, sf_dir):
     Bloom (membership, OR): p50/p90/p99 of l_extendedprice per return
     flag from a fixed-geometry equi-width histogram instead of an exact
     per-group sort. The state is the per-(group, bucket) COUNT —
-    sum-mergeable across partitions, micro-batches
-    (``streaming.analytics.run_quantile_available_now`` maintains the
-    identical table and runs THIS finisher) and epoch deltas
+    sum-mergeable across partitions, micro-batches (the query's twin
+    declaration: ``streaming.runner.run_twin`` maintains the identical
+    table and runs the same finisher) and epoch deltas
     (``aggview.create_quantile_agg_view``). The error bound is
     DETERMINISTIC, not probabilistic: the emitted [q_lo, q_hi) interval
     provably contains the exact rank-ceil(n*q/100) order statistic
@@ -2451,13 +2495,6 @@ def sketch_quantile_histogram(spark, sf_dir):
     percentile must globally sort (or multi-pass select) every group;
     this ships 8 KB per group no matter how many trillions of rows
     stream in."""
-    li = table(spark, sf_dir, "lineitem")
-    counts = quantile_buckets(
-        li.select(F.col("l_returnflag").alias("grp"), "l_extendedprice"),
-        ["grp"], "l_extendedprice")
-    est = quantile_estimate_from_buckets(counts)
-    return est.select(F.col("grp").alias("l_returnflag"),
-                      "q", "n", "rnk", "bucket", "q_lo", "q_hi")
 
 
 @register(

@@ -650,8 +650,40 @@ def timeseries_holt_smoothing(spark, sf_dir):
             .orderBy("event_type"))
 
 
+def cusum_changepoints(hourly):
+    """The CUSUM finisher over a (event_type, h, x) hourly rollup —
+    the twin finisher ``timeseries_cusum_changepoint`` declares, so the
+    batch query below and its streaming twin
+    (``streaming.runner.run_twin``) both end in it: the rollup is a
+    mergeable SUM, so a complete-mode stream maintains the identical
+    hourly state and this SAME window pass localizes the identical
+    changepoints."""
+    word = Window.partitionBy("event_type").orderBy("h")
+    wcum = word.rowsBetween(Window.unboundedPreceding,
+                            Window.currentRow)
+    wall = Window.partitionBy("event_type")
+    seq = (hourly
+           .withColumn("rn", F.row_number().over(word))
+           .withColumn("s_i", F.sum("x").over(wcum))
+           .withColumn("s_n", F.sum("x").over(wall))
+           .withColumn("n", F.count(F.lit(1)).over(wall)))
+    dev = (seq.filter(F.col("rn") < F.col("n"))
+           .withColumn("d", F.abs(F.col("n") * F.col("s_i")
+                                  - F.col("rn") * F.col("s_n"))))
+    wpick = Window.partitionBy("event_type").orderBy(F.col("d").desc(),
+                                                     "rn")
+    return (dev.withColumn("pk", F.row_number().over(wpick))
+            .filter(F.col("pk") == 1)
+            .select("event_type", F.col("h").alias("cp_hour"),
+                    F.col("rn").cast("long").alias("cp_rn"),
+                    F.col("n").cast("long").alias("n_hours"),
+                    F.col("d").cast("long").alias("d_max"))
+            .orderBy("event_type"))
+
+
 @register(
     "timeseries_cusum_changepoint",
+    twin=("events", (hourly_cents,), cusum_changepoints),
     category="events",
     oracle="""
     WITH hourly AS (
@@ -699,37 +731,6 @@ def timeseries_cusum_changepoint(spark, sf_dir):
     argument as timeseries_holt_smoothing), and the argmax is a second
     window over those same rows, no extra shuffle of the corpus. All
     integers, so the oracle hash-matches bit for bit."""
-    hourly = hourly_cents(table(spark, sf_dir, "events"))
-    return cusum_changepoints(hourly)
-
-
-def cusum_changepoints(hourly):
-    """The CUSUM finisher over a (event_type, h, x) hourly rollup —
-    shared by the batch query above and the streaming twin
-    (streaming/analytics.py): the rollup is a mergeable SUM, so a
-    complete-mode stream maintains the identical hourly state and this
-    SAME window pass localizes the identical changepoints."""
-    word = Window.partitionBy("event_type").orderBy("h")
-    wcum = word.rowsBetween(Window.unboundedPreceding,
-                            Window.currentRow)
-    wall = Window.partitionBy("event_type")
-    seq = (hourly
-           .withColumn("rn", F.row_number().over(word))
-           .withColumn("s_i", F.sum("x").over(wcum))
-           .withColumn("s_n", F.sum("x").over(wall))
-           .withColumn("n", F.count(F.lit(1)).over(wall)))
-    dev = (seq.filter(F.col("rn") < F.col("n"))
-           .withColumn("d", F.abs(F.col("n") * F.col("s_i")
-                                  - F.col("rn") * F.col("s_n"))))
-    wpick = Window.partitionBy("event_type").orderBy(F.col("d").desc(),
-                                                     "rn")
-    return (dev.withColumn("pk", F.row_number().over(wpick))
-            .filter(F.col("pk") == 1)
-            .select("event_type", F.col("h").alias("cp_hour"),
-                    F.col("rn").cast("long").alias("cp_rn"),
-                    F.col("n").cast("long").alias("n_hours"),
-                    F.col("d").cast("long").alias("d_max"))
-            .orderBy("event_type"))
 
 
 @register(
@@ -908,8 +909,55 @@ def timeseries_mannkendall_trend(spark, sf_dir):
             .orderBy("event_type"))
 
 
+def seasonal_decompose_from_hourly(hourly):
+    """The seasonal-decompose finisher over a (event_type, h, x) hourly
+    frame — the twin finisher ``timeseries_seasonal_decompose``
+    declares, shared LITERALLY by the batch query below and its
+    streaming twin (``streaming.runner.run_twin``), the CUSUM
+    shared-finisher discipline: the hourly rollup is the
+    operator's ONLY state (a mergeable SUM, |type| x wall-time hours),
+    so the streamed and batch decompositions agree by construction."""
+    seas = (hourly.withColumn("hod", F.hour("h").cast("long"))
+            .groupBy("event_type", "hod")
+            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("m"))
+            .withColumn("fx", F.expr("(s * 10000) DIV m"))
+            .select("event_type", "hod", "fx"))
+    wpeak = Window.partitionBy("event_type").orderBy(
+        F.col("fx").desc(), "hod")
+    peak = (seas.withColumn("pk", F.row_number().over(wpeak))
+            .filter("pk = 1")
+            .select("event_type", F.col("hod").alias("peak_hod"),
+                    F.col("fx").alias("peak_seasonal_fx")))
+    dev = (hourly.withColumn("hod", F.hour("h").cast("long"))
+           .join(F.broadcast(seas), ["event_type", "hod"])
+           .select("event_type", "h",
+                   (F.col("x") * 10000 - F.col("fx")).alias("dev_fx")))
+    wanom = Window.partitionBy("event_type").orderBy(
+        F.abs(F.col("dev_fx")).desc(), "h")
+    anom = (dev.withColumn("pk", F.row_number().over(wanom))
+            .filter("pk = 1")
+            # renamed join key: peak and anom descend from the SAME
+            # leaf (one hourly frame), and over a memory-sink view the
+            # two branches carry identical exprIds — a bare
+            # join("event_type") is then ambiguous (the batch parquet
+            # path re-keys per scan and hides this)
+            .select(F.col("event_type").alias("et_anom"),
+                    F.col("h").alias("anomaly_hour"), "dev_fx"))
+    return (peak.join(anom, peak["event_type"] == anom["et_anom"])
+            .drop("et_anom")
+            .select("event_type",
+                    F.col("peak_hod").cast("long").alias("peak_hod"),
+                    F.col("peak_seasonal_fx").cast("long")
+                    .alias("peak_seasonal_fx"),
+                    "anomaly_hour",
+                    F.col("dev_fx").cast("long")
+                    .alias("anomaly_dev_fx"))
+            .orderBy("event_type"))
+
+
 @register(
     "timeseries_seasonal_decompose",
+    twin=("events", (hourly_cents,), seasonal_decompose_from_hourly),
     category="events",
     oracle="""
     WITH hourly AS (
@@ -962,53 +1010,6 @@ def timeseries_seasonal_decompose(spark, sf_dir):
     hod profile is |type| × 24 and joins back broadcast-sized, the two
     argmax windows partition by event_type over wall-time-bounded
     series. No corpus-sized exchange after the rollup."""
-    hourly = hourly_cents(table(spark, sf_dir, "events"))
-    return seasonal_decompose_from_hourly(hourly)
-
-
-def seasonal_decompose_from_hourly(hourly):
-    """The seasonal-decompose finisher over a (event_type, h, x) hourly
-    frame — shared LITERALLY by the batch query above and the streaming
-    twin (``streaming/analytics.run_seasonal_available_now``), the
-    CUSUM shared-finisher discipline: the hourly rollup is the
-    operator's ONLY state (a mergeable SUM, |type| x wall-time hours),
-    so the streamed and batch decompositions agree by construction."""
-    seas = (hourly.withColumn("hod", F.hour("h").cast("long"))
-            .groupBy("event_type", "hod")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("m"))
-            .withColumn("fx", F.expr("(s * 10000) DIV m"))
-            .select("event_type", "hod", "fx"))
-    wpeak = Window.partitionBy("event_type").orderBy(
-        F.col("fx").desc(), "hod")
-    peak = (seas.withColumn("pk", F.row_number().over(wpeak))
-            .filter("pk = 1")
-            .select("event_type", F.col("hod").alias("peak_hod"),
-                    F.col("fx").alias("peak_seasonal_fx")))
-    dev = (hourly.withColumn("hod", F.hour("h").cast("long"))
-           .join(F.broadcast(seas), ["event_type", "hod"])
-           .select("event_type", "h",
-                   (F.col("x") * 10000 - F.col("fx")).alias("dev_fx")))
-    wanom = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("dev_fx")).desc(), "h")
-    anom = (dev.withColumn("pk", F.row_number().over(wanom))
-            .filter("pk = 1")
-            # renamed join key: peak and anom descend from the SAME
-            # leaf (one hourly frame), and over a memory-sink view the
-            # two branches carry identical exprIds — a bare
-            # join("event_type") is then ambiguous (the batch parquet
-            # path re-keys per scan and hides this)
-            .select(F.col("event_type").alias("et_anom"),
-                    F.col("h").alias("anomaly_hour"), "dev_fx"))
-    return (peak.join(anom, peak["event_type"] == anom["et_anom"])
-            .drop("et_anom")
-            .select("event_type",
-                    F.col("peak_hod").cast("long").alias("peak_hod"),
-                    F.col("peak_seasonal_fx").cast("long")
-                    .alias("peak_seasonal_fx"),
-                    "anomaly_hour",
-                    F.col("dev_fx").cast("long")
-                    .alias("anomaly_dev_fx"))
-            .orderBy("event_type"))
 
 
 #: LTTB output size per key: first + last point + one point per
@@ -1489,8 +1490,43 @@ def timeseries_sma_crossover(spark, sf_dir):
             .orderBy("event_type", "cross_hour"))
 
 
+def mad_anomalies_from_hourly(hourly) -> DataFrame:
+    """Finisher: (event_type, h, cnt) hourly rollup -> anomalous hours
+    (the twin finisher ``timeseries_anomaly_mad`` declares, shared
+    verbatim by the batch query and its streaming twin — the rollup, a
+    mergeable COUNT bounded by |event_type| x wall-time hours, is the
+    operator's only state)."""
+    wrk = Window.partitionBy("event_type").orderBy("cnt", "h")
+    wn = Window.partitionBy("event_type")
+    rc = (hourly.withColumn("rk", F.row_number().over(wrk))
+          .withColumn("n", F.count(F.lit(1)).over(wn)))
+    med = (rc.groupBy("event_type")
+           .agg((F.max(F.when(F.col("rk") == F.expr("(n + 1) DIV 2"),
+                              F.col("cnt")))
+                 + F.max(F.when(F.col("rk") == F.expr("(n + 2) DIV 2"),
+                                F.col("cnt")))).alias("med2")))
+    dev = (rc.join(F.broadcast(med), "event_type")
+           .select("event_type", "h", "cnt",
+                   F.abs(2 * F.col("cnt") - F.col("med2")).alias("d2")))
+    wdev = Window.partitionBy("event_type").orderBy("d2", "h")
+    devr = (dev.withColumn("rk", F.row_number().over(wdev))
+            .withColumn("n", F.count(F.lit(1)).over(wn)))
+    mad = (devr.groupBy("event_type")
+           .agg((F.max(F.when(F.col("rk") == F.expr("(n + 1) DIV 2"),
+                              F.col("d2")))
+                 + F.max(F.when(F.col("rk") == F.expr("(n + 2) DIV 2"),
+                                F.col("d2")))).alias("mad4")))
+    return (dev.join(F.broadcast(mad), "event_type")
+            .filter(2 * F.col("d2") > 3 * F.col("mad4"))
+            .select("event_type", F.col("h").alias("hour_start"), "cnt",
+                    F.col("d2").cast("long").alias("dev2"),
+                    F.col("mad4").cast("long").alias("mad4"))
+            .orderBy("event_type", "hour_start"))
+
+
 @register(
     "timeseries_anomaly_mad",
+    twin=("events", (hourly_counts,), mad_anomalies_from_hourly),
     category="events",
     oracle="""
     WITH hourly AS (
@@ -1546,38 +1582,3 @@ def timeseries_anomaly_mad(spark, sf_dir):
     hourly aggregate; both rank windows and both join-backs run on the
     model table only, the same shape as the Mann-Kendall and Theil-Sen
     stages."""
-    return mad_anomalies_from_hourly(
-        hourly_counts(table(spark, sf_dir, "events")))
-
-
-def mad_anomalies_from_hourly(hourly) -> DataFrame:
-    """Finisher: (event_type, h, cnt) hourly rollup -> anomalous hours
-    (shared verbatim with the streaming twin — the rollup, a mergeable
-    COUNT bounded by |event_type| x wall-time hours, is the operator's
-    only state)."""
-    wrk = Window.partitionBy("event_type").orderBy("cnt", "h")
-    wn = Window.partitionBy("event_type")
-    rc = (hourly.withColumn("rk", F.row_number().over(wrk))
-          .withColumn("n", F.count(F.lit(1)).over(wn)))
-    med = (rc.groupBy("event_type")
-           .agg((F.max(F.when(F.col("rk") == F.expr("(n + 1) DIV 2"),
-                              F.col("cnt")))
-                 + F.max(F.when(F.col("rk") == F.expr("(n + 2) DIV 2"),
-                                F.col("cnt")))).alias("med2")))
-    dev = (rc.join(F.broadcast(med), "event_type")
-           .select("event_type", "h", "cnt",
-                   F.abs(2 * F.col("cnt") - F.col("med2")).alias("d2")))
-    wdev = Window.partitionBy("event_type").orderBy("d2", "h")
-    devr = (dev.withColumn("rk", F.row_number().over(wdev))
-            .withColumn("n", F.count(F.lit(1)).over(wn)))
-    mad = (devr.groupBy("event_type")
-           .agg((F.max(F.when(F.col("rk") == F.expr("(n + 1) DIV 2"),
-                              F.col("d2")))
-                 + F.max(F.when(F.col("rk") == F.expr("(n + 2) DIV 2"),
-                                F.col("d2")))).alias("mad4")))
-    return (dev.join(F.broadcast(mad), "event_type")
-            .filter(2 * F.col("d2") > 3 * F.col("mad4"))
-            .select("event_type", F.col("h").alias("hour_start"), "cnt",
-                    F.col("d2").cast("long").alias("dev2"),
-                    F.col("mad4").cast("long").alias("mad4"))
-            .orderBy("event_type", "hour_start"))

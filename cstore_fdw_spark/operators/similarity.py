@@ -779,14 +779,17 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
     iters=2 book); doubles round-trip parquet bit-exactly, so cached
     and freshly-trained books are indistinguishable to the oracles.
     Same build-once discipline as ``scratch_catalog`` (the projection
-    warehouse); a crashed write has no _SUCCESS marker and retrains."""
+    warehouse); a crashed write has no _SUCCESS marker and retrains.
+    The artifact is read through ``table``, which declares the schema
+    its part files record instead of inferring it with a Spark job."""
     import hashlib
     import os
     import tempfile
 
     key = hashlib.md5((os.path.abspath(sf_dir) + "|" + repr(params))
                       .encode()).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"cstore_cb_{tag}_{key}")
+    name = f"cstore_cb_{tag}_{key}"
+    path = os.path.join(tempfile.gettempdir(), f"{name}.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         df = build()
         if tag not in CORPUS_SIZED_TAGS:
@@ -801,7 +804,7 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
         with conf_override(spark, {"spark.sql.broadcastTimeout": "3600"}):
             df.write.mode("overwrite").parquet(path)
         TRAINED_TAGS.append(tag)
-    return spark.read.parquet(path)
+    return table(spark, tempfile.gettempdir(), name)
 
 
 #: artifact tags whose frame is corpus-sized (one row per vector) —

@@ -1,9 +1,10 @@
-"""The one fixture reader, the one availableNow drain and the one
-``foreachBatch`` start behind every stream: ``fixture_stream`` turns a
-fixture parquet into a file-source stream, ``drain`` runs a streaming
-DataFrame to completion into a memory sink and hands back the result as
-a batch DataFrame, and ``start_foreach_batch`` starts a stream into a
-catalog sink."""
+"""The one fixture reader, the one availableNow drain, the one twin
+runner and the one ``foreachBatch`` start behind every stream:
+``fixture_stream`` turns a fixture parquet into a file-source stream,
+``drain`` runs a streaming DataFrame to completion into a memory sink
+and hands back the result as a batch DataFrame, ``run_twin`` builds the
+streaming twin a registered query declares, and ``start_foreach_batch``
+starts a stream into a catalog sink."""
 
 from __future__ import annotations
 
@@ -65,6 +66,32 @@ def drain(df: DataFrame, query_name: str, output_mode: str) -> DataFrame:
              .trigger(availableNow=True).start())
         await_drained(q)
     return df.sparkSession.table(query_name)
+
+
+def run_twin(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
+    """The streaming twin of the registered ``query``, drained with
+    Trigger.AvailableNow: its declared states
+    (``QuerySpec.twin = (source, states, finisher)``) over one stream of
+    the source fixture, each drained in complete mode, then the
+    finisher the batch query ends in. Every state is a mergeable rollup
+    (a SUM, MAX or COUNT per key), so the drained state equals the batch
+    state and the result equals the batch query's."""
+    from cstore_fdw_spark.operators import load_all
+
+    source, states, finisher = load_all()[query].twin
+    stream = fixture_stream(spark, sf_dir, source)
+    drained = []
+    for i, state in enumerate(states):
+        t = drain(state(stream), f"{query}_twin{i}", "complete")
+        # rebind the drained state as a local relation: finishers join
+        # the state with frames derived from itself, and Spark's
+        # self-join disambiguation breaks on memory-sink views
+        # (INTERNAL_ERROR: conflicting references) where a parquet scan
+        # re-keys per read. Every state is model-sized by contract
+        # (bounded by its keys x buckets or hours), so this collect is
+        # the vocabulary-bounded tier, not a corpus collect.
+        drained.append(spark.createDataFrame(t.collect(), t.schema))
+    return finisher(*drained)
 
 
 def start_foreach_batch(stream: DataFrame, sink, checkpoint: str,

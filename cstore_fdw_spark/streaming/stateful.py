@@ -402,6 +402,12 @@ def run_holt_available_now(spark, sf_dir: str,
     return the final per-type (level, trend, forecast) as a batch
     DataFrame shaped exactly like ``timeseries_holt_smoothing``.
 
+    The one streaming twin that is not declared on its registry entry
+    (``QuerySpec.twin``, built by ``streaming.runner.run_twin``): it
+    chains two stateful stages, an append-mode watermarked rollup and
+    the fold, behind staged sentinel files, which one complete-mode
+    drain of a (state, finisher) pair cannot express.
+
     availableNow mechanics: an append-mode window aggregate only emits
     windows the WATERMARK has passed, and the watermark advances
     between micro-batches — a drain of a single static file would end

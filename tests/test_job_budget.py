@@ -30,10 +30,12 @@ JOB_BUDGET = {
     "subquery_scalar_uncorrelated": (0, 4),
     "dedup_connected_components": (0, 7),
     "ann_lsh_bucketed": (0, 4),
-    # IVF nlist is sized from the same footer count; the three builder
-    # jobs of vector_ivf_pq_topk read its trained index artifacts
+    # IVF nlist is sized from the same footer count, and the trained
+    # index artifacts are read with the schema their part files record
     "ann_ivf_coarse": (0, 6),
-    "vector_ivf_pq_topk": (3, 6),
+    "vector_ivf_pq_topk": (0, 6),
+    "vector_quantize_pq": (0, 3),
+    "vector_pq_adc_topk": (0, 7),
     "dedup_minhash_lsh": (5, 10),
     "route_ngram_minhash_tier": (10, 4),
 }

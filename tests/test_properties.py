@@ -370,8 +370,9 @@ def test_index_artifacts_train_once_serve_many(spark, sf_dir):
                    sim.PQ_TRAIN_N, sim.PQ_ITERS, sim.FX_SCALE)),):
         suffixes.add(keyable((os.path.abspath(sf_dir) + "|" + repr(params))
                              .encode()).hexdigest()[:16])
-    for p in glob.glob(os.path.join(tempfile.gettempdir(), "cstore_cb_*")):
-        if p.rsplit("_", 1)[-1] in suffixes:
+    for p in glob.glob(os.path.join(tempfile.gettempdir(),
+                                    "cstore_cb_*.parquet")):
+        if p.rsplit("_", 1)[-1].removesuffix(".parquet") in suffixes:
             shutil.rmtree(p, ignore_errors=True)
     # ivfc/ivfpq keys embed a corpus-sized nlist — wipe by reproducing
     # is brittle; instead just assert the SECOND call trains nothing
@@ -521,9 +522,12 @@ def _package_functions_using(predicate):
 
 def test_streams_drain_and_minhash_bands_build_one_way():
     """One path each: every memory-sink drain under cstore_fdw_spark/
-    goes through streaming.runner.drain (which checks its timeout), and
-    the MinHash coefficients are read by one Spark-side builder and one
-    DuckDB-side generator, so the two engines' signatures cannot fork."""
+    goes through streaming.runner.drain (which checks its timeout),
+    every fixture stream and every rebind of a drained state into a
+    local relation (``createDataFrame(t.collect(), ...)``) happens in
+    the one twin runner, ``streaming.runner.run_twin``, and the MinHash
+    coefficients are read by one Spark-side builder and one DuckDB-side
+    generator, so the two engines' signatures cannot fork."""
     import ast
 
     def memory_sink(node):
@@ -535,6 +539,22 @@ def test_streams_drain_and_minhash_bands_build_one_way():
 
     assert _package_functions_using(memory_sink) == [
         ("streaming/runner.py", "drain")]
+
+    def fixture_stream_call(node):
+        return (isinstance(node, ast.Call)
+                and "fixture_stream" in (getattr(node.func, "id", None),
+                                         getattr(node.func, "attr", None)))
+
+    def collect_rebind(node):
+        return (isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "createDataFrame"
+                and node.args and isinstance(node.args[0], ast.Call)
+                and getattr(node.args[0].func, "attr", None) == "collect")
+
+    assert _package_functions_using(fixture_stream_call) == [
+        ("streaming/runner.py", "run_twin")]
+    assert _package_functions_using(collect_rebind) == [
+        ("streaming/runner.py", "run_twin")]
 
     def coeff_read(node):
         return (isinstance(node, ast.Name) and node.id == "_MH_COEFFS"
@@ -836,8 +856,8 @@ def test_label_blocked_components_equal_propagation(spark, graph):
 def test_operators_load_tables_one_way():
     """One table loader: under operators/, a parquet file is read only
     by ``table``, which declares each table's cached schema instead of
-    inferring it per read, and by the trained index artifact read in
-    ``similarity._cached_codebook``."""
+    inferring it per read; the trained index artifacts are read through
+    it too."""
     import ast
 
     def receiver_attrs(node):
@@ -864,8 +884,7 @@ def test_operators_load_tables_one_way():
 
     assert {hit for hit in _package_functions_using(parquet_read)
             if hit[0].startswith("operators/")} == {
-        ("operators/__init__.py", "table"),
-        ("operators/similarity.py", "_cached_codebook")}
+        ("operators/__init__.py", "table")}
     assert ("operators/__init__.py", "table") in _package_functions_using(
         schema_call)
 

@@ -8,9 +8,11 @@ from pyspark.sql import functions as F
 
 from cstore_fdw_spark.operators import load_all, table
 from cstore_fdw_spark.streaming import events as se
-from cstore_fdw_spark.streaming.runner import drain, fixture_stream
+from cstore_fdw_spark.streaming.runner import drain, fixture_stream, run_twin
 
 REGISTRY = load_all()
+#: the queries that declare a streaming twin on their registry entry
+TWINS = sorted(name for name, spec in REGISTRY.items() if spec.twin)
 
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir):
@@ -646,47 +648,6 @@ def test_every_readstream_guarded_or_exempt():
         f"{offenders}")
 
 
-def test_streaming_hdr_sketch_equals_batch(spark, sf_dir):
-    """The streamed HDR histogram is BIT-IDENTICAL to the batch one:
-    per-bucket counters are sums, so micro-batch merging must land on
-    exactly the batch sketch (the mergeability the batch docstring
-    promises, proven live); the derived quantile bounds then agree by
-    construction."""
-    from pyspark.sql import functions as F
-
-    from cstore_fdw_spark.operators.analytics import hdr_bucket_idx
-    from cstore_fdw_spark.streaming.analytics import (
-        run_sketch_available_now)
-
-    streamed = sorted(
-        tuple(r) for r in
-        run_sketch_available_now(spark, sf_dir, "hdr_tw").collect())
-    batch = sorted(
-        tuple(r) for r in
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select(F.col("l_returnflag").alias("g"), hdr_bucket_idx())
-        .groupBy("g", "idx").agg(F.count(F.lit(1)).alias("cnt"))
-        .collect())
-    assert streamed == batch
-    assert len(streamed) > 10  # a real multi-bucket histogram
-
-
-def test_cusum_streaming_twin_matches_batch(spark, sf_dir):
-    """The streamed CUSUM changepoint monitor must localize the
-    IDENTICAL changepoints as the batch query: its only state is the
-    mergeable hourly SUM (bounded by |event_type| x wall-time hours),
-    and the finisher is literally shared code — the same
-    batch/streaming-twin contract as the HDR sketch above."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import run_cusum_available_now
-
-    reg = load_all()
-    batch = reg["timeseries_cusum_changepoint"].builder(spark, sf_dir) \
-        .collect()
-    streamed = run_cusum_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
 def test_holt_streaming_twin_matches_batch(spark, sf_dir):
     """Round-11 verdict task 2: the streamed Holt monitor must land on
     the IDENTICAL (level, trend, forecast) as timeseries_holt_smoothing
@@ -737,131 +698,47 @@ def test_holt_fold_step_is_batch_step():
         ev.timeseries_holt_smoothing)
 
 
-def test_seasonal_streaming_twin_matches_batch(spark, sf_dir):
-    """The streamed seasonal decomposition must land on the IDENTICAL
-    (peak hour-of-day, anomaly hour, deviation) as the batch query: its
-    only state is the mergeable hourly SUM and the finisher is
-    literally shared code — the CUSUM/HDR twin contract."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import (
-        run_seasonal_available_now)
-
-    reg = load_all()
-    batch = reg["timeseries_seasonal_decompose"].builder(spark, sf_dir) \
-        .collect()
-    streamed = run_seasonal_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
-def test_hll_streaming_twin_matches_batch(spark, sf_dir):
-    """The streamed HLL sketch must produce the IDENTICAL per-group
-    (zero_registers, denom, distinct_estimate) as the batch query: its
-    only state is the mergeable per-(group, register) MAX and the
-    finisher is literally shared code — the CUSUM/HDR/seasonal twin
-    contract, now on the sketch family."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import run_hll_available_now
-
-    reg = load_all()
-    batch = reg["sketch_hyperloglog_distinct"].builder(spark, sf_dir) \
-        .collect()
-    streamed = run_hll_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
-def test_quantile_streaming_twin_matches_batch(spark, sf_dir):
-    """The streamed quantile histogram must produce IDENTICAL per-group
-    (q, n, rnk, bucket, q_lo, q_hi) rows as the batch query: its only
-    state is the sum-mergeable per-(group, bucket) COUNT and the
-    finisher is literally shared code — the sketch-twin contract on the
-    fourth mergeable algebra."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import (
-        run_quantile_available_now)
-
-    reg = load_all()
-    batch = reg["sketch_quantile_histogram"].builder(spark, sf_dir) \
-        .collect()
-    streamed = run_quantile_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
-def test_mad_streaming_twin_matches_batch(spark, sf_dir):
-    """The streamed MAD anomaly screen must flag the IDENTICAL hours as
-    the batch query: its only state is the mergeable hourly COUNT and
-    the finisher is literally shared code."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import (
-        run_mad_anomaly_available_now)
-
-    reg = load_all()
-    batch = reg["timeseries_anomaly_mad"].builder(spark, sf_dir).collect()
-    streamed = run_mad_anomaly_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
-def test_benford_streaming_twin_matches_batch(spark, sf_dir):
-    """The streamed Benford screen must report the IDENTICAL ppm table
-    as the batch query: nine mergeable counters + the shared finisher."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import (
-        run_benford_available_now)
-
-    reg = load_all()
-    batch = reg["stats_benford_first_digit"].builder(spark, sf_dir) \
-        .collect()
-    streamed = run_benford_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
-def test_countmin_streaming_twin_matches_batch(spark, sf_dir):
-    """The CM counter table is a mergeable SUM: the streamed sketch's
-    estimates must equal the batch operator's row-for-row."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.analytics import (
-        run_countmin_available_now)
-
+@pytest.mark.parametrize("query", TWINS)
+def test_declared_twin_equals_batch(spark, sf_dir, query):
+    """Every streaming twin declared on the registry equals its batch
+    query row for row: ``run_twin`` drains the query's own mergeable
+    states and runs the finisher the batch query ends in."""
     batch = sorted(tuple(r) for r in
-                   load_all()["sketch_countmin_user_counts"]
-                   .builder(spark, sf_dir).collect())
+                   REGISTRY[query].builder(spark, sf_dir).collect())
     streamed = sorted(tuple(r) for r in
-                      run_countmin_available_now(spark, sf_dir).collect())
-    assert streamed == batch
-
-
-def test_bloom_streaming_twin_matches_batch_bits(spark, sf_dir):
-    """The streamed filter's set-bit table must equal the batch
-    bloom_bits over the same pending-order keys, bit for bit."""
-    from cstore_fdw_spark.operators.analytics import bloom_bits
-    from cstore_fdw_spark.streaming.analytics import (
-        run_bloom_available_now)
-    from pyspark.sql import functions as F
-
-    keys = (spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .filter(F.col("o_orderstatus") == "P")
-            .select("o_custkey").distinct())
-    batch = sorted(r["bit"] for r in
-                   bloom_bits(keys, [], "o_custkey").collect())
-    streamed = sorted(r["bit"] for r in
-                      run_bloom_available_now(spark, sf_dir).collect())
+                      run_twin(spark, sf_dir, query).collect())
     assert streamed == batch and len(batch) > 0
 
 
-@pytest.mark.parametrize("twin, batch_query", [
-    ("run_cusum_available_now", "timeseries_cusum_changepoint"),
-    ("run_seasonal_available_now", "timeseries_seasonal_decompose"),
-    ("run_mad_anomaly_available_now", "timeseries_anomaly_mad"),
-    ("run_countmin_available_now", "sketch_countmin_user_counts"),
-])
+def test_bloom_streaming_twin_matches_batch_bits(spark, sf_dir):
+    """The Bloom filter's set-bit table is OR-mergeable: ``bloom_bits``
+    over a stream of the pending orders' keys, drained in append mode,
+    sets exactly the bits the batch build sets. (The filter's finisher
+    probes the static customer table, so its query declares no twin.)"""
+    from cstore_fdw_spark.operators.analytics import bloom_bits
+
+    def pending(orders):
+        return (orders.filter(F.col("o_orderstatus") == "P")
+                .select("o_custkey"))
+
+    batch = sorted(r["bit"] for r in bloom_bits(
+        pending(table(spark, sf_dir, "orders")).distinct(), [],
+        "o_custkey").collect())
+    streamed = sorted(r["bit"] for r in drain(
+        bloom_bits(pending(fixture_stream(spark, sf_dir, "orders")), [],
+                   "o_custkey"), "bloom_bits_twin", "append").collect())
+    assert streamed == batch and len(batch) > 0
+
+
+@pytest.mark.parametrize(
+    "query", [q for q in TWINS if REGISTRY[q].twin[0] == "events"])
 def test_events_twins_read_nanos_timestamps(spark, sf_dir, tmp_path,
-                                            twin, batch_query):
+                                            query):
     """An events fixture that stores ts as TIMESTAMP(NANOS) (a shape
     conftest accepts) reaches the streaming twins as a timestamp, the
     same as the batch reader: each twin still equals its batch query."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from cstore_fdw_spark.streaming import analytics as sa
 
     events = pq.read_table(f"{sf_dir}/events.parquet")
     ts_at = events.schema.get_field_index("ts")
@@ -874,10 +751,9 @@ def test_events_twins_read_nanos_timestamps(spark, sf_dir, tmp_path,
                .field("ts").type) == "timestamp[ns]"
 
     batch = sorted(tuple(r) for r in
-                   REGISTRY[batch_query].builder(spark, nanos_dir)
-                   .collect())
+                   REGISTRY[query].builder(spark, nanos_dir).collect())
     streamed = sorted(tuple(r) for r in
-                      getattr(sa, twin)(spark, nanos_dir).collect())
+                      run_twin(spark, nanos_dir, query).collect())
     assert streamed == batch and len(batch) > 0
 
 
