@@ -70,10 +70,10 @@ from typing import Any, Callable, NamedTuple
 from pyspark.sql import DataFrame
 
 from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError, TableMeta
-from cstore_fdw_spark.fsutil import _file_epoch, flocked, write_json_atomic
+from cstore_fdw_spark.fsutil import (_file_epoch, flocked,
+                                     read_json_or_empty, write_json_atomic)
 # a module global of its own, so a test can fail the ledger write
 from cstore_fdw_spark.fsutil import write_json_atomic as _save_ledger
-from cstore_fdw_spark.streaming.ingest import _load_ledger
 
 
 @dataclass
@@ -304,7 +304,7 @@ def batch_sink(catalog: CStoreCatalog, family: Family, name: str,
         spec = family.load_spec(catalog, name)
         with family.refresh_lock(catalog, name):
             path = os.path.join(catalog.table_path(name), family.ledger)
-            ledger = _load_ledger(path)
+            ledger = read_json_or_empty(path)
             entry = ledger.setdefault(ledger_key, {"last_batch": -1,
                                                    "pending": None})
             _guard_source_stability(catalog, entry, spec[source],

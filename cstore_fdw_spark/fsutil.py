@@ -1,8 +1,8 @@
 """Filesystem primitives shared by the catalog, its sidecar writers and
 the cstore reader: the data-file epoch stamp, the atomic JSON replace
 (the reference's footer temp-file + rename, cstore_writer.c:344-357)
-and the exclusive flock. Standard library only, so every module can
-import it without an import cycle."""
+and its tolerant reader, and the exclusive flock. Standard library
+only, so every module can import it without an import cycle."""
 
 from __future__ import annotations
 
@@ -30,6 +30,17 @@ def write_json_atomic(path: str, obj: Any) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
+
+
+def read_json_or_empty(path: str) -> dict:
+    """The JSON document :func:`write_json_atomic` left at ``path``; a
+    missing or torn file reads as ``{}``. Every streaming sink's ledger
+    (ingest and the derived-table sink) is read through it."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return {}
 
 
 @contextmanager

@@ -266,21 +266,29 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
             tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
 
 
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The physical schema of the parquet table at ``path``, as
+    ``spark.read.parquet`` infers it: inferred by one Spark job on the
+    first call and declared from :data:`_SCHEMAS` on every later one.
+    A path :func:`_schema_key` cannot key is inferred on every call."""
+    key = _schema_key(spark, path)
+    if key in _SCHEMAS:
+        return _SCHEMAS[key]
+    schema = spark.read.parquet(path).schema
+    if key:
+        _SCHEMAS[key] = schema
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The parquet table ``{sf_dir}/{name}.parquet`` (a fixture file, or
     a directory Spark wrote, such as a trained index artifact) — the
-    one parquet table loader of the operators. Its schema is inferred
-    on the first read and declared on every later one, which launches
+    one parquet table loader of the operators. Its schema is
+    :func:`parquet_schema`'s, so every read after the first launches
     no Spark job;
     ``events`` comes out with a micros ``ts`` (:func:`events_ts_micros`)."""
     path = f"{sf_dir}/{name}.parquet"
-    key = _schema_key(spark, path)
-    if key in _SCHEMAS:
-        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if key:
-            _SCHEMAS[key] = df.schema
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return events_ts_micros(df) if name == "events" else df
 
 

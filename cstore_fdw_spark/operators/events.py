@@ -556,10 +556,9 @@ def holt_tdiv(a: int, n: int) -> int:
 
 def holt_step(level: int, trend: int, x: int) -> tuple[int, int]:
     """ONE Holt update in exact integer cents (alpha=0.3, beta=0.1):
-    the literal step shared by the batch fold below and the streaming
-    twin (``streaming/stateful.py``) — the same shared-finisher
-    discipline as ``cusum_changepoints``, so twin equality is by
-    construction, not by parallel reimplementation."""
+    the step :func:`holt_from_hourly` folds, the finisher the batch
+    query and its streaming twin (``streaming.runner.run_twin``) both
+    end in."""
     prev = level
     level = holt_tdiv(3 * x + 7 * (level + trend), 10)
     trend = holt_tdiv((level - prev) + 9 * trend, 10)
@@ -595,35 +594,19 @@ def _holt_oracle() -> str:
     """
 
 
-@register(
-    "timeseries_holt_smoothing",
-    category="events",
-    oracle=_holt_oracle())
-def timeseries_holt_smoothing(spark, sf_dir):
-    """Holt double-exponential smoothing per event type (Holt '57, the
-    classic level+trend forecaster): hourly value totals fold through
-      l_t = (3·x_t + 7·(l_t-1 + b_t-1)) div 10     (alpha = 0.3)
-      b_t = ((l_t − l_t-1) + 9·b_t-1) div 10       (beta  = 0.1)
-    in exact integer cents (div truncates toward zero in BOTH engines —
-    verified; l−l_prev and b go negative on cooling series, so floor
-    semantics would diverge), initialized l_1 = x_1, b_1 = 0. Output
-    per type: hours folded, final level/trend, and the 3-hour-ahead
-    forecast l + 3·b. The recurrence is non-linear in the sense that
-    matters for SQL: each step divides (rounds) BEFORE the next step
-    consumes it, so no window/prefix-sum formulation exists and the
-    DuckDB oracle must step the same automaton via WITH RECURSIVE (the
-    recursive_clamped_balance / ADPCM discipline).
+def holt_from_hourly(hourly):
+    """The Holt finisher over a (event_type, h, x) hourly rollup — the
+    twin finisher ``timeseries_holt_smoothing`` declares, so the batch
+    query below and its streaming twin (``streaming.runner.run_twin``)
+    both end in it: the rollup is a mergeable SUM, so a complete-mode
+    stream maintains the identical hourly state and this SAME fold
+    lands on the identical level and trend.
 
-    Spark side: this is the applyInPandas tier of the custom-operator
-    ladder — a genuinely stateful per-key fold the built-in operators
-    can't express. The hourly rollup is ONE corpus shuffle; the fold
-    then regroups |event_type| keys × ≤48 rows each (the
-    Arrow transfer is model-sized, never corpus-sized) and runs the
-    integer recurrence in python ints (no float drift, no int64
-    surprise before ~2^59 hourly cents). At 100 TB the same shape
-    holds: state per key is O(1), steps are time-bounded, and a
-    1000-executor cluster folds every key in parallel."""
-    hourly = hourly_cents(table(spark, sf_dir, "events"))
+    Each type's first ``HOLT_HOURS`` hours fold through
+    :func:`holt_step` in an ``applyInPandas`` call: the regroup moves
+    |event_type| keys × ≤48 rows (the Arrow transfer is model-sized,
+    never corpus-sized), and the recurrence runs in python ints (no
+    float drift, no int64 surprise before ~2^59 hourly cents)."""
     w = Window.partitionBy("event_type").orderBy("h")
     ranked = (hourly.withColumn("rn", F.row_number().over(w))
               .filter(F.col("rn") <= HOLT_HOURS)
@@ -648,6 +631,36 @@ def timeseries_holt_smoothing(spark, sf_dir):
 
     return (ranked.groupBy("event_type").applyInPandas(fold, schema)
             .orderBy("event_type"))
+
+
+@register(
+    "timeseries_holt_smoothing",
+    twin=("events", (hourly_cents,), holt_from_hourly),
+    category="events",
+    oracle=_holt_oracle())
+def timeseries_holt_smoothing(spark, sf_dir):
+    """Holt double-exponential smoothing per event type (Holt '57, the
+    classic level+trend forecaster): hourly value totals fold through
+      l_t = (3·x_t + 7·(l_t-1 + b_t-1)) div 10     (alpha = 0.3)
+      b_t = ((l_t − l_t-1) + 9·b_t-1) div 10       (beta  = 0.1)
+    in exact integer cents (div truncates toward zero in BOTH engines —
+    verified; l−l_prev and b go negative on cooling series, so floor
+    semantics would diverge), initialized l_1 = x_1, b_1 = 0. Output
+    per type: hours folded, final level/trend, and the 3-hour-ahead
+    forecast l + 3·b. The recurrence is non-linear in the sense that
+    matters for SQL: each step divides (rounds) BEFORE the next step
+    consumes it, so no window/prefix-sum formulation exists and the
+    DuckDB oracle must step the same automaton via WITH RECURSIVE (the
+    recursive_clamped_balance / ADPCM discipline).
+
+    Spark side: this is the applyInPandas tier of the custom-operator
+    ladder — a genuinely stateful per-key fold the built-in operators
+    can't express. The hourly rollup (:func:`hourly_cents`) is ONE
+    corpus shuffle, then :func:`holt_from_hourly` folds it. The state
+    a stream keeps is that rollup, bounded by |event_type| × wall-time
+    hours like the other hourly twins; the fold's steps are
+    time-bounded, and a 1000-executor cluster folds every key in
+    parallel."""
 
 
 def cusum_changepoints(hourly):

@@ -6,8 +6,7 @@ JPEG decoder — marker walk, DQT/DHT parsing, canonical Huffman
 construction, DC-prediction + AC run/size entropy decode with byte
 unstuffing and restart markers, zigzag placement, dequantization, 2-D
 IDCT, level shift, and (for color) YCbCr→RGB with nearest upsampling.
-Nothing here touches PIL; ``multimodal._pil_decode`` remains the
-optional fast path for arbitrary real-world files.
+It is the package's only JPEG decoder; no codec library is used.
 
 Honest scope: baseline sequential DCT, 8-bit precision (SOF0/SOF1),
 grayscale or interleaved color, plus progressive DCT (SOF2) with full
@@ -283,7 +282,7 @@ def jpeg_decode_baseline(payload: bytes):
             if nc not in (1, 3):
                 raise ValueError(
                     "non-1/3-component progressive JPEG is out of "
-                    "scope; install PIL for the rest")
+                    "scope")
             if any(not 1 <= c["h"] <= 2 or not 1 <= c["v"] <= 2
                    for c in comps):
                 raise ValueError(
@@ -296,7 +295,7 @@ def jpeg_decode_baseline(payload: bytes):
                 "arithmetic/hierarchical/lossless JPEG is out of "
                 "scope — this decoder covers baseline sequential "
                 "(SOF0/SOF1) and progressive (SOF2) at any 1-2 "
-                "sampling incl. 4:2:2/4:2:0; install PIL for the rest")
+                "sampling incl. 4:2:2/4:2:0")
         elif m == 0xDA:  # SOS — entropy-coded data follows
             if frame is None:
                 raise ValueError("SOS before SOF")

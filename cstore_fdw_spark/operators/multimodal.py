@@ -496,32 +496,14 @@ def png_encode_palette(width: int, height: int, indices: bytes,
                      plte=b"".join(bytes(rgb) for rgb in palette))
 
 
-def _pil_decode(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Codec-library fallback for the one image shape the stdlib
-    decoder genuinely cannot cover (JPEG — DCT entropy decode): via PIL
-    when installed, else the honest scope error. The Spark-side plumbing
-    (mapInPandas schema, batching) is identical either way."""
-    try:
-        from PIL import Image
-    except ImportError:
-        raise ValueError(
-            "unsupported image shape for the stdlib decoder and PIL is "
-            "not installed — pip install pillow enables "
-            "JPEG pixel decode") from None
-    import io
-    img = Image.open(io.BytesIO(payload)).convert("RGB")
-    return (img.width, img.height, 3, img.tobytes())
-
-
 def png_decode_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     """REAL PNG pixel decode (stdlib struct+zlib — no codec dependency):
     chunk walk → IHDR → concatenated-IDAT inflate → per-scanline
     unfilter (all five filters). Covers bit depths 8 and 16, color
     types 0/2/3/4/6 (palette via PLTE expansion), both sequential AND
     Adam7-interlaced layouts (each pass unfiltered independently and
-    scattered back per RFC 2083 §8.2). JPEG (DCT — genuine codec
-    territory) goes through PIL when installed (:func:`_pil_decode`)
-    and raises a clear scope error otherwise.
+    scattered back per RFC 2083 §8.2). JPEG decodes in
+    :mod:`jpeg_codec`, also in pure stdlib.
     Returns (width, height, channels, raster bytes) — for depth 16 the
     raster is big-endian 16-bit samples; palette images return the
     EXPANDED 3-channel RGB raster."""
@@ -643,8 +625,8 @@ def multimodal_palette_decode(spark, sf_dir):
     oracle recomputes the expanded pixel statistics from the closed
     form — it never sees the PNG — so the palette path is value-checked
     end-to-end. Adam7-interlaced PNG decodes in stdlib too
-    (:func:`_adam7_deinterlace`); only JPEG remains behind the
-    optional-PIL fallback (:func:`_pil_decode`)."""
+    (:func:`_adam7_deinterlace`), and so does JPEG
+    (:mod:`jpeg_codec`)."""
     def payload(doc_id):
         w, h = 1 + doc_id % 4, 1 + doc_id % 3
         palette = [((doc_id * 7 + i * 3) % 256,

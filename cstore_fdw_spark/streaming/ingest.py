@@ -18,14 +18,14 @@ each other's batch 0, 1, ….
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from cstore_fdw_spark.catalog import CStoreCatalog
-from cstore_fdw_spark.fsutil import flocked, write_json_atomic
+from cstore_fdw_spark.fsutil import (flocked, read_json_or_empty,
+                                     write_json_atomic)
 from cstore_fdw_spark.streaming.runner import start_foreach_batch
 
 _LEDGER_FILE = "_cstore_stream_batches.json"
@@ -33,17 +33,6 @@ _LEDGER_FILE = "_cstore_stream_batches.json"
 
 def _ledger_path(catalog: CStoreCatalog, table: str) -> str:
     return os.path.join(catalog.table_path(table), _LEDGER_FILE)
-
-
-def _load_ledger(path: str) -> dict:
-    """A streaming sink's JSON ledger; missing or torn reads as empty.
-    Every streaming sink (ingest and the derived-table sink) keeps
-    one."""
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {}
 
 
 def batch_writer(catalog: CStoreCatalog, table: str, checkpoint: str):
@@ -59,7 +48,7 @@ def batch_writer(catalog: CStoreCatalog, table: str, checkpoint: str):
         # ledger key, and an unlocked load→insert→replace could drop the
         # other stream's entry, re-enabling duplicate appends on replay.
         with flocked(path + ".lock"):
-            ledger = _load_ledger(path)
+            ledger = read_json_or_empty(path)
             if ledger.get(ledger_key, -1) >= batch_id:
                 return  # replay of an already-appended batch
             catalog.insert(table, batch_df)

@@ -13,7 +13,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from cstore_fdw_spark.operators import events_ts_micros
+from cstore_fdw_spark.operators import events_ts_micros, parquet_schema
 
 #: seconds a drain may run before it is stopped and reported as failed
 DRAIN_TIMEOUT_S = 180
@@ -23,7 +23,9 @@ def fixture_stream(spark: SparkSession, sf_dir: str,
                    table: str) -> DataFrame:
     """File-source stream over ``{sf_dir}/{table}.parquet`` (one
     micro-batch per file in tests; Kafka/files on a real deployment),
-    with the same column types as the batch ``operators.table``."""
+    with the same column types as the batch ``operators.table``: the
+    schema is the one that loader declares, so a table it has read
+    streams without a schema-inference job."""
     # stream-rewrite-guard: exempt — this streams the READ-ONLY fixture
     # parquet directly, not a catalog table: there is no
     # history_floor/created_at that could move under the stream, and no
@@ -34,27 +36,18 @@ def fixture_stream(spark: SparkSession, sf_dir: str,
     # File-source streams need a directory: stream the sf dir with a glob
     # pinned to the table's file.
     stream = (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/{table}.parquet").schema)
+        parquet_schema(spark, f"{sf_dir}/{table}.parquet"))
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir))
     return events_ts_micros(stream) if table == "events" else stream
 
 
-def await_drained(q: StreamingQuery) -> None:
-    """Wait for an availableNow query to finish; stop it and raise
-    ``TimeoutError`` if it is still running after ``DRAIN_TIMEOUT_S``,
-    so a caller never reads a partial sink."""
-    if not q.awaitTermination(DRAIN_TIMEOUT_S):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} did not drain within "
-            f"{DRAIN_TIMEOUT_S} s")
-
-
 def drain(df: DataFrame, query_name: str, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame with Trigger.AvailableNow into the
-    memory sink ``query_name`` and return that table.
+    memory sink ``query_name`` and return that table. A query still
+    running after ``DRAIN_TIMEOUT_S`` is stopped and ``TimeoutError``
+    raised, so a caller never reads a partial sink.
 
     ``output_mode``: 'complete' for aggregations (append mode would
     withhold windows the final watermark never passes), 'append' for
@@ -64,7 +57,11 @@ def drain(df: DataFrame, query_name: str, output_mode: str) -> DataFrame:
              .outputMode(output_mode)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
-        await_drained(q)
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not drain within "
+                f"{DRAIN_TIMEOUT_S} s")
     return df.sparkSession.table(query_name)
 
 

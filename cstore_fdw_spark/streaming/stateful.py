@@ -16,13 +16,7 @@ from collections.abc import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor, StatefulProcessorHandle)
 from pyspark.sql import types as T
-
-from cstore_fdw_spark.operators import events_ts_micros
-from cstore_fdw_spark.session import conf_override
-from cstore_fdw_spark.streaming.runner import await_drained, drain
 
 BIG_SPENDER_THRESHOLD = 10_000.0
 
@@ -240,279 +234,3 @@ def signup_purchase_pattern(events: DataFrame,
                 outputMode=mode,
                 timeoutConf=GroupStateTimeout.NoTimeout))
 
-
-# ------------------------------------------------- Holt smoothing twin
-
-HOLT_OUTPUT_SCHEMA = ("event_type string, n_hours long, level_fx long, "
-                      "trend_fx long, forecast3_fx long")
-
-#: event_type of the watermark-advancing rows the availableNow runner
-#: stages behind the corpus; filtered out before the fold
-HOLT_SENTINEL_TYPE = "zz_watermark_sentinel"
-
-
-#: (level, trend, hours folded, folded-hour high-water mark)
-HOLT_STATE_FIELDS = ("level LONG, trend LONG, n LONG, last_h LONG")
-
-HOLT_INIT_STATE = (0, 0, 0, -(2 ** 63))
-
-
-def _holt_fold(level: int, trend: int, n: int, last_h: int,
-               pairs) -> tuple[int, int, int, int, bool]:
-    """Fold hour-ordered (h_us, cents) pairs through the batch query's
-    literal ``holt_step``. State is O(1) — four int64s — regardless of
-    stream length; the fold stops at ``HOLT_HOURS`` (the batch query's
-    horizon). Input ordering contract: the upstream watermarked window
-    aggregate (append mode) emits each (type, hour) exactly once, and
-    hours emitted in a later micro-batch are strictly newer than any
-    earlier batch's (the watermark is monotonic), so sorting within the
-    batch yields a globally ordered fold; a stale hour (≤ last_h — only
-    possible if the contract is broken upstream) is refused loudly
-    rather than silently mis-folded."""
-    from cstore_fdw_spark.operators.events import HOLT_HOURS, holt_step
-
-    advanced = False
-    for h, x in pairs:
-        if n >= HOLT_HOURS:
-            break
-        if h <= last_h:
-            raise ValueError(
-                f"holt stream: hour {h} arrived at/before folded "
-                f"high-water {last_h} — upstream append-mode window "
-                "contract broken")
-        if n == 0:
-            level, trend = x, 0
-        else:
-            level, trend = holt_step(level, trend, x)
-        n += 1
-        last_h = h
-        advanced = True
-    return level, trend, n, last_h, advanced
-
-
-class HoltProcessor(StatefulProcessor):
-    """``transformWithState`` processor folding finalized hourly totals
-    through the Holt recurrence — the custom-stateful-operator tier one
-    step up from ``applyInPandasWithState``: typed NAMED state, no
-    manual (value, schema) tuple plumbing. Requires ``protobuf``
-    (PySpark's state-server wire format) — ``holt_stream`` selects this
-    path only when that import is available."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("holt", HOLT_STATE_FIELDS)
-
-    def handleInputRows(self, key, rows, timerValues):
-        got = self._state.get() if self._state.exists() else None
-        state = got if got is not None else HOLT_INIT_STATE
-        pairs = sorted((int(h), int(x)) for pdf in rows
-                       for h, x in zip(pdf["h_us"], pdf["x"]))
-        level, trend, n, last_h, advanced = _holt_fold(*state, pairs)
-        if advanced:
-            self._state.update((level, trend, n, last_h))
-            yield pd.DataFrame(
-                [[key[0], n, level, trend, level + 3 * trend]],
-                columns=["event_type", "n_hours", "level_fx",
-                         "trend_fx", "forecast3_fx"])
-
-    def close(self) -> None:
-        pass
-
-
-def _holt_update_with_state(key, pdfs: Iterable[pd.DataFrame],
-                            state: GroupState) -> Iterable[pd.DataFrame]:
-    """The same fold on the ``applyInPandasWithState`` tier (no extra
-    runtime dependencies)."""
-    got = state.get if state.exists else HOLT_INIT_STATE
-    pairs = sorted((int(h), int(x)) for pdf in pdfs
-                   for h, x in zip(pdf["h_us"], pdf["x"]))
-    level, trend, n, last_h, advanced = _holt_fold(*got, pairs)
-    if advanced:
-        state.update((level, trend, n, last_h))
-        yield pd.DataFrame(
-            [[key[0], n, level, trend, level + 3 * trend]],
-            columns=["event_type", "n_hours", "level_fx",
-                     "trend_fx", "forecast3_fx"])
-
-
-def transform_with_state_available() -> bool:
-    """``transformWithStateInPandas`` talks to the JVM state server via
-    protobuf; without the ``protobuf`` package the Spark-spawned driver
-    worker crashes at init (import of StateMessage_pb2). This container
-    doesn't ship it, so the stream builder falls back to
-    ``applyInPandasWithState`` — same fold, same O(1) state."""
-    import importlib.util
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-def holt_hourly_stream(events: DataFrame,
-                       delay: str = "0 seconds") -> DataFrame:
-    """Stage 1 of the Holt twin: a watermarked 1-hour window aggregate
-    finalizes each (type, hour) cents total exactly once (append mode —
-    the built-in operator owns the rollup and the late-data
-    discipline). Agg state is bounded by |type| x in-flight hours; the
-    output stream carries one row per finalized hour, NOT per event."""
-    from pyspark.sql import functions as F
-
-    return (events_ts_micros(events)
-            .withWatermark("ts", delay)
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.sum(F.expr("CAST(ROUND(value * 100) AS BIGINT)"))
-                 .alias("x"))
-            .select("event_type",
-                    F.unix_micros("w.start").alias("h_us"), "x")
-            .filter(F.col("event_type") != HOLT_SENTINEL_TYPE))
-
-
-def holt_fold_stream(hourly: DataFrame,
-                     use_tws: bool | None = None) -> DataFrame:
-    """Stage 2 of the Holt twin: fold a stream of finalized
-    (event_type, h_us, x) hours through the batch query's literal
-    ``holt_step``; state is 4 int64s per key.
-
-    ``use_tws=True`` chains ``transformWithStateInPandas`` DIRECTLY
-    after the stage-1 aggregate — one query, two stateful operators
-    (needs protobuf + the RocksDB state store). ``False`` uses
-    ``applyInPandasWithState``, which Spark refuses to chain after a
-    streaming aggregation in the same query — stage 1 must then feed it
-    through a sink/source handoff (Kafka in production; files in the
-    availableNow runner below). ``None`` auto-detects."""
-    if use_tws is None:
-        use_tws = transform_with_state_available()
-    grouped = hourly.groupBy("event_type")
-    if use_tws:
-        return grouped.transformWithStateInPandas(
-            HoltProcessor(),
-            outputStructType=HOLT_OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None")
-    return grouped.applyInPandasWithState(
-        _holt_update_with_state,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_STATE_FIELDS,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-
-
-def run_holt_available_now(spark, sf_dir: str,
-                           query_name: str = "holt_stream") -> DataFrame:
-    """Drain the streamed Holt monitor over the events fixture and
-    return the final per-type (level, trend, forecast) as a batch
-    DataFrame shaped exactly like ``timeseries_holt_smoothing``.
-
-    The one streaming twin that is not declared on its registry entry
-    (``QuerySpec.twin``, built by ``streaming.runner.run_twin``): it
-    chains two stateful stages, an append-mode watermarked rollup and
-    the fold, behind staged sentinel files, which one complete-mode
-    drain of a (state, finisher) pair cannot express.
-
-    availableNow mechanics: an append-mode window aggregate only emits
-    windows the WATERMARK has passed, and the watermark advances
-    between micro-batches — a drain of a single static file would end
-    before any window flushes. A live deployment has later arrivals to
-    advance it; this runner stages that reality: the corpus file plus
-    two sentinel-event files (strictly newer mtimes, so the file source
-    orders them after the corpus; strictly later event times, so each
-    one advances the watermark) — batch 1 flushes all full corpus
-    hours, batch 2 the final one. Sentinel rows are filtered out before
-    the fold; only their watermark effect remains.
-
-    Stage topology: with transformWithState available the rollup and
-    the fold chain inside ONE query; on the applyInPandasWithState
-    fallback Spark forbids that chaining, so stage 1 drains its
-    finalized hours into a parquet file sink and stage 2 streams them
-    back (the file-sink metadata log preserves batch order, so hours
-    replay watermark-monotonically — the stale-hour guard in the fold
-    would fail loudly if they didn't). In production that handoff is a
-    Kafka topic; the per-stage state bounds are identical."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    # transformWithState requires the RocksDB state store provider;
-    # leave the default provider alone on the fallback tier
-    use_tws = transform_with_state_available()
-    stage = tempfile.mkdtemp(prefix="holt-stage-")
-    try:
-        src = f"{sf_dir}/events.parquet"
-        shutil.copy(src, f"{stage}/0_events.parquet")
-        corpus = pq.read_table(src)
-        ts_type = corpus.schema.field("ts").type
-        max_ts = pc.max(corpus["ts"]).cast(pa.int64()).as_py()
-        unit_per_h = {"s": 3600, "ms": 3600 * 10**3,
-                      "us": 3600 * 10**6, "ns": 3600 * 10**9}[ts_type.unit]
-        now = None
-        for i, hours_ahead in enumerate((2, 3)):
-            t = pa.Table.from_pydict({
-                "event_id": [-1 - i],
-                "ts": pa.array([max_ts + hours_ahead * unit_per_h],
-                               pa.int64()).cast(ts_type),
-                "user_id": [-1],
-                "event_type": [HOLT_SENTINEL_TYPE],
-                "value": [0.0],
-                "props": ["{}"],
-            }, schema=corpus.schema)
-            path = f"{stage}/{i + 1}_sentinel.parquet"
-            pq.write_table(t, path)
-            # file source drains oldest-mtime first: corpus, then the
-            # sentinels in event-time order
-            now = now or os.path.getmtime(f"{stage}/0_events.parquet")
-            os.utime(path, (now + 10 * (i + 1), now + 10 * (i + 1)))
-
-        # stream-rewrite-guard: exempt — READ-ONLY staged copy of the
-        # fixture parquet, not a catalog table (same rationale as
-        # streaming.runner.fixture_stream).
-        stream = (spark.readStream
-                  .schema(spark.read.parquet(f"{stage}/0_events.parquet")
-                          .schema)
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(stage))
-        hourly = holt_hourly_stream(stream)
-        if use_tws:
-            # one query: rollup + fold chained (TWS supports chaining)
-            rocksdb = {"spark.sql.streaming.stateStore.providerClass":
-                       "org.apache.spark.sql.execution.streaming."
-                       "state.RocksDBStateStoreProvider"}
-            with conf_override(spark, rocksdb):
-                emitted = drain(holt_fold_stream(hourly, use_tws=True),
-                                query_name, "append")
-        else:
-            # two queries with a file-sink handoff (Kafka in production)
-            hours_dir = f"{stage}/finalized_hours"
-            # one part file per agg batch, so file order == batch order
-            # == watermark order when stage 2 drains one file per
-            # trigger (a Kafka handoff orders per key natively; a
-            # model-sized |type| x hours stream coalesces for free)
-            hourly = hourly.coalesce(1)
-            with tempfile.TemporaryDirectory() as ckpt1:
-                q1 = (hourly.writeStream.format("parquet")
-                      .outputMode("append")
-                      .option("path", hours_dir)
-                      .option("checkpointLocation", ckpt1)
-                      .trigger(availableNow=True).start())
-                await_drained(q1)
-            # stream-rewrite-guard: exempt — stage-1's own file-sink
-            # output (exactly-once via its metadata log), not a catalog
-            # table.
-            hours_stream = (spark.readStream
-                            .schema("event_type string, h_us long, "
-                                    "x long")
-                            .option("maxFilesPerTrigger", "1")
-                            .parquet(hours_dir))
-            emitted = drain(holt_fold_stream(hours_stream, use_tws=False),
-                            query_name, "append")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_hours"))
-    return (emitted.withColumn("rk", F.row_number().over(w))
-            .filter("rk = 1").drop("rk").orderBy("event_type"))

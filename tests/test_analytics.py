@@ -142,21 +142,12 @@ def test_png_pixel_decode_round_trip():
         png_decode_pixels(shallow)
 
     # Adam7-interlaced grayscale, 1x1: only pass 1 is non-empty —
-    # decodes in pure stdlib (no PIL in this container)
+    # decodes in pure stdlib
     ihdr_i = struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 1)
     inter = (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr_i)
              + _png_chunk(b"IDAT", zlib.compress(b"\x00\x05"))
              + _png_chunk(b"IEND", b""))
     assert png_decode_pixels(inter) == (1, 1, 1, b"\x05")
-
-    # JPEG pixel decode is the one genuinely codec-bound shape: PIL
-    # when installed, honest scope error when not
-    from cstore_fdw_spark.operators.multimodal import _pil_decode
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(ValueError, match="PIL is not installed"):
-            _pil_decode(b"\xff\xd8\xff\xe0 not-really-a-jpeg")
 
 
 def test_png_adam7_interlaced_round_trip():

@@ -13,6 +13,7 @@ import pytest
 from cstore_fdw_spark.datasets import TABLES
 from cstore_fdw_spark.operators import clear_caches, load_all, table
 from cstore_fdw_spark.operators.similarity import ensure_index_artifacts
+from cstore_fdw_spark.streaming.runner import fixture_stream
 
 REGISTRY = load_all()
 
@@ -71,3 +72,12 @@ def test_query_stays_within_job_budget(spark, sf_dir, query):
     assert n_build <= max_build and n_action <= max_action, (
         f"{query}: {n_build} builder / {n_action} action jobs, budget "
         f"{max_build} / {max_action}")
+
+
+@pytest.mark.parametrize("name", ["events", "lineitem"])
+def test_fixture_stream_declares_the_table_schema(spark, sf_dir, name):
+    """A fixture stream takes the schema ``operators.table`` declared:
+    after one batch read of the table, opening its stream runs no job."""
+    table(spark, sf_dir, name)
+    assert _jobs(spark, f"fixture-stream-{name}",
+                 lambda: fixture_stream(spark, sf_dir, name)) == 0

@@ -699,8 +699,8 @@ def test_derived_tables_maintain_one_way():
     catalog.py one function reads the epoch-stamp commit evidence and
     one writes a pending record; the sidecar path, load, save and
     refresh lock are each defined once; one function opens a stream
-    over a catalog table (the fixture readers stream read-only files and
-    stay exempt); one function starts every foreachBatch sink."""
+    over a catalog table (the one fixture reader streams read-only files
+    and stays exempt); one function starts every foreachBatch sink."""
     import ast
     import pathlib
 
@@ -746,10 +746,9 @@ def test_derived_tables_maintain_one_way():
                     ("derived.py", "refresh_lock"),
                     ("derived.py", "save_spec"),
                     ("derived.py", "sidecar_path")]
-    assert [hit for hit in _package_functions_using(read_stream)
-            if hit[0] not in ("streaming/runner.py",
-                              "streaming/stateful.py")] == [
-        ("derived.py", "source_stream")]
+    assert sorted(_package_functions_using(read_stream)) == [
+        ("derived.py", "source_stream"),
+        ("streaming/runner.py", "fixture_stream")]
     assert _package_functions_using(method_call("foreachBatch")) == [
         ("streaming/runner.py", "start_foreach_batch")]
 
@@ -854,10 +853,11 @@ def test_label_blocked_components_equal_propagation(spark, graph):
 
 
 def test_operators_load_tables_one_way():
-    """One table loader: under operators/, a parquet file is read only
-    by ``table``, which declares each table's cached schema instead of
+    """One table loader: under operators/, a parquet file's schema is
+    inferred only by ``parquet_schema``, which caches it, and its rows
+    are read only by ``table``, which declares that schema instead of
     inferring it per read; the trained index artifacts are read through
-    it too."""
+    it too, and the fixture streams take the same schema."""
     import ast
 
     def receiver_attrs(node):
@@ -882,9 +882,10 @@ def test_operators_load_tables_one_way():
                 and isinstance(node.func, ast.Attribute)
                 and node.func.attr == "schema")
 
-    assert {hit for hit in _package_functions_using(parquet_read)
-            if hit[0].startswith("operators/")} == {
-        ("operators/__init__.py", "table")}
+    assert sorted(hit for hit in _package_functions_using(parquet_read)
+                  if hit[0].startswith("operators/")) == [
+        ("operators/__init__.py", "parquet_schema"),
+        ("operators/__init__.py", "table")]
     assert ("operators/__init__.py", "table") in _package_functions_using(
         schema_call)
 
@@ -924,12 +925,12 @@ def test_registry_media_and_rollups_one_way():
         return lambda node: (isinstance(node, ast.Constant)
                              and node.value == value)
 
-    # per-row cents (stats_iqr_outliers) and the watermarked window
-    # rollup of the Holt stream are not this rollup
-    assert set(_package_functions_using(
-        constant("CAST(ROUND(value * 100) AS BIGINT)"))) & set(
-        _package_functions_using(unparsed("F.date_trunc('hour', 'ts')"))
-    ) == {("operators/events.py", "hourly_cents")}
+    # the one hourly cents rollup, and the per-row cents of
+    # stats_iqr_outliers (not a rollup)
+    assert sorted(_package_functions_using(
+        constant("CAST(ROUND(value * 100) AS BIGINT)"))) == [
+        ("operators/analytics.py", "stats_iqr_outliers"),
+        ("operators/events.py", "hourly_cents")]
     for literal in (" contact user", "@ex", ".example.com", " call 555-"):
         assert _package_functions_using(constant(literal)) == [
             ("operators/text.py", "pii_injected_text")], literal

@@ -149,8 +149,8 @@ def test_concurrent_stream_ledgers_do_not_lose_entries(spark, catalog):
     # load->insert->replace could drop the other writer's entry and
     # re-enable duplicate appends on replay)
     import threading
-    from cstore_fdw_spark.streaming.ingest import (
-        _ledger_path, _load_ledger, batch_writer)
+    from cstore_fdw_spark.fsutil import read_json_or_empty
+    from cstore_fdw_spark.streaming.ingest import _ledger_path, batch_writer
 
     catalog.create_table("tcl", "a int")
     df = spark.createDataFrame([(1,)], "a int")
@@ -172,7 +172,7 @@ def test_concurrent_stream_ledgers_do_not_lose_entries(spark, catalog):
     for t in threads:
         t.join()
     assert not errs
-    ledger = _load_ledger(_ledger_path(catalog, "tcl"))
+    ledger = read_json_or_empty(_ledger_path(catalog, "tcl"))
     # every stream's marker survived at its final batch id
     assert sorted(ledger.values()) == [2, 2, 2, 2], ledger
     assert catalog.row_count("tcl") == 12
@@ -648,56 +648,6 @@ def test_every_readstream_guarded_or_exempt():
         f"{offenders}")
 
 
-def test_holt_streaming_twin_matches_batch(spark, sf_dir):
-    """Round-11 verdict task 2: the streamed Holt monitor must land on
-    the IDENTICAL (level, trend, forecast) as timeseries_holt_smoothing
-    — the fold step is literally shared code (holt_step), state is four
-    int64s per key, and the hourly rollup stays a built-in watermarked
-    window aggregate (append mode finalizes each hour exactly once).
-    transformWithState chains both stages in one query where protobuf
-    exists; this container lacks it, so the runner exercises the
-    two-query file-handoff fallback — same bounds, same answer."""
-    from cstore_fdw_spark.operators import load_all
-    from cstore_fdw_spark.streaming.stateful import run_holt_available_now
-
-    reg = load_all()
-    batch = reg["timeseries_holt_smoothing"].builder(spark, sf_dir) \
-        .collect()
-    streamed = run_holt_available_now(spark, sf_dir).collect()
-    assert streamed == batch
-
-
-def test_holt_fold_refuses_stale_hours():
-    """The fold's ordering contract is enforced, not assumed: an hour
-    at/below the folded high-water mark raises instead of silently
-    mis-folding (the upstream append-mode window aggregate can never
-    legally re-emit a finalized hour)."""
-    import pytest as _pytest
-
-    from cstore_fdw_spark.streaming.stateful import (HOLT_INIT_STATE,
-                                                     _holt_fold)
-
-    level, trend, n, last_h, adv = _holt_fold(
-        *HOLT_INIT_STATE, [(1000, 500), (2000, 700)])
-    assert adv and n == 2 and last_h == 2000
-    with _pytest.raises(ValueError, match="high-water"):
-        _holt_fold(level, trend, n, last_h, [(1500, 9)])
-
-
-def test_holt_fold_step_is_batch_step():
-    """Twin-equality is by construction: the streaming fold and the
-    batch applyInPandas fold call the SAME holt_step function object —
-    pin that, so a future edit can't fork the recurrence."""
-    import inspect
-
-    from cstore_fdw_spark.operators import events as ev
-    from cstore_fdw_spark.streaming import stateful as st
-
-    assert "holt_step(" in inspect.getsource(st._holt_fold)
-    assert "holt_step(" in inspect.getsource(
-        ev.timeseries_holt_smoothing)
-
-
 @pytest.mark.parametrize("query", TWINS)
 def test_declared_twin_equals_batch(spark, sf_dir, query):
     """Every streaming twin declared on the registry equals its batch
@@ -757,18 +707,13 @@ def test_events_twins_read_nanos_timestamps(spark, sf_dir, tmp_path,
     assert streamed == batch and len(batch) > 0
 
 
-@pytest.mark.parametrize("run", ["drain", "holt"])
-def test_timed_out_drain_raises_and_stops(spark, sf_dir, monkeypatch, run):
+def test_timed_out_drain_raises_and_stops(spark, sf_dir, monkeypatch):
     """A drain that outlives its timeout is stopped and reported, never
-    returned as a partial memory table (Holt's stage-1 file sink too)."""
+    returned as a partial memory table."""
     from cstore_fdw_spark.streaming import runner
-    from cstore_fdw_spark.streaming.stateful import run_holt_available_now
 
     monkeypatch.setattr(runner, "DRAIN_TIMEOUT_S", 0.001)
     with pytest.raises(TimeoutError, match="did not drain"):
-        if run == "drain":
-            drain(se.tumbling_counts(fixture_stream(spark, sf_dir, "events")),
-                  "t_timeout", "complete")
-        else:
-            run_holt_available_now(spark, sf_dir, "t_holt_timeout")
+        drain(se.tumbling_counts(fixture_stream(spark, sf_dir, "events")),
+              "t_timeout", "complete")
     assert spark.streams.active == []
