@@ -266,29 +266,40 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
             tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
 
 
+def _read_parquet(spark: SparkSession, path: str,
+                  key: tuple | None) -> DataFrame:
+    """The parquet table at ``path`` read under the schema
+    :data:`_SCHEMAS` holds for ``key``; on a miss, read with inference
+    (one Spark job) and that schema recorded under ``key``."""
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    if key:
+        _SCHEMAS[key] = df.schema
+    return df
+
+
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The physical schema of the parquet table at ``path``, as
-    ``spark.read.parquet`` infers it: inferred by one Spark job on the
-    first call and declared from :data:`_SCHEMAS` on every later one.
-    A path :func:`_schema_key` cannot key is inferred on every call."""
+    ``spark.read.parquet`` infers it: declared from :data:`_SCHEMAS`
+    once :func:`table` or this function has read ``path``, which builds
+    no DataFrame. A path :func:`_schema_key` cannot key is inferred on
+    every call."""
     key = _schema_key(spark, path)
     if key in _SCHEMAS:
         return _SCHEMAS[key]
-    schema = spark.read.parquet(path).schema
-    if key:
-        _SCHEMAS[key] = schema
-    return schema
+    return _read_parquet(spark, path, key).schema
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The parquet table ``{sf_dir}/{name}.parquet`` (a fixture file, or
     a directory Spark wrote, such as a trained index artifact) — the
-    one parquet table loader of the operators. Its schema is
-    :func:`parquet_schema`'s, so every read after the first launches
+    one parquet table loader of the operators. Its schema is inferred
+    on the first read and declared on every later one, which launches
     no Spark job;
     ``events`` comes out with a micros ``ts`` (:func:`events_ts_micros`)."""
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    df = _read_parquet(spark, path, _schema_key(spark, path))
     return events_ts_micros(df) if name == "events" else df
 
 

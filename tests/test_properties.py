@@ -853,11 +853,11 @@ def test_label_blocked_components_equal_propagation(spark, graph):
 
 
 def test_operators_load_tables_one_way():
-    """One table loader: under operators/, a parquet file's schema is
-    inferred only by ``parquet_schema``, which caches it, and its rows
-    are read only by ``table``, which declares that schema instead of
-    inferring it per read; the trained index artifacts are read through
-    it too, and the fixture streams take the same schema."""
+    """One table loader: under operators/, a parquet file is read only
+    by ``_read_parquet``, which infers its schema on the first read,
+    caches it and declares it on every later read; ``table`` (the
+    trained index artifacts included) and ``parquet_schema`` (the
+    fixture streams' schema) both go through it."""
     import ast
 
     def receiver_attrs(node):
@@ -882,12 +882,11 @@ def test_operators_load_tables_one_way():
                 and isinstance(node.func, ast.Attribute)
                 and node.func.attr == "schema")
 
-    assert sorted(hit for hit in _package_functions_using(parquet_read)
-                  if hit[0].startswith("operators/")) == [
-        ("operators/__init__.py", "parquet_schema"),
-        ("operators/__init__.py", "table")]
-    assert ("operators/__init__.py", "table") in _package_functions_using(
-        schema_call)
+    assert {hit for hit in _package_functions_using(parquet_read)
+            if hit[0].startswith("operators/")} == {
+        ("operators/__init__.py", "_read_parquet")}
+    assert ("operators/__init__.py", "_read_parquet") in (
+        _package_functions_using(schema_call))
 
 
 def test_registry_media_and_rollups_one_way():
