@@ -830,6 +830,9 @@ class CStoreCatalog:
         stripe rows × 10), ``partition_by``, and ``sort_by`` (the
         reference advises loading sorted for skip efficiency,
         README.md:287-294; sortWithinPartitions keeps it shuffle-free).
+        A cstore table stages through :func:`_stage_cstore` instead of
+        the ``format("cstore")`` sink: one file per non-empty partition
+        either way, but no data-source write or commit worker starts.
         ``df=None`` stages nothing (an empty directory). The name is
         unique, so concurrent writers never share a stage; only the
         caller removes it (after a commit has moved its files or
@@ -841,6 +844,9 @@ class CStoreCatalog:
         sort_by = meta.options.get("sort_by")
         if sort_by:
             df = df.sortWithinPartitions(*sort_by.split(","))
+        if self._format(meta) == "cstore":
+            _stage_cstore(df, staged, self._writer_options(meta))
+            return staged
         writer = (df.write.mode("overwrite")
                   .option("maxRecordsPerFile",
                           str(_rows_per_file(meta.options))))
@@ -1489,7 +1495,7 @@ class CStoreCatalog:
         target = meta.schema()
         if not paths:
             keep = set(target.fieldNames() if columns is None else columns)
-            return self.spark.createDataFrame([], T.StructType(
+            return _local_frame(self.spark, T.StructType(
                 [f_ for f_ in target.fields if f_.name in keep]))
         data_path = self._data_path(meta)
         phys = _physical_schema(target, paths, data_path, fmt)
@@ -1730,16 +1736,20 @@ class CStoreCatalog:
         (Spark UDFs run executor-side, the wrong place for driver/
         metastore metadata). Everything is footer/stat reads — no data
         scan; the result is a driver-built local DataFrame, trivially
-        small (one row per table)."""
+        small (one row per table), that runs no Python task."""
         rows = []
         for name in self.list_tables():
             meta = self._load_meta(name)
             rows.append((name, self.table_size(name), self.row_count(name),
                          meta.write_epoch, self._format(meta),
                          len(self._visible_files(meta))))
-        schema = ("table_name string, size_bytes long, row_count long, "
-                  "write_epoch long, storage_format string, n_files long")
-        return self.spark.createDataFrame(rows, schema)
+        return _local_frame(self.spark, T.StructType(
+            [T.StructField("table_name", T.StringType()),
+             T.StructField("size_bytes", T.LongType()),
+             T.StructField("row_count", T.LongType()),
+             T.StructField("write_epoch", T.LongType()),
+             T.StructField("storage_format", T.StringType()),
+             T.StructField("n_files", T.LongType())]), rows)
 
     def register_metadata_view(self, view_name: str = "cstore_tables") -> str:
         """Expose :meth:`metadata_df` as a temp view so metadata is plain
@@ -2244,12 +2254,61 @@ def _file_schema_names(path: str, fmt: str) -> list[str]:
 
 
 def _save_df(writer, fmt: str, path: str) -> None:
-    """Format-dispatched write: built-in formats have writer attributes;
-    the cstore python data source goes through format().save()."""
-    if fmt in ("parquet", "orc"):
-        getattr(writer, fmt)(path)
-    else:
-        writer.format(fmt).save(path)
+    """Format-dispatched write of a built-in format (parquet, orc); a
+    cstore table stages through :func:`_stage_cstore`."""
+    getattr(writer, fmt)(path)
+
+
+def _stage_cstore(df: DataFrame, staged: str,
+                  options: dict[str, str]) -> None:
+    """Write ``df`` into the new directory ``staged`` as cstore files,
+    one per non-empty partition, through one ``mapInArrow`` over the
+    sink's per-partition writer (:func:`_cstore_stage_task`). The
+    ``format("cstore")`` sink would start a data-source write worker
+    and a commit worker on top, and its commit ignores which files the
+    tasks wrote. Here each task returns its file, and every file in
+    ``staged`` that no task reported (a failed or speculative
+    attempt's) is deleted before any commit can move it."""
+    os.makedirs(staged)
+    task = _cstore_stage_task(df.schema, dict(options, path=staged))
+    reported = {r.file for r in df.mapInArrow(task, "file string").collect()}
+    for fn in os.listdir(staged):
+        if fn.removesuffix(".footer") not in reported:
+            os.remove(os.path.join(staged, fn))
+
+
+def _cstore_stage_task(schema: T.StructType, options: dict[str, str]):
+    """The ``mapInArrow`` function of :func:`_stage_cstore`: one
+    partition's Arrow batches through :meth:`CStoreWriter.write`, then
+    one row naming the file it wrote (no row for an empty
+    partition)."""
+    from cstore_fdw_spark.sources.cstore_datasource import CStoreWriter
+
+    def write_part(batches):
+        import pyarrow as pa
+
+        done = CStoreWriter(schema, options, overwrite=False).write(batches)
+        if done.file is not None:
+            yield pa.RecordBatch.from_pydict({"file": [done.file]})
+
+    return write_part
+
+
+def _local_frame(spark: SparkSession, schema: T.StructType,
+                 rows: list[tuple] = ()) -> DataFrame:
+    """A driver-built DataFrame of ``rows`` (tuples in ``schema``
+    order), made from one Arrow table. Spark plans it as a local
+    relation, so reading it runs no Python task, and with no rows it
+    has no partitions; a frame over a Python list would ship its rows
+    through a Python worker per partition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow), schema)
 
 
 def _load_df(reader, fmt: str, paths: list[str]) -> DataFrame:

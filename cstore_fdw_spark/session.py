@@ -12,11 +12,14 @@ local-mode specific except the master URL default.
 from __future__ import annotations
 
 import contextlib
+import hashlib
+import importlib.util
 import os
-import shutil
 import tempfile
+import zipfile
 import zipimport
 from collections.abc import Iterator
+from importlib._bootstrap_external import _code_to_hash_pyc
 
 from pyspark.sql import SparkSession
 
@@ -190,22 +193,83 @@ def ship_package(spark: SparkSession) -> None:
     """Make ``cstore_fdw_spark`` importable on executors' Python workers.
 
     The driver process may run from any cwd; Pandas-UDF closures reference
-    this package by module name, so workers need it on their path. A zip of
-    the package is shipped once per session via ``addPyFile`` (works on
-    local and cluster mode alike).
+    this package by module name, so workers need it on their path. The
+    :func:`package_archive` zip is shipped once per session via
+    ``addPyFile`` (works on local and cluster mode alike).
     """
     if getattr(spark, "_cstore_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(tempfile.gettempdir(),
-                            f"cstore_fdw_spark_pkg_{os.getpid()}")
-    zip_path = zip_base + ".zip"
-    if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip",
-                            root_dir=os.path.dirname(pkg_dir),
-                            base_dir=os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(package_archive())
     spark._cstore_pkg_shipped = True  # type: ignore[attr-defined]
+
+
+#: where :func:`package_archive` keeps its zips, one per source digest
+_ARCHIVE_CACHE = os.path.join(os.path.expanduser("~"), ".cache",
+                              "cstore_fdw_spark")
+
+
+def package_archive() -> str:
+    """The path of a zip of this package that imports without compiling.
+
+    Every package file except ``__pycache__/`` goes in, and next to each
+    ``.py`` its checked-hash ``.pyc``: zipimport reads a ``.pyc`` only
+    from beside its source, never from ``__pycache__/``, so without one
+    every worker compiles the package from source. A worker whose
+    interpreter has another bytecode magic ignores the ``.pyc`` and
+    compiles its ``.py``, as before.
+
+    The zip is named by a digest of the sources and this interpreter's
+    bytecode magic, built once (temp file, then an atomic rename) into
+    ``~/.cache/cstore_fdw_spark/``, or into the temp dir when that
+    cannot be written."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    digest = hashlib.sha256(importlib.util.MAGIC_NUMBER)
+    files: dict[str, bytes] = {}
+    for dirpath, dirnames, filenames in os.walk(pkg_dir):
+        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+        for fn in sorted(filenames):
+            if fn.endswith(".pyc"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, fn), root)
+            with open(os.path.join(root, rel), "rb") as fh:
+                files[rel] = data = fh.read()
+            digest.update(b"%s\0%d\0" % (rel.encode(), len(data)) + data)
+    name = f"cstore_fdw_spark-{digest.hexdigest()[:16]}.zip"
+    for cache in (_ARCHIVE_CACHE, tempfile.gettempdir()):
+        path = os.path.join(cache, name)
+        try:
+            if not os.path.exists(path):
+                os.makedirs(cache, mode=0o700, exist_ok=True)
+                fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=cache)
+                try:
+                    with os.fdopen(fd, "wb") as fh:
+                        _write_archive(fh, files)
+                    os.replace(tmp, path)  # concurrent builders: last wins
+                finally:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(tmp)
+            return path
+        except OSError:
+            continue
+    raise OSError(f"no writable directory for {name}")
+
+
+def _write_archive(fh, files: dict[str, bytes]) -> None:
+    """Zip ``files`` (archive name -> bytes) with a checked-hash
+    ``.pyc`` beside each ``.py`` and an entry per directory, every
+    entry dated 1980-01-01 so equal sources give equal bytes."""
+    dirs = sorted({os.path.dirname(rel) for rel in files})
+    with zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+        for d in dirs:
+            zf.writestr(zipfile.ZipInfo(d + "/"), b"")
+        for rel, data in files.items():
+            zf.writestr(zipfile.ZipInfo(rel), data, zipfile.ZIP_DEFLATED)
+            if rel.endswith(".py"):
+                code = compile(data, rel, "exec", dont_inherit=True)
+                zf.writestr(zipfile.ZipInfo(rel + "c"), _code_to_hash_pyc(
+                    code, importlib.util.source_hash(data), checked=True),
+                    zipfile.ZIP_DEFLATED)
 
 
 def apply_engine_confs(spark: SparkSession) -> SparkSession:

@@ -6,6 +6,11 @@ integration of :mod:`cstore_fdw_spark.sources.cstore_format`.
   ``df.write.format("cstore").save(path)``. ``load([file, ...])``
   reads exactly those files in one scan; a directory is listed when
   the query runs.
+- The catalog reads through this source but does not write through
+  it: a cstore table's stage runs :meth:`CStoreWriter.write` inside
+  one ``mapInArrow`` (``catalog._stage_cstore``), and each task
+  returns the file it wrote, so the stage keeps only reported files
+  and starts no data-source write or commit worker.
 - A schema is REQUIRED on read: like the reference (CREATE FOREIGN
   TABLE declares columns; the binary format stores no names/types —
   cstore_fdw.h:55, README.md:197-213), the file is schema-on-read.
@@ -25,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource, DataSourceArrowWriter, DataSourceReader, EqualTo,
@@ -232,6 +238,14 @@ class CStoreReader(DataSourceReader):
                 yield batch
 
 
+@dataclass
+class CStoreCommitMessage(WriterCommitMessage):
+    """What one :meth:`CStoreWriter.write` call wrote: the data file's
+    name inside the writer's directory (its ``.footer`` sidecar sits
+    next to it), or None for an empty partition."""
+    file: str | None
+
+
 class CStoreWriter(DataSourceArrowWriter):
     """Arrow-batched sink: per partition, incoming RecordBatches stream
     through the vectorized stripe writer — at most ONE stripe
@@ -265,12 +279,13 @@ class CStoreWriter(DataSourceArrowWriter):
             CStoreFileWriter)
 
         writer = None
+        name = None
         buf: list = []
         buffered = 0
         self.peak_buffered_rows = 0
 
         def flush():
-            nonlocal writer, buf, buffered
+            nonlocal writer, name, buf, buffered
             if not buffered:
                 return
             if writer is None:
@@ -298,7 +313,7 @@ class CStoreWriter(DataSourceArrowWriter):
         flush()
         if writer is not None:
             writer.close()
-        return WriterCommitMessage()
+        return CStoreCommitMessage(name)
 
 
 class CStoreDataSource(DataSource):

@@ -53,6 +53,59 @@ def test_empty_table_queryable(spark, catalog):
     assert catalog.row_count("empty") == 0
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_empty_scan_and_metadata_are_local_relations(spark, catalog, fmt):
+    """A table with no visible file reads as a local relation with the
+    table's schema and no partitions, so reading it runs no Python task
+    (a frame over an empty Python list ran one per default partition);
+    the metadata frame is a local relation too."""
+    catalog.create_table("ev", "a long, b string", storage_format=fmt)
+    df = catalog.read("ev")
+    assert df._jdf.rdd().getNumPartitions() == 0
+    assert df.schema.simpleString() == "struct<a:bigint,b:string>"
+    assert df.count() == 0
+    assert catalog.read("ev", columns=["b"]).columns == ["b"]
+    meta = catalog.metadata_df()
+    plan = meta._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert [tuple(r) for r in meta.collect()] == [
+        ("ev", catalog.table_size("ev"), 0, 0, fmt, 0)]
+
+
+def test_cstore_stage_commits_only_reported_files(spark, catalog,
+                                                  monkeypatch):
+    """A task attempt whose file no task result names (a failed or a
+    speculative attempt) leaves that file in the stage; the stage
+    deletes it, so the commit moves in only the reported files."""
+    from cstore_fdw_spark import catalog as catalog_mod
+
+    real = catalog_mod._cstore_stage_task
+
+    def lost_attempt_first(schema, options):
+        write_part = real(schema, options)
+
+        def attempts(batches):
+            batches = list(batches)
+            for _ in write_part(iter(batches)):
+                pass  # this attempt's report never reaches the driver
+            yield from write_part(iter(batches))
+
+        return attempts
+
+    monkeypatch.setattr(catalog_mod, "_cstore_stage_task",
+                        lost_attempt_first)
+    catalog.create_table("lk", "a long", storage_format="cstore")
+    catalog.insert("lk", spark.range(100).repartition(2)
+                   .selectExpr("id as a"))
+    assert sorted(r.a for r in catalog.read("lk").collect()) == \
+        list(range(100))
+    assert catalog.row_count("lk") == 100
+    data = catalog._data_path(catalog._load_meta("lk"))
+    assert sorted(f.rsplit(".", 1)[-1] for f in os.listdir(data)
+                  if not f.startswith((".", "_"))) == \
+        ["cstore", "cstore", "footer", "footer"]
+
+
 def test_table_size_grows(spark, catalog):
     # parity: sql/functions.sql:15 — size(empty) < size(loaded)
     catalog.create_table("t", "a int, b string")

@@ -791,6 +791,47 @@ def test_cstore_writer_streams_stripes(tmp_path):
             == open(ref_path + ".footer", "rb").read())
 
 
+def test_catalog_stage_writes_the_sink_bytes(spark, tmp_path):
+    """The catalog stages a cstore table through the sink's writer in an
+    Arrow map, not through the sink: at the same stripe boundaries its
+    file and footer are byte-identical to the ``format("cstore")``
+    sink's and to the collect-then-write path's."""
+    import pyarrow as pa
+
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    from cstore_fdw_spark.sources.cstore_datasource import register_cstore
+    from cstore_fdw_spark.sources.cstore_format import write_cstore_arrow
+
+    tbl = pa.table({
+        "a": list(range(3500)),
+        "b": [None if i % 11 == 0 else f"v{i}" for i in range(3500)]})
+    df = spark.createDataFrame(tbl, "a long, b string").coalesce(1)
+    opts = {"stripe_row_count": "1000", "block_row_count": "1000"}
+
+    def only_file(directory):
+        (name,) = [f for f in os.listdir(directory)
+                   if f.endswith(".cstore")]
+        path = os.path.join(directory, name)
+        return (open(path, "rb").read(),
+                open(path + ".footer", "rb").read())
+
+    cat = CStoreCatalog(spark, warehouse=str(tmp_path / "wh"))
+    cat.create_table("t", "a long, b string", storage_format="cstore",
+                     **opts)
+    cat.insert("t", df)
+    register_cstore(spark)
+    sink = str(tmp_path / "sink")
+    df.write.format("cstore").options(**opts).mode("overwrite").save(sink)
+    ref = str(tmp_path / "ref.cstore")
+    write_cstore_arrow(ref, tbl, ["bigint", "string"],
+                       stripe_row_count=1000, block_row_count=1000)
+
+    staged = only_file(cat._data_path(cat._load_meta("t")))
+    assert staged == only_file(sink)
+    assert staged == (open(ref, "rb").read(),
+                      open(ref + ".footer", "rb").read())
+
+
 def test_catalog_cstore_pruned_read(spark, tmp_path):
     """read(columns=...) on a cstore table decodes only the named
     columns (values identical to the full read), composes with block

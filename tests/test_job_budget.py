@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from cstore_fdw_spark.catalog import CStoreCatalog
 from cstore_fdw_spark.datasets import TABLES
 from cstore_fdw_spark.operators import clear_caches, load_all, table
 from cstore_fdw_spark.operators.similarity import ensure_index_artifacts
@@ -40,6 +41,12 @@ JOB_BUDGET = {
     "dedup_minhash_lsh": (5, 10),
     "route_ngram_minhash_tier": (10, 4),
 }
+
+
+#: storage format -> Spark jobs of one catalog insert into a small
+#: table that already holds a batch: the stage's one write job (for
+#: cstore, the Arrow map whose results name the files it wrote)
+INSERT_BUDGET = {"parquet": 1, "cstore": 1}
 
 
 def _jobs(spark, group: str, fn) -> int:
@@ -81,3 +88,19 @@ def test_fixture_stream_declares_the_table_schema(spark, sf_dir, name):
     table(spark, sf_dir, name)
     assert _jobs(spark, f"fixture-stream-{name}",
                  lambda: fixture_stream(spark, sf_dir, name)) == 0
+
+
+@pytest.mark.parametrize("fmt", sorted(INSERT_BUDGET))
+def test_insert_stays_within_job_budget(spark, tmp_path, fmt):
+    """An insert runs its stage's write job and nothing else: the
+    commit reads footers and file listings only."""
+    cat = CStoreCatalog(spark, warehouse=str(tmp_path / "wh"))
+    cat.create_table("t", "a long, b string", storage_format=fmt,
+                     stripe_row_count=1000, block_row_count=1000)
+    batch = spark.range(3000, numPartitions=2).selectExpr(
+        "id as a", "cast(id as string) as b")
+    cat.insert("t", batch)
+    n = _jobs(spark, f"budget-insert-{fmt}", lambda: cat.insert("t", batch))
+    assert cat.row_count("t") == 6000
+    assert n <= INSERT_BUDGET[fmt], (
+        f"{fmt} insert: {n} jobs, budget {INSERT_BUDGET[fmt]}")

@@ -610,6 +610,34 @@ def test_catalog_writes_stage_and_lock_one_way():
     assert defs == ["fsutil.py"]
 
 
+def test_cstore_stage_and_local_frames_one_way():
+    """A cstore table stages through one Arrow map: ``CStoreWriter`` is
+    built only by the data source's ``writer`` and the catalog's map
+    function, ``CStoreFileWriter`` (the one file assembler) only by that
+    writer and the two whole-file writers, and ``catalog.py`` builds
+    every driver-side frame from Arrow in ``_local_frame``, never over a
+    Python list that would start Python workers."""
+    import ast
+
+    def call_to(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and (getattr(node.func, "id", None) == name
+                         or getattr(node.func, "attr", None) == name))
+        return pred
+
+    assert sorted(_package_functions_using(call_to("CStoreWriter"))) == [
+        ("catalog.py", "write_part"),
+        ("sources/cstore_datasource.py", "writer")]
+    assert sorted(_package_functions_using(call_to("CStoreFileWriter"))) == [
+        ("sources/cstore_datasource.py", "flush"),
+        ("sources/cstore_format.py", "write_cstore_arrow"),
+        ("sources/cstore_format.py", "write_cstore_file")]
+    assert [hit for hit in _package_functions_using(
+        call_to("createDataFrame")) if hit[0] == "catalog.py"] == [
+        ("catalog.py", "_local_frame")]
+
+
 def test_cstore_format_walks_and_encodes_one_way():
     """One path each inside the cstore v1.7 codec: the stripe footer is
     parsed at one site, pglz is undone at one site (called through the

@@ -1,8 +1,8 @@
 """Fixed costs of Spark's Python workers: a worker keeps the directory
 of an unchanged zip on its path across ``importlib.invalidate_caches()``
-(which pyspark calls before every task, planning call and commit), and
-the C pglz kernels load wherever a C compiler exists, executors
-included."""
+(which pyspark calls before every task, planning call and commit), it
+imports the shipped package archive without compiling, and the C pglz
+kernels load wherever a C compiler exists, executors included."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ import shutil
 import subprocess
 import sys
 import textwrap
+import zipfile
 import zipimport
 
 import pyarrow as pa
@@ -124,6 +125,63 @@ def test_spark_worker_rereads_no_archive_once_package_is_imported(spark):
         probe, "reads long, zips long").collect()
     assert row.zips > 0  # the worker imports from zips at all
     assert row.reads == 0
+
+
+#: run in a fresh interpreter with an archive first on its path; prints
+#: where the package came from and which of its files were compiled
+_ARCHIVE_PROBE = textwrap.dedent("""
+    import builtins, json, sys
+    sys.path.insert(0, sys.argv[1])
+    compiled = []
+    real = builtins.compile
+
+    def counting(source, filename, *args, **kwargs):
+        compiled.append(str(filename))
+        return real(source, filename, *args, **kwargs)
+    builtins.compile = counting
+    import cstore_fdw_spark.catalog
+    import cstore_fdw_spark.sources.cstore_datasource  # noqa: F401
+    print(json.dumps({
+        "file": cstore_fdw_spark.__file__,
+        "compiled": [f for f in compiled if "cstore_fdw_spark" in f]}))
+""")
+
+
+def _import_from(archive: str, tmp_path) -> dict:
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _ARCHIVE_PROBE, archive], env=env,
+        cwd=str(tmp_path), capture_output=True, text=True, check=True)
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_shipped_archive_imports_without_compiling(tmp_path):
+    """The archive ``ship_package`` ships has a checked-hash ``.pyc``
+    beside every ``.py`` and no ``__pycache__/``, so a fresh interpreter
+    imports the package from it without compiling; a ``.pyc`` with
+    another bytecode magic falls back to compiling its ``.py``."""
+    from cstore_fdw_spark.session import package_archive
+
+    archive = package_archive()
+    assert package_archive() == archive  # built once per source digest
+    names = zipfile.ZipFile(archive).namelist()
+    assert not [n for n in names if "__pycache__" in n]
+    assert {n for n in names if n.endswith(".py")} == \
+        {n[:-1] for n in names if n.endswith(".pyc")}
+    got = _import_from(archive, tmp_path)
+    assert got["file"].startswith(archive + os.sep)
+    assert got["compiled"] == []
+
+    stale = str(tmp_path / "stale.zip")
+    with zipfile.ZipFile(archive) as src, zipfile.ZipFile(stale, "w") as dst:
+        for info in src.infolist():
+            data = src.read(info)
+            if info.filename == "cstore_fdw_spark/catalog.pyc":
+                data = bytes([data[0] ^ 0xFF]) + data[1:]
+            dst.writestr(info, data)
+    got = _import_from(stale, tmp_path)
+    assert {f.rsplit(os.sep + "cstore_fdw_spark" + os.sep, 1)[-1]
+            for f in got["compiled"]} == {"catalog.py"}
 
 
 def test_native_pglz_loads_where_cc_exists(spark):
