@@ -1,8 +1,9 @@
 """Filesystem primitives shared by the catalog, its sidecar writers and
 the cstore reader: the data-file epoch stamp, the atomic JSON replace
 (the reference's footer temp-file + rename, cstore_writer.c:344-357)
-and its tolerant reader, and the exclusive flock. Standard library
-only, so every module can import it without an import cycle."""
+and its tolerant reader, the exclusive flock and the per-user build
+cache. Standard library only, so every module can import it without an
+import cycle."""
 
 from __future__ import annotations
 
@@ -11,6 +12,12 @@ import json
 import os
 from contextlib import contextmanager
 from typing import Any, Iterator
+
+
+#: the per-user build cache: the pglz kernels (one library per hash of
+#: ``pglz.c``) and the shipped package archives (one per source digest)
+CACHE_DIR = os.path.join(os.path.expanduser("~"), ".cache",
+                         "cstore_fdw_spark")
 
 
 def _file_epoch(path: str) -> int:

@@ -23,6 +23,8 @@ from importlib._bootstrap_external import _code_to_hash_pyc
 
 from pyspark.sql import SparkSession
 
+from cstore_fdw_spark.fsutil import CACHE_DIR
+
 # Parquet analogs of the reference's stripe/block layout
 # (reference cstore_fdw.h:34-35: stripe=150k rows, block=10k rows).
 DEFAULT_PAGE_ROW_LIMIT = 10_000        # block analog: page-level stats granularity
@@ -203,11 +205,6 @@ def ship_package(spark: SparkSession) -> None:
     spark._cstore_pkg_shipped = True  # type: ignore[attr-defined]
 
 
-#: where :func:`package_archive` keeps its zips, one per source digest
-_ARCHIVE_CACHE = os.path.join(os.path.expanduser("~"), ".cache",
-                              "cstore_fdw_spark")
-
-
 def package_archive() -> str:
     """The path of a zip of this package that imports without compiling.
 
@@ -236,7 +233,7 @@ def package_archive() -> str:
                 files[rel] = data = fh.read()
             digest.update(b"%s\0%d\0" % (rel.encode(), len(data)) + data)
     name = f"cstore_fdw_spark-{digest.hexdigest()[:16]}.zip"
-    for cache in (_ARCHIVE_CACHE, tempfile.gettempdir()):
+    for cache in (CACHE_DIR, tempfile.gettempdir()):
         path = os.path.join(cache, name)
         try:
             if not os.path.exists(path):

@@ -35,6 +35,8 @@ import subprocess
 import tempfile
 from decimal import Decimal, ROUND_HALF_UP, localcontext
 
+from cstore_fdw_spark.fsutil import CACHE_DIR
+
 # ------------------------------------------------------------ protobuf wire
 
 def _varint(n: int) -> bytes:
@@ -318,29 +320,24 @@ class _NativePglz:
         return out.raw
 
 
-#: the per-user build cache: one library per hash of ``pglz.c``
-_NATIVE_CACHE = os.path.join(os.path.expanduser("~"), ".cache",
-                             "cstore_fdw_spark")
-
-
 @functools.cache
 def _native_pglz() -> _NativePglz | None:
     """The C pglz kernels, built on first use: ``pglz.c`` (read through
     the package loader, since executors import this package from a
-    zip) is compiled by the host's ``cc`` into :data:`_NATIVE_CACHE`,
+    zip) is compiled by the host's ``cc`` into :data:`CACHE_DIR`,
     named by its source hash so an edited source builds anew, and
     loaded with ctypes. None when no compiler is found or the build
     fails; the Python kernels then serve."""
     src = pkgutil.get_data(__package__, "pglz.c")
-    lib = os.path.join(_NATIVE_CACHE, "pglz-%s.so"
+    lib = os.path.join(CACHE_DIR, "pglz-%s.so"
                        % hashlib.sha256(src).hexdigest()[:16])
     try:
         if not os.path.exists(lib):
             cc = shutil.which("cc")
             if cc is None:
                 return None
-            os.makedirs(_NATIVE_CACHE, mode=0o700, exist_ok=True)
-            with tempfile.TemporaryDirectory(dir=_NATIVE_CACHE) as tmp:
+            os.makedirs(CACHE_DIR, mode=0o700, exist_ok=True)
+            with tempfile.TemporaryDirectory(dir=CACHE_DIR) as tmp:
                 c_file = os.path.join(tmp, "pglz.c")
                 with open(c_file, "wb") as fh:
                     fh.write(src)
