@@ -38,7 +38,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterable
 from uuid import uuid4
 
 import pyarrow.parquet as pq
@@ -2295,7 +2295,7 @@ def _cstore_stage_task(schema: T.StructType, options: dict[str, str]):
 
 
 def _local_frame(spark: SparkSession, schema: T.StructType,
-                 rows: list[tuple] = ()) -> DataFrame:
+                 rows: Iterable[tuple] = ()) -> DataFrame:
     """A driver-built DataFrame of ``rows`` (tuples in ``schema``
     order), made from one Arrow table. Spark plans it as a local
     relation, so reading it runs no Python task, and with no rows it
