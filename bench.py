@@ -65,6 +65,23 @@ def bring_up(spark, sf_dir: str, registry,
     return index_build, trained_tags
 
 
+def timed_runs(spark, build, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` executions of ``build()``, the one timed
+    run of every bench driver (this file and the ``scripts/`` benches).
+    Each run first clears every cache (builder-tracked persists, table
+    caches and straggler localCheckpoint RDDs die here, so heap
+    residency never accumulates across runs — the round-3 artifact was
+    an OOM from exactly that), then builds the DataFrame and writes it
+    to the ``noop`` sink, which materializes every output column."""
+    times = []
+    for _ in range(runs):
+        clear_caches(spark)
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        times.append(time.perf_counter() - t0)
+    return times
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -78,17 +95,7 @@ def main() -> None:
     median: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name, spec in bench_specs.items():
-        runs = []
-        for _ in range(4):
-            # cache hygiene between executions: builder-tracked persists,
-            # table caches, and straggler localCheckpoint RDDs all die
-            # here, so heap residency never accumulates across the run
-            # (the round-3 artifact was an OOM from exactly that)
-            clear_caches(spark)
-            t0 = time.perf_counter()
-            df = spec.builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+        runs = timed_runs(spark, lambda: spec.builder(spark, sf_dir), 4)
         cold[name] = round(runs[0], 3)
         # best of the three post-cold runs: run 2 still C2-compiles the
         # generated code (see module docstring); every run re-executed

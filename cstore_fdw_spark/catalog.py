@@ -206,11 +206,6 @@ class TableMeta:
     # column -> constant default (applied to rows written BEFORE the column
     # existed — reference cstore_reader.c:1224-1292). Stored as SQL literal.
     column_defaults: dict[str, Any] = field(default_factory=dict)
-    # column -> basenames of the data files that existed when the column
-    # was added (LEGACY, pre-epoch metas only — no longer written): ONLY
-    # rows from these files read the default; an explicit NULL written
-    # after the column existed stays NULL (PG semantics).
-    backfill_files: dict[str, list[str]] = field(default_factory=dict)
     # monotone per-table write epoch: every insert() batch stamps its data
     # files with ``e{epoch:012d}-``; ADD COLUMN records the then-current
     # epoch as the column's backfill watermark below — O(1) metadata
@@ -316,6 +311,13 @@ class CStoreCatalog:
                 d = json.load(f)
         except FileNotFoundError:
             raise CStoreError(f'relation "{name}" does not exist') from None
+        # pre-epoch ADD COLUMN recorded the files that pre-date a column;
+        # every later meta holds only emptied lists there, and a filled
+        # one cannot be read as an epoch watermark
+        if any(d.pop("backfill_files", {}).values()):
+            raise CStoreError(
+                f'table "{name}" has a pre-epoch backfill_files list, '
+                "which this version cannot read")
         return TableMeta(**d)
 
     def _reconcile_file_stats(self, meta: TableMeta) -> None:
@@ -708,13 +710,12 @@ class CStoreCatalog:
         meta = self._load_meta(name)
         fmt = self._format(meta)
         self._recover_compact(meta, fmt)
-        if any(meta.backfill_files.get(c) for c in meta.backfill_files) \
-                or meta.column_reset_epoch:
-            # legacy file-name backfill lists can't survive a partial
-            # consolidation — bake everything via the full rewrite.
-            # Same for an active column reset epoch: vacuum stamps its
-            # consolidated output AT the cutoff epoch, which could fall
-            # at/below the reset and null the freshly baked values.
+        if meta.column_reset_epoch:
+            # an active column reset epoch can't survive a partial
+            # consolidation — bake everything via the full rewrite:
+            # vacuum stamps its consolidated output AT the cutoff epoch,
+            # which could fall at/below the reset and null the freshly
+            # baked values.
             self._rewrite(name)
             return 0
         # never vacuum below an existing floor (the files are gone)
@@ -1268,16 +1269,13 @@ class CStoreCatalog:
             _swap_in(self._data_path(fresh), tmp_path)
             if mutate is not None:
                 mutate(fresh)
-            if fresh.backfill_files or fresh.backfill_watermark:
-                # defaults are baked into the rewritten files; nothing
-                # pre-dates any column anymore (clearing the watermarks
-                # is also what keeps explicit NULLs baked by this
-                # rewrite from re-reading as the default — compacted
-                # files carry no epoch stamp and would otherwise fall
-                # under every watermark)
-                fresh.backfill_files = {c: [] for c in fresh.backfill_files}
-                fresh.backfill_watermark = {
-                    c: None for c in fresh.column_defaults}
+            # defaults are baked into the rewritten files; nothing
+            # pre-dates any column anymore (clearing the watermarks is
+            # also what keeps explicit NULLs baked by this rewrite from
+            # re-reading as the default — compacted files carry no epoch
+            # stamp and would otherwise fall under every watermark)
+            fresh.backfill_watermark = {
+                c: None for c in fresh.column_defaults}
             # rewritten files carry the PROJECTED values — no dead
             # physical bytes from dropped-then-re-added columns remain
             # (and the unstamped rewrite output must not fall under a
@@ -1576,38 +1574,22 @@ class CStoreCatalog:
                     col = F.when(ep <= F.lit(reset),
                                  F.lit(None).cast(f_.dataType)
                                  ).otherwise(col)
-                if f_.name in meta.column_defaults:
+                wm = meta.backfill_watermark.get(f_.name)
+                if wm is not None:
                     # rows from files that pre-date the column read as
                     # NULL; backfill the constant default for THOSE files
-                    # only — an explicit NULL inserted after the column
-                    # existed must stay NULL (PG semantics; the reference
-                    # backfills only stripes older than the column,
-                    # cstore_reader.c:1224-1292)
-                    has_wm = f_.name in meta.backfill_watermark
-                    wm = meta.backfill_watermark.get(f_.name)
-                    old_files = meta.backfill_files.get(f_.name)
+                    # only — files stamped e{epoch}- with epoch <= wm (or
+                    # unstamped = epoch 0). An explicit NULL inserted
+                    # after the column existed must stay NULL (PG
+                    # semantics; the reference backfills only stripes
+                    # older than the column, cstore_reader.c:1224-1292).
+                    # A None watermark means fully baked by compact():
+                    # stored values win.
                     default_lit = F.lit(
                         meta.column_defaults[f_.name]).cast(f_.dataType)
-                    if has_wm and wm is None:
-                        pass  # fully baked by compact(): stored values win
-                    elif wm is not None:
-                        # epoch watermark: files stamped e{epoch}- with
-                        # epoch <= wm (or unstamped = epoch 0) pre-date
-                        # the column
-                        col = F.when(ep <= F.lit(wm),
-                                     F.coalesce(col, default_lit)
-                                     ).otherwise(col)
-                    elif old_files is None:
-                        # legacy meta without file tracking: the old
-                        # (over-broad) coalesce is the only safe reading
-                        col = F.coalesce(col, default_lit)
-                    elif old_files:
-                        from_old = F.element_at(
-                            F.split(F.input_file_name(), "/"), -1
-                        ).isin(old_files)
-                        col = F.when(from_old,
-                                     F.coalesce(col, default_lit)
-                                     ).otherwise(col)
+                    col = F.when(ep <= F.lit(wm),
+                                 F.coalesce(col, default_lit)
+                                 ).otherwise(col)
                 projections.append(col.alias(f_.name))
             else:
                 default = meta.column_defaults.get(f_.name)
@@ -1772,8 +1754,7 @@ class CStoreCatalog:
         (it bakes the defaults into the files)."""
         meta = self._load_meta(name)
         data, fmt = self._data_path(meta), self._format(meta)
-        if any(meta.backfill_watermark.get(c) is not None
-               or meta.backfill_files.get(c) or c not in
+        if any(meta.backfill_watermark.get(c) is not None or c not in
                _physical_columns(list(_data_files(data, fmt)), data, fmt)
                for c in meta.column_defaults):
             raise CStoreError(
@@ -1867,7 +1848,6 @@ class CStoreCatalog:
             meta.schema_json = json.dumps(new.jsonValue())
             meta.column_defaults.pop(column, None)
             meta.backfill_watermark.pop(column, None)
-            meta.backfill_files.pop(column, None)
             # the dead physical bytes stay in existing files; a future
             # re-ADD of this name must read them as NULL (PG never reads
             # an attisdropped slot again)
@@ -1945,8 +1925,7 @@ class CStoreCatalog:
                         f_.dataType, f_.nullable)
                     for f_ in m.schema().fields]
             m.schema_json = json.dumps(T.StructType(flds).jsonValue())
-            for d in (m.column_defaults, m.backfill_watermark,
-                      m.backfill_files):
+            for d in (m.column_defaults, m.backfill_watermark):
                 if column in d:
                     d[new_column] = d.pop(column)
             for opt in ("partition_by", "sort_by", "zorder_by"):
@@ -2095,17 +2074,13 @@ class CStoreCatalog:
         file ``path``, taken from the commit-time zone map; ``None``
         when the stats lack the column or :meth:`_project` replaces the
         file's stored values (a backfill watermark or drop/re-add reset
-        epoch at or above the file's epoch, or a legacy
-        ``backfill_files`` entry naming the file). A file with no stats
+        epoch at or above the file's epoch). A file with no stats
         entry (a pre-stats meta) costs one parquet footer read; a cstore
         file then has no range."""
         epoch = _file_epoch(path)
         if any(h is not None and epoch <= h
                for h in (meta.backfill_watermark.get(column),
                          meta.column_reset_epoch.get(column))):
-            return None
-        if os.path.basename(path) in (meta.backfill_files.get(column)
-                                      or ()):
             return None
         ent = meta.file_stats.get(
             os.path.relpath(path, self._data_path(meta)))

@@ -7,16 +7,28 @@ PostgreSQL's CSV parser into its stripe writer
 Here both are declarative DataFrame reads/writes — distributed, no
 driver-side row loop.
 
-CSV dialect: PostgreSQL COPY CSV uses empty-unquoted as NULL, ``"`` quoting
-with ``""`` escapes; we mirror that (SURVEY §7 hard-spot #4).
+CSV dialect (SURVEY §7 hard-spot #4): this module owns it, through one
+reader (:func:`_read_csv`) and one writer (:func:`_write_csv`), which
+every COPY form and ``sources.read_source``/``write_sink`` with
+``fmt="csv"`` use. As in PostgreSQL COPY CSV, an unquoted empty field
+is NULL, a quoted ``""`` is the empty string, ``"`` quotes with ``""``
+escapes, the spaces around a value are kept, and a date/timestamp
+column reads and writes ``infinity``/``-infinity`` as the sentinels
+below. Embedded newlines need Spark's ``multiLine`` option, which
+neither side sets.
 """
 
 from __future__ import annotations
 
 import contextlib
+import os
+import re
+import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cstore_fdw_spark.catalog import CStoreCatalog, CStoreError
 
@@ -25,7 +37,10 @@ _PG_CSV_OPTS = {
     "quote": '"',
     "escape": '"',
     "nullValue": "",
-    "emptyValue": "",
+    # PG keeps the spaces around an unquoted value; Spark's CSV writer
+    # trims them unless told not to
+    "ignoreLeadingWhiteSpace": "false",
+    "ignoreTrailingWhiteSpace": "false",
     "timestampFormat": "yyyy-MM-dd HH:mm:ss[.SSSSSS]",
     "dateFormat": "yyyy-MM-dd",
     # PG COPY errors on malformed input ('invalid input syntax for type
@@ -33,6 +48,12 @@ _PG_CSV_OPTS = {
     # instead. Callers can override with mode='PERMISSIVE' explicitly.
     "mode": "FAILFAST",
 }
+
+#: what Spark's CSV reader yields for a quoted "" (its ``emptyValue``),
+#: so that it stays apart from the unquoted empty field (``nullValue``,
+#: NULL); string columns turn it back into '' and any other column
+#: rejects it, as PG does. The writer prints '' as "".
+_EMPTY_SENTINEL = "__CSTORE_EMPTY__"
 
 # ---------------------------------------------------------------- infinity
 # PostgreSQL's ±infinity date/timestamp values (exercised by the reference
@@ -54,89 +75,98 @@ DATE_PINF = "9999-12-31"
 DATE_NINF = "0001-01-01"
 
 
-def _infinity_read_csv(spark: SparkSession, schema, path: str,
-                       opts: dict[str, str]) -> DataFrame:
-    """Read CSV against ``schema``, accepting PG's 'infinity'/'-infinity'
-    in timestamp/date columns (mapped to the sentinel instants)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+def _sentinels(dtype: T.DataType) -> tuple[str, str] | None:
+    """The (+infinity, -infinity) sentinels of a date or timestamp
+    type; None for any other type."""
+    if isinstance(dtype, T.DateType):
+        return DATE_PINF, DATE_NINF
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return TIMESTAMP_PINF, TIMESTAMP_NINF
+    return None
 
-    dt_types = (T.TimestampType, T.TimestampNTZType, T.DateType)
-    if not any(isinstance(f.dataType, dt_types) for f in schema.fields):
-        return spark.read.options(**opts).schema(schema).csv(path)
+
+def _read_csv(spark: SparkSession, path: str, schema: T.StructType | None,
+              options: dict[str, Any]) -> DataFrame:
+    """Read ``path`` in the COPY CSV dialect against ``schema`` (inferred
+    from the file when None); ``options`` override the dialect's.
+
+    Date/timestamp columns are read as text and cast in the plan, so
+    that ``infinity``/``-infinity`` map to the sentinels; under FAILFAST
+    a non-null text that fails the cast raises 'invalid input syntax'
+    when the plan runs (PG-strict: an error, not a silent NULL)."""
+    opts = {**_PG_CSV_OPTS, "emptyValue": _EMPTY_SENTINEL,
+            **{k: str(v) for k, v in options.items()}}
+    if schema is None:
+        schema = spark.read.options(**opts, inferSchema="true") \
+            .csv(path).schema
     raw = T.StructType([
-        T.StructField(f.name,
-                      T.StringType() if isinstance(f.dataType, dt_types)
-                      else f.dataType, True)
-        for f in schema.fields])
+        T.StructField(f.name, T.StringType() if _sentinels(f.dataType)
+                      else f.dataType, True) for f in schema.fields])
     df = spark.read.options(**opts).schema(raw).csv(path)
+    failfast = opts["mode"].upper() == "FAILFAST"
     cols = []
-    checks = []
-    for f in schema.fields:
-        if isinstance(f.dataType, dt_types):
-            pinf, ninf = ((DATE_PINF, DATE_NINF)
-                          if isinstance(f.dataType, T.DateType)
-                          else (TIMESTAMP_PINF, TIMESTAMP_NINF))
-            c = F.trim(F.col(f.name))
-            mapped = (F.when(c == "infinity", F.lit(pinf))
-                      .when(c == "-infinity", F.lit(ninf))
-                      .otherwise(c).cast(f.dataType))
-            cols.append(mapped.alias(f.name))
-            # PG-strict: a non-null text that fails the datetime cast is
-            # an error, not a silent NULL (datetime columns read as
-            # strings for the ±infinity mapping, so FAILFAST can't see
-            # them — validate the cast explicitly)
-            checks.append((f.name, F.col(f.name).isNotNull()
-                           & mapped.isNull()))
-        else:
-            cols.append(F.col(f.name))
-    if str(opts.get("mode", "")).upper() == "FAILFAST" and checks:
-        bad = df.filter(checks[0][1] if len(checks) == 1 else
-                        __import__("functools").reduce(
-                            lambda a, b: a | b, (c for _, c in checks)))
-        # this eager probe also runs the FAILFAST scan of every OTHER
-        # column — translate its malformed-row errors to the COPY
-        # contract here, since the caller's translation wraps only the
-        # insert action, not this validation
-        try:
-            row = bad.take(1)
-        except Exception as exc:  # noqa: BLE001 — parse errors only
-            msg = str(exc)
-            if "Malformed" in msg or "FAILED_READ_FILE" in msg:
-                raise CStoreError(
-                    f'invalid input syntax in COPY source "{path}" '
-                    "(malformed row rejected, PG COPY contract)") from exc
-            raise
-        if row:
-            raise CStoreError(
-                "invalid input syntax for timestamp/date column: "
-                f"{row[0].asDict()}")
+    for f, r in zip(schema.fields, raw.fields):
+        c = F.col(f.name)
+        if isinstance(r.dataType, T.StringType):
+            c = F.when(c == _EMPTY_SENTINEL, F.lit("")).otherwise(c)
+        inf = _sentinels(f.dataType)
+        if inf is not None:
+            text = F.trim(c)
+            mapped = (F.when(text == "infinity", F.lit(inf[0]))
+                      .when(text == "-infinity", F.lit(inf[1]))
+                      .otherwise(text).cast(f.dataType))
+            c = mapped if not failfast else F.when(
+                c.isNotNull() & mapped.isNull(), F.raise_error(F.concat(
+                    F.lit("invalid input syntax for type "
+                          f'{f.dataType.simpleString()}: "'),
+                    c, F.lit('"')))).otherwise(mapped)
+        cols.append(c.alias(f.name))
     return df.select(*cols)
 
 
-def _infinity_write_projection(df: DataFrame) -> DataFrame:
-    """Render timestamp/date columns as text with the sentinels printed
-    back as 'infinity'/'-infinity' (PG's COPY TO output)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+@contextlib.contextmanager
+def _copy_errors(path: str):
+    """Raise a COPY source's malformed-input failures (Spark's FAILFAST
+    parse errors and :func:`_read_csv`'s datetime check) as
+    ``CStoreError`` 'invalid input syntax', PG's COPY error."""
+    try:
+        yield
+    except Exception as exc:  # noqa: BLE001 — translate parse errors only
+        msg = str(exc)
+        if not any(m in msg for m in ("Malformed", "FAILED_READ_FILE",
+                                      "invalid input syntax")):
+            raise
+        found = re.search(r'invalid input syntax for type [^:]+: "[^\n]*?"',
+                          msg)
+        detail = (found.group(0) if found else
+                  "invalid input syntax (malformed CSV record; pass "
+                  "mode='PERMISSIVE' to NULL-fill instead)")
+        raise CStoreError(f'{detail} in COPY source "{path}"') from exc
 
-    dt_types = (T.TimestampType, T.TimestampNTZType, T.DateType)
-    if not any(isinstance(f.dataType, dt_types) for f in df.schema.fields):
-        return df
+
+def _write_csv(df: DataFrame, path: str, options: dict[str, Any],
+               mode: str = "overwrite",
+               partition_by: list[str] | None = None) -> None:
+    """Write ``df`` to ``path`` in the COPY CSV dialect; ``options``
+    override the dialect's. NULL is an unquoted empty field, '' is
+    ``""``, the spaces around a string are kept, and the date/timestamp
+    sentinels print as ``infinity``/``-infinity`` (PG's COPY TO
+    output)."""
     cols = []
     for f in df.schema.fields:
-        if isinstance(f.dataType, dt_types):
-            pinf, ninf = ((DATE_PINF, DATE_NINF)
-                          if isinstance(f.dataType, T.DateType)
-                          else (TIMESTAMP_PINF, TIMESTAMP_NINF))
-            c = F.col(f.name)
-            cols.append(
-                F.when(c == F.lit(pinf).cast(f.dataType), "infinity")
-                .when(c == F.lit(ninf).cast(f.dataType), "-infinity")
-                .otherwise(c.cast("string")).alias(f.name))
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
+        c = F.col(f.name)
+        inf = _sentinels(f.dataType)
+        if inf is not None:
+            c = (F.when(c == F.lit(inf[0]).cast(f.dataType), "infinity")
+                 .when(c == F.lit(inf[1]).cast(f.dataType), "-infinity")
+                 .otherwise(c.cast("string")))
+        cols.append(c.alias(f.name))
+    writer = df.select(*cols).write.mode(mode).options(
+        **{**_PG_CSV_OPTS, "emptyValue": '""',
+           **{k: str(v) for k, v in options.items()}})
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.csv(path)
 
 
 def copy_from_csv(catalog: CStoreCatalog, table: str, path: str,
@@ -148,31 +178,15 @@ def copy_from_csv(catalog: CStoreCatalog, table: str, path: str,
     ``input/load.source:26-42``): the CSV supplies exactly those columns, in
     that order; unlisted table columns become NULL.
     """
-    meta = catalog._load_meta(table)
-    schema = meta.schema()
-    opts = dict(_PG_CSV_OPTS)
-    opts.update({k: str(v) for k, v in csv_options.items()})
-    if columns is None:
-        df = _infinity_read_csv(catalog.spark, schema, path, opts)
-    else:
-        from pyspark.sql import types as T
-        sub = T.StructType([schema[c] for c in columns])
-        df = _infinity_read_csv(catalog.spark, sub, path, opts)
-        from pyspark.sql import functions as F
-        for f_ in schema.fields:
-            if f_.name not in columns:
-                df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-        df = df.select(*schema.fieldNames())
-    try:
+    schema = catalog._load_meta(table).schema()
+    df = _read_csv(catalog.spark, path, schema if columns is None else
+                   T.StructType([schema[c] for c in columns]), csv_options)
+    if columns is not None:
+        df = df.select(*(F.col(f.name) if f.name in columns
+                         else F.lit(None).cast(f.dataType).alias(f.name)
+                         for f in schema.fields))
+    with _copy_errors(path):
         catalog.insert(table, df)
-    except Exception as exc:  # noqa: BLE001 — translate parse errors only
-        msg = str(exc)
-        if "Malformed" in msg or "FAILED_READ_FILE" in msg:
-            raise CStoreError(
-                f'invalid input syntax in COPY source "{path}" '
-                "(malformed CSV record; pass mode='PERMISSIVE' to "
-                "NULL-fill instead)") from exc
-        raise
 
 
 def copy_to_csv(catalog: CStoreCatalog, table_or_df: str | DataFrame,
@@ -185,11 +199,7 @@ def copy_to_csv(catalog: CStoreCatalog, table_or_df: str | DataFrame,
     """
     df = (catalog.read(table_or_df) if isinstance(table_or_df, str)
           else table_or_df)
-    opts = dict(_PG_CSV_OPTS)
-    opts["header"] = str(header).lower()
-    opts.update({k: str(v) for k, v in csv_options.items()})
-    _infinity_write_projection(df).write.mode("overwrite") \
-        .options(**opts).csv(path)
+    _write_csv(df, path, {"header": header, **csv_options})
 
 
 def insert_into_select(catalog: CStoreCatalog, table: str, query: str,
@@ -255,7 +265,6 @@ def _staged_csv(catalog: CStoreCatalog, table_or_df: str | DataFrame,
     name order, 1 MiB chunks. The CSV writer puts the header line at the
     top of every part file, so with ``header`` only the first is kept."""
     import glob
-    import tempfile
 
     header = str(csv_options.get("header", False)).lower() == "true"
 
@@ -277,6 +286,18 @@ def _staged_csv(catalog: CStoreCatalog, table_or_df: str | DataFrame,
         yield chunks(sorted(glob.glob(f"{out_dir}/part-*")))
 
 
+@contextlib.contextmanager
+def _staged_input(data: bytes | str):
+    """Stage COPY FROM input (a program's output, a stream's contents)
+    in a temporary file and yield its path, so the distributed CSV
+    reader parses it like a file load."""
+    with tempfile.TemporaryDirectory() as staged:
+        path = os.path.join(staged, "input.csv")
+        with open(path, "wb") as f:
+            f.write(data.encode() if isinstance(data, str) else data)
+        yield path
+
+
 def copy_from_program(catalog: CStoreCatalog, table: str, command: str,
                       columns: list[str] | None = None,
                       **csv_options: Any) -> None:
@@ -286,27 +307,19 @@ def copy_from_program(catalog: CStoreCatalog, table: str, command: str,
     gates this behind superuser, ``cstore_fdw.c:481-505`` — here it is a
     plain utility).
 
-    The program output is staged to a temp file and bulk-loaded with the
-    same distributed CSV path as file loads.
+    The program output is staged (:func:`_staged_input`) and bulk-loaded
+    with the same distributed CSV path as file loads.
     """
     import subprocess
-    import tempfile
 
-    with tempfile.NamedTemporaryFile(mode="wb", suffix=".csv",
-                                     delete=False) as tmp:
-        proc = subprocess.run(command, shell=True, stdout=subprocess.PIPE,
-                              stderr=subprocess.PIPE, check=False)
-        if proc.returncode != 0:
-            raise CStoreError(
-                f"program failed (exit {proc.returncode}): "
-                f"{proc.stderr.decode(errors='replace')[:500]}")
-        tmp.write(proc.stdout)
-        staged = tmp.name
-    try:
+    proc = subprocess.run(command, shell=True, stdout=subprocess.PIPE,
+                          stderr=subprocess.PIPE, check=False)
+    if proc.returncode != 0:
+        raise CStoreError(
+            f"program failed (exit {proc.returncode}): "
+            f"{proc.stderr.decode(errors='replace')[:500]}")
+    with _staged_input(proc.stdout) as staged:
         copy_from_csv(catalog, table, staged, columns=columns, **csv_options)
-    finally:
-        import os as _os
-        _os.unlink(staged)
 
 
 def copy_from_stdin(catalog: CStoreCatalog, table: str, stream,
@@ -315,20 +328,10 @@ def copy_from_stdin(catalog: CStoreCatalog, table: str, stream,
     """A5 (STDIN form): ``COPY table FROM STDIN WITH CSV`` — ingest CSV
     from any readable file object (the reference accepts the same pipe
     grammar, ``cstore_fdw.c:539-707``; ``input/load.source`` drives it
-    through psql's \\copy). The stream is staged to a temp file so the
-    distributed CSV reader parses it with the full COPY dialect."""
-    import tempfile
-
-    with tempfile.NamedTemporaryFile(mode="wb", suffix=".csv",
-                                     delete=False) as tmp:
-        data = stream.read()
-        tmp.write(data.encode() if isinstance(data, str) else data)
-        staged = tmp.name
-    try:
+    through psql's \\copy). The stream is staged (:func:`_staged_input`)
+    so the distributed CSV reader parses it with the full COPY dialect."""
+    with _staged_input(stream.read()) as staged:
         copy_from_csv(catalog, table, staged, columns=columns, **csv_options)
-    finally:
-        import os as _os
-        _os.unlink(staged)
 
 
 def copy_to_stdout(catalog: CStoreCatalog, table_or_df: str | DataFrame,

@@ -18,14 +18,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from cstore_fdw_spark.io import _PG_CSV_OPTS
+from cstore_fdw_spark.io import _read_csv, _write_csv
 
 SUPPORTED_FORMATS = ("parquet", "csv", "json", "orc")
-
-#: sentinel used to keep PostgreSQL COPY's distinction between unquoted
-#: empty (NULL) and quoted "" (empty string) through Spark's CSV parser,
-#: which would otherwise fold both into nullValue.
-_EMPTY_SENTINEL = "__CSTORE_EMPTY__"
 
 
 def _check_format(fmt: str) -> str:
@@ -39,52 +34,35 @@ def _check_format(fmt: str) -> str:
 def read_source(spark: SparkSession, path: str, fmt: str = "parquet",
                 schema: T.StructType | str | None = None,
                 **options: Any) -> DataFrame:
-    """Read ``path`` in the given format. CSV defaults to the PostgreSQL
-    COPY dialect (empty-unquoted NULLs, double-quote escapes) so reference
-    data files load verbatim; JSON is newline-delimited."""
+    """Read ``path`` in the given format. CSV is read in the PostgreSQL
+    COPY dialect (``io._read_csv``: empty-unquoted NULLs, quoted "" as
+    '', double-quote escapes, ±infinity dates), so reference data files
+    load verbatim; its schema is inferred when none is given. JSON is
+    newline-delimited."""
     fmt = _check_format(fmt)
-    reader = spark.read
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     if fmt == "csv":
-        opts = dict(_PG_CSV_OPTS)
-        # quoted "" parses to the sentinel (emptyValue), unquoted empty to
-        # NULL (nullValue) — restored to ''/'NULL' below, PG COPY parity
-        opts["emptyValue"] = _EMPTY_SENTINEL
-        opts.update({k: str(v) for k, v in options.items()})
-        reader = reader.options(**opts)
-    else:
-        reader = reader.options(**{k: str(v) for k, v in options.items()})
+        return _read_csv(spark, path, schema, options)
+    reader = spark.read.options(**{k: str(v) for k, v in options.items()})
     if schema is not None:
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
         reader = reader.schema(schema)
-    elif fmt == "csv":
-        reader = reader.option("inferSchema", "true")
-    df = getattr(reader, fmt)(path)
-    if fmt == "csv":
-        from pyspark.sql import functions as F
-        for f_ in df.schema.fields:
-            if isinstance(f_.dataType, T.StringType):
-                df = df.withColumn(
-                    f_.name,
-                    F.when(F.col(f_.name) == _EMPTY_SENTINEL, F.lit(""))
-                    .otherwise(F.col(f_.name)))
-    return df
+    return getattr(reader, fmt)(path)
 
 
 def write_sink(df: DataFrame, path: str, fmt: str = "parquet",
                mode: str = "overwrite", partition_by: list[str] | None = None,
                **options: Any) -> None:
     """Write a DataFrame to ``path`` in the given format (COPY TO
-    generalized). ``partition_by`` produces hive-style partition dirs —
-    the 100 TB layout lever the reference lacks entirely."""
+    generalized; CSV in the COPY dialect, ``io._write_csv``).
+    ``partition_by`` produces hive-style partition dirs — the 100 TB
+    layout lever the reference lacks entirely."""
     fmt = _check_format(fmt)
-    writer = df.write.mode(mode)
     if fmt == "csv":
-        opts = dict(_PG_CSV_OPTS)
-        opts.update({k: str(v) for k, v in options.items()})
-        writer = writer.options(**opts)
-    else:
-        writer = writer.options(**{k: str(v) for k, v in options.items()})
+        _write_csv(df, path, options, mode, partition_by)
+        return
+    writer = df.write.mode(mode).options(
+        **{k: str(v) for k, v in options.items()})
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     getattr(writer, fmt)(path)

@@ -26,18 +26,12 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cstore_fdw_spark.operators import clear_caches, load_all  # noqa: E402
+from bench import timed_runs  # noqa: E402
+from cstore_fdw_spark.operators import load_all, table_rows  # noqa: E402
 from cstore_fdw_spark.session import get_spark  # noqa: E402
-
-
-def table_rows(d: str, name: str) -> int:
-    import pyarrow.parquet as pq
-    return pq.ParquetFile(
-        os.path.join(d, f"{name}.parquet")).metadata.num_rows
 
 
 def main() -> None:
@@ -65,13 +59,8 @@ def main() -> None:
         times[label] = {}
         spark.read.parquet(f"{d}/lineitem.parquet").limit(1).count()
         for k in iters:
-            runs = []
-            for _ in range(args.runs):
-                clear_caches(spark)
-                t0 = time.perf_counter()
-                df = pagerank_fixed_point(spark, d, k)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
+            runs = timed_runs(
+                spark, lambda: pagerank_fixed_point(spark, d, k), args.runs)
             best = round(min(runs[1:]) if len(runs) > 1 else runs[0], 3)
             times[label][f"iters{k}"] = best
             print(f"# pagerank iters={k} @ {label}: warm {best}s "

@@ -32,12 +32,11 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import bring_up  # noqa: E402
-from cstore_fdw_spark.operators import clear_caches, load_all  # noqa: E402
+from bench import bring_up, timed_runs  # noqa: E402
+from cstore_fdw_spark.operators import load_all, table_rows  # noqa: E402
 from cstore_fdw_spark.session import get_spark  # noqa: E402
 
 # the 8 heaviest bench queries (BENCH_r11 ranking) + their dominant table
@@ -78,11 +77,6 @@ RELATIONAL_CORE = [
     "events_sessionize", "scan_cstore_format_roundtrip"]
 
 
-def table_rows(d: str, name: str) -> int:
-    import pyarrow.parquet as pq
-    return pq.ParquetFile(os.path.join(d, f"{name}.parquet")).metadata.num_rows
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -120,13 +114,8 @@ def main() -> None:
                 print(f"# skip {n} @ {label} (prev {prev[-1]:.1f}s "
                       f"> budget)", file=sys.stderr)
                 continue
-            runs = []
-            for _ in range(args.runs):
-                clear_caches(spark)
-                t0 = time.perf_counter()
-                df = registry[n].builder(spark, d)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
+            runs = timed_runs(
+                spark, lambda: registry[n].builder(spark, d), args.runs)
             best = round(min(runs[1:]), 3)
             times[n][label] = best
             print(f"# {n} @ {label}: warm {best}s "

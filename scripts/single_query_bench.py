@@ -15,7 +15,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -28,8 +27,8 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from bench import bring_up
-    from cstore_fdw_spark.operators import clear_caches, load_all
+    from bench import bring_up, timed_runs
+    from cstore_fdw_spark.operators import load_all
     from cstore_fdw_spark.session import get_spark
 
     spark = get_spark(app_name=f"sqb-{args.query}")
@@ -37,13 +36,8 @@ def main() -> None:
     registry = load_all()
     spec = registry[args.query]
     bring_up(spark, args.sf_dir, registry)
-    runs = []
-    for _ in range(args.runs):
-        clear_caches(spark)
-        t0 = time.perf_counter()
-        df = spec.builder(spark, args.sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 3))
+    runs = [round(t, 3) for t in timed_runs(
+        spark, lambda: spec.builder(spark, args.sf_dir), args.runs)]
     print(json.dumps({
         "query": args.query, "runs": runs, "cold": runs[0],
         "warm_min": min(runs[1:]) if len(runs) > 1 else None,

@@ -342,6 +342,27 @@ def test_compact_preserves_default_backfill(spark, catalog):
     assert after == before == [(1, "new"), (2, "new"), (3, "x")]
 
 
+def test_pre_epoch_backfill_files_meta(spark, catalog):
+    """A meta whose ``backfill_files`` key holds only emptied lists (what
+    every compact of this format's pre-epoch versions left) loads as
+    before; one whose lists still name files, from ADD COLUMN before the
+    epoch watermark, raises naming the table instead of being misread."""
+    import json
+    catalog.create_table("tb", "a int")
+    catalog.insert("tb", spark.createDataFrame([(1,)], "a int"))
+    path = catalog._meta_path("tb")
+    with open(path) as f:
+        meta = json.load(f)
+    for lists, ok in (({"c": []}, True), ({"c": ["e000000000001-x"]}, False)):
+        with open(path, "w") as f:
+            json.dump({**meta, "backfill_files": lists}, f)
+        if ok:
+            assert [r.a for r in catalog.read("tb").collect()] == [1]
+        else:
+            with pytest.raises(CStoreError, match='table "tb".*backfill'):
+                catalog.read("tb")
+
+
 def test_explicit_null_after_add_column_stays_null(spark, catalog):
     # PG semantics: the constant default backfills only rows that PRE-DATE
     # the column (reference cstore_reader.c:1224-1292); an explicit NULL

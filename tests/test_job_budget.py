@@ -48,6 +48,11 @@ JOB_BUDGET = {
 #: cstore, the Arrow map whose results name the files it wrote)
 INSERT_BUDGET = {"parquet": 1, "cstore": 1}
 
+#: storage format -> Spark jobs of one COPY FROM of a 3-row CSV into a
+#: table with a timestamp column: the insert's write job, with the
+#: malformed-datetime check inside its plan
+COPY_FROM_BUDGET = {"parquet": 1, "cstore": 1}
+
 
 def _jobs(spark, group: str, fn) -> int:
     sc = spark.sparkContext
@@ -104,3 +109,21 @@ def test_insert_stays_within_job_budget(spark, tmp_path, fmt):
     assert cat.row_count("t") == 6000
     assert n <= INSERT_BUDGET[fmt], (
         f"{fmt} insert: {n} jobs, budget {INSERT_BUDGET[fmt]}")
+
+
+@pytest.mark.parametrize("fmt", sorted(COPY_FROM_BUDGET))
+def test_copy_from_stays_within_job_budget(spark, tmp_path, fmt):
+    """COPY FROM into a table with a timestamp column runs the load and
+    nothing else: no eager probe validates the datetimes first."""
+    from cstore_fdw_spark.io import copy_from_csv
+    cat = CStoreCatalog(spark, warehouse=str(tmp_path / "wh"))
+    cat.create_table("t", "a long, ts timestamp, d date", storage_format=fmt)
+    src = tmp_path / "in.csv"
+    src.write_text("1,2024-01-01 00:00:00,2024-01-01\n"
+                   "2,infinity,-infinity\n"
+                   "3,,2024-01-03\n")
+    n = _jobs(spark, f"budget-copy-from-{fmt}",
+              lambda: copy_from_csv(cat, "t", str(src)))
+    assert cat.row_count("t") == 3
+    assert n <= COPY_FROM_BUDGET[fmt], (
+        f"{fmt} COPY FROM: {n} jobs, budget {COPY_FROM_BUDGET[fmt]}")

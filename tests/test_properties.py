@@ -8,6 +8,8 @@ the properties run the cheap pure-Python/driver-side parts where possible.
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -66,6 +68,58 @@ def test_catalog_roundtrip_ints(spark, tmp_path_factory, xs):
     got = sorted(r.a for r in cat.read("t").collect())
     assert got == sorted(xs)
     cat.drop_table("t")
+
+
+_DATE_INF = [dt.date(9999, 12, 31), dt.date(1, 1, 1)]
+_TS_INF = [dt.datetime(9999, 12, 31, 23, 59, 59, 999999),
+           dt.datetime(1, 1, 2)]
+_copy_text = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", "  lead", "trail  ", " XA ", "a,b", 'q"x',
+                     '"', '""', ",", "\\", "infinity"]),
+    st.text(alphabet=st.characters(min_codepoint=32, max_codepoint=126),
+            max_size=8))
+_copy_rows = st.lists(st.tuples(
+    _copy_text,
+    st.one_of(st.none(), st.sampled_from(_DATE_INF),
+              st.dates(dt.date(1000, 1, 1), dt.date(9998, 12, 31))),
+    st.one_of(st.none(), st.sampled_from(_TS_INF),
+              st.datetimes(dt.datetime(1900, 1, 1),
+                           dt.datetime(9998, 12, 31)))),
+    min_size=1, max_size=12)
+
+
+@SLOW
+@given(_copy_rows)
+def test_copy_and_csv_sink_round_trip_one_dialect(spark, tmp_path_factory,
+                                                  rows):
+    """Rows of NULL, '', strings with surrounding spaces, commas and
+    quotes, and ±infinity dates and timestamps come back unchanged
+    through ``copy_to_stdout`` → ``copy_from_stdin`` and through
+    ``write_sink`` → ``read_source`` with ``fmt="csv"``. Strings hold no
+    newline: neither reader sets Spark's ``multiLine`` option, so an
+    embedded newline is out of scope."""
+    import io
+
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    from cstore_fdw_spark.io import copy_from_stdin, copy_to_stdout
+    from cstore_fdw_spark.sources import read_source, write_sink
+    ddl = "id int, s string, d date, ts timestamp"
+    want = sorted((i, *row) for i, row in enumerate(rows))
+    df = spark.createDataFrame(want, ddl)
+    tmp = tmp_path_factory.mktemp("copy_dialect")
+    cat = CStoreCatalog(spark, warehouse=str(tmp / "wh"))
+    cat.create_table("src", ddl)
+    cat.insert("src", df)
+    out = io.BytesIO()
+    copy_to_stdout(cat, "src", out)
+    out.seek(0)
+    cat.create_table("back", ddl)
+    copy_from_stdin(cat, "back", out)
+    assert sorted(map(tuple, cat.read("back").collect())) == want
+    write_sink(df, str(tmp / "sink"), "csv")
+    assert sorted(map(tuple, read_source(
+        spark, str(tmp / "sink"), "csv", schema=ddl).collect())) == want
 
 
 @SLOW
@@ -801,6 +855,45 @@ def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
         if line.startswith("Condition") and "array_distinct" in line:
             raise AssertionError(
                 "shingle build found in a Filter condition:\n" + line)
+
+
+def test_copy_reads_and_writes_one_dialect():
+    """One PostgreSQL COPY CSV dialect: Spark's CSV reader and writer
+    (a ``.csv(`` call) and the dialect's options (``_PG_CSV_OPTS``) are
+    used only in ``io._read_csv`` and ``io._write_csv``, which every
+    COPY form and ``read_source``/``write_sink`` go through;
+    ``sources/formats.py`` holds no CSV option and no sentinel; and
+    ``io.py`` runs no eager action of its own (the datetime check is
+    part of the load's plan)."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark
+    from cstore_fdw_spark import io
+
+    def method_call(*names):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in names)
+        return pred
+
+    dialect = {("io.py", "_read_csv"), ("io.py", "_write_csv")}
+    assert set(_package_functions_using(method_call("csv"))) == dialect
+    assert set(_package_functions_using(
+        lambda n: getattr(n, "id", None) == "_PG_CSV_OPTS"
+        and isinstance(n.ctx, ast.Load))) == dialect
+    formats = ast.parse((pathlib.Path(cstore_fdw_spark.__file__).parent
+                         / "sources" / "formats.py").read_text())
+    words = {*io._PG_CSV_OPTS, "emptyValue", "inferSchema", "infinity",
+             io._EMPTY_SENTINEL}
+    assert [n.value for n in ast.walk(formats)
+            if isinstance(n, ast.Constant) and n.value in words] == []
+    assert [n.id for n in ast.walk(formats) if isinstance(n, ast.Name)
+            and ("SENTINEL" in n.id or "INF" in n.id)] == []
+    assert [hit for hit in _package_functions_using(method_call(
+        "take", "collect", "count", "first", "head", "toPandas"))
+        if hit[0] == "io.py"] == []
 
 
 def test_catalog_reads_scan_one_way():
