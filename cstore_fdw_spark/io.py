@@ -124,26 +124,6 @@ def _read_csv(spark: SparkSession, path: str, schema: T.StructType | None,
     return df.select(*cols)
 
 
-@contextlib.contextmanager
-def _copy_errors(path: str):
-    """Raise a COPY source's malformed-input failures (Spark's FAILFAST
-    parse errors and :func:`_read_csv`'s datetime check) as
-    ``CStoreError`` 'invalid input syntax', PG's COPY error."""
-    try:
-        yield
-    except Exception as exc:  # noqa: BLE001 — translate parse errors only
-        msg = str(exc)
-        if not any(m in msg for m in ("Malformed", "FAILED_READ_FILE",
-                                      "invalid input syntax")):
-            raise
-        found = re.search(r'invalid input syntax for type [^:]+: "[^\n]*?"',
-                          msg)
-        detail = (found.group(0) if found else
-                  "invalid input syntax (malformed CSV record; pass "
-                  "mode='PERMISSIVE' to NULL-fill instead)")
-        raise CStoreError(f'{detail} in COPY source "{path}"') from exc
-
-
 def _write_csv(df: DataFrame, path: str, options: dict[str, Any],
                mode: str = "overwrite",
                partition_by: list[str] | None = None) -> None:
@@ -185,8 +165,21 @@ def copy_from_csv(catalog: CStoreCatalog, table: str, path: str,
         df = df.select(*(F.col(f.name) if f.name in columns
                          else F.lit(None).cast(f.dataType).alias(f.name)
                          for f in schema.fields))
-    with _copy_errors(path):
+    try:
         catalog.insert(table, df)
+    except Exception as exc:  # noqa: BLE001 — translate parse errors only
+        # Spark's FAILFAST parse errors and _read_csv's datetime check
+        # become PG's COPY error
+        msg = str(exc)
+        if not any(m in msg for m in ("Malformed", "FAILED_READ_FILE",
+                                      "invalid input syntax")):
+            raise
+        found = re.search(r'invalid input syntax for type [^:]+: "[^\n]*?"',
+                          msg)
+        detail = (found.group(0) if found else
+                  "invalid input syntax (malformed CSV record; pass "
+                  "mode='PERMISSIVE' to NULL-fill instead)")
+        raise CStoreError(f'{detail} in COPY source "{path}"') from exc
 
 
 def copy_to_csv(catalog: CStoreCatalog, table_or_df: str | DataFrame,

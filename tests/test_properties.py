@@ -869,7 +869,7 @@ def test_copy_reads_and_writes_one_dialect():
     import pathlib
 
     import cstore_fdw_spark
-    from cstore_fdw_spark import io
+    from cstore_fdw_spark import io as cio
 
     def method_call(*names):
         def pred(node):
@@ -885,8 +885,8 @@ def test_copy_reads_and_writes_one_dialect():
         and isinstance(n.ctx, ast.Load))) == dialect
     formats = ast.parse((pathlib.Path(cstore_fdw_spark.__file__).parent
                          / "sources" / "formats.py").read_text())
-    words = {*io._PG_CSV_OPTS, "emptyValue", "inferSchema", "infinity",
-             io._EMPTY_SENTINEL}
+    words = {*cio._PG_CSV_OPTS, "emptyValue", "inferSchema", "infinity",
+             cio._EMPTY_SENTINEL}
     assert [n.value for n in ast.walk(formats)
             if isinstance(n, ast.Constant) and n.value in words] == []
     assert [n.id for n in ast.walk(formats) if isinstance(n, ast.Name)
