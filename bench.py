@@ -67,7 +67,7 @@ def bring_up(spark, sf_dir: str, registry,
 
 def timed_runs(spark, build, runs: int) -> list[float]:
     """Wall seconds of ``runs`` executions of ``build()``, the one timed
-    run of every bench driver (this file and the ``scripts/`` benches).
+    run of every bench (this file and the ``scripts/`` benches).
     Each run first clears every cache (builder-tracked persists, table
     caches and straggler localCheckpoint RDDs die here, so heap
     residency never accumulates across runs — the round-3 artifact was
