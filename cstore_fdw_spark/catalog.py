@@ -475,34 +475,35 @@ class CStoreCatalog:
 
     def truncate(self, *names: str) -> None:
         """A12: delete data files, keep table valid and empty. Handles
-        repeated names in one statement once (cstore_fdw.c:856-868)."""
+        repeated names in one statement once (cstore_fdw.c:856-868).
+
+        The commit is the one that empties a table after a DELETE or
+        MERGE leaves no row: every visible file is tombstoned by
+        :meth:`_commit_partial` under the writer lock, and refused (then
+        retried) if another writer committed first. It gets its own
+        epoch, so the floor rises even with no appends since the last
+        one and the streaming rewrite guard sees it. A concurrent
+        writer's stage and the lock files are never touched; the
+        table's other sidecars (e.g. the stream-ingest ledger) go."""
         for name in dict.fromkeys(names):  # dedupe, preserve order
-            meta = self._load_meta(name)
+            _retry(f'TRUNCATE of "{name}"', self._truncate_once, name)
             path = self.table_path(name)
+            # outside the commit's lock section: flock is not reentrant
             for entry in os.listdir(path):
-                if entry != META_FILE:
+                if not entry.startswith((META_FILE, "data")) \
+                        and not entry.endswith(".lock"):
                     full = os.path.join(path, entry)
                     shutil.rmtree(full) if os.path.isdir(full) else os.remove(full)
-            if "filename" in meta.options:
-                data = self._data_path(meta)
-                # Also clear swap leftovers: after a crash in the rename
-                # window, a surviving data.compact.old would be restored
-                # by the next read()'s _recover_compact and resurrect
-                # truncated rows (default-path tables are safe because
-                # that dir lives inside table_path).
-                shutil.rmtree(data, ignore_errors=True)
-                shutil.rmtree(data + _OLD, ignore_errors=True)
-            # Bump the epoch BEFORE setting the floor: a truncate issued
-            # when history_floor == write_epoch (no appends since the
-            # last floor raise) would otherwise leave the floor
-            # unchanged and slip past the streaming rewrite guard
-            # (_guard_source_stability watches floor increases), letting
-            # a streaming view silently keep pre-truncate aggregates.
-            # Truncate is a commit: it gets its own epoch.
-            meta.write_epoch += 1
-            meta.history_floor = meta.write_epoch  # history is gone
-            meta.file_stats = {}
-            self._save_meta(meta)
+
+    def _truncate_once(self, name: str) -> None:
+        with self._writer_lock(name):
+            # a swap crashed between its renames parks every row in
+            # data.compact.old: restore it first, or the next read's
+            # recovery would resurrect the truncated rows
+            meta = self._load_meta(name)
+            self._recover_compact(meta, self._format(meta))
+            visible = self._visible_files(meta)
+        self._rewrite_df(meta, None, meta.write_epoch, dropped=visible)
 
     def _data_path(self, meta: TableMeta) -> str:
         """Where the table's data files live: the ``filename`` option's
@@ -661,33 +662,28 @@ class CStoreCatalog:
         lakehouse contract. Incompatible with ``sort_by``/
         ``partition_by`` (competing layout declarations — the option
         validator refuses)."""
-        if zorder_by is not None:
-            if not zorder_by:
-                raise CStoreError(
-                    "compact(zorder_by=[...]) needs at least one column; "
-                    "call compact(name) for a plain (unclustered) rewrite")
-            meta = self._load_meta(name)
-            merged = dict(meta.options)
-            merged.pop("zorder_by", None)
-            merged.pop("zorder_bits", None)
-            merged.pop("zorder_scale", None)
-            merged["zorder_by"] = ",".join(zorder_by)
-            if zorder_bits is not None:
-                merged["zorder_bits"] = zorder_bits
-            if zorder_scale is not None:
-                merged["zorder_scale"] = zorder_scale
-            validated = validate_options(merged)
-            missing = [c for c in zorder_by
-                       if c not in [f.name for f in meta.schema().fields]]
-            if missing:
-                raise CStoreError(
-                    f"z-order column(s) {missing} not in table "
-                    f'"{name}" schema')
-            set_opts = {"zorder_by": validated["zorder_by"],
-                        "zorder_bits": validated["zorder_bits"],
-                        "zorder_scale": validated["zorder_scale"]}
-            return self._rewrite(name, set_opts=set_opts)
-        return self._rewrite(name)
+        if zorder_by is None:
+            return self._rewrite(name)
+        if not zorder_by:
+            raise CStoreError(
+                "compact(zorder_by=[...]) needs at least one column; "
+                "call compact(name) for a plain (unclustered) rewrite")
+        meta = self._load_meta(name)
+        merged = {k: v for k, v in meta.options.items()
+                  if not k.startswith("zorder")}
+        merged["zorder_by"] = ",".join(zorder_by)
+        if zorder_bits is not None:
+            merged["zorder_bits"] = zorder_bits
+        if zorder_scale is not None:
+            merged["zorder_scale"] = zorder_scale
+        validated = validate_options(merged)
+        missing = [c for c in zorder_by
+                   if c not in meta.schema().fieldNames()]
+        if missing:
+            raise CStoreError(
+                f"z-order column(s) {missing} not in table "
+                f'"{name}" schema')
+        return self._rewrite(name, options=validated)
 
     def vacuum(self, name: str, keep_epochs: int = 0) -> int:
         """Incremental retention (Iceberg ``expire_snapshots`` analog):
@@ -726,10 +722,11 @@ class CStoreCatalog:
                      if _file_epoch(p) <= cutoff]
         if not old_files:
             return 0
-        df = self.read(name, as_of_epoch=cutoff)
-        total = df.count()
-        staged = self._stage(
-            meta, _layout(df, meta.options, total) if total else None)
+        snapshot = self._visible_files(meta, as_of_epoch=cutoff)
+        total = _footer_rows(snapshot, fmt)
+        staged = self._stage(meta, _layout(
+            self._scan(meta, snapshot, live=True), meta.options, total)
+            if total else None)
         try:
             _stamp(staged, cutoff)
             with self._writer_lock(name):
@@ -795,32 +792,34 @@ class CStoreCatalog:
         meta = self._load_meta(name)
         fmt = self._format(meta)
         self._recover_compact(meta, fmt)
-        base_epoch = meta.write_epoch
-        data_path = self._data_path(meta)
         visible = self._visible_files(meta)
         if not visible:
             return 0
+        snapshot = self._scan(meta, visible, live=True)
         # ONE pruning scan yields both the touched-file list and the
         # deleted-row count: per-file counts of predicate-TRUE rows
-        per_file = (self.read(name)
-                    .withColumn("_file", F.input_file_name())
-                    .filter(cond)
-                    .groupBy("_file").count().collect())
+        per_file = (snapshot.withColumn("_file", F.input_file_name())
+                    .filter(cond).groupBy("_file")
+                    .agg(F.count(F.lit(1)).alias("n")).collect())
         if not per_file:
             return 0
-        deleted = int(sum(r["count"] for r in per_file))
+        deleted = int(sum(r.n for r in per_file))
         touched = sorted(_uri_to_path(r["_file"]) for r in per_file)
         keep = ~cond.eqNullSafe(F.lit(True))
-        if not all(touched) or len(touched) >= len(visible):
-            # python data sources report no input_file_name (file-level
-            # pruning is unavailable), or nothing is left to prune: the
-            # full rewrite is the safe path, and it also repacks
-            self._rewrite(name, keep=keep)
+        if all(touched) and len(touched) < len(visible):
+            self._rewrite_df(meta, self._scan(meta, touched).filter(keep),
+                             meta.write_epoch, dropped=touched)
             return deleted
-        self._rewrite_df(meta, self._scan(meta, touched).filter(keep),
-                         base_epoch,
-                         dropped=[os.path.relpath(p, data_path)
-                                  for p in touched])
+        # python data sources report no input_file_name (file-level
+        # pruning is unavailable), or nothing is left to prune: the
+        # full rewrite is the safe path, and it also repacks. The rows
+        # left are the footer total minus the rows the scan counted;
+        # none left tombstones every file instead
+        total = _footer_rows(visible, fmt) - deleted
+        self._rewrite_df(
+            meta, _layout(snapshot.filter(keep), meta.options, total)
+            if total else None,
+            meta.write_epoch, dropped=None if total else visible)
         return deleted
 
     def _stage(self, meta: TableMeta, df: DataFrame | None) -> str:
@@ -859,15 +858,18 @@ class CStoreCatalog:
         _save_df(writer, self._format(meta), staged)
         return staged
 
-    def _rewrite_df(self, meta: TableMeta, df: DataFrame, base_epoch: int,
-                    mutate=None, dropped: list[str] | None = None) -> None:
+    def _rewrite_df(self, meta: TableMeta, df: DataFrame | None,
+                    base_epoch: int, mutate=None,
+                    dropped: list[str] | None = None) -> None:
         """Stage ``df`` and commit it as a copy-on-write rewrite.
-        ``dropped`` lists the data-dir-relative files ``df`` replaces (a
-        file-pruned MERGE/DELETE, committed by :meth:`_commit_partial`);
-        ``None`` replaces the whole table (:meth:`_commit_swap`, which
-        also applies ``mutate``). ``base_epoch`` is the committed
-        ``write_epoch`` ``df`` was computed from: the commit is refused
-        with :class:`CStoreConcurrentWriteError` if another writer has
+        ``dropped`` lists the data files ``df`` replaces (a file-pruned
+        MERGE/DELETE, or with ``df=None`` every visible file: the one
+        commit that empties a table), committed by
+        :meth:`_commit_partial`; ``None`` replaces the whole table
+        (:meth:`_commit_swap`, which also applies ``mutate``).
+        ``base_epoch`` is the committed ``write_epoch`` ``df`` was
+        computed from: the commit is refused with
+        :class:`CStoreConcurrentWriteError` if another writer has
         advanced it. ``meta`` supplies only layout facts (format,
         options, data path) for the staged write — the metadata actually
         saved is re-loaded under the lock."""
@@ -877,8 +879,10 @@ class CStoreCatalog:
                 fresh = self._commit_swap(meta.name, base_epoch, staged,
                                           mutate)
             else:
-                fresh = self._commit_partial(meta.name, base_epoch, staged,
-                                             dropped)
+                data_path = self._data_path(meta)
+                fresh = self._commit_partial(
+                    meta.name, base_epoch, staged,
+                    [os.path.relpath(p, data_path) for p in dropped])
         finally:
             shutil.rmtree(staged, ignore_errors=True)
         self._refresh_registered(fresh)
@@ -1034,11 +1038,9 @@ class CStoreCatalog:
         # time) — planning reads ZERO parquet footers; only legacy
         # pre-stats metas fall back to a per-file footer read. Files
         # without usable stats stay candidates.
-        data_path = self._data_path(meta)
         visible = self._visible_files(meta)
-        pruned = False
-        candidate_rel: list[str] = []
-        tgt = self.read(name)
+        dropped = None  # the files a pruned merge replaces
+        tgt = self._scan(meta, visible, live=True)
         if (not src_clauses) \
                 and self._format(meta) in ("parquet", "cstore") \
                 and len(visible) > 1:
@@ -1057,9 +1059,7 @@ class CStoreCatalog:
                     if not untouched:
                         cand.append(p)
                 if len(cand) < len(visible):
-                    pruned = True
-                    candidate_rel = [os.path.relpath(p, data_path)
-                                     for p in cand]
+                    dropped = cand
                     tgt = self._scan(meta, cand)
 
         # one shuffle on the merge key: full-outer join of (key, packed
@@ -1128,19 +1128,15 @@ class CStoreCatalog:
                     f"(duplicate {keys} in source)")
             out_df = (merged.filter(F.col("_out").isNotNull())
                       .select("_out.*"))
-            # commit path — all three surface CStoreConcurrentWriteError
-            # if another writer committed since the join's read snapshot
-            # (PG serialization-failure contract: re-run the MERGE;
+            # the commit surfaces CStoreConcurrentWriteError if another
+            # writer committed since the join's read snapshot (PG
+            # serialization-failure contract: re-run the MERGE;
             # retrying internally would silently re-execute the
-            # expensive join, and the caller owns that decision)
-            if pruned:
-                self._rewrite_df(meta, out_df, base_epoch,
-                                 dropped=candidate_rel)
-            elif (stats.n_rows or 0) == 0:
-                self.truncate(name)
-                self._refresh_registered(meta)
-            else:
-                self._rewrite_df(meta, out_df, base_epoch)
+            # expensive join, and the caller owns that decision). An
+            # unpruned merge that leaves no row tombstones every file
+            if dropped is None and not stats.n_rows:
+                out_df, dropped = None, visible
+            self._rewrite_df(meta, out_df, base_epoch, dropped=dropped)
         finally:
             merged.unpersist()
         return {"matched": int(stats.n_matched or 0),
@@ -1157,6 +1153,8 @@ class CStoreCatalog:
         persisted z-order re-clustered, stripe-sized files — and staged
         with the new options, then a lock-validated two-rename commit;
         readers always see the old or the new layout, never a window).
+        It is :meth:`_rewrite`, like compact, so a commit that loses to
+        a concurrent writer is retried from a fresh read.
         Pass ``option=None`` to remove a layout option. The merged
         option set re-validates as a whole, so invalid combinations
         (e.g. adding sort_by to a z-ordered table) fail before any
@@ -1176,70 +1174,51 @@ class CStoreCatalog:
                 f"{sorted(banned)} cannot change via alter_table_layout "
                 "(use compact(zorder_by=...) for clustering; filename "
                 "is a location, not a layout)")
-        meta = self._load_meta(name)
-        merged = dict(meta.options)
+        merged = dict(self._load_meta(name).options)
         for k, v in options.items():
             if v is None:
                 merged.pop(k, None)
             else:
                 merged[k] = v
-        validated = validate_options(merged)
-        base_epoch = meta.write_epoch
-        work = TableMeta(**{**meta.__dict__})
-        work.options = validated
-        df = self.read(name)
-        df = _layout(df, validated, df.count())
+        self._rewrite(name, options=validate_options(merged))
 
-        def mutate(fresh: TableMeta) -> None:
-            fresh.options = validated
-
-        # staged with ``work``'s (new) options — writer codecs, page
-        # limits, blooms, partitionBy, sort — and the option swap
-        # commits together with the data swap under the writer lock
-        self._rewrite_df(work, df, base_epoch, mutate)
-
-    def _rewrite(self, name: str, keep=None, set_opts=None) -> int:
-        # optimistic concurrency: the distributed rewrite runs unlocked;
-        # if another writer committed meanwhile the lock-held commit
-        # refuses and the next attempt re-reads (which then includes
-        # the concurrent batch)
+    def _rewrite(self, name: str, options: dict[str, Any] | None = None
+                 ) -> int:
+        """The one full-table rewrite (compact, ALTER layout, vacuum's
+        fallback): every visible row re-laid out by :func:`_layout`,
+        sized from the footer row counts, staged and swapped in by
+        :meth:`_commit_swap`; returns the new file count. ``options``
+        is the whole validated option set to rewrite into (the staged
+        write uses it and the commit saves it), even on an empty table;
+        ``None`` keeps the table's own, and an empty table is then left
+        as it is. Optimistic concurrency: the distributed rewrite runs
+        unlocked; if another writer committed meanwhile the lock-held
+        commit refuses and the next attempt re-reads (which then
+        includes the concurrent batch)."""
         return _retry(f'rewrite of "{name}"', self._rewrite_once, name,
-                      keep, set_opts)
+                      options)
 
-    def _rewrite_once(self, name: str, keep=None, set_opts=None) -> int:
+    def _rewrite_once(self, name: str, options: dict[str, Any] | None
+                      ) -> int:
         meta = self._load_meta(name)
         fmt = self._format(meta)
         self._recover_compact(meta, fmt)
-        base_epoch = meta.write_epoch
-        df = self.read(name)
-        if keep is not None:
-            df = df.filter(keep)
-        total = df.count()
-        if total == 0 and keep is None:
-            if set_opts:
-                # an option mutation (e.g. compact(zorder_by=...) on a
-                # still-empty table) must commit even with no rows to
-                # rewrite — later appends + compacts pick the layout up
-                with self._writer_lock(name):
-                    fresh = self._load_meta(name)
-                    fresh.options.update(set_opts)
-                    self._save_meta(fresh)
+        visible = self._visible_files(meta)
+        total = _footer_rows(visible, fmt)
+        if not total and options is None:
             return 0
-        if total == 0:
-            # DELETE of every row: truncate keeps the table valid+empty
-            self.truncate(name)
-            self._refresh_registered(meta)
-            return 0
-        # explicit compact(zorder_by=..) wins; else a previously
-        # persisted zorder_by re-clusters every rewrite (the validator
-        # guarantees z-order never coexists with sort_by/partition_by)
-        df = _layout(df, {**meta.options, **(set_opts or {})}, total)
-        mutate = None
-        if set_opts:
-            def mutate(fresh_meta):
-                fresh_meta.options.update(set_opts)
-        self._rewrite_df(meta, df, base_epoch, mutate)
-        return sum(1 for _ in _data_files(self._data_path(meta), fmt))
+        work = TableMeta(**{**meta.__dict__, "options":
+                            meta.options if options is None else options})
+        df = (_layout(self._scan(meta, visible, live=True), work.options,
+                      total) if total else None)
+
+        def mutate(fresh: TableMeta) -> None:
+            fresh.options = work.options
+
+        self._rewrite_df(work, df, meta.write_epoch,
+                         None if options is None else mutate)
+        return sum(1 for _ in _data_files(self._data_path(work),
+                                          self._format(work)))
 
     def _commit_swap(self, name: str, base_epoch: int, tmp_path: str,
                      mutate=None) -> TableMeta:
@@ -1312,6 +1291,10 @@ class CStoreCatalog:
         4. physically unlink the dropped files and clear the list with
            :meth:`_recover_orphans` — the same idempotent GC that
            repairs a crash between 3 and 4 on the next locked writer.
+
+        An empty stage with every visible file in ``dropped`` is the
+        one commit that empties a table: TRUNCATE, and a DELETE or MERGE
+        that leaves no row.
         """
         with self._writer_lock(name):
             fresh = self._load_meta(name)
@@ -1481,7 +1464,8 @@ class CStoreCatalog:
         given. The physical schema comes from ``paths`` alone, so no
         uncommitted or logically dropped file is ever opened.
 
-        ``live`` reads a parquet table as :meth:`read` does: when
+        ``live`` reads a parquet table as :meth:`read` does (and the
+        snapshot scans of the rewrites, DELETE and MERGE): when
         ``paths`` is every data file, the data directory itself loads,
         because Spark lists a parquet directory when the DataFrame is
         built, while an explicit list of more than 32 files starts a
@@ -1771,9 +1755,11 @@ class CStoreCatalog:
             f"LOCATION '{self._data_path(meta)}'")
         if part:
             self.spark.catalog.recoverPartitions(spark_name)
-        if spark_name not in meta.registered_names:
-            meta.registered_names.append(spark_name)
-            self._save_meta(meta)
+        with self._writer_lock(name):  # see add_column's lock rationale
+            meta = self._load_meta(name)
+            if spark_name not in meta.registered_names:
+                meta.registered_names.append(spark_name)
+                self._save_meta(meta)
         return spark_name
 
     def _refresh_registered(self, meta: TableMeta) -> None:
@@ -1893,14 +1879,17 @@ class CStoreCatalog:
         custom ``filename`` location stays put by design). Session-
         catalog registrations are dropped (they point at the old name —
         re-register under the new one)."""
-        meta = self._load_meta(name)
         if self.exists(new_name):
             raise CStoreError(f'relation "{new_name}" already exists')
-        self._drop_registered(meta)
-        meta.registered_names = []
-        meta.name = new_name
-        os.rename(self.table_path(name), self.table_path(new_name))
-        self._save_meta(meta)
+        self._drop_registered(self._load_meta(name))
+        # the lock file moves with the directory and stays held; a
+        # writer queued on it re-loads the meta and finds no relation
+        with self._writer_lock(name):  # see add_column's lock rationale
+            meta = self._load_meta(name)
+            meta.registered_names = []
+            meta.name = new_name
+            os.rename(self.table_path(name), self.table_path(new_name))
+            self._save_meta(meta)
 
     def rename_column(self, name: str, column: str, new_column: str) -> None:
         """ALTER TABLE RENAME COLUMN. The reference is metadata-only
@@ -2025,21 +2014,7 @@ class CStoreCatalog:
         """A20: exact row count from Parquet footers only — no data read
         (reference sums skip-list rowCounts, cstore_reader.c:400-462)."""
         meta = self._load_meta(name)
-        fmt = self._format(meta)
-        total = 0
-        for path in self._visible_files(meta):
-            if fmt == "orc":
-                from pyarrow import orc as pa_orc
-                total += pa_orc.ORCFile(path).nrows
-            elif fmt == "cstore":
-                # the skip-list walk the reference's row count does
-                # (cstore_reader.c:400-462): footers only, no data read
-                from cstore_fdw_spark.sources.cstore_format import (
-                    cstore_row_count)
-                total += cstore_row_count(path)
-            else:
-                total += pq.ParquetFile(path).metadata.num_rows
-        return total
+        return _footer_rows(self._visible_files(meta), self._format(meta))
 
     def column_minmax(self, name: str, column: str):
         """Metadata-only ``(min, max)`` of a column: folds the per-file
@@ -2155,7 +2130,7 @@ class CStoreCatalog:
             .alias(c) for c in num_cols]).collect()[0].asDict()
         hists = {c: [float(v) for v in bounds]
                  for c, bounds in row.items() if bounds is not None}
-        n_rows = int(self.row_count(name) or df.count())
+        n_rows = self.row_count(name)
         with self._writer_lock(name):
             meta = self._load_meta(name)
             meta.histograms = hists
@@ -2213,6 +2188,25 @@ def _data_files(path: str, fmt: str):
         for fn in files:
             if fn.endswith(suffix) or (fmt == "orc" and fn.endswith(".orc")):
                 yield os.path.join(root, fn)
+
+
+def _footer_rows(paths: list[str], fmt: str) -> int:
+    """Total row count of the data files ``paths`` from their footers
+    alone, no data read: the parquet or ORC footer, or a cstore file's
+    skip lists (the reference's row count walks them,
+    cstore_reader.c:400-462)."""
+    total = 0
+    for path in paths:
+        if fmt == "orc":
+            from pyarrow import orc as pa_orc
+            total += pa_orc.ORCFile(path).nrows
+        elif fmt == "cstore":
+            from cstore_fdw_spark.sources.cstore_format import (
+                cstore_row_count)
+            total += cstore_row_count(path)
+        else:
+            total += pq.ParquetFile(path).metadata.num_rows
+    return total
 
 
 def _has_data_files(path: str, fmt: str) -> bool:

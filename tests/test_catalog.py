@@ -1707,3 +1707,203 @@ def test_copy_to_stdout_and_program_write_one_header(spark, catalog,
     copy_to_program(catalog, "h", f"cat > {sink}", header=True)
     lines = sink.read_text().splitlines()
     assert [lines[0]] + sorted(lines[1:]) == expected
+
+
+# --------------------------------------------------------------------------
+# Emptying commits and metadata saves race no writer: TRUNCATE, a DELETE
+# of every row and a MERGE that leaves none commit through the locked
+# tombstone commit, and every load-mutate-save of the metadata re-loads
+# it under the writer lock.
+
+def _inject_insert_at_commits(monkeypatch, spark, rows):
+    """Make the first of truncate / _commit_partial / _commit_swap
+    commit an insert of ``rows`` (k = v) first: a concurrent writer
+    landing between a statement's read snapshot and its commit."""
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    orig_truncate = CStoreCatalog.truncate
+    orig_swap = CStoreCatalog._commit_swap
+    orig_partial = CStoreCatalog._commit_partial
+    state = {"injected": False}
+
+    def inject(self, name):
+        if not state["injected"]:
+            state["injected"] = True
+            self.insert(name, spark.createDataFrame(
+                [(k, k) for k in rows], "k long, v long"))
+
+    def racy_truncate(self, *names):
+        inject(self, names[0])
+        return orig_truncate(self, *names)
+
+    def racy_swap(self, name, base_epoch, tmp_path, mutate=None):
+        inject(self, name)
+        return orig_swap(self, name, base_epoch, tmp_path, mutate=mutate)
+
+    def racy_partial(self, name, base_epoch, staged, dropped):
+        inject(self, name)
+        return orig_partial(self, name, base_epoch, staged, dropped)
+
+    monkeypatch.setattr(CStoreCatalog, "truncate", racy_truncate)
+    monkeypatch.setattr(CStoreCatalog, "_commit_swap", racy_swap)
+    monkeypatch.setattr(CStoreCatalog, "_commit_partial", racy_partial)
+    return state
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_truncate_between_insert_stage_and_commit_keeps_the_insert(
+        spark, catalog, monkeypatch, fmt):
+    """TRUNCATE removes committed files only: an insert staged before
+    it and committed after it keeps its rows (an unlocked truncate
+    deleted the insert's stage and lock file, and the insert committed
+    an empty epoch)."""
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    catalog.create_table("tr_ins", "k long", storage_format=fmt)
+    catalog.insert("tr_ins", spark.range(3).selectExpr("id as k"))
+    orig_stage = CStoreCatalog._stage
+    fired = []
+
+    def racy_stage(self, meta, df):
+        staged = orig_stage(self, meta, df)
+        if not fired:
+            fired.append(1)
+            self.truncate(meta.name)  # between the stage and the commit
+        return staged
+
+    monkeypatch.setattr(CStoreCatalog, "_stage", racy_stage)
+    catalog.insert("tr_ins", spark.range(100, 105).selectExpr("id as k"))
+    monkeypatch.undo()
+    assert fired
+    assert sorted(r.k for r in catalog.read("tr_ins").collect()) \
+        == list(range(100, 105))
+    assert catalog.row_count("tr_ins") == 5
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_emptying_delete_retries_when_concurrent_insert_commits(
+        spark, catalog, monkeypatch, fmt):
+    """A DELETE matching every committed row empties the table through
+    the epoch-checked commit: a batch committed after the DELETE's scan
+    refuses it, and the retry deletes only what it matches."""
+    catalog.create_table("race_empty", "k long, v long",
+                         storage_format=fmt)
+    catalog.insert("race_empty",
+                   spark.range(10).selectExpr("id as k", "id as v"))
+    state = _inject_insert_at_commits(monkeypatch, spark, range(100, 105))
+    assert catalog.delete_where("race_empty", "k < 10") == 10
+    monkeypatch.undo()
+    assert state["injected"]
+    assert {r.k for r in catalog.read("race_empty").collect()} \
+        == set(range(100, 105))
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_emptying_merge_conflict_surfaces_error_and_loses_nothing(
+        spark, catalog, monkeypatch, fmt):
+    """A MERGE that leaves no row commits like every MERGE: a batch
+    committed after its join refuses it with the serialization error,
+    and the old rows and the batch are both kept."""
+    from cstore_fdw_spark.catalog import CStoreConcurrentWriteError
+    catalog.create_table("race_mempty", "k long, v long",
+                         storage_format=fmt)
+    catalog.insert("race_mempty",
+                   spark.range(5).selectExpr("id as k", "id as v"))
+    state = _inject_insert_at_commits(monkeypatch, spark, range(100, 103))
+    empty = spark.createDataFrame([], "k long, v long")
+    with pytest.raises(CStoreConcurrentWriteError):
+        catalog.merge_into("race_mempty", empty, on="k",
+                           when_not_matched_by_source="delete")
+    monkeypatch.undo()
+    assert state["injected"]
+    assert {(r.k, r.v) for r in catalog.read("race_mempty").collect()} \
+        == {(i, i) for i in range(5)} | {(i, i) for i in range(100, 103)}
+    assert catalog.current_epoch("race_mempty") == 2
+    # re-run after the conflict: the table empties, history ends there
+    catalog.merge_into("race_mempty", empty, on="k",
+                       when_not_matched_by_source="delete")
+    assert catalog.row_count("race_mempty") == 0
+    with pytest.raises(CStoreError, match="history floor"):
+        catalog.read("race_mempty", as_of_epoch=2)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_emptying_delete_keeps_lock_and_ingest_ledger(
+        spark, catalog, tmp_path, fmt):
+    """A DELETE of every row removes data files only: the writer lock
+    and the stream-ingest ledger stay, so a replayed batch is still
+    suppressed afterwards."""
+    from cstore_fdw_spark.streaming.ingest import batch_writer
+    catalog.create_table("del_all", "a long", storage_format=fmt)
+    write = batch_writer(catalog, "del_all", str(tmp_path / "ckpt"))
+    batch = spark.range(4).selectExpr("id as a")
+    write(batch, 0)
+    assert catalog.delete_where("del_all", "a >= 0") == 4
+    assert os.path.exists(os.path.join(catalog.table_path("del_all"),
+                                       "_cstore_writer.lock"))
+    write(batch, 0)  # a replay of the committed batch stays a no-op
+    assert catalog.row_count("del_all") == 0
+    write(batch, 1)
+    assert catalog.row_count("del_all") == 4
+
+
+def test_register_table_does_not_clobber_concurrent_insert(
+        spark, catalog, monkeypatch):
+    """register_table records its session-catalog name on a meta
+    re-loaded under the writer lock: an insert committed during its
+    CREATE TABLE stays visible, also across the next writer's orphan
+    GC (a meta loaded before the DDL and saved after it rolled the
+    insert's epoch back)."""
+    catalog.create_table("reg_race", "a long")
+    catalog.insert("reg_race", spark.range(10).selectExpr("id as a"))
+    session = type(spark)
+    orig_sql = session.sql
+    fired = []
+
+    def racy_sql(self, query, *args, **kwargs):
+        if not fired and query.startswith("CREATE TABLE"):
+            fired.append(1)
+            catalog.insert("reg_race",
+                           spark.range(100, 105).selectExpr("id as a"))
+        return orig_sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(session, "sql", racy_sql)
+    try:
+        catalog.register_table("reg_race", "reg_race_spark")
+    finally:
+        monkeypatch.undo()
+    try:
+        assert fired
+        assert catalog.row_count("reg_race") == 15
+        catalog.insert("reg_race", spark.range(200, 201)
+                       .selectExpr("id as a"))
+        assert catalog.row_count("reg_race") == 16
+        assert catalog._load_meta("reg_race").registered_names \
+            == ["reg_race_spark"]
+    finally:
+        catalog.drop_table("reg_race")  # drops the registration too
+
+
+def test_rename_table_does_not_clobber_concurrent_insert(
+        spark, catalog, monkeypatch):
+    """rename_table saves a meta re-loaded under the writer lock: an
+    insert committed while it drops the session-catalog registrations
+    moves with the table."""
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    catalog.create_table("ren_race", "a long")
+    catalog.insert("ren_race", spark.range(10).selectExpr("id as a"))
+    orig_drop = CStoreCatalog._drop_registered
+    fired = []
+
+    def racy_drop(self, meta):
+        if not fired:
+            fired.append(1)
+            self.insert("ren_race",
+                        spark.range(100, 105).selectExpr("id as a"))
+        return orig_drop(self, meta)
+
+    monkeypatch.setattr(CStoreCatalog, "_drop_registered", racy_drop)
+    catalog.rename_table("ren_race", "ren_race2")
+    monkeypatch.undo()
+    assert fired and not catalog.exists("ren_race")
+    assert catalog.row_count("ren_race2") == 15
+    catalog.insert("ren_race2", spark.range(200, 201).selectExpr("id as a"))
+    assert catalog.row_count("ren_race2") == 16

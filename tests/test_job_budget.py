@@ -127,3 +127,63 @@ def test_copy_from_stays_within_job_budget(spark, tmp_path, fmt):
     assert cat.row_count("t") == 3
     assert n <= COPY_FROM_BUDGET[fmt], (
         f"{fmt} COPY FROM: {n} jobs, budget {COPY_FROM_BUDGET[fmt]}")
+
+
+#: (operation, storage format) -> Spark jobs of one catalog operation on
+#: a table of three 3000-row inserts (six files). Full rewrites (compact,
+#: vacuum, ALTER layout) size their files from the footers: one scan-
+#: and-write. A full-path DELETE (every file touched; on cstore always,
+#: since its reader reports no input file) adds its per-file match
+#: count. A file-pruned DELETE scans the touched file once more
+#: instead, and MERGE prunes by zone map, then runs its source range,
+#: its one join and its write. TRUNCATE reads footers and listings
+#: only.
+CATALOG_OP_BUDGET = {
+    ("alter_table_layout", "cstore"): 2,
+    ("alter_table_layout", "parquet"): 2,
+    ("compact", "cstore"): 2,
+    ("compact", "parquet"): 2,
+    ("delete_where", "cstore"): 4,
+    ("delete_where", "parquet"): 4,
+    ("delete_where_pruned", "parquet"): 3,
+    ("merge_into", "cstore"): 7,
+    ("merge_into", "parquet"): 7,
+    ("truncate", "cstore"): 0,
+    ("truncate", "parquet"): 0,
+    ("vacuum", "cstore"): 2,
+    ("vacuum", "parquet"): 2,
+}
+
+#: operation -> (call, rows left)
+CATALOG_OPS = {
+    "compact": (lambda cat, spark: cat.compact("t"), 9000),
+    "vacuum": (lambda cat, spark: cat.vacuum("t", keep_epochs=1), 9000),
+    "alter_table_layout": (lambda cat, spark: cat.alter_table_layout(
+        "t", block_row_count=2000), 9000),
+    # every file holds a multiple of 7: the full path
+    "delete_where": (lambda cat, spark: cat.delete_where("t", "a % 7 = 0"),
+                     9000 - 1286),
+    "delete_where_pruned": (lambda cat, spark: cat.delete_where(
+        "t", "a < 10"), 8990),
+    # 10 matched, 10 inserted; zone maps prune the files below 8990
+    "merge_into": (lambda cat, spark: cat.merge_into(
+        "t", spark.range(8990, 9010).selectExpr(
+            "id as a", "'m' as b"), on="a"), 9010),
+    "truncate": (lambda cat, spark: cat.truncate("t"), 0),
+}
+
+
+@pytest.mark.parametrize("op,fmt", sorted(CATALOG_OP_BUDGET))
+def test_catalog_op_stays_within_job_budget(spark, tmp_path, op, fmt):
+    cat = CStoreCatalog(spark, warehouse=str(tmp_path / "wh"))
+    cat.create_table("t", "a long, b string", storage_format=fmt,
+                     stripe_row_count=1000, block_row_count=1000)
+    for i in range(3):
+        cat.insert("t", spark.range(i * 3000, (i + 1) * 3000,
+                                    numPartitions=2)
+                   .selectExpr("id as a", "cast(id as string) as b"))
+    call, rows = CATALOG_OPS[op]
+    n = _jobs(spark, f"budget-{op}-{fmt}", lambda: call(cat, spark))
+    assert cat.row_count("t") == rows
+    assert n <= CATALOG_OP_BUDGET[op, fmt], (
+        f"{fmt} {op}: {n} jobs, budget {CATALOG_OP_BUDGET[op, fmt]}")

@@ -664,6 +664,65 @@ def test_catalog_writes_stage_and_lock_one_way():
     assert defs == ["fsutil.py"]
 
 
+def test_catalog_rewrites_one_way():
+    """One full-table rewrite and one empty commit: ``_layout`` sizes
+    the rewrites of ``_rewrite_once`` (compact, ALTER layout, vacuum's
+    fallback), ``vacuum`` and DELETE's full path only, each from the
+    footer row counts, so no ``.count()`` job is left in ``catalog.py``
+    outside ``analyze``; and nothing calls ``truncate`` to empty a
+    table, because the emptying DELETE and MERGE commit their
+    tombstones through ``_commit_partial`` like TRUNCATE itself."""
+    import ast
+
+    def in_catalog(pred):
+        return sorted({fn for path, fn in _package_functions_using(pred)
+                       if path == "catalog.py"})
+
+    assert in_catalog(lambda n: isinstance(n, ast.Call)
+                      and getattr(n.func, "id", None) == "_layout") == [
+        "_delete_once", "_rewrite_once", "vacuum"]
+    assert in_catalog(lambda n: isinstance(n, ast.Call)
+                      and isinstance(n.func, ast.Attribute)
+                      and n.func.attr == "truncate"
+                      and getattr(n.func.value, "id", None) == "self") == []
+    assert set(in_catalog(lambda n: isinstance(n, ast.Call)
+                          and isinstance(n.func, ast.Attribute)
+                          and n.func.attr == "count"
+                          and not n.args and not n.keywords)) <= {"analyze"}
+
+
+def test_catalog_meta_saves_hold_the_writer_lock():
+    """Every load-mutate-save of a table's metadata in ``catalog.py``
+    saves inside a ``with self._writer_lock(...)`` body, so it never
+    saves a meta that a concurrent commit has moved past (a stale
+    ``write_epoch`` makes the committed batch orphan-collectable). The
+    only saves outside are of a table no other writer can see yet:
+    ``create_table``'s and ``clone_table``'s new destination."""
+    import ast
+    import pathlib
+
+    from cstore_fdw_spark import catalog
+
+    tree = ast.parse(pathlib.Path(catalog.__file__).read_text())
+    locked = [(w.body[0].lineno, w.end_lineno) for w in ast.walk(tree)
+              if isinstance(w, ast.With) and any(
+                  isinstance(i.context_expr, ast.Call)
+                  and getattr(i.context_expr.func, "attr", None)
+                  == "_writer_lock" for i in w.items)]
+    funcs = [f for f in ast.walk(tree) if isinstance(f, ast.FunctionDef)]
+    saves = [n for n in ast.walk(tree) if isinstance(n, ast.Call)
+             and isinstance(n.func, ast.Attribute)
+             and n.func.attr == "_save_meta"
+             and getattr(n.func.value, "id", None) == "self"]
+    assert len(saves) > 5
+    unlocked = {max((f for f in funcs
+                     if f.lineno <= n.lineno <= f.end_lineno),
+                    key=lambda f: f.lineno).name
+                for n in saves
+                if not any(lo <= n.lineno <= hi for lo, hi in locked)}
+    assert unlocked <= {"create_table", "clone_table"}, sorted(unlocked)
+
+
 def test_cstore_stage_and_local_frames_one_way():
     """A cstore table stages through one Arrow map: ``CStoreWriter`` is
     built only by the data source's ``writer`` and the catalog's map
