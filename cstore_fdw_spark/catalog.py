@@ -599,6 +599,14 @@ class CStoreCatalog:
         # deployment would commit a manifest instead of renaming.
         staged = self._stage(meta, df.select(*cols))
         try:
+            if overwrite and not _has_data_files(staged, self._format(meta)):
+                # nothing to swap in: commit as TRUNCATE does (every
+                # visible file tombstoned), so no data dir is left
+                # without a data file for _recover_compact to take for
+                # a crash between _swap_in's renames
+                _retry(f'INSERT OVERWRITE of "{name}"',
+                       self._truncate_once, name)
+                return
             with self._writer_lock(name):
                 # re-read the committed epoch under the lock: another
                 # writer may have appended while this batch was staging

@@ -15,7 +15,10 @@ import contextlib
 import hashlib
 import importlib.util
 import os
+import shlex
+import subprocess
 import tempfile
+import warnings
 import zipfile
 import zipimport
 from collections.abc import Iterator
@@ -111,6 +114,15 @@ ENGINE_CONFS: dict[str, str] = {
     # --- Maintain stripe-like bounded files on write.
     "spark.sql.files.maxRecordsPerFile": "5000000",
     "spark.sql.shuffle.partitions": _CPUS,
+    # --- No DataFrame call sites: with it on, every pyspark.sql.functions
+    # or Column call runs pyspark's _with_origin wrapper (a conf.get, two
+    # JVM calls and a stack walk that tries `import IPython`, then
+    # `import ipykernel`). Where IPython is installed and ipykernel is
+    # not, the first wrapped call of a process imports IPython (0.57 s
+    # under cProfile) and every later one retries the failing import;
+    # builder time per warm registry_queries pass went 0.98/1.00 ->
+    # 0.80/0.85 s. Spark errors lose their "== DataFrame ==" block.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -192,16 +204,28 @@ def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,
 
 
 def ship_package(spark: SparkSession) -> None:
-    """Make ``cstore_fdw_spark`` importable on executors' Python workers.
+    """Make ``cstore_fdw_spark`` importable on executors' Python workers,
+    and on a ``local[...]`` master start every worker through
+    :func:`_worker_python`'s launcher.
 
     The driver process may run from any cwd; Pandas-UDF closures reference
     this package by module name, so workers need it on their path. The
     :func:`package_archive` zip is shipped once per session via
-    ``addPyFile`` (works on local and cluster mode alike).
+    ``addPyFile`` (works on local and cluster mode alike). The launcher
+    and its archive exist only on the driver's disk, so any other master
+    keeps Spark's default interpreter.
     """
     if getattr(spark, "_cstore_pkg_shipped", False):
         return
-    spark.sparkContext.addPyFile(package_archive())
+    sc = spark.sparkContext
+    sc.addPyFile(package_archive())
+    if sc.master.split("[")[0] == "local":
+        # what _wrap_function pickles into every UDF, mapInArrow and
+        # registered data source: their workers and planner daemons
+        # all start through it
+        sc.pythonExec = _worker_python(sc.pythonExec, [
+            p for p in sc._jvm.org.apache.spark.api.python.PythonUtils
+            .sparkPythonPath().split(os.pathsep) if p.endswith(".zip")])
     spark._cstore_pkg_shipped = True  # type: ignore[attr-defined]
 
 
@@ -216,9 +240,7 @@ def package_archive() -> str:
     compiles its ``.py``, as before.
 
     The zip is named by a digest of the sources and this interpreter's
-    bytecode magic, built once (temp file, then an atomic rename) into
-    ``~/.cache/cstore_fdw_spark/``, or into the temp dir when that
-    cannot be written."""
+    bytecode magic and built once by :func:`_cached_archive`."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
     digest = hashlib.sha256(importlib.util.MAGIC_NUMBER)
@@ -232,38 +254,141 @@ def package_archive() -> str:
             with open(os.path.join(root, rel), "rb") as fh:
                 files[rel] = data = fh.read()
             digest.update(b"%s\0%d\0" % (rel.encode(), len(data)) + data)
-    name = f"cstore_fdw_spark-{digest.hexdigest()[:16]}.zip"
+    return _cached_archive(f"cstore_fdw_spark-{digest.hexdigest()[:16]}.zip",
+                           lambda: files)
+
+
+#: (interpreter, the JVM zips' stamps) -> what :func:`_worker_python`
+#: returned for them in this process
+_WORKER_PYTHONS: dict[tuple[str, tuple], str] = {}
+
+
+def _worker_python(python: str, zips: list[str]) -> str:
+    """The interpreter local Python workers should run: a launcher that
+    puts a compiled copy of ``zips`` first on the path, else ``python``.
+
+    The JVM puts ``zips`` (``$SPARK_HOME/python/lib/pyspark.zip`` and
+    the py4j source zip) first on every worker's ``PYTHONPATH``; they
+    hold no bytecode, so every daemon compiled pyspark from source. The
+    copy holds every entry of ``zips`` byte for byte plus a checked-hash
+    ``.pyc`` beside each ``.py``, named by the zips' ``(path, size,
+    mtime_ns)`` and the bytecode magic (one ``stat`` per zip per call).
+    The launcher is a ``/bin/sh`` script beside it that execs
+    ``python`` with the copy first. It is used only if, run once per
+    process, it imports pyspark from the copy: a ``noexec`` cache, a
+    broken interpreter or an unwritable cache keeps ``python``."""
+    try:
+        stamps = tuple((p, st.st_size, st.st_mtime_ns)
+                       for p, st in ((p, os.stat(p)) for p in zips))
+    except OSError:
+        return python
+    if not stamps or python in _WORKER_PYTHONS.values():
+        return python  # nothing to compile, or already a launcher
+    key = (python, stamps)
+    if key not in _WORKER_PYTHONS:
+        _WORKER_PYTHONS[key] = _launcher(python, zips, stamps) or python
+    return _WORKER_PYTHONS[key]
+
+
+def _launcher(python: str, zips: list[str], stamps: tuple) -> str | None:
+    """Build :func:`_worker_python`'s archive and launcher; the launcher
+    if it imports pyspark from the archive, else None."""
+    digest = hashlib.sha256(importlib.util.MAGIC_NUMBER
+                            + repr(stamps).encode()).hexdigest()[:16]
+    try:
+        archive = _cached_archive(f"pyspark-{digest}.zip",
+                                  lambda: _zip_entries(zips))
+        launcher = "%s-%s.sh" % (archive[:-4], hashlib.sha256(
+            python.encode()).hexdigest()[:16])
+        script = ("#!/bin/sh\nPYTHONPATH=%s${PYTHONPATH:+:$PYTHONPATH} "
+                  "exec %s \"$@\"\n" % (shlex.quote(archive),
+                                         shlex.quote(python)))
+        _write_once(launcher, lambda fh: fh.write(script.encode()),
+                    mode=0o755)
+    except OSError:
+        return None
+    return launcher if _imports_pyspark_from(launcher, archive) else None
+
+
+def _imports_pyspark_from(launcher: str, archive: str) -> bool:
+    """Whether ``launcher`` runs and imports pyspark from ``archive``."""
+    try:
+        out = subprocess.run(
+            [launcher, "-c", "import pyspark; print(pyspark.__file__)"],
+            capture_output=True, text=True, timeout=120)
+    except (OSError, subprocess.SubprocessError):
+        return False
+    return out.returncode == 0 and \
+        out.stdout.strip().startswith(archive + os.sep)
+
+
+def _zip_entries(zips: list[str]) -> dict[str, bytes]:
+    """Every entry of ``zips`` (archive name -> bytes), in order."""
+    files: dict[str, bytes] = {}
+    for z in zips:
+        with zipfile.ZipFile(z) as zf:
+            for info in zf.infolist():
+                files[info.filename] = zf.read(info)
+    return files
+
+
+def _cached_archive(name: str, entries) -> str:
+    """The path of the archive ``name``, built once from ``entries()``
+    by :func:`_write_archive` into ``~/.cache/cstore_fdw_spark/``, or
+    into the temp dir when that cannot be written."""
     for cache in (CACHE_DIR, tempfile.gettempdir()):
         path = os.path.join(cache, name)
         try:
-            if not os.path.exists(path):
-                os.makedirs(cache, mode=0o700, exist_ok=True)
-                fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=cache)
-                try:
-                    with os.fdopen(fd, "wb") as fh:
-                        _write_archive(fh, files)
-                    os.replace(tmp, path)  # concurrent builders: last wins
-                finally:
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(tmp)
+            os.makedirs(cache, mode=0o700, exist_ok=True)
+            _write_once(path, lambda fh: _write_archive(fh, entries(), path))
             return path
         except OSError:
             continue
     raise OSError(f"no writable directory for {name}")
 
 
-def _write_archive(fh, files: dict[str, bytes]) -> None:
-    """Zip ``files`` (archive name -> bytes) with a checked-hash
-    ``.pyc`` beside each ``.py`` and an entry per directory, every
-    entry dated 1980-01-01 so equal sources give equal bytes."""
+def _write_once(path: str, write, mode: int | None = None) -> None:
+    """Create ``path`` by ``write(fh)`` into a temp file beside it and an
+    atomic rename, unless it exists. Concurrent builders: last wins."""
+    if os.path.exists(path):
+        return
+    fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=os.path.dirname(path))
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            write(fh)
+        if mode is not None:
+            os.chmod(tmp, mode)
+        os.replace(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+
+
+def _write_archive(fh, files: dict[str, bytes], archive: str) -> None:
+    """Zip ``files`` (archive name -> bytes; a name ending in ``/`` is a
+    directory) with a checked-hash ``.pyc`` beside each ``.py`` and an
+    entry per directory, every entry dated 1980-01-01 so equal sources
+    give equal bytes.
+
+    Each ``.py`` is compiled under its full path ``<archive>/<name>``,
+    the filename zipimport gives a module it compiles from source: pyspark
+    drops from a worker's tracebacks only the frames under
+    ``dirname(pyspark.__file__)``."""
     dirs = sorted({os.path.dirname(rel) for rel in files})
-    with zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+    with zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf, \
+            warnings.catch_warnings():
+        # e.g. pyspark's invalid escape sequences: a worker compiling
+        # the source would warn, the build does not
+        warnings.simplefilter("ignore")
         for d in dirs:
             zf.writestr(zipfile.ZipInfo(d + "/"), b"")
         for rel, data in files.items():
+            if rel.endswith("/"):
+                continue
             zf.writestr(zipfile.ZipInfo(rel), data, zipfile.ZIP_DEFLATED)
             if rel.endswith(".py"):
-                code = compile(data, rel, "exec", dont_inherit=True)
+                code = compile(data, os.path.join(archive, rel), "exec",
+                               dont_inherit=True)
                 zf.writestr(zipfile.ZipInfo(rel + "c"), _code_to_hash_pyc(
                     code, importlib.util.source_hash(data), checked=True),
                     zipfile.ZIP_DEFLATED)

@@ -407,6 +407,37 @@ def test_compact_crash_recovery(spark, catalog):
     assert sorted(r.a for r in catalog.read("tr").collect()) == [0, 1, 2, 3, 4]
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "cstore"])
+def test_empty_overwrite_crash_in_swap_cleanup_stays_empty(
+        spark, catalog, monkeypatch, fmt):
+    """An INSERT OVERWRITE of an empty frame that dies while the old
+    data is being removed (one old file gone, the rest left) reads as
+    the empty table it committed: a fresh catalog's recovery must not
+    take the leftovers for a crash between the swap's renames."""
+    import shutil
+
+    from cstore_fdw_spark import catalog as catalog_mod
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    catalog.create_table("ow_empty", "a long", storage_format=fmt)
+    for lo in (0, 10):
+        catalog.insert("ow_empty",
+                       spark.range(lo, lo + 5).selectExpr("id as a"))
+    real_rmtree = shutil.rmtree
+
+    def dies_midway(path, *args, **kwargs):
+        if not str(path).endswith(".compact.old"):
+            return real_rmtree(path, *args, **kwargs)
+        os.remove(next(iter(catalog_mod._data_files(str(path), fmt))))
+
+    monkeypatch.setattr(shutil, "rmtree", dies_midway)
+    catalog.insert("ow_empty", spark.range(0).selectExpr("id as a"),
+                   overwrite=True)
+    monkeypatch.undo()
+    fresh = CStoreCatalog(spark, warehouse=catalog.warehouse)
+    assert fresh.row_count("ow_empty") == 0
+    assert fresh.read("ow_empty").count() == 0
+
+
 def test_stream_ingest_replay_is_idempotent(spark, catalog, tmp_path):
     # foreachBatch replays a batch_id after restart; the table-side ledger
     # must suppress the duplicate append (at-least-once → effectively-once)

@@ -751,6 +751,37 @@ def test_cstore_stage_and_local_frames_one_way():
         ("catalog.py", "_local_frame")]
 
 
+def test_python_workers_start_one_way():
+    """Python workers get their bytecode one way: ``session.py``
+    compiles only in ``_write_archive``, which only the one cached
+    builder ``_cached_archive`` calls (for the package archive and the
+    pyspark archive alike), and ``pythonExec`` is assigned once, in
+    ``ship_package``."""
+    import ast
+
+    def call_to(name):
+        def pred(node):
+            return (isinstance(node, ast.Call)
+                    and (getattr(node.func, "id", None) == name
+                         or getattr(node.func, "attr", None) == name))
+        return pred
+
+    def assigns(attr):
+        def pred(node):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target] if isinstance(
+                           node, (ast.AugAssign, ast.AnnAssign)) else [])
+            return any(getattr(t, "attr", None) == attr for t in targets)
+        return pred
+
+    assert [hit for hit in _package_functions_using(call_to("compile"))
+            if hit[0] == "session.py"] == [("session.py", "_write_archive")]
+    assert _package_functions_using(call_to("_write_archive")) == [
+        ("session.py", "_cached_archive")]
+    assert _package_functions_using(assigns("pythonExec")) == [
+        ("session.py", "ship_package")]
+
+
 def test_cstore_format_walks_and_encodes_one_way():
     """One path each inside the cstore v1.7 codec: the stripe footer is
     parsed at one site, pglz is undone at one site (called through the
