@@ -6,7 +6,8 @@ reference ``cstore_fdw.h:26-41``). Our equivalents are Spark/Parquet
 configs; everything else (pushdown, pruning, codegen, AQE) is Catalyst.
 
 Designed for a 1000-executor cluster; tested on local[N]. Nothing here is
-local-mode specific except the master URL default.
+local-mode specific except the master URL default and the Python worker
+launcher (:func:`ship_package`), which lives on the driver's disk.
 """
 
 from __future__ import annotations
